@@ -1,7 +1,5 @@
 package graft.engine
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -470,11 +468,28 @@ object EsdbWriter {
     * The count is recorded in a per-version `_SUBPARTS` marker; appends
     * and partial rewrites reuse it, and a full [[compact]] may change
     * it (see [[subpartsOf]]).
+    *
+    * Job shape: the data write (one shuffle to the layout's tasks, one
+    * write job), then [[writeSidecars]] once — one footer job over the
+    * written files for the ts-range rows and one distinct query over
+    * the staged files' (space, grouping) columns, read with the schema
+    * sidecar the data write just laid down (no inference job).
     */
   def write(ev: DataFrame, path: String, indexAttrs: Seq[String] = Nil,
             subparts: Int = 1, clusterBy: Seq[String] = Nil,
             clusterChunks: Int = 8, assignFieldIds: Boolean = true,
             clusterCurve: String = "range"): Unit = {
+    writeData(ev, path, indexAttrs, subparts, clusterBy, clusterChunks, assignFieldIds, clusterCurve)
+    writeSidecars(ev.sparkSession, path, Created)
+  }
+
+  /** The data half of [[write]]: lay the files out, then the layout
+    * markers and the schema sidecar. Copy-on-write paths call it
+    * directly and build their sidecars once, from the staged version.
+    */
+  private def writeData(ev: DataFrame, path: String, indexAttrs: Seq[String],
+                        subparts: Int, clusterBy: Seq[String], clusterChunks: Int,
+                        assignFieldIds: Boolean, clusterCurve: String): Unit = {
     require(subparts >= 1, s"subparts must be >= 1, got $subparts")
     require(Clustering.Curves(clusterCurve),
       s"unknown cluster curve '$clusterCurve' — ${Clustering.Curves.mkString(" or ")}")
@@ -527,20 +542,35 @@ object EsdbWriter {
     }
     writeClusterMarker(hconf(ev.sparkSession), path,
       if (clusterBy.isEmpty) Clustering.none else Clustering(clusterBy, clusterChunks, clusterCurve))
-    // an empty frame writes no space dirs — manifests have nothing to
-    // index (read-back would fail schema inference); the schema sidecar
-    // below still records the store's logical schema
-    val anySpace = {
-      val p = new org.apache.hadoop.fs.Path(path)
-      val fs = p.getFileSystem(hconf(ev.sparkSession))
-      fs.exists(p) && fs.listStatus(p).exists(s =>
-        s.isDirectory && s.getPath.getName.startsWith("space="))
-    }
-    if (anySpace) {
-      writeGroupingsManifest(ev.sparkSession, path, SaveMode.Overwrite)
-      refreshTsRangeManifest(ev.sparkSession, path)
-    }
     writeSchemaManifest(hconf(ev.sparkSession), path, indexed.schema)
+  }
+
+  /** The data write of a copy-on-write rewrite: `rows` laid out under
+    * the prior version's subpartitioning and clustering, the chunk
+    * count scaled to the rewritten byte share ([[clusterChunksFor]]),
+    * and no fresh field IDs stamped (carried files keep theirs).
+    */
+  private def rewriteData(rows: DataFrame, tmp: String, src: String,
+                          subsetBytes: Long, totalBytes: Long): Unit = {
+    val conf = hconf(rows.sparkSession)
+    val cl = clusterChunksFor(clusterOf(conf, src), subsetBytes, totalBytes)
+    writeData(if (rows.columns.contains("bucket")) rows.drop("bucket") else rows, tmp, Nil,
+      subpartsOf(conf, src), cl.cols, math.max(1, cl.chunks), assignFieldIds = false, cl.curve)
+  }
+
+  /** A rewrite that writes no rows still stages a version: the prior
+    * version's layout markers travel with it.
+    */
+  private def copyLayoutMarkers(fs: org.apache.hadoop.fs.FileSystem,
+                                conf: org.apache.hadoop.conf.Configuration,
+                                src: String, tmp: String): Unit = {
+    fs.mkdirs(new org.apache.hadoop.fs.Path(tmp))
+    Seq(SubpartsMarker, ClusterMarker).foreach { name =>
+      val m = new org.apache.hadoop.fs.Path(src, name)
+      if (fs.exists(m))
+        org.apache.hadoop.fs.FileUtil.copy(fs, m, fs,
+          new org.apache.hadoop.fs.Path(tmp, name), false, conf): Unit
+    }
   }
 
   /** Hadoop conf for path resolution (object-store creds etc. travel
@@ -807,7 +837,9 @@ object EsdbWriter {
     * bytes through the cluster. Relative file
     * paths are preserved by the carry, so carried ts-range manifest
     * entries stay valid; manifest entries for rewritten files key on
-    * now-absent names no reader ever looks up. Same snapshot
+    * now-absent names no reader ever looks up. Compaction never changes
+    * the (space, grouping) pair set, so the groupings sidecar carries
+    * whole. Same snapshot
     * guarantees as [[compact]]: one pointer-commit publishes the new
     * version, a crash leaves readers on the previous one.
     *
@@ -826,52 +858,20 @@ object EsdbWriter {
     val (headAtScan, src) = Publish.resolveWithVersion(conf, path)
     val srcPath = new org.apache.hadoop.fs.Path(src)
     val fs = srcPath.getFileSystem(conf)
-    val bySpace: Map[String, Seq[(String, org.apache.hadoop.fs.FileStatus)]] =
-      storeDataFiles(fs, srcPath).groupMap(_._3)(t => (t._1, t._2))
-    val (frag, keep) = bySpace.toSeq.partition(_._2.size > maxFilesPerSpace)
+    val files = storeDataFiles(fs, srcPath)
+    val (frag, keep) = files.groupBy(_._3).values.toSeq.partition(_.size > maxFilesPerSpace)
     if (frag.isEmpty) return false
-    val subparts = subpartsOf(conf, src)
     Publish.publish(conf, path, keepVersions, expectedVersion = headAtScan) { tmp =>
       // 1. the fragmented spaces go through the standard write path:
-      //    merge width back to one file per space/bucket, blooms and
-      //    manifests rebuilt for exactly these spaces
-      val fragDf = readFullWidth(spark, src,
-        frag.flatMap(_._2).map(_._2.getPath.toString))
-      val cluster = clusterOf(conf, src)
-      // carried spaces keep their (possibly un-IDed) files: never stamp
-      // fresh field IDs on a partial rewrite (see FieldIds' invariant)
-      write(if (fragDf.columns.contains("bucket")) fragDf.drop("bucket") else fragDf,
-        tmp, subparts = subparts, clusterBy = cluster.cols,
-        clusterChunks = math.max(1, cluster.chunks), clusterCurve = cluster.curve,
-        assignFieldIds = false)
-      // the rewrite's sidecar covers only the fragmented spaces'
-      // columns — fold the previous version's sidecar in so columns
-      // living only in carried spaces stay declared
-      schemaManifest(conf, src).foreach(old => mergeSchemaManifest(conf, tmp, old))
+      //    merge width back to one file per space/bucket, blooms rebuilt
+      //    (declared chunk count: the byte share is the whole store's)
+      rewriteData(readFullWidth(spark, src, frag.flatten.map(_._2.getPath.toString)),
+        tmp, src, 1L, 1L)
       // 2. carry compact spaces' files verbatim — manifest references
       //    in manifest mode, hard links on raw-local FS
-      val tmpPath = new org.apache.hadoop.fs.Path(tmp)
-      carryData(fs, conf, path, tmpPath,
-        keep.flatMap(_._2).map { case (rel, f) => rel -> f.getPath })
-      // 3. manifests: the rewrite covered only fragmented spaces —
-      //    carry the previous version's manifest files alongside
-      //    (groupings only ever accumulate under compaction, and the
-      //    readers distinct across batches; stale ts-range rows for
-      //    rewritten files are never looked up)
-      Seq(GroupingsManifest, TsRangeManifest).foreach { m =>
-        val old = new org.apache.hadoop.fs.Path(srcPath, m)
-        if (fs.exists(old)) {
-          val dst = new org.apache.hadoop.fs.Path(tmpPath, m)
-          fs.mkdirs(dst)
-          fs.listStatus(old).toSeq
-            .filter(f => f.isFile && f.getLen > 0 &&
-              !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith("."))
-            .foreach { f =>
-              carryInto(fs, f.getPath,
-                new org.apache.hadoop.fs.Path(dst, s"carry-${f.getPath.getName}"), conf)
-            }
-        }
-      }
+      carryData(fs, conf, path, new org.apache.hadoop.fs.Path(tmp),
+        keep.flatten.map { case (rel, f, _) => rel -> f.getPath })
+      writeSidecars(spark, tmp, Rewritten(src, files, pairsKept = true))
       // committed streaming epochs must replay as no-ops after the rewrite
       carryStreamCommits(conf, src, tmp)
     }: Unit
@@ -916,17 +916,16 @@ object EsdbWriter {
     val affected: Set[String] = groupings match {
       case None => inScope
       case Some(gs) =>
-        manifestGroupings(spark, path) match {
+        groupingsRows(spark, src) match {
           case Some(m) =>
             m.filter(col("grouping").isin(gs.toSeq: _*))
-              .select("space").distinct().collect().map(_.getString(0)).toSet
+              .select("space").collect().map(_.getString(0)).toSet
               .intersect(inScope)
           case None => inScope
         }
     }
     if (affected.isEmpty) return // the manifest proved the delete a no-op
     Publish.publish(conf, path, keepVersions, expectedVersion = headAtScan) { tmp =>
-      val tmpPath = new org.apache.hadoop.fs.Path(tmp)
       val (hit, carry) = allFiles.partition { case (_, _, sp) => affected.contains(sp) }
       val gs = groupings.map(_.toSeq).getOrElse(Nil)
       val wantedBuckets: Option[Set[Int]] =
@@ -934,73 +933,19 @@ object EsdbWriter {
         else None
       // within hit spaces, files in a bucket no doomed grouping hashes
       // to are carried, not rewritten
-      val hitFiles: Seq[(String, org.apache.hadoop.fs.FileStatus)] =
-        if (groupings.isDefined) hit.map(t => (t._1, t._2)) else Nil
-      val (rw, carryWithin) = hitFiles.partition { case (rel, _) =>
+      val hitFiles = if (groupings.isDefined) hit else Nil
+      val (rw, carryWithin) = hitFiles.partition { case (rel, _, _) =>
         wantedBuckets.forall(bs =>
           !rel.contains("/bucket=") || bs.exists(b => rel.contains(s"/bucket=$b/")))
       }
-      if (groupings.isDefined && rw.nonEmpty) {
+      if (rw.nonEmpty) {
         val df = readFullWidth(spark, src, rw.map(_._2.getPath.toString))
-        val kept = df.filter(!col("grouping").isin(gs: _*) || col("grouping").isNull)
-        val cl = clusterChunksFor(clusterOf(conf, src), rw.map(_._2.getLen).sum,
-          allFiles.map(_._2.getLen).sum)
-        write(if (kept.columns.contains("bucket")) kept.drop("bucket") else kept,
-          tmp, subparts = subparts, clusterBy = cl.cols,
-          clusterChunks = math.max(1, cl.chunks), clusterCurve = cl.curve,
-          assignFieldIds = false)
-      } else {
-        fs.mkdirs(tmpPath)
-        Seq(SubpartsMarker, ClusterMarker).foreach { name =>
-          val m = new org.apache.hadoop.fs.Path(srcPath, name)
-          if (fs.exists(m))
-            org.apache.hadoop.fs.FileUtil.copy(fs, m, fs,
-              new org.apache.hadoop.fs.Path(tmpPath, name), false, conf): Unit
-        }
-      }
-      carryData(fs, conf, path, tmpPath,
-        (carry.map(t => (t._1, t._2)) ++ carryWithin)
-          .map { case (rel, f) => rel -> f.getPath })
-      // groupings manifest: the rewrite's manifest covers surviving
-      // rewritten rows; fold in carried rows — none can be doomed (a
-      // carried space holds no doomed grouping by the manifest proof; a
-      // carried bucket is one no doomed grouping hashes to)
-      val oldManifest = new org.apache.hadoop.fs.Path(srcPath, GroupingsManifest)
-      if (fs.exists(oldManifest)) {
-        val m = spark.read.parquet(s"$src/$GroupingsManifest").distinct()
-        val keepCarried = m.filter(!col("space").isin(affected.toSeq: _*))
-        val keepWithin = wantedBuckets match {
-          case Some(bs) =>
-            m.filter(col("space").isin(affected.toSeq: _*) &&
-              !pmod(xxhash64(col("grouping")), lit(subparts.toLong))
-                .isin(bs.toSeq.map(_.toLong): _*))
-          case None => m.limit(0)
-        }
-        keepCarried.union(keepWithin)
-          .write.mode(SaveMode.Append).parquet(s"$tmp/$GroupingsManifest")
-      }
-      // ts-range rows for carried files (their names are preserved by
-      // the copy); stale rows for rewritten files are never looked up
-      val oldTs = new org.apache.hadoop.fs.Path(srcPath, TsRangeManifest)
-      if (fs.exists(oldTs)) {
-        val dst = new org.apache.hadoop.fs.Path(tmpPath, TsRangeManifest)
-        fs.mkdirs(dst)
-        fs.listStatus(oldTs).toSeq
-          .filter(f => f.isFile && f.getLen > 0 &&
-            !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith("."))
-          .foreach { f =>
-            carryInto(fs, f.getPath,
-              new org.apache.hadoop.fs.Path(dst, s"carry-${f.getPath.getName}"), conf)
-          }
-      }
-      // schema sidecar: columns living only in carried spaces stay
-      // declared (deletes never narrow the logical schema)
-      schemaManifest(conf, src).foreach { old =>
-        schemaManifest(conf, tmp) match {
-          case Some(cur) => writeSchemaManifest(conf, tmp, unionSchemas(cur, old))
-          case None => writeSchemaManifest(conf, tmp, old)
-        }
-      }
+        rewriteData(df.filter(!col("grouping").isin(gs: _*) || col("grouping").isNull),
+          tmp, src, rw.map(_._2.getLen).sum, allFiles.map(_._2.getLen).sum)
+      } else copyLayoutMarkers(fs, conf, src, tmp)
+      carryData(fs, conf, path, new org.apache.hadoop.fs.Path(tmp),
+        (carry ++ carryWithin).map { case (rel, f, _) => rel -> f.getPath })
+      writeSidecars(spark, tmp, Rewritten(src, allFiles))
       // committed streaming epochs must replay as no-ops after the rewrite
       carryStreamCommits(conf, src, tmp)
     }: Unit
@@ -1015,10 +960,10 @@ object EsdbWriter {
     * whose whole range survives is carried verbatim; only STRADDLERS
     * rewrite. All-null-ts files survive whole (SQL: null fails every
     * comparison — retention never deletes null-ts rows). Unmanifested
-    * files conservatively rewrite. The groupings manifest is rebuilt
-    * from the survivors (a grouping whose every event expired must
-    * stop being listed) — a 2-dictionary-column scan, the same cost
-    * [[write]] pays, acceptable for a periodic maintenance op.
+    * files conservatively rewrite. The groupings sidecar rebuilds only
+    * the spaces of dropped and rewritten files, from their survivors (a
+    * grouping whose every event expired must stop being listed); every
+    * other space's rows carry.
     */
   def deleteOlderThan(spark: SparkSession, path: String, cutoffUs: Long,
                       inclusive: Boolean = false, keepVersions: Int = 1): Unit = {
@@ -1028,98 +973,45 @@ object EsdbWriter {
     val (headAtScan, src) = Publish.resolveWithVersion(conf, path)
     val srcPath = new org.apache.hadoop.fs.Path(src)
     val fs = srcPath.getFileSystem(conf)
-    val subparts = subpartsOf(conf, src)
-    // (has_ts, min, max, null_free) per file; null_free missing/null in
-    // rows appended before the column existed → false (conservative)
+    // (has_ts, min, max, null_free) per file; null_free null in rows
+    // appended before the column existed → false (conservative)
     val ranges: Map[String, (Boolean, Long, Long, Boolean)] =
       tsRangeManifest(spark, path) match {
         case None => Map.empty
-        case Some(m) =>
-          val hasNf = m.columns.contains("null_free")
-          m.collect().map { r =>
-            val hasTs = r.getBoolean(r.fieldIndex("has_ts"))
-            val nf = hasNf && {
-              val i = r.fieldIndex("null_free")
-              !r.isNullAt(i) && r.getBoolean(i)
-            }
-            (r.getString(r.fieldIndex("file")),
-              (hasTs,
-                if (hasTs) r.getLong(r.fieldIndex("min_ts")) else 0L,
-                if (hasTs) r.getLong(r.fieldIndex("max_ts")) else 0L,
-                nf))
-          }.toMap
+        case Some(m) => m.collect().map { r =>
+          val hasTs = r.getBoolean(3)
+          (r.getString(0), (hasTs, if (hasTs) r.getLong(1) else 0L,
+            if (hasTs) r.getLong(2) else 0L, !r.isNullAt(4) && r.getBoolean(4)))
+        }.toMap
       }
     def expired(ts: Long): Boolean = if (inclusive) ts <= cutoffUs else ts < cutoffUs
-    val files: Seq[(String, org.apache.hadoop.fs.FileStatus)] =
-      storeDataFiles(fs, srcPath).map(t => (t._1, t._2))
+    val files = storeDataFiles(fs, srcPath)
     // drop = whole range expired AND provably no null-ts rows (a null
     // fails every comparison, so null rows must survive any retention);
     // carry = whole range survives (or all null ts); rewrite =
     // straddles the cutoff, has unproven nulls, or unknown to the manifest
-    val (drop, rest) = files.partition { case (rel, _) =>
+    val (drop, rest) = files.partition { case (rel, _, _) =>
       ranges.get(rel).exists { case (hasTs, _, mx, nullFree) =>
         hasTs && nullFree && expired(mx)
       }
     }
-    val (carry, rewrite) = rest.partition { case (rel, _) =>
+    val (carry, rewrite) = rest.partition { case (rel, _, _) =>
       ranges.get(rel).exists { case (hasTs, mn, _, _) => !hasTs || !expired(mn) }
     }
     if (drop.isEmpty && rewrite.isEmpty) return // nothing expired: no version churn
     Publish.publish(conf, path, keepVersions, expectedVersion = headAtScan) { tmp =>
-      val tmpPath = new org.apache.hadoop.fs.Path(tmp)
       if (rewrite.nonEmpty) {
         val df = readFullWidth(spark, src, rewrite.map(_._2.getPath.toString))
         val survives =
           if (inclusive) col("ts_us").isNull || col("ts_us") > cutoffUs
           else col("ts_us").isNull || col("ts_us") >= cutoffUs
-        val kept = df.filter(survives)
-        val cl = clusterChunksFor(clusterOf(conf, src), rewrite.map(_._2.getLen).sum,
-          files.map(_._2.getLen).sum)
-        write(if (kept.columns.contains("bucket")) kept.drop("bucket") else kept,
-          tmp, subparts = subparts, clusterBy = cl.cols,
-          clusterChunks = math.max(1, cl.chunks), clusterCurve = cl.curve,
-          assignFieldIds = false)
-      } else {
-        fs.mkdirs(tmpPath)
-        Seq(SubpartsMarker, ClusterMarker).foreach { name =>
-          val m = new org.apache.hadoop.fs.Path(srcPath, name)
-          if (fs.exists(m))
-            org.apache.hadoop.fs.FileUtil.copy(fs, m, fs,
-              new org.apache.hadoop.fs.Path(tmpPath, name), false, conf): Unit
-        }
-      }
-      carryData(fs, conf, path, tmpPath,
-        carry.map { case (rel, f) => rel -> f.getPath })
-      // ts-range rows for carried files (names preserved); rewritten
-      // files were re-manifested by write()
-      val oldTs = new org.apache.hadoop.fs.Path(srcPath, TsRangeManifest)
-      if (carry.nonEmpty && fs.exists(oldTs)) {
-        val dst = new org.apache.hadoop.fs.Path(tmpPath, TsRangeManifest)
-        fs.mkdirs(dst)
-        fs.listStatus(oldTs).toSeq
-          .filter(f => f.isFile && f.getLen > 0 &&
-            !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith("."))
-          .foreach { f =>
-            carryInto(fs, f.getPath,
-              new org.apache.hadoop.fs.Path(dst, s"carry-${f.getPath.getName}"), conf)
-          }
-      }
-      // schema sidecar survives even an everything-expired retention
-      schemaManifest(conf, src).foreach { old =>
-        schemaManifest(conf, tmp) match {
-          case Some(cur) => writeSchemaManifest(conf, tmp, unionSchemas(cur, old))
-          case None => writeSchemaManifest(conf, tmp, old)
-        }
-      }
-      // groupings manifest: rebuilt from survivors — stale rows must
-      // not list groupings whose every event expired
-      val anySpace = fs.exists(tmpPath) && fs.listStatus(tmpPath).exists(s =>
-        s.isDirectory && s.getPath.getName.startsWith("space="))
-      if (anySpace) writeGroupingsManifest(spark, tmp, SaveMode.Overwrite)
-      else {
-        val gm = new org.apache.hadoop.fs.Path(tmpPath, GroupingsManifest)
-        if (fs.exists(gm)) fs.delete(gm, true): Unit
-      }
+        rewriteData(df.filter(survives), tmp, src,
+          rewrite.map(_._2.getLen).sum, files.map(_._2.getLen).sum)
+      } else copyLayoutMarkers(fs, conf, src, tmp)
+      carryData(fs, conf, path, new org.apache.hadoop.fs.Path(tmp),
+        carry.map { case (rel, f, _) => rel -> f.getPath })
+      // the sidecars survive even an everything-expired retention
+      writeSidecars(spark, tmp, Rewritten(src, files))
       // committed streaming epochs must replay as no-ops after the rewrite
       carryStreamCommits(conf, src, tmp)
     }: Unit
@@ -1197,6 +1089,28 @@ object EsdbWriter {
     }
   }
 
+  /** A bounded `collect_set`: the distinct values of one column while
+    * there are at most `cap` of them, else null. Past the cap the buffer
+    * drops its values, so a large MERGE source never gathers its keys
+    * on one executor or on the driver.
+    */
+  private final class DistinctUpTo(cap: Int, dt: org.apache.spark.sql.types.DataType)
+      extends org.apache.spark.sql.expressions.Aggregator[
+        org.apache.spark.sql.Row, Option[Set[Any]], org.apache.spark.sql.Row] {
+    def zero: Option[Set[Any]] = Some(Set.empty)
+    def reduce(b: Option[Set[Any]], r: org.apache.spark.sql.Row): Option[Set[Any]] =
+      b.map(_ + r.get(0)).filter(_.size <= cap)
+    def merge(a: Option[Set[Any]], b: Option[Set[Any]]): Option[Set[Any]] =
+      a.zip(b).map { case (x, y) => x ++ y }.filter(_.size <= cap)
+    def finish(b: Option[Set[Any]]): org.apache.spark.sql.Row =
+      org.apache.spark.sql.Row(b.map(_.toSeq).orNull)
+    def bufferEncoder: org.apache.spark.sql.Encoder[Option[Set[Any]]] =
+      org.apache.spark.sql.Encoders.javaSerialization[Option[Set[Any]]]
+    def outputEncoder: org.apache.spark.sql.Encoder[org.apache.spark.sql.Row] =
+      org.apache.spark.sql.Encoders.row(org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("values", org.apache.spark.sql.types.ArrayType(dt)))))
+  }
+
   /** Keyed MERGE (upsert) — the third member of the DML triad next to
     * [[deleteWhere]]/[[updateWhere]]: target rows whose key tuple
     * appears in `source` are REPLACED by the source row; source rows
@@ -1210,9 +1124,9 @@ object EsdbWriter {
     *    merge keys (X23) the rewrite footprint therefore tracks the
     *    source's key-range selectivity, the same way predicate
     *    DELETE/UPDATE do.
-    *  - the matched-row replacement is a LEFT ANTI join of the
-    *    footprint against the source's distinct key tuples —
-    *    churn-sized, AQE broadcasts it when small.
+    *  - the matched-row replacement is one full outer join of the
+    *    footprint with the source's key tuples: it yields the kept
+    *    target rows and both counts — churn-sized on both sides.
     *  - inserts are the source rows themselves, landing in the same
     *    written file set (idx_* recomputed from the payload; missing
     *    evolved columns null-fill; field IDs re-stamped).
@@ -1251,14 +1165,20 @@ object EsdbWriter {
       .filterNot(source.columns.contains)
     require(missingCanon.isEmpty,
       s"MERGE source must carry the canonical columns; missing: ${missingCanon.mkString(", ")}")
-    // one source pass: duplicate/null key tuples refuse before any IO
-    val stats = source.agg(
-      count(lit(1)).as("n"),
+    // one source pass: duplicate/null key tuples refuse before any IO,
+    // and the same aggregate yields the footprint filters — per-key
+    // min/max ranges, plus a single key's exact set while it is small
+    val InListCap = 10000
+    val keySet = if (keys.size > 1) Nil else {
+      val f = org.apache.spark.sql.types.StructType(Seq(source.schema(keys.head).copy(nullable = true)))
+      Seq(udaf(new DistinctUpTo(InListCap, f.head.dataType),
+        org.apache.spark.sql.Encoders.row(f))(col(keys.head)))
+    }
+    val stats = source.agg(count(lit(1)).as("n"), (Seq(
       count_distinct(col(keys.head), keys.tail.map(col): _*).as("nd"),
-      count(when(keys.map(col(_).isNull).reduce(_ || _), lit(1))).as("nulls"),
-      collect_set(col("space")).as("spaces")).head()
+      count(when(keys.map(col(_).isNull).reduce(_ || _), lit(1))).as("nulls")) ++
+      keys.flatMap(k => Seq(min(col(k)), max(col(k)))) ++ keySet): _*).head()
     val (nSrc, nDistinct, nNullKeys) = (stats.getLong(0), stats.getLong(1), stats.getLong(2))
-    val srcSpaces = stats.getSeq[String](3).toSet
     require(nNullKeys == 0, s"MERGE source has $nNullKeys row(s) with null key — " +
       "null never matches; filter them or fix the key")
     require(nDistinct == nSrc, s"MERGE source has ${nSrc - nDistinct} duplicate key " +
@@ -1267,19 +1187,15 @@ object EsdbWriter {
     // conservative per-key footprint filters: exact IN-list when the
     // key set is small (footer stats check each value), min/max ranges
     // otherwise — footers only, no data pages
-    val InListCap = 10000L
     val filters: Seq[org.apache.spark.sql.sources.Filter] =
-      if (keys.size == 1 && nDistinct <= InListCap) {
-        val vs = source.select(keys.head).distinct().collect().map(_.get(0))
-        Seq(org.apache.spark.sql.sources.In(keys.head, vs))
-      } else keys.flatMap { k =>
-        val mm = source.agg(min(col(k)), max(col(k))).head()
-        Seq(org.apache.spark.sql.sources.GreaterThanOrEqual(k, mm.get(0)),
-          org.apache.spark.sql.sources.LessThanOrEqual(k, mm.get(1)))
+      if (keys.size == 1 && !stats.getStruct(5).isNullAt(0))
+        Seq(org.apache.spark.sql.sources.In(keys.head, stats.getStruct(5).getSeq[Any](0).toArray))
+      else keys.zipWithIndex.flatMap { case (k, i) =>
+        Seq(org.apache.spark.sql.sources.GreaterThanOrEqual(k, stats.get(3 + 2 * i)),
+          org.apache.spark.sql.sources.LessThanOrEqual(k, stats.get(4 + 2 * i)))
       }
     val srcPath = new org.apache.hadoop.fs.Path(src)
     val fs = srcPath.getFileSystem(conf)
-    val subparts = subpartsOf(conf, src)
     val files: Seq[(String, org.apache.hadoop.fs.FileStatus, String)] =
       storeDataFiles(fs, srcPath)
     val classified = {
@@ -1305,69 +1221,49 @@ object EsdbWriter {
         else lit(null).cast(f.dataType)).as(f.name, f.metadata)
       }.toSeq: _*)
     }
-    val srcKeys = source.select(keys.map(col): _*).distinct()
     var replacedRows = 0L
-    var matchedKeys = 0L
+    var insertedRows = nSrc
     Publish.publish(conf, path, keepVersions, expectedVersion = headAtScan) { tmp =>
-      val tmpPath = new org.apache.hadoop.fs.Path(tmp)
       val inserts = alignSource()
       var cached: DataFrame = null
-      val (replaced, footprintBytes) =
-        if (rewrite.isEmpty) (inserts, 0L)
+      val replaced =
+        if (rewrite.isEmpty) inserts
         else {
-          // the footprint is read three times (two match counts + the
-          // anti-join rewrite): cache it for the op's duration so the
-          // parquet scan happens once (churn-bounded, disk-spillable)
+          // ONE full outer join of the footprint with the source keys
+          // (unique by the duplicate check) answers everything: target
+          // rows with no source key are kept, matched target rows are
+          // replaced (a key may match several — keys need not be a
+          // target PK), and source keys with no target row are inserts.
+          // Cached for the op's duration: the counts and the rewrite
+          // both read it, so the parquet scan and the join run once
+          // (churn-bounded, disk-spillable)
+          val k = keys.indices.map(i => s"__merge_k$i")
+          val keyed = source.select(keys.zip(k).map { case (c, a) => col(c).as(a) } :+
+            lit(true).as("__merge_s"): _*)
           cached = readFullWidth(spark, src, rewrite.map(_._2.getPath.toString))
+            .withColumn("__merge_t", lit(true))
+            .join(keyed, keys.zip(k).map { case (c, a) => col(c) === col(a) }.reduce(_ && _),
+              "full_outer")
             .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          val df = cached
-          // a key may match several target rows (keys need not be a
-          // target PK): replaced counts target rows, inserted counts
-          // source rows whose key matched nothing
-          replacedRows = df.join(srcKeys, keys, "left_semi").count()
-          matchedKeys = srcKeys.join(df, keys, "left_semi").count()
-          val kept = df.join(srcKeys, keys, "left_anti")
-          (kept.unionByName(inserts, allowMissingColumns = true),
-            rewrite.map(_._2.getLen).sum)
+          val m = cached.agg(count(when(col("__merge_t") && col("__merge_s"), lit(1))),
+            count(when(col("__merge_t").isNull, lit(1)))).head()
+          replacedRows = m.getLong(0)
+          insertedRows = m.getLong(1)
+          cached.where(col("__merge_s").isNull).drop(k ++ Seq("__merge_t", "__merge_s"): _*)
+            .unionByName(inserts, allowMissingColumns = true)
         }
-      try {
-      val cl = clusterChunksFor(clusterOf(conf, src),
-        footprintBytes, math.max(1L, classified.map(_._2.getLen).sum))
-      write(if (replaced.columns.contains("bucket")) replaced.drop("bucket") else replaced,
-        tmp, subparts = subparts, clusterBy = cl.cols,
-        clusterChunks = math.max(1, cl.chunks), clusterCurve = cl.curve,
-        assignFieldIds = false)
-      carryData(fs, conf, path, tmpPath,
+      try rewriteData(replaced, tmp, src, rewrite.map(_._2.getLen).sum,
+        math.max(1L, classified.map(_._2.getLen).sum))
+      finally { if (cached != null) cached.unpersist(): Unit }
+      carryData(fs, conf, path, new org.apache.hadoop.fs.Path(tmp),
         carry.map { case (rel, f, _) => rel -> f.getPath })
-      val oldTs = new org.apache.hadoop.fs.Path(srcPath, TsRangeManifest)
-      if (carry.nonEmpty && fs.exists(oldTs)) {
-        val dst = new org.apache.hadoop.fs.Path(tmpPath, TsRangeManifest)
-        fs.mkdirs(dst)
-        fs.listStatus(oldTs).toSeq
-          .filter(f => f.isFile && f.getLen > 0 &&
-            !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith("."))
-          .foreach { f =>
-            carryInto(fs, f.getPath,
-              new org.apache.hadoop.fs.Path(dst, s"carry-${f.getPath.getName}"), conf)
-          }
-      }
-      // schema sidecar survives (merge never narrows the schema)
-      schemaManifest(conf, src).foreach { old =>
-        schemaManifest(conf, tmp) match {
-          case Some(cur) => writeSchemaManifest(conf, tmp, unionSchemas(cur, old))
-          case None => writeSchemaManifest(conf, tmp, old)
-        }
-      }
-      // pairs changed only in the rewritten files' spaces and the
-      // source's spaces: rescan those (partition-pruned), carry the rest
-      refreshGroupingsManifestFor(spark, src, tmp,
-        rewrite.map(r => graft.sources.EsdbStoreSource.unescapePathName(
-          r._1.split('/').head.stripPrefix("space="))).toSet ++ srcSpaces)
-      } finally { if (cached != null) cached.unpersist(): Unit }
+      // pairs change in the rewritten files' spaces and wherever the
+      // source's rows landed: exactly the files this rewrite removed/wrote
+      writeSidecars(spark, tmp, Rewritten(src, files))
       // committed streaming epochs must replay as no-ops after the rewrite
       carryStreamCommits(conf, src, tmp)
     }: Unit
-    (replacedRows, nSrc - matchedKeys)
+    (replacedRows, insertedRows)
   }
 
   /** Shared copy-on-write core of [[deleteWhere]] and [[updateWhere]]:
@@ -1390,7 +1286,6 @@ object EsdbWriter {
     val (headAtScan, src) = Publish.resolveWithVersion(conf, path)
     val srcPath = new org.apache.hadoop.fs.Path(src)
     val fs = srcPath.getFileSystem(conf)
-    val subparts = subpartsOf(conf, src)
     val files: Seq[(String, org.apache.hadoop.fs.FileStatus, String)] =
       storeDataFiles(fs, srcPath)
     // footer-stat classification, probed in parallel (independent IO)
@@ -1405,47 +1300,15 @@ object EsdbWriter {
     val (rewrite, carry) = classified.partition(_._3)
     if (rewrite.isEmpty) return false // stats proved a no-op: no version churn
     Publish.publish(conf, path, keepVersions, expectedVersion = headAtScan) { tmp =>
-      val tmpPath = new org.apache.hadoop.fs.Path(tmp)
       val df = readFullWidth(spark, src, rewrite.map(_._2.getPath.toString))
-      val kept = transform(df, cond)
       // a clustered store re-clusters the rewritten slice at its byte
       // share of the declared chunk count: the copy-on-write footprint
       // stays proportional to selectivity in files AND in output files
-      val cl = clusterChunksFor(clusterOf(conf, src), rewrite.map(_._2.getLen).sum,
+      rewriteData(transform(df, cond), tmp, src, rewrite.map(_._2.getLen).sum,
         classified.map(_._2.getLen).sum)
-      write(if (kept.columns.contains("bucket")) kept.drop("bucket") else kept,
-        tmp, subparts = subparts, clusterBy = cl.cols,
-        clusterChunks = math.max(1, cl.chunks), clusterCurve = cl.curve,
-          assignFieldIds = false)
-      carryData(fs, conf, path, tmpPath,
+      carryData(fs, conf, path, new org.apache.hadoop.fs.Path(tmp),
         carry.map { case (rel, f, _) => rel -> f.getPath })
-      // ts-range rows for carried files (names preserved); rewritten
-      // files were re-manifested by write()
-      val oldTs = new org.apache.hadoop.fs.Path(srcPath, TsRangeManifest)
-      if (carry.nonEmpty && fs.exists(oldTs)) {
-        val dst = new org.apache.hadoop.fs.Path(tmpPath, TsRangeManifest)
-        fs.mkdirs(dst)
-        fs.listStatus(oldTs).toSeq
-          .filter(f => f.isFile && f.getLen > 0 &&
-            !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith("."))
-          .foreach { f =>
-            carryInto(fs, f.getPath,
-              new org.apache.hadoop.fs.Path(dst, s"carry-${f.getPath.getName}"), conf)
-          }
-      }
-      // schema sidecar survives (deletes never narrow the schema)
-      schemaManifest(conf, src).foreach { old =>
-        schemaManifest(conf, tmp) match {
-          case Some(cur) => writeSchemaManifest(conf, tmp, unionSchemas(cur, old))
-          case None => writeSchemaManifest(conf, tmp, old)
-        }
-      }
-      // groupings manifest: only the rewritten files' spaces can have
-      // gained or lost pairs — rescan those dirs (partition-pruned),
-      // carry the rest of the manifest untouched
-      refreshGroupingsManifestFor(spark, src, tmp,
-        rewrite.map(r => graft.sources.EsdbStoreSource.unescapePathName(
-          r._1.split('/').head.stripPrefix("space="))).toSet)
+      writeSidecars(spark, tmp, Rewritten(src, files))
       // committed streaming epochs must replay as no-ops after the rewrite
       carryStreamCommits(conf, src, tmp)
     }: Unit
@@ -1486,15 +1349,13 @@ object EsdbWriter {
     val (headAtScan, src) = Publish.resolveWithVersion(conf, path)
     val srcPath = new org.apache.hadoop.fs.Path(src)
     val fs = srcPath.getFileSystem(conf)
-    val subparts = subpartsOf(conf, src)
-    val files: Seq[(String, org.apache.hadoop.fs.FileStatus)] =
-      storeDataFiles(fs, srcPath).map(t => (t._1, t._2))
+    val files = storeDataFiles(fs, srcPath)
     val missing = rewriteRels -- files.map(_._1).toSet
     if (missing.nonEmpty) throw new java.io.IOException(
       s"publish conflict: row-level operation footprint at $path is no longer " +
         s"current (${missing.size} scanned file(s) were rewritten underneath, " +
         s"e.g. ${missing.head}) — retry the statement against the new version")
-    val (rewrite, carry) = files.partition { case (rel, _) => rewriteRels.contains(rel) }
+    val (rewrite, carry) = files.partition { case (rel, _, _) => rewriteRels.contains(rel) }
     val storeSchema = FieldIds.active(
       schemaManifest(conf, src).getOrElse(readFullWidth(spark, src).schema))
     val indexAttrs = storeSchema.fieldNames.toSeq
@@ -1503,55 +1364,22 @@ object EsdbWriter {
       if (replacement.columns.contains("bucket")) replacement.drop("bucket") else replacement
     val withIdx = indexAttrs.foldLeft(base)((df, a) =>
       df.withColumn(s"idx_$a", EventFrame.attr(a)))
-    // consumed twice (the write, then the touched-spaces agg): persist
-    // for the publish's duration — churn-bounded, disk-spillable — so
-    // the staged replacement parquet is read once, mirroring
-    // applyChanges' feed cache
     val aligned = withIdx.select(storeSchema.fields.filterNot(_.name == "bucket").map { f =>
       (if (withIdx.columns.contains(f.name)) col(f.name).cast(f.dataType)
       else lit(null).cast(f.dataType)).as(f.name, f.metadata)
-    }.toSeq: _*).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try Publish.publish(conf, path, keepVersions, expectedVersion = headAtScan) { tmp =>
-      val tmpPath = new org.apache.hadoop.fs.Path(tmp)
-      val cl = clusterChunksFor(clusterOf(conf, src),
-        math.max(1L, rewrite.map(_._2.getLen).sum), math.max(1L, files.map(_._2.getLen).sum))
-      write(aligned, tmp, subparts = subparts, clusterBy = cl.cols,
-        clusterChunks = math.max(1, cl.chunks), clusterCurve = cl.curve,
-        assignFieldIds = false)
-      carryData(fs, conf, path, tmpPath,
-        carry.map { case (rel, f) => rel -> f.getPath })
-      // ts-range rows for carried files (names preserved); rewritten
-      // files were re-manifested by write()
-      val oldTs = new org.apache.hadoop.fs.Path(srcPath, TsRangeManifest)
-      if (carry.nonEmpty && fs.exists(oldTs)) {
-        val dst = new org.apache.hadoop.fs.Path(tmpPath, TsRangeManifest)
-        fs.mkdirs(dst)
-        fs.listStatus(oldTs).toSeq
-          .filter(f => f.isFile && f.getLen > 0 &&
-            !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith("."))
-          .foreach { f =>
-            carryInto(fs, f.getPath,
-              new org.apache.hadoop.fs.Path(dst, s"carry-${f.getPath.getName}"), conf)
-          }
-      }
-      // DML never narrows the logical schema
-      schemaManifest(conf, src).foreach { old =>
-        schemaManifest(conf, tmp) match {
-          case Some(cur) => writeSchemaManifest(conf, tmp, unionSchemas(cur, old))
-          case None => writeSchemaManifest(conf, tmp, old)
-        }
-      }
-      // pairs changed only where the statement touched: the rewritten
-      // files' spaces plus the replacement rows' spaces (MERGE inserts
-      // and UPDATE SET space can introduce new ones)
-      val repSpaces = aligned.agg(collect_set(col("space"))).head().getSeq[String](0).toSet
-      refreshGroupingsManifestFor(spark, src, tmp,
-        rewrite.map(r => graft.sources.EsdbStoreSource.unescapePathName(
-          r._1.split('/').head.stripPrefix("space="))).toSet ++ repSpaces)
+    }.toSeq: _*)
+    Publish.publish(conf, path, keepVersions, expectedVersion = headAtScan) { tmp =>
+      rewriteData(aligned, tmp, src, math.max(1L, rewrite.map(_._2.getLen).sum),
+        math.max(1L, files.map(_._2.getLen).sum))
+      carryData(fs, conf, path, new org.apache.hadoop.fs.Path(tmp),
+        carry.map { case (rel, f, _) => rel -> f.getPath })
+      // pairs change only where the statement touched: the rewritten
+      // files' spaces plus wherever the replacement rows landed (MERGE
+      // inserts and UPDATE SET space can introduce new ones)
+      writeSidecars(spark, tmp, Rewritten(src, files))
       // committed streaming epochs must replay as no-ops after the rewrite
       carryStreamCommits(conf, src, tmp)
     }: Unit
-    finally aligned.unpersist()
   }
 
   /** Output partition count for a log rewrite, sized like [[compactLog]]
@@ -1638,25 +1466,9 @@ object EsdbWriter {
       // manifest rows for carried names travel with the version (stale
       // dropped-file rows are never looked up); the refresh below then
       // reads footers for the REWRITTEN files only
-      val oldM = new org.apache.hadoop.fs.Path(srcPath, LogManifest)
-      if (fs.exists(oldM)) {
-        val dst = new org.apache.hadoop.fs.Path(tmpPath, LogManifest)
-        fs.mkdirs(dst)
-        fs.listStatus(oldM).toSeq
-          .filter(f => f.isFile && f.getLen > 0 &&
-            !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith("."))
-          .foreach { f =>
-            carryInto(fs, f.getPath,
-              new org.apache.hadoop.fs.Path(dst, s"carry-${f.getPath.getName}"), conf)
-          }
-      }
+      linkSidecarParts(fs, conf, src, tmp, LogManifest)
       refreshLogManifest(spark, tmp)
-      schemaManifest(conf, src).foreach { old =>
-        schemaManifest(conf, tmp) match {
-          case Some(cur) => writeSchemaManifest(conf, tmp, unionSchemas(cur, old))
-          case None => writeSchemaManifest(conf, tmp, old)
-        }
-      }
+      unionPriorSchema(conf, src, tmp)
     }: Unit
   }
 
@@ -1706,25 +1518,9 @@ object EsdbWriter {
       carryStreamCommits(conf, srcPath.toString, tmpPath.toString)
       // manifest rows for carried names travel with the version; the
       // refresh covers only the rewritten files (footer reads)
-      val oldM = new org.apache.hadoop.fs.Path(srcPath, LogManifest)
-      if (carry.nonEmpty && fs.exists(oldM)) {
-        val dst = new org.apache.hadoop.fs.Path(tmpPath, LogManifest)
-        fs.mkdirs(dst)
-        fs.listStatus(oldM).toSeq
-          .filter(f => f.isFile && f.getLen > 0 &&
-            !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith("."))
-          .foreach { f =>
-            carryInto(fs, f.getPath,
-              new org.apache.hadoop.fs.Path(dst, s"carry-${f.getPath.getName}"), conf)
-          }
-      }
+      if (carry.nonEmpty) linkSidecarParts(fs, conf, src, tmp, LogManifest)
       refreshLogManifest(spark, tmp)
-      schemaManifest(conf, src).foreach { old =>
-        schemaManifest(conf, tmp) match {
-          case Some(cur) => writeSchemaManifest(conf, tmp, unionSchemas(cur, old))
-          case None => writeSchemaManifest(conf, tmp, old)
-        }
-      }
+      unionPriorSchema(conf, src, tmp)
     }: Unit
   }
 
@@ -1740,91 +1536,169 @@ object EsdbWriter {
     val srcPath = new org.apache.hadoop.fs.Path(src)
     val fs = srcPath.getFileSystem(conf)
     Publish.publish(conf, path, keepVersions) { tmp =>
-      val tmpPath = new org.apache.hadoop.fs.Path(tmp)
-      fs.mkdirs(tmpPath)
-      Seq(SubpartsMarker, ClusterMarker).foreach { name =>
-        val m = new org.apache.hadoop.fs.Path(srcPath, name)
-        if (fs.exists(m))
-          org.apache.hadoop.fs.FileUtil.copy(fs, m, fs,
-            new org.apache.hadoop.fs.Path(tmpPath, name), false, conf): Unit
-      }
+      copyLayoutMarkers(fs, conf, src, tmp)
       // log stores: committed-epoch markers carry so a replaying
       // streaming sink does not re-append truncated history
-      carryStreamCommits(conf, srcPath.toString, tmpPath.toString)
+      carryStreamCommits(conf, src, tmp)
       schemaManifest(conf, src).foreach(s => writeSchemaManifest(conf, tmp, s))
     }: Unit
   }
 
-  /** The write-time groupings manifest — the analog of the reference's
-    * key index: `Db.Iterate`/`Space.Iterate` are index-only reads there
-    * (esdb.go:63-76, space.go:45-60), so enumeration here must not scan
-    * event data either. Built by re-reading the just-written columnar
-    * files (two small dictionary-encoded columns), appended per batch;
-    * readers distinct across batches.
+  /** How a publish's data files relate to the version they land in —
+    * what [[writeSidecars]] carries, extends or rebuilds.
     */
-  /** Groupings-manifest upkeep for a REWRITE that touched only some
-    * spaces: pairs of untouched spaces carry straight from the old
-    * manifest (no data read), and only the touched spaces' dirs of the
-    * new version rescan — partition pruning confines the scan to those
-    * dirs, so manifest cost follows the rewrite footprint's spaces,
-    * not the store. (The old full rebuild made a one-file delete pay a
-    * store-wide 2-column scan — the kind of hidden O(store) job that
-    * dominates at 100 TB.) Falls back to the full rebuild when the
-    * predecessor has no manifest (legacy store).
+  private sealed trait SidecarChange
+  /** [[write]]: the version holds only the files this write produced. */
+  private case object Created extends SidecarChange
+  /** In-place append: `written` landed beside the version's files and
+    * `pairs` are the batch's distinct (space, grouping) pairs.
     */
-  private def refreshGroupingsManifestFor(spark: SparkSession, srcRoot: String,
-                                          tmpRoot: String, touched: Set[String]): Unit = {
+  private final case class Appended(written: Seq[(String, org.apache.hadoop.fs.Path)],
+                                    pairs: DataFrame) extends SidecarChange
+  /** Copy-on-write: the version was staged from `prior`, whose live
+    * files were `priorFiles`. File names are write-unique, so a rel in
+    * both listings was carried and the rest were written or removed.
+    * `pairsKept`: the rewrite provably kept the pair set (compaction).
+    */
+  private final case class Rewritten(prior: String,
+                                     priorFiles: Seq[(String, org.apache.hadoop.fs.FileStatus, String)],
+                                     pairsKept: Boolean = false) extends SidecarChange
+
+  /** The one sidecar step of every publishing path, run once after its
+    * data write (and, for a rewrite, after the carry):
+    *  - schema: a rewrite unions the prior version's sidecar in, so
+    *    columns living only in carried files stay declared;
+    *  - ts-range: a rewrite links the prior's rows (carried names are
+    *    preserved; stale rows for removed files are never looked up),
+    *    then [[refreshTsRangeManifest]] adds rows for the written files;
+    *  - groupings: an append adds its batch's pairs; a rewrite rebuilds
+    *    the pairs of the spaces whose files it wrote or removed
+    *    ([[refreshGroupingsManifestFor]]) and carries the rest; a
+    *    version with no data files keeps no groupings sidecar.
+    */
+  private def writeSidecars(spark: SparkSession, root: String, change: SidecarChange): Unit = {
     val conf = hconf(spark)
-    val oldM = new org.apache.hadoop.fs.Path(srcRoot, GroupingsManifest)
-    val fs = oldM.getFileSystem(conf)
-    val tmpPath = new org.apache.hadoop.fs.Path(tmpRoot)
-    val anySpace = fs.exists(tmpPath) && fs.listStatus(tmpPath).exists(s =>
-      s.isDirectory && s.getPath.getName.startsWith("space="))
-    val dst = new org.apache.hadoop.fs.Path(tmpRoot, GroupingsManifest)
-    if (!anySpace) { // the rewrite emptied the store
-      if (fs.exists(dst)) fs.delete(dst, true): Unit
-      return
+    val rootPath = new org.apache.hadoop.fs.Path(root)
+    val fs = rootPath.getFileSystem(conf)
+    def live = if (fs.exists(rootPath)) storeDataFiles(fs, rootPath) else Nil
+    change match {
+      case Created =>
+        val files = live
+        refreshTsRangeManifest(spark, root, files.map(f => f._1 -> f._2.getPath))
+        if (files.nonEmpty) refreshGroupingsManifestFor(spark, root, files, None)
+      case Appended(written, pairs) if written.nonEmpty =>
+        refreshTsRangeManifest(spark, root, written)
+        pairs.write.mode(SaveMode.Append).parquet(s"$root/$GroupingsManifest")
+      case Appended(_, _) => () // an empty batch wrote no files
+      case Rewritten(prior, priorFiles, pairsKept) =>
+        unionPriorSchema(conf, prior, root)
+        val files = live
+        if (files.nonEmpty) {
+          linkSidecarParts(fs, conf, prior, root, TsRangeManifest)
+          val before = priorFiles.map(_._1).toSet
+          val after = files.map(_._1).toSet
+          val written = files.filterNot(f => before(f._1))
+          refreshTsRangeManifest(spark, root, written.map(f => f._1 -> f._2.getPath))
+          val touched =
+            if (pairsKept) Set.empty[String]
+            else (written ++ priorFiles.filterNot(f => after(f._1))).map(_._3).toSet
+          refreshGroupingsManifestFor(spark, root, files,
+            Some(prior).filter(p => fs.exists(new org.apache.hadoop.fs.Path(p, GroupingsManifest)))
+              .map(_ -> touched))
+        }
     }
-    if (!fs.exists(oldM)) { writeGroupingsManifest(spark, tmpRoot, SaveMode.Overwrite); return }
-    val untouched = spark.read.parquet(s"$srcRoot/$GroupingsManifest")
-      .where(!col("space").isin(touched.toSeq: _*)).distinct()
-    val rescanned =
-      if (touched.isEmpty) untouched.limit(0)
-      else read(spark, tmpRoot)
-        .where(col("space").isin(touched.toSeq: _*)) // partition-pruned
-        .select(
-          col("space").as("space", org.apache.spark.sql.types.Metadata.empty),
-          col("grouping").as("grouping", org.apache.spark.sql.types.Metadata.empty))
-        .distinct()
-    // stage beside, then swap: the new version dir must never hold a
-    // half-written manifest a crashed job could leave behind
-    untouched.unionByName(rescanned)
-      .write.mode(SaveMode.Overwrite).parquet(s"$tmpRoot/.$GroupingsManifest.new")
-    if (fs.exists(dst)) fs.delete(dst, true): Unit
-    if (!fs.rename(new org.apache.hadoop.fs.Path(s"$tmpRoot/.$GroupingsManifest.new"), dst))
-      throw new java.io.IOException(s"groupings manifest swap failed at $tmpRoot")
   }
 
-  private def writeGroupingsManifest(spark: SparkSession, path: String, mode: SaveMode): Unit =
-    // metadata stripped: a store-derived frame carries field IDs, and a
-    // manifest dir mixing ID-stamped rebuild files with bare append
-    // deltas would make inference demand IDs the bare files lack
-    read(spark, path).select(
-        col("space").as("space", org.apache.spark.sql.types.Metadata.empty),
-        col("grouping").as("grouping", org.apache.spark.sql.types.Metadata.empty))
-      .distinct()
-      .write.mode(mode).parquet(s"${dataRoot(spark, path)}/$GroupingsManifest")
+  /** Fold the prior version's schema sidecar into the staged one: a
+    * rewrite never narrows the logical schema.
+    */
+  private def unionPriorSchema(conf: org.apache.hadoop.conf.Configuration,
+                               src: String, tmp: String): Unit =
+    schemaManifest(conf, src).foreach(old => writeSchemaManifest(conf, tmp,
+      schemaManifest(conf, tmp).fold(old)(unionSchemas(_, old))))
+
+  /** Link a sidecar's part files from `src` into the staged `tmp`
+    * (`carry-` prefixed so they never collide with fresh parts).
+    */
+  private def linkSidecarParts(fs: org.apache.hadoop.fs.FileSystem,
+                               conf: org.apache.hadoop.conf.Configuration,
+                               src: String, tmp: String, sidecar: String): Unit = {
+    val old = new org.apache.hadoop.fs.Path(src, sidecar)
+    if (fs.exists(old)) {
+      val dst = new org.apache.hadoop.fs.Path(tmp, sidecar)
+      fs.mkdirs(dst)
+      fs.listStatus(old).toSeq
+        .filter(f => f.isFile && f.getLen > 0 &&
+          !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith("."))
+        .foreach { f =>
+          carryInto(fs, f.getPath,
+            new org.apache.hadoop.fs.Path(dst, s"carry-${f.getPath.getName}"), conf)
+        }
+    }
+  }
+
+  /** The groupings sidecar — the analog of the reference's key index:
+    * `Db.Iterate`/`Space.Iterate` are index-only reads there
+    * (esdb.go:63-76, space.go:45-60), so enumeration here must not scan
+    * event data either. Readers distinct across part files.
+    *
+    * Built by ONE query: the prior version's rows for untouched spaces
+    * (`prior` = (root, touched spaces); None rebuilds every space)
+    * unioned with the distinct pairs of the touched spaces' live files
+    * in the staged version — two small dictionary-encoded columns, read
+    * with the schema sidecar, so no inference job. Cost follows the
+    * rewrite footprint's spaces, not the store. With nothing touched
+    * the prior's part files link over and no job runs.
+    */
+  private def refreshGroupingsManifestFor(spark: SparkSession, root: String,
+                                          files: Seq[(String, org.apache.hadoop.fs.FileStatus, String)],
+                                          prior: Option[(String, Set[String])]): Unit = {
+    prior match {
+      case Some((p, touched)) if touched.isEmpty =>
+        val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(hconf(spark))
+        linkSidecarParts(fs, hconf(spark), p, root, GroupingsManifest)
+      case _ =>
+        val staged = prior match {
+          case None => Some(readFullWidth(spark, root))
+          case Some((_, touched)) => Some(files.filter(f => touched(f._3))).filter(_.nonEmpty)
+            .map(fs => readFullWidth(spark, root, fs.map(_._2.getPath.toString)))
+        }
+        // metadata stripped: store-derived columns carry field IDs the
+        // bare pair files do not
+        val rescanned = staged.map(_.select(
+          col("space").as("space", org.apache.spark.sql.types.Metadata.empty),
+          col("grouping").as("grouping", org.apache.spark.sql.types.Metadata.empty)))
+        val untouched = prior.flatMap { case (p, touched) =>
+          groupingsRows(spark, p).map(_.where(!col("space").isin(touched.toSeq: _*))) }
+        (untouched ++ rescanned).reduceOption(_ unionByName _).foreach(_.distinct()
+          .write.mode(SaveMode.Overwrite).parquet(s"$root/$GroupingsManifest"))
+    }
+  }
+
+  /** The sidecars' fixed schemas: reads never infer them (no footer
+    * job), and `null_free` is nullable so rows written before it
+    * existed read null — "unknown", the conservative answer.
+    */
+  private val PairsSchema = org.apache.spark.sql.types.StructType.fromDDL(
+    "space STRING, grouping STRING")
+  private val TsRangeSchema = org.apache.spark.sql.types.StructType.fromDDL(
+    "file STRING, min_ts BIGINT, max_ts BIGINT, has_ts BOOLEAN, null_free BOOLEAN")
+
+  /** The groupings sidecar's rows as stored (not distinct) under a
+    * resolved data root.
+    */
+  private def groupingsRows(spark: SparkSession, root: String): Option[DataFrame] = {
+    val m = new org.apache.hadoop.fs.Path(root, GroupingsManifest)
+    if (!m.getFileSystem(hconf(spark)).exists(m)) None
+    else Some(spark.read.schema(PairsSchema).parquet(m.toString))
+  }
 
   /** Distinct (space, grouping) pairs from the manifest sidecar; None
     * for stores written before manifests existed (callers fall back to
     * a data scan).
     */
-  def manifestGroupings(spark: SparkSession, path: String): Option[DataFrame] = {
-    val root = dataRoot(spark, path)
-    val m = new org.apache.hadoop.fs.Path(root, GroupingsManifest)
-    if (!m.getFileSystem(hconf(spark)).exists(m)) None
-    else Some(spark.read.parquet(s"$root/$GroupingsManifest").distinct())
-  }
+  def manifestGroupings(spark: SparkSession, path: String): Option[DataFrame] =
+    groupingsRows(spark, dataRoot(spark, path)).map(_.distinct())
 
   /** Append a batch to a (still-open) log directory. Refuses when sealed —
     * the reference errors writes after Close (stream/closed_stream.go:48-50).
@@ -1861,20 +1735,24 @@ object EsdbWriter {
     val writer = parted.write
       .mode(SaveMode.Append)
       .partitionBy(partCols: _*)
+    // the files this append writes are the listing's new names (file
+    // names are write-unique): two driver listings, no job
+    val rootPath = new org.apache.hadoop.fs.Path(root)
+    val fs = rootPath.getFileSystem(hconf(ev.sparkSession))
+    def listed = if (fs.exists(rootPath)) storeDataFiles(fs, rootPath) else Nil
+    val before = listed.map(_._1).toSet
     indexAttrs.foldLeft(writer) { (w, name) =>
       w.option(s"parquet.bloom.filter.enabled#idx_$name", "true")
     }.parquet(root)
     // manifest delta from the batch itself (not a full-store re-read,
-    // which would make append cost grow with store size)
-    // metadata stripped like writeGroupingsManifest: manifest files stay
-    // uniformly bare even when the batch derives from a store read
-    ev.select(
+    // which would make append cost grow with store size); metadata
+    // stripped: manifest files stay uniformly bare even when the batch
+    // derives from a store read
+    writeSidecars(ev.sparkSession, root, Appended(
+      listed.collect { case (rel, st, _) if !before(rel) => rel -> st.getPath },
+      ev.select(
         col("space").as("space", org.apache.spark.sql.types.Metadata.empty),
-        col("grouping").as("grouping", org.apache.spark.sql.types.Metadata.empty))
-      .distinct()
-      .write.mode(SaveMode.Append).parquet(s"$root/$GroupingsManifest")
-    refreshTsRangeManifest(ev.sparkSession, path,
-      Some(ev.select("space").distinct().collect().map(_.getString(0)).toSet))
+        col("grouping").as("grouping", org.apache.spark.sql.types.Metadata.empty)).distinct()))
     evolved.foreach(s => writeSchemaManifest(hconf(ev.sparkSession), root, s))
   }
 
@@ -1948,7 +1826,8 @@ object EsdbWriter {
     EventLog.tails(ev, indexName)
       .withColumn("index_name", org.apache.spark.sql.functions.lit(indexName))
       .write.mode(SaveMode.Overwrite).parquet(s"$path/$SealMarker.tails")
-    Files.createFile(Paths.get(path, SealMarker))
+    val m = new org.apache.hadoop.fs.Path(path, SealMarker)
+    m.getFileSystem(hconf(spark)).create(m, false).close()
   }
 
   /** Tails of a sealed store, served from the seal-time sidecar — the
@@ -1965,7 +1844,14 @@ object EsdbWriter {
     if (forIndex.limit(1).isEmpty) None else Some(forIndex)
   }
 
-  def isSealed(path: String): Boolean = Files.exists(Paths.get(path, SealMarker))
+  /** Resolved through the Hadoop `FileSystem` of the path's scheme, so
+    * a `file:` URI or a non-local store reads its seal like a bare path.
+    */
+  def isSealed(path: String): Boolean = {
+    val m = new org.apache.hadoop.fs.Path(path, SealMarker)
+    m.getFileSystem(SparkSession.getActiveSession.fold(
+      new org.apache.hadoop.conf.Configuration())(hconf)).exists(m)
+  }
 
   /** `_CDC` marker at the LOGICAL root: when set, the catalog INSERT
     * path appends as its own versioned commit ([[appendVersioned]]) so
@@ -2318,13 +2204,10 @@ object EsdbWriter {
     }
     sweepStaged()
     commitEpochMarker(fs, conf, root, epochId, finalNames)
-    if (pairs.nonEmpty) {
-      import spark.implicits._
-      pairs.toDF("space", "grouping").distinct()
-        .write.mode(SaveMode.Append).parquet(s"$root/$GroupingsManifest")
-    }
-    refreshTsRangeManifest(spark, path,
-      Some(pairs.map(_._1).toSet).filter(_.nonEmpty))
+    import spark.implicits._
+    writeSidecars(spark, root.toString, Appended(
+      finalNames.map(rel => rel -> new org.apache.hadoop.fs.Path(root, rel)),
+      pairs.distinct.toDF("space", "grouping")))
     mergeSchemaManifest(conf, root.toString, batchSchema)
   }
 
@@ -2554,95 +2437,90 @@ object EsdbWriter {
     * WITHOUT a footer round-trip per file (at object-store latency the
     * listing alone decides which files open at all). Columns:
     * `file` ("space=<dir>/<name>"), `min_ts`/`max_ts` (null when the
-    * file has no non-null ts), `has_ts` (false = provably all-null).
-    * None for stores written before this manifest existed.
+    * file has no non-null ts), `has_ts` (false = provably all-null),
+    * `null_free` (true = provably no null ts; null = unknown). Read with
+    * its fixed schema. None for stores written before this manifest
+    * existed.
     */
   def tsRangeManifest(spark: SparkSession, path: String): Option[DataFrame] = {
-    val root = dataRoot(spark, path)
-    val m = new org.apache.hadoop.fs.Path(root, TsRangeManifest)
+    val m = new org.apache.hadoop.fs.Path(dataRoot(spark, path), TsRangeManifest)
     if (!m.getFileSystem(hconf(spark)).exists(m)) None
-    // mergeSchema: rows appended before the null_free column existed
-    // coexist with new ones; readers treat a missing/null null_free as
-    // "unknown" (conservative)
-    else Some(spark.read.option("mergeSchema", "true").parquet(s"$root/$TsRangeManifest"))
+    else Some(spark.read.schema(TsRangeSchema).parquet(m.toString))
   }
 
-  /** Manifest rows for data files not yet covered: one footer read per
-    * NEW file, distributed over the executors. `touchedSpaces` limits
-    * the listing to the space dirs a batch actually wrote (appends pass
-    * the batch's spaces, so append cost stays proportional to the
-    * batch's spaces, not the store's). Files whose footer stats cannot
+  /** Ts-range rows for the files a write produced: ONE job with no
+    * shuffle reads their footers in parallel on the executors, and the
+    * driver writes the collected rows (one tiny row per file) as a new
+    * part file — no Spark write job. Files whose footer stats cannot
     * PROVE a ts fact (stats missing/untyped) are simply omitted —
     * readers keep unknown files, so the manifest can only skip work,
     * never change results.
     */
-  private def refreshTsRangeManifest(spark: SparkSession, path: String,
-                                     touchedSpaces: Option[Set[String]] = None): Unit = {
-    import spark.implicits._
-    val root = new org.apache.hadoop.fs.Path(dataRoot(spark, path))
-    val fs = root.getFileSystem(hconf(spark))
-    if (!fs.exists(root)) return
-    val known: Set[String] = tsRangeManifest(spark, path)
-      .map(_.select("file").as[String].collect().toSet).getOrElse(Set.empty)
-    val fresh: Seq[(String, String)] = storeDataFiles(fs, root)
-      .filter { case (_, _, sp) => touchedSpaces.forall(_.contains(sp)) }
-      .collect { case (rel, f, _) if !known.contains(rel) =>
-        (rel, f.getPath.toString) }
-    if (fresh.isEmpty) return
-    val rootStr = root.toString
-    val par = math.max(1, math.min(fresh.size, spark.sparkContext.defaultParallelism))
+  private def refreshTsRangeManifest(spark: SparkSession, root: String,
+                                     written: Seq[(String, org.apache.hadoop.fs.Path)]): Unit = {
+    if (written.isEmpty) return
     // session conf travels to the executors (object-store creds live
     // there — a bare new Configuration() would fail the footer opens)
     val serConf = new org.apache.spark.util.SerializableConfiguration(hconf(spark))
-    val rows = spark.createDataset(fresh).repartition(par)
-      .mapPartitions { it =>
-        val conf = serConf.value
-        it.flatMap { case (rel, phys) =>
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-              new org.apache.hadoop.fs.Path(phys), conf))
-          try {
-            var mn = Option.empty[Long]
-            var mx = Option.empty[Long]
-            var provable = true
-            var sawTs = false
-            // null_free: PROVEN zero null ts rows (numNulls set and 0 in
-            // every block) — the license for time-retention to drop an
-            // expired file whole without opening it (null ts fails every
-            // comparison, so a null row must survive `ts_us < cutoff`)
-            var nullFree = true
-            r.getFooter.getBlocks.forEach { b =>
-              b.getColumns.forEach { c =>
-                if (c.getPath.toDotString == "ts_us") {
-                  sawTs = true
-                  val st = c.getStatistics
-                  if (st == null || !st.isNumNullsSet || st.getNumNulls > 0)
-                    nullFree = false
-                  if (st == null) provable = false
-                  else if (st.hasNonNullValue) st.genericGetMin match {
-                    case lo: java.lang.Long =>
-                      val hi = st.genericGetMax.asInstanceOf[java.lang.Long].longValue()
-                      mn = Some(mn.fold(lo.longValue())(math.min(_, lo.longValue())))
-                      mx = Some(mx.fold(hi)(math.max(_, hi)))
-                    case _ => provable = false
-                  }
-                  else if (!(st.isNumNullsSet && st.getNumNulls == b.getRowCount))
-                    provable = false
-                }
-              }
+    val par = math.max(1, math.min(written.size, spark.sparkContext.defaultParallelism))
+    val rows = spark.sparkContext
+      .parallelize(written.map { case (rel, p) => (rel, p.toString) }, par)
+      .flatMap { case (rel, phys) => tsFacts(serConf.value, rel, new org.apache.hadoop.fs.Path(phys)) }
+      .collect()
+    if (rows.isEmpty) return
+    // dot-staged then renamed: an in-place append's live sidecar dir
+    // never shows a half-written part
+    val dir = new org.apache.hadoop.fs.Path(root, TsRangeManifest)
+    val name = s"part-${java.util.UUID.randomUUID()}.parquet"
+    val staged = new org.apache.hadoop.fs.Path(dir, s".$name")
+    val w = graft.sources.EsdbRowParquetWriter.open(staged, TsRangeSchema, hconf(spark))
+    try rows.foreach(w.write) finally w.close()
+    if (!staged.getFileSystem(hconf(spark)).rename(staged, new org.apache.hadoop.fs.Path(dir, name)))
+      throw new java.io.IOException(s"ts-range sidecar part rename failed at $dir")
+  }
+
+  /** One file's ts-range row from its footer: (file, min_ts, max_ts,
+    * has_ts, null_free), or None when the stats prove nothing.
+    */
+  private def tsFacts(conf: org.apache.hadoop.conf.Configuration, rel: String,
+                      file: org.apache.hadoop.fs.Path): Option[org.apache.spark.sql.catalyst.InternalRow] = {
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf))
+    try {
+      var mn = Option.empty[Long]
+      var mx = Option.empty[Long]
+      var provable = true
+      var sawTs = false
+      // null_free: PROVEN zero null ts rows (numNulls set and 0 in
+      // every block) — the license for time-retention to drop an
+      // expired file whole without opening it (null ts fails every
+      // comparison, so a null row must survive `ts_us < cutoff`)
+      var nullFree = true
+      r.getFooter.getBlocks.forEach { b =>
+        b.getColumns.forEach { c =>
+          if (c.getPath.toDotString == "ts_us") {
+            sawTs = true
+            val st = c.getStatistics
+            if (st == null || !st.isNumNullsSet || st.getNumNulls > 0)
+              nullFree = false
+            if (st == null) provable = false
+            else if (st.hasNonNullValue) st.genericGetMin match {
+              case lo: java.lang.Long =>
+                val hi = st.genericGetMax.asInstanceOf[java.lang.Long].longValue()
+                mn = Some(mn.fold(lo.longValue())(math.min(_, lo.longValue())))
+                mx = Some(mx.fold(hi)(math.max(_, hi)))
+              case _ => provable = false
             }
-            if (!provable || !sawTs) None
-            else Some((rel, mn, mx, mn.isDefined, nullFree))
-          } finally r.close()
+            else if (!(st.isNumNullsSet && st.getNumNulls == b.getRowCount))
+              provable = false
+          }
         }
       }
-      // collect, not a distributed write: one tiny row per NEW file, and
-      // materializing first avoids appending an empty part file when no
-      // footer yields a provable fact (the refreshLogManifest guard)
-      .collect()
-    if (rows.nonEmpty)
-      rows.toSeq.toDF("file", "min_ts", "max_ts", "has_ts", "null_free")
-        .coalesce(1).write.mode(SaveMode.Append).parquet(s"$rootStr/$TsRangeManifest")
+      if (!provable || !sawTs) None
+      else Some(org.apache.spark.sql.catalyst.InternalRow(
+        org.apache.spark.unsafe.types.UTF8String.fromString(rel),
+        mn.map(Long.box).orNull, mx.map(Long.box).orNull, mn.isDefined, nullFree))
+    } finally r.close()
   }
 
   /** Bucketed layout: hash-bucket by `grouping`, sorted by (ts_us desc,
@@ -2989,8 +2867,8 @@ object EsdbWriter {
     }
     // the feed plan (typically an expensive two-version hash diff) is
     // consumed several times — counts, delete-stats agg, the EXCEPT ALL,
-    // the drift count, the insert write, the insert-spaces agg: persist
-    // it for the apply's duration, mirroring the footprint cache
+    // the drift count, the insert write: persist it for the apply's
+    // duration, mirroring the footprint cache
     val fed = feed.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
     val inserts0 = fed.where(col("_change") === "insert").drop("_change")
@@ -3005,7 +2883,6 @@ object EsdbWriter {
     val (headAtScan, src) = Publish.resolveWithVersion(conf, path)
     val srcPath = new org.apache.hadoop.fs.Path(src)
     val fs = srcPath.getFileSystem(conf)
-    val subparts = subpartsOf(conf, src)
     // footprint: only replica files whose (space, event_id range) stats
     // admit a deleted row rewrite; everything else carries by name
     val delStats = deletes0.agg(
@@ -3031,7 +2908,6 @@ object EsdbWriter {
         (if (df.columns.contains(f.name)) col(f.name).cast(f.dataType)
         else lit(null).cast(f.dataType)).as(f.name, f.metadata)).toSeq: _*)
     Publish.publish(conf, path, keepVersions, expectedVersion = headAtScan) { tmp =>
-      val tmpPath = new org.apache.hadoop.fs.Path(tmp)
       // the footprint feeds the diff AND the drift count: cache it so
       // the parquet scan happens once (churn-bounded, disk-spillable)
       val footprint =
@@ -3039,46 +2915,20 @@ object EsdbWriter {
         else align(readFullWidth(spark, src, rewrite.map(_._2.getPath.toString))))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
-      val kept = footprint.exceptAll(align(deletes0))
-      // drift check: every delete must have consumed exactly one row
-      val removed = (if (rewrite.isEmpty) 0L else footprint.count()) - kept.count()
-      if (removed != nDel) throw new IllegalStateException(
-        s"replica at $path diverged from the feed's source: $nDel delete row(s) " +
-          s"matched only $removed replica row(s) — refusing to compound the drift")
-      val cl = clusterChunksFor(clusterOf(conf, src),
-        rewrite.map(_._2.getLen).sum, math.max(1L, classified.map(_._2.getLen).sum))
-      write(kept.unionByName(align(inserts0)), tmp, subparts = subparts,
-        clusterBy = cl.cols, clusterChunks = math.max(1, cl.chunks),
-        clusterCurve = cl.curve, assignFieldIds = false)
-      carryData(fs, conf, path, tmpPath,
-        carry.map { case (rel, f, _) => rel -> f.getPath })
-      val oldTs = new org.apache.hadoop.fs.Path(srcPath, TsRangeManifest)
-      if (carry.nonEmpty && fs.exists(oldTs)) {
-        val dst = new org.apache.hadoop.fs.Path(tmpPath, TsRangeManifest)
-        fs.mkdirs(dst)
-        fs.listStatus(oldTs).toSeq
-          .filter(f => f.isFile && f.getLen > 0 &&
-            !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith("."))
-          .foreach { f =>
-            carryInto(fs, f.getPath,
-              new org.apache.hadoop.fs.Path(dst, s"carry-${f.getPath.getName}"), conf)
-          }
-      }
-      schemaManifest(conf, src).foreach { old =>
-        schemaManifest(conf, tmp) match {
-          case Some(cur) => writeSchemaManifest(conf, tmp, unionSchemas(cur, old))
-          case None => writeSchemaManifest(conf, tmp, old)
-        }
-      }
-      // pairs changed only where the window touched: the delete
-      // footprint's spaces and the inserted rows' spaces
-      val insSpaces =
-        if (nIns == 0) Set.empty[String]
-        else inserts0.agg(collect_set(col("space"))).head().getSeq[String](0).toSet
-      refreshGroupingsManifestFor(spark, src, tmp,
-        rewrite.map(r => graft.sources.EsdbStoreSource.unescapePathName(
-          r._1.split('/').head.stripPrefix("space="))).toSet ++ insSpaces)
+        val kept = footprint.exceptAll(align(deletes0))
+        // drift check: every delete must have consumed exactly one row
+        val removed = (if (rewrite.isEmpty) 0L else footprint.count()) - kept.count()
+        if (removed != nDel) throw new IllegalStateException(
+          s"replica at $path diverged from the feed's source: $nDel delete row(s) " +
+            s"matched only $removed replica row(s) — refusing to compound the drift")
+        rewriteData(kept.unionByName(align(inserts0)), tmp, src,
+          rewrite.map(_._2.getLen).sum, math.max(1L, classified.map(_._2.getLen).sum))
       } finally { footprint.unpersist(): Unit }
+      carryData(fs, conf, path, new org.apache.hadoop.fs.Path(tmp),
+        carry.map { case (rel, f, _) => rel -> f.getPath })
+      // pairs change only where the window touched: the delete
+      // footprint's spaces and wherever the inserted rows landed
+      writeSidecars(spark, tmp, Rewritten(src, files))
       // committed streaming epochs must replay as no-ops after the rewrite
       carryStreamCommits(conf, src, tmp)
     }: Unit

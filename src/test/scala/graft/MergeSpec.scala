@@ -89,6 +89,18 @@ class MergeSpec extends SparkSpec {
     assert(EsdbWriter.readOrdered(spark, p).count() == 2000)
   }
 
+  test("a single-key source past the 10,000-key IN-list cap merges through key ranges") {
+    val p = versioned("mergecap", ev(1 to 200))
+    val source = (150 to 10150).map(i =>
+      (s"s${i % 3}", s"g${i % 7}", 1000L, i.toLong, -1.0, "{}"))
+      .toDF("space", "grouping", "ts_us", "event_id", "value", "payload")
+    val (r, i) = EsdbWriter.mergeInto(spark, p, source, Seq("event_id"), keepVersions = 8)
+    assert((r, i) == (51L, 9950L))
+    val all = EsdbWriter.read(spark, p)
+    assert(all.count() == 10150)
+    assert(all.where($"value" === -1.0).count() == 10001)
+  }
+
   test("merge is one version: the change feed sees delete(old)+insert(new) and inserts") {
     val p = versioned("mergecdc", ev(1 to 50))
     val source = Seq(
