@@ -176,8 +176,7 @@ object Queries {
         graft.engine.EsdbWriter.write(ev(s, dir), tmp)
       }: Unit
     }
-    if (graft.engine.EsdbWriter.manifestGroupings(s, p)
-        .exists(_.filter(col("grouping") === Grouping).count() > 0))
+    if (graft.engine.EsdbWriter.manifestGroupings(s, p).exists(_.exists(_._2 == Grouping)))
       graft.engine.EsdbWriter.delete(s, p, groupings = Some(Set(Grouping)))
     p
   }

@@ -39,31 +39,52 @@ class Db private[api] (val events: DataFrame, storePath: Option[String] = None) 
     .map(p => EsdbWriter.readOrdered(events.sparkSession, p))
     .getOrElse(events)
 
-  /** Reference `Db.Find` (esdb.go:41-60): None when the space has no events. */
+  /** Reference `Db.Find` (esdb.go:41-60): None when the space has no
+    * events. A store opened by path answers from its groupings sidecar
+    * on the driver, with no Spark job — a space has events iff it has a
+    * (space, grouping) pair — resolving the current version on every
+    * call, so an in-place append shows up on the next one. Stores
+    * without the sidecar (log layout, pre-manifest stores) and
+    * frame-backed Dbs probe the data with a one-row limit.
+    */
   def find(space: String): Option[Space] = {
     val s = new Space(scanFrame, space, storePath)
-    if (s.frame.limit(1).isEmpty) None else Some(s)
+    val exists = storePath
+      .flatMap(p => EventStore.spaceExistsStored(events.sparkSession, p, space))
+      .getOrElse(!s.frame.limit(1).isEmpty)
+    if (exists) Some(s) else None
   }
 
-  // stores opened by path enumerate index-only (directory listing /
-  // write-time manifest), exactly like the reference's Db.Iterate and
-  // Space.Iterate (esdb.go:63-76, space.go:45-60); frame-backed Dbs
-  // (ad-hoc adapted tables) fall back to a distinct scan
-  private def spacesFrame: DataFrame = storePath
-    .map(p => EventStore.iterateSpacesStored(events.sparkSession, p))
-    .getOrElse(EventStore.iterateSpaces(events))
+  // stores opened by path enumerate index-only (one directory listing),
+  // exactly like the reference's Db.Iterate (esdb.go:63-76); frame-
+  // backed Dbs (ad-hoc adapted tables) fall back to a distinct scan
+  private def listedSpaces: Option[Seq[String]] =
+    storePath.map(p => EventStore.iterateSpacesStored(events.sparkSession, p))
 
   /** Reference `Db.Iterate` (esdb.go:63-76): sorted spaces, early exit. */
-  def iterate(fn: String => Boolean): Unit =
-    consume(spacesFrame.select("space"), fn)
+  def iterate(fn: String => Boolean): Unit = listedSpaces match {
+    case Some(names) => Db.consume(names.iterator, fn)
+    case None => Db.consume(EventStore.iterateSpaces(events), fn)
+  }
 
   def spaces: Seq[String] =
-    spacesFrame.collect().toSeq.map(_.getString(0))
+    listedSpaces.getOrElse(EventStore.iterateSpaces(events).collect().toSeq.map(_.getString(0)))
+}
 
-  private def consume(df: DataFrame, fn: String => Boolean): Unit = {
-    val it = df.toLocalIterator()
+private[api] object Db {
+
+  /** Feed names to a reference-style callback until it returns false. */
+  def consume(names: Iterator[String], fn: String => Boolean): Unit = {
     var go = true
-    while (go && it.hasNext) go = fn(it.next().getString(0))
+    while (go && names.hasNext) go = fn(names.next())
+  }
+
+  /** [[consume]] over a one-string-column frame, streamed to the driver
+    * (`toLocalIterator`) so an early `false` stops fetching.
+    */
+  def consume(df: DataFrame, fn: String => Boolean): Unit = {
+    import scala.jdk.CollectionConverters._
+    consume(df.toLocalIterator().asScala.map(_.getString(0)), fn)
   }
 }
 
@@ -71,21 +92,28 @@ class Space private[api] (all: DataFrame, val space: String, storePath: Option[S
 
   private[api] val frame: DataFrame = all.where(col("space") === space)
 
-  private def groupingsFrame: DataFrame = storePath
-    .map(p => EventStore.iterateGroupingsStored(all.sparkSession, p, space))
-    .getOrElse(EventStore.iterateGroupings(all, space))
+  // a store opened by path answers from its groupings sidecar; stores
+  // without one (and frame-backed Dbs) scan distinct groupings
+  private def storedGroupings: Option[Seq[String]] =
+    storePath.flatMap(p => EventStore.iterateGroupingsStored(all.sparkSession, p, space))
 
-  /** Reference `Space.Iterate` (space.go:45-60): sorted groupings,
-    * served from the write-time manifest on stores opened by path.
+  private def groupingsFrame: DataFrame = EventStore.iterateGroupings(
+    storePath.fold(all)(p => EsdbWriter.read(all.sparkSession, p)), space)
+
+  /** Reference `Space.Iterate` (space.go:45-60): distinct groupings in
+    * Spark's `orderBy` order (a null grouping first, then UTF8 byte
+    * order), early exit. A store opened by path streams them from its
+    * groupings sidecar, read on the driver with no Spark job, resolving
+    * the current version on every call; stores without the sidecar and
+    * frame-backed Dbs stream a distinct scan.
     */
-  def iterate(fn: String => Boolean): Unit = {
-    val it = groupingsFrame.toLocalIterator()
-    var go = true
-    while (go && it.hasNext) go = fn(it.next().getString(0))
+  def iterate(fn: String => Boolean): Unit = storedGroupings match {
+    case Some(gs) => Db.consume(gs.iterator, fn)
+    case None => Db.consume(groupingsFrame, fn)
   }
 
   def groupings: Seq[String] =
-    groupingsFrame.collect().toSeq.map(_.getString(0))
+    storedGroupings.getOrElse(groupingsFrame.collect().toSeq.map(_.getString(0)))
 
   /** Reference `Space.Scan` (space.go:62-77): ts-desc stable, early exit. */
   def scan(grouping: String)(fn: Event => Boolean): Unit =

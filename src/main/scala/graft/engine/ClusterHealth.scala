@@ -63,9 +63,7 @@ object ClusterHealth {
     spark.createDataset(files).repartition(par)
       .flatMap { case (space, file) =>
         val c = serConf.value
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            new org.apache.hadoop.fs.Path(file), c))
+        val r = graft.sources.ParquetFiles.open(c, new org.apache.hadoop.fs.Path(file))
         try {
           val acc = scala.collection.mutable.HashMap[String, (Double, Double)]()
           r.getFooter.getBlocks.forEach { b =>

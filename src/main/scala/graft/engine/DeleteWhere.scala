@@ -82,8 +82,7 @@ object DeleteWhere {
 
   private def footerFacts(conf: org.apache.hadoop.conf.Configuration,
                           file: org.apache.hadoop.fs.Path): Map[String, ColFacts] = {
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf))
+    val r = graft.sources.ParquetFiles.open(conf, file)
     try {
       val out = scala.collection.mutable.HashMap[String, (Option[Any], Option[Any], Option[Long], Boolean)]()
       var rows = 0L

@@ -916,10 +916,10 @@ object EsdbWriter {
     val affected: Set[String] = groupings match {
       case None => inScope
       case Some(gs) =>
-        groupingsRows(spark, src) match {
-          case Some(m) =>
-            m.filter(col("grouping").isin(gs.toSeq: _*))
-              .select("space").collect().map(_.getString(0)).toSet
+        groupingPairs(conf, src) match {
+          case Some(pairs) =>
+            // SQL IN never matches a null grouping: null rows survive
+            pairs.collect { case (sp, g) if g != null && gs.contains(g) => sp }.toSet
               .intersect(inScope)
           case None => inScope
         }
@@ -973,17 +973,9 @@ object EsdbWriter {
     val (headAtScan, src) = Publish.resolveWithVersion(conf, path)
     val srcPath = new org.apache.hadoop.fs.Path(src)
     val fs = srcPath.getFileSystem(conf)
-    // (has_ts, min, max, null_free) per file; null_free null in rows
-    // appended before the column existed → false (conservative)
-    val ranges: Map[String, (Boolean, Long, Long, Boolean)] =
-      tsRangeManifest(spark, path) match {
-        case None => Map.empty
-        case Some(m) => m.collect().map { r =>
-          val hasTs = r.getBoolean(3)
-          (r.getString(0), (hasTs, if (hasTs) r.getLong(1) else 0L,
-            if (hasTs) r.getLong(2) else 0L, !r.isNullAt(4) && r.getBoolean(4)))
-        }.toMap
-      }
+    // per-file facts of the version being rewritten; null_free unknown
+    // in rows appended before the column existed → false (conservative)
+    val ranges: Map[String, TsRange] = tsRangeManifest(conf, src).map(_.toMap).getOrElse(Map.empty)
     def expired(ts: Long): Boolean = if (inclusive) ts <= cutoffUs else ts < cutoffUs
     val files = storeDataFiles(fs, srcPath)
     // drop = whole range expired AND provably no null-ts rows (a null
@@ -991,12 +983,10 @@ object EsdbWriter {
     // carry = whole range survives (or all null ts); rewrite =
     // straddles the cutoff, has unproven nulls, or unknown to the manifest
     val (drop, rest) = files.partition { case (rel, _, _) =>
-      ranges.get(rel).exists { case (hasTs, _, mx, nullFree) =>
-        hasTs && nullFree && expired(mx)
-      }
+      ranges.get(rel).exists(r => r.hasTs && r.nullFree && expired(r.maxTs))
     }
     val (carry, rewrite) = rest.partition { case (rel, _, _) =>
-      ranges.get(rel).exists { case (hasTs, mn, _, _) => !hasTs || !expired(mn) }
+      ranges.get(rel).exists(r => !r.hasTs || !expired(r.minTs))
     }
     if (drop.isEmpty && rewrite.isEmpty) return // nothing expired: no version churn
     Publish.publish(conf, path, keepVersions, expectedVersion = headAtScan) { tmp =>
@@ -1399,8 +1389,7 @@ object EsdbWriter {
     */
   private def eventIdNullFree(conf: org.apache.hadoop.conf.Configuration,
                               file: org.apache.hadoop.fs.Path): Boolean = {
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf))
+    val r = graft.sources.ParquetFiles.open(conf, file)
     try {
       var ok = true
       var saw = false
@@ -1693,12 +1682,22 @@ object EsdbWriter {
     else Some(spark.read.schema(PairsSchema).parquet(m.toString))
   }
 
-  /** Distinct (space, grouping) pairs from the manifest sidecar; None
-    * for stores written before manifests existed (callers fall back to
-    * a data scan).
+  /** The groupings sidecar's (space, grouping) pairs under a resolved
+    * data root, as stored (not distinct), read on the driver
+    * ([[readSidecar]]); a null grouping reads as null. None for stores
+    * written before manifests existed.
     */
-  def manifestGroupings(spark: SparkSession, path: String): Option[DataFrame] =
-    groupingsRows(spark, dataRoot(spark, path)).map(_.distinct())
+  def groupingPairs(conf: org.apache.hadoop.conf.Configuration,
+                    root: String): Option[Seq[(String, String)]] =
+    readSidecar(conf, root, GroupingsManifest, PairsSchema)
+      .map(_.map(r => (r.getString(0), r.getString(1))))
+
+  /** Distinct (space, grouping) pairs of the store's current version;
+    * None for stores written before manifests existed (callers fall
+    * back to a data scan).
+    */
+  def manifestGroupings(spark: SparkSession, path: String): Option[Seq[(String, String)]] =
+    groupingPairs(hconf(spark), dataRoot(spark, path)).map(_.distinct)
 
   /** Append a batch to a (still-open) log directory. Refuses when sealed —
     * the reference errors writes after Close (stream/closed_stream.go:48-50).
@@ -1962,13 +1961,13 @@ object EsdbWriter {
       if (!fs.exists(root)) Nil
       else storeDataFiles(fs, root).map { case (_, f, sp) => (sp, f.getPath.toString) }
     val par = math.max(1, math.min(files.size, spark.sparkContext.defaultParallelism))
+    // the session conf travels to the executors (see refreshTsRangeManifest)
+    val serConf = new org.apache.spark.util.SerializableConfiguration(hconf)
     spark.createDataset(files).repartition(par)
       .mapPartitions { it =>
-        val conf = new org.apache.hadoop.conf.Configuration()
+        val conf = serConf.value
         it.map { case (space, file) =>
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-              new org.apache.hadoop.fs.Path(file), conf))
+          val r = graft.sources.ParquetFiles.open(conf, new org.apache.hadoop.fs.Path(file))
           try {
             var n = 0L
             var mn = Option.empty[Long]
@@ -2358,35 +2357,56 @@ object EsdbWriter {
     * parquet-mr — no Spark job (see [[logManifestRanges]]).
     */
   def logManifestInfo(conf: org.apache.hadoop.conf.Configuration,
-                      root: String): Option[Map[String, LogFileInfo]] = {
-    val dir = new org.apache.hadoop.fs.Path(root, LogManifest)
+                      root: String): Option[Map[String, LogFileInfo]] =
+    // rows landed in the schema later; old manifest part-files predate
+    // it and read null there
+    readSidecar(conf, root, LogManifest, LogManifestSchema).map(_.map { r =>
+      r.getString(0) -> LogFileInfo(r.getLong(1), r.getLong(2),
+        if (r.isNullAt(3)) -1L else r.getLong(3))
+    }.toMap)
+
+  private val LogManifestSchema = org.apache.spark.sql.types.StructType.fromDDL(
+    "file STRING, min_id BIGINT, max_id BIGINT, rows BIGINT")
+
+  /** Every row of the sidecar directory `root/name`, read on the driver
+    * with parquet-mr — no Spark job, so scan planning and the façade's
+    * metadata answers never run a query inside another. Goes through
+    * the Hadoop `FileSystem`; skips parts named `_…` or `.…` (markers,
+    * and parts still dot-staged by a concurrent in-place append); reads
+    * a column a part lacks (written before the column existed) as null,
+    * so a nullable fact stays "unknown". Values follow `schema`'s types
+    * (string, bigint, boolean). None when the sidecar does not exist.
+    */
+  def readSidecar(conf: org.apache.hadoop.conf.Configuration, root: String, name: String,
+                  schema: org.apache.spark.sql.types.StructType): Option[Seq[org.apache.spark.sql.Row]] = {
+    import org.apache.spark.sql.types.{BooleanType, LongType, StringType}
+    val dir = new org.apache.hadoop.fs.Path(root, name)
     val fs = dir.getFileSystem(conf)
     if (!fs.exists(dir)) return None
-    val parts = fs.listStatus(dir).filter { f =>
+    val parts = fs.listStatus(dir).toSeq.filter { f =>
       val n = f.getPath.getName
       f.isFile && f.getLen > 0 && !n.startsWith("_") && !n.startsWith(".")
     }
-    val out = scala.collection.mutable.HashMap[String, LogFileInfo]()
-    parts.foreach { p =>
-      val reader = org.apache.parquet.hadoop.ParquetReader
-        .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(), p.getPath)
-        .withConf(conf).build()
+    Some(parts.flatMap { part =>
+      val recs = graft.sources.ParquetFiles.records(conf, part.getPath)(
+        s => (s, org.apache.parquet.filter2.compat.FilterCompat.NOOP))
       try {
-        var g = reader.read()
-        while (g != null) {
-          // rows landed in the schema later; old manifest part-files
-          // predate it (per-file schemas differ inside one sidecar dir)
-          val rows =
-            if (g.getType.containsField("rows") && g.getFieldRepetitionCount("rows") > 0)
-              g.getLong("rows", 0)
-            else -1L
-          out(g.getString("file", 0)) =
-            LogFileInfo(g.getLong("min_id", 0), g.getLong("max_id", 0), rows)
-          g = reader.read()
-        }
-      } finally reader.close()
-    }
-    Some(out.toMap)
+        val idx = schema.fieldNames.map(c =>
+          if (recs.schema.containsField(c)) recs.schema.getFieldIndex(c) else -1)
+        Iterator.continually(recs.read()).takeWhile(_ != null).map { g =>
+          org.apache.spark.sql.Row.fromSeq(schema.fields.indices.map { i =>
+            val j = idx(i)
+            if (j < 0 || g.getFieldRepetitionCount(j) == 0) null
+            else schema.fields(i).dataType match {
+              case StringType => g.getString(j, 0)
+              case LongType => g.getLong(j, 0)
+              case BooleanType => g.getBoolean(j, 0)
+              case dt => throw new IllegalArgumentException(s"sidecar column type $dt")
+            }
+          })
+        }.toVector
+      } finally recs.close()
+    })
   }
 
   private def refreshLogManifest(spark: SparkSession, path: String): Unit = {
@@ -2404,8 +2424,7 @@ object EsdbWriter {
       .filterNot(f => known.contains(f.getPath.getName))
     if (fresh.isEmpty) return
     val rows = fresh.map { f =>
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f.getPath, hconf(spark)))
+      val r = graft.sources.ParquetFiles.open(hconf(spark), f.getPath)
       try {
         var mn = Long.MaxValue
         var mx = Long.MinValue
@@ -2430,23 +2449,30 @@ object EsdbWriter {
         .coalesce(1).write.mode(SaveMode.Append).parquet(s"${root.toString}/$LogManifest")
   }
 
-  /** Per-file `ts_us` facts from the write-time manifest — the grouped
-    * store's analog of the reference's bounded reader skipping whole
-    * blocks by time (bounded/reader.go): a ts-bounded ordered scan
-    * prunes files whose recorded range cannot intersect the bound,
-    * WITHOUT a footer round-trip per file (at object-store latency the
-    * listing alone decides which files open at all). Columns:
-    * `file` ("space=<dir>/<name>"), `min_ts`/`max_ts` (null when the
-    * file has no non-null ts), `has_ts` (false = provably all-null),
-    * `null_free` (true = provably no null ts; null = unknown). Read with
-    * its fixed schema. None for stores written before this manifest
+  /** One file's `ts_us` facts: `hasTs` false = provably all-null (min
+    * and max then 0); `nullFree` true = provably no null ts, false when
+    * not proven or unknown (rows written before the column existed).
+    */
+  final case class TsRange(hasTs: Boolean, minTs: Long, maxTs: Long, nullFree: Boolean)
+
+  /** Per-file `ts_us` facts from the write-time manifest under the
+    * resolved data root `root`, as stored (a carried and a fresh part
+    * may both hold a file) — the grouped store's analog of the
+    * reference's bounded reader skipping whole blocks by time
+    * (bounded/reader.go): a ts-bounded ordered scan prunes files whose
+    * recorded range cannot intersect the bound, WITHOUT a footer
+    * round-trip per file, and retention classifies files without
+    * opening them. Keyed by "space=<dir>/<name>". Read on the driver
+    * ([[readSidecar]]). None for stores written before this manifest
     * existed.
     */
-  def tsRangeManifest(spark: SparkSession, path: String): Option[DataFrame] = {
-    val m = new org.apache.hadoop.fs.Path(dataRoot(spark, path), TsRangeManifest)
-    if (!m.getFileSystem(hconf(spark)).exists(m)) None
-    else Some(spark.read.schema(TsRangeSchema).parquet(m.toString))
-  }
+  def tsRangeManifest(conf: org.apache.hadoop.conf.Configuration,
+                      root: String): Option[Seq[(String, TsRange)]] =
+    readSidecar(conf, root, TsRangeManifest, TsRangeSchema).map(_.map { r =>
+      val hasTs = r.getBoolean(3)
+      r.getString(0) -> TsRange(hasTs, if (hasTs) r.getLong(1) else 0L,
+        if (hasTs) r.getLong(2) else 0L, !r.isNullAt(4) && r.getBoolean(4))
+    })
 
   /** Ts-range rows for the files a write produced: ONE job with no
     * shuffle reads their footers in parallel on the executors, and the
@@ -2484,8 +2510,7 @@ object EsdbWriter {
     */
   private def tsFacts(conf: org.apache.hadoop.conf.Configuration, rel: String,
                       file: org.apache.hadoop.fs.Path): Option[org.apache.spark.sql.catalyst.InternalRow] = {
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf))
+    val r = graft.sources.ParquetFiles.open(conf, file)
     try {
       var mn = Option.empty[Long]
       var mx = Option.empty[Long]

@@ -54,40 +54,57 @@ object EventStore {
   /** [[iterateSpaces]] for a written store: the reference's `Db.Iterate`
     * walks the file-level key index, never event data (esdb.go:63-76) —
     * here the spaces ARE the partition directory names, so enumeration
-    * is one driver-side listing with no Spark job over data files.
+    * is one driver-side listing, sorted, with no Spark job.
     */
-  def iterateSpacesStored(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
+  def iterateSpacesStored(spark: org.apache.spark.sql.SparkSession, path: String): Seq[String] = {
     // resolve the version pointer first: after compact() the data lives
     // under _versions/<N>-<uuid>/, not at the logical root
     val hconf = spark.sparkContext.hadoopConfiguration
     val root = new org.apache.hadoop.fs.Path(Publish.resolve(hconf, path))
     val fs = root.getFileSystem(hconf)
-    val spaces =
-      if (!fs.exists(root)) Seq.empty
-      else fs.listStatus(root).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("space="))
-        .map(s => graft.sources.EsdbStoreSource.unescapePathName(
-          s.getPath.getName.drop("space=".length)))
-        .sorted
-    import spark.implicits._
-    spaces.toDF("space")
+    if (!fs.exists(root)) Seq.empty
+    else fs.listStatus(root).toSeq
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith("space="))
+      .map(s => graft.sources.EsdbStoreSource.unescapePathName(
+        s.getPath.getName.drop("space=".length)))
+      .sorted
   }
 
   /** Reference `Space.Iterate` (space.go:45-60): groupings of one space, sorted. */
   def iterateGroupings(ev: DataFrame, space: String): DataFrame =
     ev.where(col("space") === space).select("grouping").distinct().orderBy("grouping")
 
-  /** [[iterateGroupings]] for a written store: served from the
-    * write-time groupings manifest (the reference's index-only
-    * `Space.Iterate`, space.go:45-60) — a store's enumeration cost is
-    * its key count, not its event count. Falls back to a data scan for
-    * stores written before manifests existed.
+  /** Spark's `orderBy` order on strings: nulls first, then UTF8 byte
+    * order (which differs from `String`'s UTF-16 order above U+FFFF).
+    */
+  private val sparkStringOrder: Ordering[String] = new Ordering[String] {
+    override def compare(a: String, b: String): Int =
+      if (a == null) { if (b == null) 0 else -1 }
+      else if (b == null) 1
+      else org.apache.spark.unsafe.types.UTF8String.fromString(a)
+        .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(b))
+  }
+
+  /** [[iterateGroupings]] for a written store, served from the
+    * write-time groupings sidecar on the driver (the reference's
+    * index-only `Space.Iterate`, space.go:45-60): no Spark job, and a
+    * store's enumeration cost is its key count, not its event count.
+    * Distinct and in [[iterateGroupings]]'s order. Each call resolves
+    * the current version. None for stores written before manifests
+    * existed — callers fall back to [[iterateGroupings]] over the data.
     */
   def iterateGroupingsStored(spark: org.apache.spark.sql.SparkSession, path: String,
-                             space: String): DataFrame =
+                             space: String): Option[Seq[String]] =
     EsdbWriter.manifestGroupings(spark, path)
-      .map(_.where(col("space") === space).select("grouping").distinct().orderBy("grouping"))
-      .getOrElse(iterateGroupings(EsdbWriter.read(spark, path), space))
+      .map(_.collect { case (`space`, g) => g }.sorted(sparkStringOrder))
+
+  /** Whether a written store holds events of `space`, from the
+    * groupings sidecar on the driver: a space has events iff it has a
+    * (space, grouping) pair. None for stores without the sidecar.
+    */
+  def spaceExistsStored(spark: org.apache.spark.sql.SparkSession, path: String,
+                        space: String): Option[Boolean] =
+    EsdbWriter.manifestGroupings(spark, path).map(_.exists(_._1 == space))
 
   /** Reference `Space.Scan` (space.go:62-77): one grouping's events,
     * ts-desc, insertion-order ties; optional early-exit limit.

@@ -2,8 +2,6 @@ package graft.sources
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan}
@@ -159,7 +157,7 @@ final class EsdbFooterAggReader(part: EsdbInputPartition, spec: PushedAggSpec,
 
     part.files.foreach { file =>
       EsdbMetrics.FooterReads.incrementAndGet()
-      val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(file), conf))
+      val r = ParquetFiles.open(conf, new Path(file))
       try {
         r.getFooter.getBlocks.forEach { b =>
           rows += b.getRowCount

@@ -87,8 +87,7 @@ final class EsdbLogMicroBatch(path: String, required: StructType,
     * nothing).
     */
   private def footerIdStats(hconf: org.apache.hadoop.conf.Configuration, p: Path): (Long, Long) = {
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, hconf))
+    val r = ParquetFiles.open(hconf, p)
     try {
       var mx = -1L
       var cnt = 0L

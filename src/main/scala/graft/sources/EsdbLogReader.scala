@@ -7,10 +7,6 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
-import org.apache.parquet.hadoop.api.ReadSupport
-import org.apache.parquet.hadoop.example.GroupReadSupport
-import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
@@ -51,11 +47,11 @@ final class EsdbLogReaderFactory(required: StructType, idBounds: TsBounds,
 
 final class EsdbLogMergeReader(part: EsdbLogPartition, required: StructType,
                                idBounds: TsBounds, limit: Option[Int],
-                               hadoopConf: Configuration = new Configuration())
+                               hadoopConf: Configuration)
   extends PartitionReader[InternalRow] {
 
-  private final class Cursor(val reader: ParquetReader[Group],
-                             schema: org.apache.parquet.schema.MessageType) {
+  private final class Cursor(val reader: ParquetFiles.Records) {
+    private val schema = reader.schema
     val colIdx: Array[Int] = required.fields.map { f =>
       if (schema.containsField(f.name)) schema.getFieldIndex(f.name) else -1
     }
@@ -115,29 +111,25 @@ final class EsdbLogMergeReader(part: EsdbLogPartition, required: StructType,
   private def open(): Unit = {
     val conf = hadoopConf // session conf: object-store creds ride along
     part.files.foreach { file =>
-      val p = new Path(file)
-      val footer = ParquetFileReader.open(HadoopInputFile.fromPath(p, conf))
-      val fileSchema = try footer.getFileMetaData.getSchema finally footer.close()
-      // a log file with no event_id column cannot be engine-written
-      // (the log writer sorts by event_id, so the column always
-      // exists); under a claimed id bound, silently dropping the file
-      // (or its predicate) would hide a corrupt store — fail naming it
-      if (idBounds.isBounded && !fileSchema.containsField("event_id")) {
-        throw new IllegalStateException(
-          s"log file $file has no event_id column but this scan claimed an id bound; " +
-            "the log writer always materializes event_id — foreign or corrupt file in the log")
+      // one open per file (see EsdbMergeReader)
+      val reader = ParquetFiles.records(conf, new Path(file)) { fileSchema =>
+        // a log file with no event_id column cannot be engine-written
+        // (the log writer sorts by event_id, so the column always
+        // exists); under a claimed id bound, silently dropping the file
+        // (or its predicate) would hide a corrupt store — fail naming it
+        if (idBounds.isBounded && !fileSchema.containsField("event_id")) {
+          throw new IllegalStateException(
+            s"log file $file has no event_id column but this scan claimed an id bound; " +
+              "the log writer always materializes event_id — foreign or corrupt file in the log")
+        }
+        val needed = (required.fieldNames.toSeq :+ "event_id").distinct
+        val projected = new org.apache.parquet.schema.MessageType(fileSchema.getName,
+          fileSchema.getFields.asScala.filter(f => needed.contains(f.getName)).asJava)
+        val preds = if (idBounds.isBounded) idPredicates else Nil
+        (projected, preds.reduceOption(FilterApi.and)
+          .fold(FilterCompat.NOOP: FilterCompat.Filter)(fp => FilterCompat.get(fp)))
       }
-      val needed = (required.fieldNames.toSeq :+ "event_id").distinct
-      val projected = new org.apache.parquet.schema.MessageType(fileSchema.getName,
-        fileSchema.getFields.asScala.filter(f => needed.contains(f.getName)).asJava)
-      val fconf = new Configuration(conf)
-      fconf.set(ReadSupport.PARQUET_READ_SCHEMA, projected.toString)
-      val builder = ParquetReader.builder(new GroupReadSupport(), p).withConf(fconf)
-      val preds = if (idBounds.isBounded) idPredicates else Nil
-      val reader = preds.reduceOption(FilterApi.and)
-        .fold(builder)(fp => builder.withFilter(FilterCompat.get(fp)))
-        .build()
-      val c = new Cursor(reader, projected)
+      val c = new Cursor(reader)
       cursors.add(c)
       filesOpened += 1
       if (c.advance()) heap.add(c) else reader.close()

@@ -155,11 +155,10 @@ object EsdbMetaTables {
     }
 
   private def groupingRows(logical: String): Seq[InternalRow] =
-    EsdbWriter.manifestGroupings(SparkSession.active, logical).toSeq.flatMap { m =>
-      m.collect().toSeq.map { r =>
+    EsdbWriter.manifestGroupings(SparkSession.active, logical).toSeq.flatMap { pairs =>
+      pairs.map { case (space, grouping) =>
         new GenericInternalRow(Array[Any](
-          Option(r.getString(r.fieldIndex("space"))).map(UTF8String.fromString).orNull,
-          Option(r.getString(r.fieldIndex("grouping"))).map(UTF8String.fromString).orNull))
+          UTF8String.fromString(space), UTF8String.fromString(grouping)))
       }.sortBy(_.toString)
     }
 

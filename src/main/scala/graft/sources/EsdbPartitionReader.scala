@@ -7,10 +7,6 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
-import org.apache.parquet.hadoop.api.ReadSupport
-import org.apache.parquet.hadoop.example.GroupReadSupport
-import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.catalyst.InternalRow
@@ -104,10 +100,16 @@ object EsdbMergeReader {
     }
 }
 
+/** k-way merge of one space's sorted files. Each file is opened ONCE
+  * ([[ParquetFiles.records]]): its footer schema picks the projection
+  * and the predicates, and the same reader streams the rows — no second
+  * footer read, and no open parses a Hadoop config (the task's conf is
+  * passed in).
+  */
 final class EsdbMergeReader(part: EsdbInputPartition, required: StructType,
                             grouping: Option[String], groupingNotNull: Boolean,
                             tsBounds: TsBounds, hints: Seq[(String, Any)], limit: Option[Int],
-                            hadoopConf: Configuration = new Configuration())
+                            hadoopConf: Configuration)
   extends PartitionReader[InternalRow] {
 
   import EsdbMergeReader._
@@ -117,7 +119,8 @@ final class EsdbMergeReader(part: EsdbInputPartition, required: StructType,
     * column field index, key indexes for the merge, and the lookahead
     * row.
     */
-  private final class Cursor(val reader: ParquetReader[Group], schema: MessageType) {
+  private final class Cursor(val reader: ParquetFiles.Records) {
+    private val schema = reader.schema
     val colIdx: Array[Int] = required.fields.map { f =>
       if (f.name == "space") SpaceConst
       else fieldIndexOf(schema, f) // name, else field ID (renamed column)
@@ -240,47 +243,44 @@ final class EsdbMergeReader(part: EsdbInputPartition, required: StructType,
       case None => None
     }
     part.files.foreach { file =>
-      val p = new Path(file)
-      // per-file projection: needed columns that exist in THIS file's
-      // schema (appends may add idx_* columns later); merge keys are
-      // always projected so the heap can order rows
-      val footer = ParquetFileReader.open(HadoopInputFile.fromPath(p, conf))
-      val fileSchema = try footer.getFileMetaData.getSchema finally footer.close()
-      // A data file missing a column whose predicate this scan CLAIMED
-      // handled (grouping, or ts_us under an active bound) cannot be an
-      // engine-written store file — the writer always materializes
-      // both. Skipping the predicate would silently return the foreign
-      // file's rows unfiltered, and skipping the file would silently
-      // hide them; either way the store is corrupt — say so, loudly,
-      // naming the file.
-      if (tsBounds.isBounded && !fileSchema.containsField("ts_us"))
-        throw new IllegalStateException(
-          s"store file $file has no ts_us column but this scan claimed a ts bound; " +
-            "the engine writer always materializes ts_us — foreign or corrupt file in the store")
-      if ((grouping.isDefined || groupingNotNull) && !fileSchema.containsField("grouping"))
-        throw new IllegalStateException(
-          s"store file $file has no grouping column but this scan claimed a grouping " +
-            "predicate; the engine writer always materializes grouping — foreign or " +
-            "corrupt file in the store")
-      val needed = (required.fieldNames.toSeq ++ KeyCols).distinct.filterNot(_ == "space")
-      // a required field's parquet ID also selects the file's column
-      // when its stored NAME predates a rename (FieldIds resolution)
-      val neededIds = required.fields.flatMap(f => graft.engine.FieldIds.idOf(f)).toSet
-      val projected = new MessageType(fileSchema.getName,
-        fileSchema.getFields.asScala.filter(f => needed.contains(f.getName) ||
-          (f.getId != null && neededIds.contains(f.getId.intValue.toLong))).asJava)
-      val fconf = new Configuration(conf)
-      fconf.set(ReadSupport.PARQUET_READ_SCHEMA, projected.toString)
-      val builder = ParquetReader.builder(new GroupReadSupport(), p).withConf(fconf)
-      // grouping + ts-bound predicates (exact, fully handled) + hint
-      // predicates (best-effort skipping; Spark re-verifies post-scan)
-      val preds = groupingPred.toSeq ++
-        (if (tsBounds.isBounded) tsPredicates else Nil) ++
-        hints.flatMap { case (c, v) => hintPredicate(fileSchema, c, v) }
-      val reader = preds.reduceOption(FilterApi.and)
-        .fold(builder)(fp => builder.withFilter(FilterCompat.get(fp)))
-        .build()
-      val c = new Cursor(reader, projected)
+      // one open per file: the footer's schema decides the projection
+      // and the predicates, and the same reader then streams the rows
+      val reader = ParquetFiles.records(conf, new Path(file)) { fileSchema =>
+        // A data file missing a column whose predicate this scan CLAIMED
+        // handled (grouping, or ts_us under an active bound) cannot be an
+        // engine-written store file — the writer always materializes
+        // both. Skipping the predicate would silently return the foreign
+        // file's rows unfiltered, and skipping the file would silently
+        // hide them; either way the store is corrupt — say so, loudly,
+        // naming the file.
+        if (tsBounds.isBounded && !fileSchema.containsField("ts_us"))
+          throw new IllegalStateException(
+            s"store file $file has no ts_us column but this scan claimed a ts bound; " +
+              "the engine writer always materializes ts_us — foreign or corrupt file in the store")
+        if ((grouping.isDefined || groupingNotNull) && !fileSchema.containsField("grouping"))
+          throw new IllegalStateException(
+            s"store file $file has no grouping column but this scan claimed a grouping " +
+              "predicate; the engine writer always materializes grouping — foreign or " +
+              "corrupt file in the store")
+        // per-file projection: needed columns that exist in THIS file's
+        // schema (appends may add idx_* columns later); merge keys are
+        // always projected so the heap can order rows
+        val needed = (required.fieldNames.toSeq ++ KeyCols).distinct.filterNot(_ == "space")
+        // a required field's parquet ID also selects the file's column
+        // when its stored NAME predates a rename (FieldIds resolution)
+        val neededIds = required.fields.flatMap(f => graft.engine.FieldIds.idOf(f)).toSet
+        val projected = new MessageType(fileSchema.getName,
+          fileSchema.getFields.asScala.filter(f => needed.contains(f.getName) ||
+            (f.getId != null && neededIds.contains(f.getId.intValue.toLong))).asJava)
+        // grouping + ts-bound predicates (exact, fully handled) + hint
+        // predicates (best-effort skipping; Spark re-verifies post-scan)
+        val preds = groupingPred.toSeq ++
+          (if (tsBounds.isBounded) tsPredicates else Nil) ++
+          hints.flatMap { case (c, v) => hintPredicate(fileSchema, c, v) }
+        (projected, preds.reduceOption(FilterApi.and)
+          .fold(FilterCompat.NOOP: FilterCompat.Filter)(fp => FilterCompat.get(fp)))
+      }
+      val c = new Cursor(reader)
       cursors.add(c)
       filesOpened += 1
       if (c.advance()) heap.add(c) else reader.close()

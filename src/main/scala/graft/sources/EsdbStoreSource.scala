@@ -650,24 +650,18 @@ final class EsdbScan(path: String, required: StructType, spaces: Option[Seq[Stri
 
   // the manifest is one scan-lifetime fact about immutable files —
   // memoized independently of the listing so a runtime filter's
-  // re-listing never re-reads (and re-collects) the sidecar
-  @volatile private var tsManifestCache: Map[String, (Boolean, Long, Long)] = _
+  // re-listing never re-reads the sidecar
+  @volatile private var tsManifestCache: Map[String, graft.engine.EsdbWriter.TsRange] = _
 
-  private def tsManifestRanges: Map[String, (Boolean, Long, Long)] = {
+  private def tsManifestRanges: Map[String, graft.engine.EsdbWriter.TsRange] = {
     if (!tsBounds.isBounded) return Map.empty
     val cached = tsManifestCache
     if (cached != null) return cached
-    val computed =
-      graft.engine.EsdbWriter.tsRangeManifest(SparkSession.active, path) match {
-        case None => Map.empty[String, (Boolean, Long, Long)]
-        case Some(m) => m.collect().map { r =>
-          val hasTs = r.getBoolean(r.fieldIndex("has_ts"))
-          (r.getString(r.fieldIndex("file")),
-            (hasTs,
-              if (hasTs) r.getLong(r.fieldIndex("min_ts")) else 0L,
-              if (hasTs) r.getLong(r.fieldIndex("max_ts")) else 0L))
-        }.toMap
-      }
+    // read on the driver: a Spark job here would run inside this
+    // query's optimizer
+    val computed = graft.engine.EsdbWriter.tsRangeManifest(
+      SparkSession.active.sparkContext.hadoopConfiguration, path)
+      .map(_.toMap).getOrElse(Map.empty)
     tsManifestCache = computed
     computed
   }
@@ -759,11 +753,8 @@ final class EsdbScan(path: String, required: StructType, spaces: Option[Seq[Stri
             }
           }
           .filter { case (rel, _) =>
-            tsRanges.get(rel) match {
-              case Some((hasTs, mn, mx)) =>
-                hasTs && !(tsBounds.belowLower(mx) || tsBounds.aboveUpper(mn))
-              case None => true
-            }
+            tsRanges.get(rel).forall(r =>
+              r.hasTs && !(tsBounds.belowLower(r.maxTs) || tsBounds.aboveUpper(r.minTs)))
           }
           .map(_._2)
           .sortBy(_.getPath.toString)

@@ -5,8 +5,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.hadoop.mapred.FileSplit
 import org.apache.hadoop.mapreduce.TaskAttemptID
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetInputFormat}
-import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.hadoop.ParquetInputFormat
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.connector.read.PartitionReader
@@ -185,7 +184,7 @@ object EsdbVectorReader {
   def probe(conf: Configuration, file: String, required: StructType,
             constSpace: Boolean, statCols: Seq[String] = Nil): Option[Map[String, ColFacts]] = {
     val p = new Path(file)
-    val footer = ParquetFileReader.open(HadoopInputFile.fromPath(p, conf))
+    val footer = ParquetFiles.open(conf, p)
     val (schema, blocks) =
       try (footer.getFileMetaData.getSchema, footer.getFooter.getBlocks)
       finally footer.close()

@@ -1,0 +1,99 @@
+package graft.sources
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.column.page.PageReadStore
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
+import org.apache.parquet.filter2.compat.FilterCompat
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.{ColumnIOFactory, RecordReader}
+import org.apache.parquet.schema.MessageType
+
+/** The one way the engine opens a parquet file.
+  *
+  * parquet-mr's short entry points — `ParquetFileReader.open(InputFile)`
+  * and `ParquetReader.builder(readSupport, path)` — each build a fresh
+  * Hadoop `Configuration`, which parses core-default/core-site XML:
+  * about 6 ms per open, far more than reading a store file's footer.
+  * Every open here takes its read options from the CALLER's conf (the
+  * session's on the driver, the deserialized copy on an executor), so
+  * no open parses a config and object-store credentials ride along.
+  */
+object ParquetFiles {
+
+  private def options(conf: Configuration, path: Path, filter: FilterCompat.Filter) =
+    HadoopReadOptions.builder(conf, path).withRecordFilter(filter).build()
+
+  /** Open `path` for its footer; the caller closes the reader. */
+  def open(conf: Configuration, path: Path): ParquetFileReader =
+    ParquetFileReader.open(HadoopInputFile.fromPath(path, conf),
+      options(conf, path, FilterCompat.NOOP))
+
+  /** Open `path` once for a row-at-a-time read. The footer is read a
+    * single time: `plan` sees the file's schema and returns the
+    * projection to read and the filter to apply (row-group stats,
+    * dictionaries, page indexes and records), so a caller that needs
+    * the schema to decide either never opens the file twice.
+    */
+  def records(conf: Configuration, path: Path)
+             (plan: MessageType => (MessageType, FilterCompat.Filter)): Records = {
+    val file = HadoopInputFile.fromPath(path, conf)
+    val in = file.newStream()
+    try {
+      val footer = ParquetFileReader.readFooter(file, options(conf, path, FilterCompat.NOOP), in)
+      val fileSchema = footer.getFileMetaData.getSchema
+      val (projection, filter) = plan(fileSchema)
+      val reader = ParquetFileReader.open(file, footer, options(conf, path, filter), in)
+      reader.setRequestedSchema(projection)
+      new Records(reader, fileSchema, projection, filter)
+    } catch {
+      case t: Throwable => in.close(); throw t
+    }
+  }
+
+  /** Projected `Group` records of one open file, filtered at row-group,
+    * page and record level; `schema` is the projection, so field
+    * indexes of returned groups are indexes into it.
+    */
+  final class Records private[ParquetFiles] (reader: ParquetFileReader, fileSchema: MessageType,
+                                             val schema: MessageType, filter: FilterCompat.Filter)
+    extends java.io.Closeable {
+
+    private val io = new ColumnIOFactory(reader.getFileMetaData.getCreatedBy)
+      .getColumnIO(schema, fileSchema, true)
+    private var pages: PageReadStore = _
+    private var rows: RecordReader[Group] = _
+    private var left = 0L
+
+    /** The next matching record; null at end of file. */
+    def read(): Group = {
+      var out: Group = null
+      var eof = false
+      while (out == null && !eof) {
+        if (left == 0L) {
+          if (pages != null) pages.close()
+          pages = reader.readNextFilteredRowGroup()
+          if (pages == null) eof = true
+          else {
+            left = pages.getRowCount
+            rows = io.getRecordReader(pages, new GroupRecordConverter(schema), filter)
+          }
+        } else {
+          left -= 1
+          val g = rows.read()
+          // a record the filter rejects reads as null or as skipped
+          if (g != null && !rows.shouldSkipCurrentRecord()) out = g
+        }
+      }
+      out
+    }
+
+    override def close(): Unit = {
+      if (pages != null) { pages.close(); pages = null }
+      reader.close()
+    }
+  }
+}

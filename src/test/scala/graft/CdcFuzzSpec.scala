@@ -112,10 +112,8 @@ class CdcFuzzSpec extends SparkSpec {
         }
       }
       // the groupings manifests agree too (the delta upkeep is exact)
-      val srcPairs = EsdbWriter.manifestGroupings(spark, srcP).get
-        .collect().map(r => (r.getString(0), r.getString(1))).toSet
-      val repPairs = EsdbWriter.manifestGroupings(spark, repP).get
-        .collect().map(r => (r.getString(0), r.getString(1))).toSet
+      val srcPairs = EsdbWriter.manifestGroupings(spark, srcP).get.toSet
+      val repPairs = EsdbWriter.manifestGroupings(spark, repP).get.toSet
       assert(srcPairs == repPairs,
         s"trial $trial manifest drift: src-only=${srcPairs -- repPairs} rep-only=${repPairs -- srcPairs}")
     }

@@ -61,8 +61,7 @@ class DeleteFuzzSpec extends SparkSpec {
         s"trial $trial (subparts=$subparts, g=$doomedG, s=$doomedS): delete diverged from filter")
 
       // manifest lists exactly the surviving (space, grouping) pairs
-      val manifestPairs = EsdbWriter.manifestGroupings(spark, p).get
-        .collect().map(r => (r.getString(0), r.getString(1))).toSet
+      val manifestPairs = EsdbWriter.manifestGroupings(spark, p).get.toSet
       val expectedPairs = expected.filter(col("grouping").isNotNull)
         .select("space", "grouping").distinct()
         .collect().map(r => (r.getString(0), r.getString(1))).toSet
@@ -134,8 +133,7 @@ class DeleteFuzzSpec extends SparkSpec {
         s"trial $trial (subparts=$subparts, filters=${filters.mkString(",")}): diverged")
 
       // manifest lists exactly the surviving non-null (space, grouping) pairs
-      val manifestPairs = EsdbWriter.manifestGroupings(spark, p).toSeq.flatMap(
-        _.collect().map(r => (r.getString(0), r.getString(1)))).toSet
+      val manifestPairs = EsdbWriter.manifestGroupings(spark, p).toSeq.flatten.toSet
       val expectedPairs = expected.filter(col("grouping").isNotNull)
         .select("space", "grouping").distinct()
         .collect().map(r => (r.getString(0), r.getString(1))).toSet

@@ -309,7 +309,7 @@ class EsdbWriteSpec extends SparkSpec {
     assert(new java.io.File(path, "_STREAM_COMMITS").listFiles()
       .count(_.getName.endsWith(".commit")) >= 2)
     // the groupings manifest extended by the batch deltas
-    val pairs = EsdbWriter.manifestGroupings(spark, path).get.count()
+    val pairs = EsdbWriter.manifestGroupings(spark, path).get.size
     assert(pairs == 21, s"3 spaces x 7 groupings, got $pairs")
   }
 

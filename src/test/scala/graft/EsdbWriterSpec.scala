@@ -136,11 +136,10 @@ class EsdbWriterSpec extends SparkSpec {
     assert(EsdbWriter.readOrdered(spark, dir).collect().toSet == before)
     // manifests carried: groupings enumeration still index-only-complete,
     // ts-range pruning entries still present for the carried file
-    assert(EsdbWriter.manifestGroupings(spark, dir).get
-      .select("space").distinct().collect().map(_.getString(0)).toSet == Set("a", "b"))
+    assert(EsdbWriter.manifestGroupings(spark, dir).get.map(_._1).toSet == Set("a", "b"))
     import spark.implicits._
-    val tsFiles = EsdbWriter.tsRangeManifest(spark, dir).get
-      .select("file").as[String].collect().toSet
+    val tsFiles = EsdbWriter.tsRangeManifest(conf, EsdbWriter.dataRoot(spark, dir)).get
+      .map(_._1).toSet
     assert(bFilesBefore.forall(tsFiles.contains),
       "carried files must keep their ts-range manifest entries")
     // nothing fragmented now: no version churn

@@ -191,7 +191,7 @@ class PublishSpec extends SparkSpec {
       .as[Long].head() == 15)
     EsdbWriter.compact(spark, dir)
     assert(EsdbWriter.read(spark, dir).count() == 15)
-    assert(EsdbWriter.manifestGroupings(spark, dir).get.count() == 2) // (s0,g),(s1,g)
+    assert(EsdbWriter.manifestGroupings(spark, dir).get.size == 2) // (s0,g),(s1,g)
   }
 
   test("retention: keep=2 protects a long-running reader across compaction; the slide fails it loudly") {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -60,10 +59,11 @@ class SidecarSpec extends SparkSpec {
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val files = EsdbWriter.storeDataFiles(fs, root)
     assert(files.nonEmpty, s"$what: no live files")
-    val rows = EsdbWriter.tsRangeManifest(spark, p).get.collect()
-      .groupBy(_.getString(0)).map { case (f, rs) =>
-        val facts = rs.map(r => (Option(r.get(1)).map(_.asInstanceOf[Long]),
-          Option(r.get(2)).map(_.asInstanceOf[Long]), r.getBoolean(4))).distinct
+    val rows = EsdbWriter.tsRangeManifest(spark.sparkContext.hadoopConfiguration, root.toString)
+      .get.groupBy(_._1).map { case (f, rs) =>
+        val facts = rs.map { case (_, r) =>
+          (Option.when(r.hasTs)(r.minTs), Option.when(r.hasTs)(r.maxTs), r.nullFree)
+        }.distinct
         assert(facts.length == 1, s"$what: conflicting ts-range rows for $f: ${facts.toSeq}")
         f -> facts.head
       }
@@ -73,8 +73,7 @@ class SidecarSpec extends SparkSpec {
     }
     val data = EsdbWriter.read(spark, p).select("space", "grouping").distinct()
       .collect().map(r => (r.getString(0), r.getString(1))).toSet
-    val pairs = EsdbWriter.manifestGroupings(spark, p).get
-      .collect().map(r => (r.getString(0), r.getString(1))).toSet
+    val pairs = EsdbWriter.manifestGroupings(spark, p).get.toSet
     assert(pairs == data, s"$what: groupings sidecar ${pairs -- data} extra, ${data -- pairs} missing")
   }
 
@@ -131,32 +130,6 @@ class SidecarSpec extends SparkSpec {
     assertSidecars(p, "SQL UPDATE")
   }
 
-  /** Jobs `f` starts from this thread (job-group filtered, so nothing
-    * else running in the session counts); a sentinel job closes the
-    * window, because the listener bus delivers events in order.
-    */
-  private def jobsOf(f: => Unit): Int = {
-    val group = s"jobcount-${java.util.UUID.randomUUID()}"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .foreach(seen.add)
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(l)
-    try {
-      sc.setJobGroup(group, "job count")
-      try f finally sc.clearJobGroup()
-      sc.setJobGroup(s"$group-end", "sentinel")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!seen.contains(s"$group-end") && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(seen.contains(s"$group-end"), "listener bus did not drain")
-      seen.toArray.count(_ == group)
-    } finally sc.removeSparkListener(l)
-  }
-
   test("each copy-on-write mutation runs within its job budget") {
     val p = versioned(events(1 to 400))
     // warm once: the first query of a fresh session plans extra work
@@ -172,11 +145,11 @@ class SidecarSpec extends SparkSpec {
       Seq("event_id")): Unit)
     val got = Map("update" -> update, "delete" -> delete, "retention" -> retention, "merge" -> merge)
     // data write (shuffle + write), one footer job, the groupings query
-    // (shuffle + write); delete adds the manifest lookup, retention the
-    // ts-range read, merge the source stats, the footprint join and its
-    // counts
+    // (shuffle + write); delete and retention read their sidecar on the
+    // driver (no job); merge adds the source stats, the footprint join
+    // and its counts
     info(s"Spark jobs per mutation: $got")
-    val budget = Map("update" -> 5, "delete" -> 6, "retention" -> 6, "merge" -> 12)
+    val budget = Map("update" -> 5, "delete" -> 5, "retention" -> 5, "merge" -> 12)
     budget.foreach { case (k, b) =>
       assert(got(k) <= b, s"$k ran ${got(k)} Spark jobs, budget $b (all: $got)")
     }

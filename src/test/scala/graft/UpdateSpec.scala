@@ -263,8 +263,7 @@ class UpdateSpec extends SparkSpec {
         s"trial $trial (set=${set.keySet}, filters=$filters): diverged")
 
       // manifest lists exactly the surviving (space, grouping) pairs
-      val manifestPairs = EsdbWriter.manifestGroupings(spark, p).toSeq.flatMap(
-        _.collect().map(r => (r.getString(0), r.getString(1)))).toSet
+      val manifestPairs = EsdbWriter.manifestGroupings(spark, p).toSeq.flatten.toSet
       val expectedPairs = expected.filter(col("grouping").isNotNull)
         .select("space", "grouping").distinct()
         .collect().map(r => (r.getString(0), r.getString(1))).toSet
