@@ -15,7 +15,7 @@ object Bench {
     * rather than a Spark scan: it warms ALL column chunks regardless of
     * projection, costs no planning, and cannot perturb any Spark state.
     */
-  private[graft] def primePageCache(dir: String): Unit = {
+  private def primePageCache(dir: String): Unit = {
     import java.nio.file.{Files, Path, Paths}
     import scala.jdk.CollectionConverters._
     import scala.collection.parallel.CollectionConverters._
@@ -36,18 +36,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.engine.GraftExtensions")
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = engine.GraftSession.local()
     // JVM/codegen warmup: run EVERY query once at the smallest SF so the
     // timed runs measure the engine, not first-call JIT + classload +
     // janino compilation of each query's generated code (the warmup set

@@ -2,8 +2,10 @@ package graft.engine
 
 import org.apache.spark.sql.SparkSession
 
-/** Session-level knobs the engine needs regardless of who built the
-  * SparkSession (the verify/bench harnesses build their own sessions).
+/** The repository's one session setup. [[local]] builds the session
+  * every main runs on; [[tune]] sets the session-level knobs the engine
+  * needs regardless of who built the SparkSession (tests, embedding
+  * applications), and the engine calls it before it reads or writes.
   *
   * `nanosAsLong`: the test datasets carry parquet TIMESTAMP(NANOS)
   * columns, which Spark 4 refuses to map to TimestampType
@@ -13,6 +15,23 @@ import org.apache.spark.sql.SparkSession
   * truncate-to-micros read of the same files.
   */
 object GraftSession {
+
+  /** A `local[cpus]` session with one shuffle partition per core, UTC,
+    * the engine's extensions and no UI, then [[tune]]d. `cpus` defaults
+    * to `SPARK_GRAFT_CPUS`, else 4.
+    */
+  def local(cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").fold(4)(_.toInt)): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.extensions", "graft.engine.GraftExtensions")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    tune(spark)
+  }
+
   def tune(spark: SparkSession): SparkSession = {
     try {
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -600,7 +600,7 @@ object TextOps {
     // stack-deep plan by round R). A local checkpoint every few rounds
     // materializes the vocabulary-sized table and restarts the chain —
     // per-round cost stays flat (measured linear at 110 merges,
-    // ScaleCheck bpe)
+    // SCALE.md)
     val checkpointEvery = 8
     while (r < numMerges && !dry) {
       val best = table

@@ -10,15 +10,6 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class ParquetOpenLintSpec extends AnyFunSuite {
 
-  /** Source with comments and string literals blanked, so prose that
-    * names the calls is not flagged.
-    */
-  private def code(src: String): String =
-    src.replaceAll("(?s)/\\*.*?\\*/", " ")
-      .replaceAll("\"\"\"(?s).*?\"\"\"", "\"\"")
-      .replaceAll("\"(?:\\\\.|[^\"\\\\\n])*\"", "\"\"")
-      .replaceAll("//[^\n]*", " ")
-
   /** Top-level argument count of the call whose `(` is at `open`. */
   private def arity(s: String, open: Int): Int = {
     var depth = 0
@@ -40,8 +31,8 @@ class ParquetOpenLintSpec extends AnyFunSuite {
 
   /** "file:line call" for every conf-parsing open in `src`. */
   private def offenders(name: String, src: String): Seq[String] = {
-    val s = code(src)
-    def line(at: Int) = s.substring(0, at).count(_ == '\n') + 1
+    val s = SourceLint.code(src)
+    def line(at: Int) = SourceLint.line(s, at)
     val opens = "ParquetFileReader\\s*\\.\\s*open\\s*\\(".r.findAllMatchIn(s)
       .filter(m => arity(s, m.end - 1) == 1)
       .map(m => s"$name:${line(m.start)} single-argument ParquetFileReader.open")
@@ -66,15 +57,9 @@ class ParquetOpenLintSpec extends AnyFunSuite {
   }
 
   test("src/main opens parquet files only with the caller's conf") {
-    val root = java.nio.file.Paths.get("src/main/scala")
-    assert(java.nio.file.Files.isDirectory(root), s"run from the repository root: $root")
-    val files = java.nio.file.Files.walk(root).toArray.toSeq
-      .map(_.asInstanceOf[java.nio.file.Path]).filter(_.toString.endsWith(".scala"))
+    val files = SourceLint.mainSources
     assert(files.nonEmpty)
-    val found = files.flatMap { f =>
-      offenders(root.relativize(f).toString,
-        new String(java.nio.file.Files.readAllBytes(f), "UTF-8"))
-    }
+    val found = files.flatMap { case (name, src) => offenders(name, src) }
     assert(found.isEmpty,
       "open parquet files through graft.sources.ParquetFiles (it passes the caller's " +
         s"conf):\n${found.mkString("\n")}")

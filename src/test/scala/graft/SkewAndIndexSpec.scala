@@ -4,24 +4,10 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.execution.FormattedMode
 
-import graft.engine.{EsdbWriter, EventLog, EventStore}
-import graft.ops.Skew
+import graft.engine.{EsdbWriter, EventStore}
 
 class SkewAndIndexSpec extends SparkSpec {
   import spark.implicits._
-
-  test("salted tails equals plain tails on a skewed distribution") {
-    // 90% of events share one index value — the skew shape
-    val rows = (1 to 1000).map { i =>
-      val k = if (i % 10 == 0) s"v${i % 7}" else "hot"
-      ("s", "g", i.toLong, i.toLong, 0.0, s"""{"i": "$k"}""")
-    }
-    val ev = rows.toDF("space", "grouping", "ts_us", "event_id", "value", "payload")
-    val plain = EventLog.tails(ev, "i").as[(String, Long)].collect().toMap
-    val salted = Skew.saltedTails(ev, "i").as[(String, Long)].collect().toMap
-    assert(salted == plain)
-    assert(plain("hot") == 999L)
-  }
 
   test("write-time index attrs materialize and drive scanIndex pushdown") {
     val dir = { val d = Files.createTempDirectory("esdbidx").toFile; d.delete(); d.getAbsolutePath }
