@@ -48,7 +48,8 @@ object Carry {
         s"$ModeKey must be auto|link|manifest, got '$other'")
     }
 
-  private def isRawLocal(fs: FileSystem): Boolean = fs match {
+  /** The raw local filesystem, bare or checksummed: data files hard-link there. */
+  def isRawLocal(fs: FileSystem): Boolean = fs match {
     case _: org.apache.hadoop.fs.RawLocalFileSystem => true
     case c: org.apache.hadoop.fs.ChecksumFileSystem =>
       c.getRawFileSystem.isInstanceOf[org.apache.hadoop.fs.RawLocalFileSystem]

@@ -80,6 +80,16 @@ object DeleteWhere {
     filters.forall(f => may(f, factsOf))
   }
 
+  /** [[fileMayMatch]] for each (file, space) of `files`, the footers
+    * probed in parallel (independent IO): the verdicts in input order.
+    */
+  def mayMatch(conf: org.apache.hadoop.conf.Configuration,
+               files: Seq[(org.apache.hadoop.fs.Path, Option[String])],
+               filters: Seq[Filter]): Seq[Boolean] = {
+    import scala.collection.parallel.CollectionConverters._
+    files.toVector.par.map { case (f, sp) => fileMayMatch(conf, f, sp, filters) }.toVector
+  }
+
   private def footerFacts(conf: org.apache.hadoop.conf.Configuration,
                           file: org.apache.hadoop.fs.Path): Map[String, ColFacts] = {
     val r = graft.sources.ParquetFiles.open(conf, file)

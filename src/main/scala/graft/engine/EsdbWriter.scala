@@ -693,7 +693,7 @@ object EsdbWriter {
     }
     val name = src.getName
     val linkable = name.endsWith(".parquet") &&
-      !name.startsWith("_") && !name.startsWith(".") && isRawLocal(fs)
+      !name.startsWith("_") && !name.startsWith(".") && Carry.isRawLocal(fs)
     if (linkable) {
       val linked = try {
         val s = new java.io.File(fs.makeQualified(src).toUri.getPath).toPath
@@ -712,13 +712,6 @@ object EsdbWriter {
       if (linked) return
     }
     org.apache.hadoop.fs.FileUtil.copy(fs, src, fs, dst, false, conf): Unit
-  }
-
-  private def isRawLocal(fs: org.apache.hadoop.fs.FileSystem): Boolean = fs match {
-    case _: org.apache.hadoop.fs.RawLocalFileSystem => true
-    case c: org.apache.hadoop.fs.ChecksumFileSystem =>
-      c.getRawFileSystem.isInstanceOf[org.apache.hadoop.fs.RawLocalFileSystem]
-    case _ => false
   }
 
   /** Carry a rewrite's untouched DATA files into the staging dir — the
@@ -826,6 +819,121 @@ object EsdbWriter {
     }: Unit
   }
 
+  /** One live data file of a version: its path relative to the data
+    * root, its status at its physical location, and its space — None
+    * in the log layout, where `space` is a data column.
+    */
+  private final case class LiveFile(rel: String, status: org.apache.hadoop.fs.FileStatus,
+                                    space: Option[String]) {
+    def path: org.apache.hadoop.fs.Path = status.getPath
+  }
+
+  private def bytesOf(files: Seq[LiveFile]): Long = files.map(_.status.getLen).sum
+
+  /** The version one copy-on-write step classifies, pinned at the head
+    * the step publishes against: its data root and its live files in
+    * the store's layout.
+    */
+  private final case class Version(root: String, conf: org.apache.hadoop.conf.Configuration,
+                                   files: Seq[LiveFile]) {
+    /** `among` split by footer stats into (may match `filters`,
+      * provably cannot) — [[DeleteWhere.mayMatch]], no data pages.
+      */
+    def byStats(filters: Seq[org.apache.spark.sql.sources.Filter],
+                among: Seq[LiveFile] = files): (Seq[LiveFile], Seq[LiveFile]) = {
+      val may = DeleteWhere.mayMatch(conf, among.map(f => f.path -> f.space), filters)
+      val (hit, miss) = among.zip(may).partition(_._2)
+      (hit.map(_._1), miss.map(_._1))
+    }
+  }
+
+  /** Writes a plan's new rows: given the rewritten files' full-width
+    * read (None when the plan rewrites none; a thunk, so a plan whose
+    * rows come from elsewhere never plans that read) and the layout's
+    * writer, which it calls at most once — never, when the version
+    * gains no rows.
+    */
+  private type Rows = (Option[() => DataFrame], DataFrame => Unit) => Unit
+
+  /** What one copy-on-write step does to its [[Version]]: the live
+    * files it rewrites and those it carries byte-for-byte (a file in
+    * neither is dropped), and its new rows. `share` is the (rewritten,
+    * total) bytes a clustered store scales its chunk count by — by
+    * default the rewrite's share of the version. `pairsKept`: the
+    * rewrite provably keeps the (space, grouping) pair set.
+    */
+  private final case class Plan(rewrite: Seq[LiveFile], carry: Seq[LiveFile], rows: Rows,
+                                share: Option[(Long, Long)] = None,
+                                pairsKept: Boolean = false)
+
+  /** Rows that are the rewritten files' rows through `f`. */
+  private def mapped(f: DataFrame => DataFrame): Rows =
+    (footprint, write) => footprint.foreach(read => write(f(read())))
+
+  /** The one copy-on-write step behind every row-level mutation,
+    * retention, incremental compaction, replica apply and log trim:
+    * pin the head, list its live files, let `plan` classify them, and
+    * publish one new version — the plan's rows written, the carried
+    * files referenced or linked ([[carryData]]), the committed
+    * streaming epochs carried (a replayed epoch stays a no-op), the
+    * sidecars derived. The publish is pinned to the listed head, so a
+    * concurrent commit of any kind in between conflicts loudly instead
+    * of being dropped from the new version. `plan` returning None is a
+    * proven no-op: nothing publishes and the result is false.
+    *
+    * The store's layout decides the three steps that differ. A store
+    * lists its `space=` files, writes through [[rewriteData]] under
+    * its prior layout and derives its sidecars with [[writeSidecars]].
+    * A log (a version with a log manifest) lists its visible files,
+    * writes `event_id`-range-partitioned sorted files, links the prior
+    * manifest rows (stale rows of removed files are never looked up),
+    * adds rows for the written files and unions the prior schema in.
+    */
+  private def copyOnWrite(spark: SparkSession, path: String, keepVersions: Int,
+                          sealedMsg: String)(plan: Version => Option[Plan]): Boolean = {
+    require(!isSealed(path), sealedMsg)
+    GraftSession.tune(spark)
+    val conf = hconf(spark)
+    val (head, src) = Publish.resolveWithVersion(conf, path)
+    val srcPath = new org.apache.hadoop.fs.Path(src)
+    val fs = srcPath.getFileSystem(conf)
+    val isLog = fs.exists(new org.apache.hadoop.fs.Path(srcPath, LogManifest))
+    val files =
+      if (isLog) LogCommits.visibleDataFiles(fs, srcPath).map(f => LiveFile(f.getPath.getName, f, None))
+      else storeDataFiles(fs, srcPath).map { case (rel, f, sp) => LiveFile(rel, f, Some(sp)) }
+    plan(Version(src, conf, files)) match {
+      case None => false
+      case Some(p) =>
+        Publish.publish(conf, path, keepVersions, expectedVersion = head) { tmp =>
+          val tmpPath = new org.apache.hadoop.fs.Path(tmp)
+          if (isLog) fs.mkdirs(tmpPath)
+          var wrote = false
+          p.rows(Option.when(p.rewrite.nonEmpty)(() =>
+            readFullWidth(spark, src, p.rewrite.map(_.path.toString))), { rows =>
+            wrote = true
+            if (isLog)
+              rows.repartitionByRange(rewritePartitions(spark, bytesOf(p.rewrite)), col("event_id"))
+                .sortWithinPartitions(col("event_id"))
+                .write.mode(SaveMode.Append).parquet(tmp)
+            else {
+              val (subset, total) =
+                p.share.getOrElse((bytesOf(p.rewrite), math.max(1L, bytesOf(files))))
+              rewriteData(rows, tmp, src, subset, total)
+            }
+          })
+          if (!wrote && !isLog) copyLayoutMarkers(fs, conf, src, tmp)
+          carryData(fs, conf, path, tmpPath, p.carry.map(f => f.rel -> f.path))
+          carryStreamCommits(conf, src, tmp)
+          if (isLog) {
+            linkSidecarParts(fs, conf, src, tmp, LogManifest)
+            refreshLogManifest(spark, tmp)
+            unionPriorSchema(conf, src, tmp)
+          } else writeSidecars(spark, tmp, Rewritten(src, files, p.pairsKept))
+        }: Unit
+        true
+    }
+  }
+
   /** Incremental compaction: rewrite ONLY spaces whose merge width
     * (data-file count) exceeds `maxFilesPerSpace`; carry already-
     * compact spaces into the new version verbatim. A full [[compact]]
@@ -852,30 +960,16 @@ object EsdbWriter {
   def compactIncremental(spark: SparkSession, path: String,
                          maxFilesPerSpace: Int = 4, keepVersions: Int = 1): Boolean = {
     require(maxFilesPerSpace >= 1, s"maxFilesPerSpace must be >= 1, got $maxFilesPerSpace")
-    require(!isSealed(path), s"store at $path is sealed (immutable; compaction is for open stores)")
-    GraftSession.tune(spark)
-    val conf = hconf(spark)
-    val (headAtScan, src) = Publish.resolveWithVersion(conf, path)
-    val srcPath = new org.apache.hadoop.fs.Path(src)
-    val fs = srcPath.getFileSystem(conf)
-    val files = storeDataFiles(fs, srcPath)
-    val (frag, keep) = files.groupBy(_._3).values.toSeq.partition(_.size > maxFilesPerSpace)
-    if (frag.isEmpty) return false
-    Publish.publish(conf, path, keepVersions, expectedVersion = headAtScan) { tmp =>
-      // 1. the fragmented spaces go through the standard write path:
-      //    merge width back to one file per space/bucket, blooms rebuilt
-      //    (declared chunk count: the byte share is the whole store's)
-      rewriteData(readFullWidth(spark, src, frag.flatten.map(_._2.getPath.toString)),
-        tmp, src, 1L, 1L)
-      // 2. carry compact spaces' files verbatim — manifest references
-      //    in manifest mode, hard links on raw-local FS
-      carryData(fs, conf, path, new org.apache.hadoop.fs.Path(tmp),
-        keep.flatten.map { case (rel, f, _) => rel -> f.getPath })
-      writeSidecars(spark, tmp, Rewritten(src, files, pairsKept = true))
-      // committed streaming epochs must replay as no-ops after the rewrite
-      carryStreamCommits(conf, src, tmp)
-    }: Unit
-    true
+    copyOnWrite(spark, path, keepVersions,
+        s"store at $path is sealed (immutable; compaction is for open stores)") { v =>
+      val (frag, keep) = v.files.groupBy(_.space).collect { case (Some(_), inSpace) => inSpace }
+        .toSeq.partition(_.size > maxFilesPerSpace)
+      // the fragmented spaces go through the standard write path: merge
+      // width back to one file per space/bucket, blooms rebuilt, at the
+      // declared chunk count (the byte share is the whole store's)
+      Option.when(frag.nonEmpty)(Plan(frag.flatten, keep.flatten, mapped(identity),
+        share = Some((1L, 1L)), pairsKept = true))
+    }
   }
 
   /** Row-level delete (GDPR scrub / retention): remove whole spaces
@@ -896,58 +990,43 @@ object EsdbWriter {
              spaces: Option[Set[String]] = None,
              groupings: Option[Set[String]] = None,
              keepVersions: Int = 1): Unit = {
-    require(!isSealed(path), s"store at $path is sealed (immutable; no deletes)")
     require(spaces.isDefined || groupings.isDefined,
       "unbounded delete: use truncate() to empty a store")
-    // a contradictory predicate (space='a' AND space='b') deletes nothing
-    if (spaces.exists(_.isEmpty) || groupings.exists(_.isEmpty)) return
-    GraftSession.tune(spark)
-    val conf = hconf(spark)
-    val (headAtScan, src) = Publish.resolveWithVersion(conf, path)
-    val srcPath = new org.apache.hadoop.fs.Path(src)
-    val fs = srcPath.getFileSystem(conf)
-    val subparts = subpartsOf(conf, src)
-    val allFiles: Seq[(String, org.apache.hadoop.fs.FileStatus, String)] =
-      storeDataFiles(fs, srcPath)
-    val inScope: Set[String] = spaces.getOrElse(allFiles.map(_._3).toSet)
-    // manifest-driven targeting: only spaces PROVEN to hold a doomed
-    // grouping are rewritten; a store without a manifest conservatively
-    // rewrites every in-scope space
-    val affected: Set[String] = groupings match {
-      case None => inScope
-      case Some(gs) =>
-        groupingPairs(conf, src) match {
-          case Some(pairs) =>
-            // SQL IN never matches a null grouping: null rows survive
-            pairs.collect { case (sp, g) if g != null && gs.contains(g) => sp }.toSet
-              .intersect(inScope)
-          case None => inScope
-        }
-    }
-    if (affected.isEmpty) return // the manifest proved the delete a no-op
-    Publish.publish(conf, path, keepVersions, expectedVersion = headAtScan) { tmp =>
-      val (hit, carry) = allFiles.partition { case (_, _, sp) => affected.contains(sp) }
-      val gs = groupings.map(_.toSeq).getOrElse(Nil)
-      val wantedBuckets: Option[Set[Int]] =
-        if (groupings.isDefined && subparts > 1) Some(gs.map(bucketOf(_, subparts)).toSet)
-        else None
-      // within hit spaces, files in a bucket no doomed grouping hashes
-      // to are carried, not rewritten
-      val hitFiles = if (groupings.isDefined) hit else Nil
-      val (rw, carryWithin) = hitFiles.partition { case (rel, _, _) =>
-        wantedBuckets.forall(bs =>
-          !rel.contains("/bucket=") || bs.exists(b => rel.contains(s"/bucket=$b/")))
+    copyOnWrite(spark, path, keepVersions, s"store at $path is sealed (immutable; no deletes)") { v =>
+      val inScope: Set[String] = spaces.getOrElse(v.files.flatMap(_.space).toSet)
+      // manifest-driven targeting: only spaces PROVEN to hold a doomed
+      // grouping are rewritten; a store without a manifest conservatively
+      // rewrites every in-scope space
+      val affected: Set[String] = groupings match {
+        case None => inScope
+        case Some(gs) =>
+          groupingPairs(v.conf, v.root) match {
+            case Some(pairs) =>
+              // SQL IN never matches a null grouping: null rows survive
+              pairs.collect { case (sp, g) if g != null && gs.contains(g) => sp }.toSet
+                .intersect(inScope)
+            case None => inScope
+          }
       }
-      if (rw.nonEmpty) {
-        val df = readFullWidth(spark, src, rw.map(_._2.getPath.toString))
-        rewriteData(df.filter(!col("grouping").isin(gs: _*) || col("grouping").isNull),
-          tmp, src, rw.map(_._2.getLen).sum, allFiles.map(_._2.getLen).sum)
-      } else copyLayoutMarkers(fs, conf, src, tmp)
-      carryData(fs, conf, path, new org.apache.hadoop.fs.Path(tmp),
-        (carry ++ carryWithin).map { case (rel, f, _) => rel -> f.getPath })
-      writeSidecars(spark, tmp, Rewritten(src, allFiles))
-      // committed streaming epochs must replay as no-ops after the rewrite
-      carryStreamCommits(conf, src, tmp)
+      // a contradictory predicate (space='a' AND space='b') deletes
+      // nothing, and the manifest may prove the delete a no-op
+      if (spaces.exists(_.isEmpty) || groupings.exists(_.isEmpty) || affected.isEmpty) None
+      else {
+        val (hit, carry) = v.files.partition(_.space.exists(affected))
+        val gs = groupings.map(_.toSeq).getOrElse(Nil)
+        val subparts = subpartsOf(v.conf, v.root)
+        val wantedBuckets: Option[Set[Int]] =
+          if (groupings.isDefined && subparts > 1) Some(gs.map(bucketOf(_, subparts)).toSet)
+          else None
+        // whole-space deletes drop their files; within hit spaces, files
+        // in a bucket no doomed grouping hashes to are carried
+        val (rw, carryWithin) = (if (groupings.isDefined) hit else Nil).partition { f =>
+          wantedBuckets.forall(bs =>
+            !f.rel.contains("/bucket=") || bs.exists(b => f.rel.contains(s"/bucket=$b/")))
+        }
+        Some(Plan(rw, carry ++ carryWithin,
+          mapped(_.filter(!col("grouping").isin(gs: _*) || col("grouping").isNull))))
+      }
     }: Unit
   }
 
@@ -966,46 +1045,29 @@ object EsdbWriter {
     * other space's rows carry.
     */
   def deleteOlderThan(spark: SparkSession, path: String, cutoffUs: Long,
-                      inclusive: Boolean = false, keepVersions: Int = 1): Unit = {
-    require(!isSealed(path), s"store at $path is sealed (immutable; no deletes)")
-    GraftSession.tune(spark)
-    val conf = hconf(spark)
-    val (headAtScan, src) = Publish.resolveWithVersion(conf, path)
-    val srcPath = new org.apache.hadoop.fs.Path(src)
-    val fs = srcPath.getFileSystem(conf)
-    // per-file facts of the version being rewritten; null_free unknown
-    // in rows appended before the column existed → false (conservative)
-    val ranges: Map[String, TsRange] = tsRangeManifest(conf, src).map(_.toMap).getOrElse(Map.empty)
-    def expired(ts: Long): Boolean = if (inclusive) ts <= cutoffUs else ts < cutoffUs
-    val files = storeDataFiles(fs, srcPath)
-    // drop = whole range expired AND provably no null-ts rows (a null
-    // fails every comparison, so null rows must survive any retention);
-    // carry = whole range survives (or all null ts); rewrite =
-    // straddles the cutoff, has unproven nulls, or unknown to the manifest
-    val (drop, rest) = files.partition { case (rel, _, _) =>
-      ranges.get(rel).exists(r => r.hasTs && r.nullFree && expired(r.maxTs))
-    }
-    val (carry, rewrite) = rest.partition { case (rel, _, _) =>
-      ranges.get(rel).exists(r => !r.hasTs || !expired(r.minTs))
-    }
-    if (drop.isEmpty && rewrite.isEmpty) return // nothing expired: no version churn
-    Publish.publish(conf, path, keepVersions, expectedVersion = headAtScan) { tmp =>
-      if (rewrite.nonEmpty) {
-        val df = readFullWidth(spark, src, rewrite.map(_._2.getPath.toString))
-        val survives =
-          if (inclusive) col("ts_us").isNull || col("ts_us") > cutoffUs
-          else col("ts_us").isNull || col("ts_us") >= cutoffUs
-        rewriteData(df.filter(survives), tmp, src,
-          rewrite.map(_._2.getLen).sum, files.map(_._2.getLen).sum)
-      } else copyLayoutMarkers(fs, conf, src, tmp)
-      carryData(fs, conf, path, new org.apache.hadoop.fs.Path(tmp),
-        carry.map { case (rel, f, _) => rel -> f.getPath })
-      // the sidecars survive even an everything-expired retention
-      writeSidecars(spark, tmp, Rewritten(src, files))
-      // committed streaming epochs must replay as no-ops after the rewrite
-      carryStreamCommits(conf, src, tmp)
+                      inclusive: Boolean = false, keepVersions: Int = 1): Unit =
+    copyOnWrite(spark, path, keepVersions, s"store at $path is sealed (immutable; no deletes)") { v =>
+      // per-file facts of the version being rewritten; null_free unknown
+      // in rows appended before the column existed → false (conservative)
+      val ranges: Map[String, TsRange] =
+        tsRangeManifest(v.conf, v.root).map(_.toMap).getOrElse(Map.empty)
+      def expired(ts: Long): Boolean = if (inclusive) ts <= cutoffUs else ts < cutoffUs
+      // drop = whole range expired AND provably no null-ts rows (a null
+      // fails every comparison, so null rows must survive any retention);
+      // carry = whole range survives (or all null ts); rewrite =
+      // straddles the cutoff, has unproven nulls, or unknown to the manifest
+      val (drop, rest) = v.files.partition { f =>
+        ranges.get(f.rel).exists(r => r.hasTs && r.nullFree && expired(r.maxTs))
+      }
+      val (carry, rewrite) = rest.partition { f =>
+        ranges.get(f.rel).exists(r => !r.hasTs || !expired(r.minTs))
+      }
+      val survives =
+        if (inclusive) col("ts_us").isNull || col("ts_us") > cutoffUs
+        else col("ts_us").isNull || col("ts_us") >= cutoffUs
+      // nothing expired: no version churn
+      Option.when(drop.nonEmpty || rewrite.nonEmpty)(Plan(rewrite, carry, mapped(_.filter(survives))))
     }: Unit
-  }
 
   /** Arbitrary-predicate row-level delete (`DELETE FROM t WHERE cond`)
     * as a stats-targeted copy-on-write: parquet footer stats plus the
@@ -1018,7 +1080,9 @@ object EsdbWriter {
     * files a value range actually touches in a ts-clustered, grouping-
     * sorted layout), not store size; the classification is one
     * parallel footer round, the planning cost an ordered scan already
-    * pays.
+    * pays. On a log store `space` is a data column, so its footer
+    * stats participate like any other, and the rewrite keeps the
+    * log's range-partitioned sorted layout.
     */
   def deleteWhere(spark: SparkSession, path: String,
                   filters: Seq[org.apache.spark.sql.sources.Filter],
@@ -1101,6 +1165,31 @@ object EsdbWriter {
         org.apache.spark.sql.types.StructField("values", org.apache.spark.sql.types.ArrayType(dt)))))
   }
 
+  /** The store's active logical schema under a resolved data root: the
+    * sidecar, else footer inference (legacy stores).
+    */
+  private def storeSchemaOf(spark: SparkSession, root: String): org.apache.spark.sql.types.StructType =
+    FieldIds.active(schemaManifest(hconf(spark), root).getOrElse(readFullWidth(spark, root).schema))
+
+  /** `df` as rows of `schema` minus the bucket layout dir: each column
+    * cast to its stored type, absent ones null, field-ID metadata
+    * carried.
+    */
+  private def alignTo(df: DataFrame, schema: org.apache.spark.sql.types.StructType): DataFrame =
+    df.select(schema.fields.filterNot(_.name == "bucket").map { f =>
+      (if (df.columns.contains(f.name)) col(f.name).cast(f.dataType)
+      else lit(null).cast(f.dataType)).as(f.name, f.metadata)
+    }.toSeq: _*)
+
+  /** [[alignTo]] after re-deriving every idx_* column of `schema` from
+    * the payload (the write-time index contract: the index is derived
+    * data, so new rows can never carry a stale one).
+    */
+  private def reindexedTo(df: DataFrame, schema: org.apache.spark.sql.types.StructType): DataFrame =
+    alignTo(schema.fieldNames.filter(_.startsWith("idx_")).foldLeft(df) { (d, c) =>
+      d.withColumn(c, EventFrame.attr(c.stripPrefix("idx_")))
+    }, schema)
+
   /** Keyed MERGE (upsert) — the third member of the DML triad next to
     * [[deleteWhere]]/[[updateWhere]]: target rows whose key tuple
     * appears in `source` are REPLACED by the source row; source rows
@@ -1130,179 +1219,111 @@ object EsdbWriter {
     */
   def mergeInto(spark: SparkSession, path: String, source: DataFrame,
                 keys: Seq[String], keepVersions: Int = 1): (Long, Long) = {
-    require(!isSealed(path), s"store at $path is sealed (immutable; no rewrites)")
     require(keys.nonEmpty, "MERGE requires at least one key column")
-    GraftSession.tune(spark)
-    val conf = hconf(spark)
-    // head at listing time: the footprint classification below and the
-    // long source-stats jobs run before publish reads the head again —
-    // a concurrent versioned commit in that window (routine via cdc=true
-    // INSERT / appendVersioned) must conflict loudly, not be dropped
-    val (headAtScan, src) = Publish.resolveWithVersion(conf, path)
-    val storeSchema = FieldIds.active(
-      schemaManifest(conf, src).getOrElse(readFullWidth(spark, src).schema))
-    val storeCols = storeSchema.fieldNames.filterNot(_ == "bucket").toSet
-    val badKeys = keys.filterNot(k => storeCols(k) && source.columns.contains(k))
-    require(badKeys.isEmpty,
-      s"MERGE key(s) missing from store or source: ${badKeys.mkString(", ")}")
-    val extra = source.columns.filterNot(storeCols)
-    require(extra.isEmpty,
-      s"MERGE source has column(s) the store lacks: ${extra.mkString(", ")} — " +
-        "ALTER TABLE ADD COLUMNS first (additive evolution), then merge")
-    // inserts become full store rows: the canonical identity columns
-    // cannot be null-filled in
-    val missingCanon = Seq("space", "grouping", "ts_us", "event_id")
-      .filterNot(source.columns.contains)
-    require(missingCanon.isEmpty,
-      s"MERGE source must carry the canonical columns; missing: ${missingCanon.mkString(", ")}")
-    // one source pass: duplicate/null key tuples refuse before any IO,
-    // and the same aggregate yields the footprint filters — per-key
-    // min/max ranges, plus a single key's exact set while it is small
-    val InListCap = 10000
-    val keySet = if (keys.size > 1) Nil else {
-      val f = org.apache.spark.sql.types.StructType(Seq(source.schema(keys.head).copy(nullable = true)))
-      Seq(udaf(new DistinctUpTo(InListCap, f.head.dataType),
-        org.apache.spark.sql.Encoders.row(f))(col(keys.head)))
-    }
-    val stats = source.agg(count(lit(1)).as("n"), (Seq(
-      count_distinct(col(keys.head), keys.tail.map(col): _*).as("nd"),
-      count(when(keys.map(col(_).isNull).reduce(_ || _), lit(1))).as("nulls")) ++
-      keys.flatMap(k => Seq(min(col(k)), max(col(k)))) ++ keySet): _*).head()
-    val (nSrc, nDistinct, nNullKeys) = (stats.getLong(0), stats.getLong(1), stats.getLong(2))
-    require(nNullKeys == 0, s"MERGE source has $nNullKeys row(s) with null key — " +
-      "null never matches; filter them or fix the key")
-    require(nDistinct == nSrc, s"MERGE source has ${nSrc - nDistinct} duplicate key " +
-      "tuple(s) — an upsert with two source rows for one key is nondeterministic")
-    if (nSrc == 0) return (0L, 0L)
-    // conservative per-key footprint filters: exact IN-list when the
-    // key set is small (footer stats check each value), min/max ranges
-    // otherwise — footers only, no data pages
-    val filters: Seq[org.apache.spark.sql.sources.Filter] =
-      if (keys.size == 1 && !stats.getStruct(5).isNullAt(0))
-        Seq(org.apache.spark.sql.sources.In(keys.head, stats.getStruct(5).getSeq[Any](0).toArray))
-      else keys.zipWithIndex.flatMap { case (k, i) =>
-        Seq(org.apache.spark.sql.sources.GreaterThanOrEqual(k, stats.get(3 + 2 * i)),
-          org.apache.spark.sql.sources.LessThanOrEqual(k, stats.get(4 + 2 * i)))
+    var counts = (0L, 0L)
+    copyOnWrite(spark, path, keepVersions, s"store at $path is sealed (immutable; no rewrites)") { v =>
+      val storeSchema = storeSchemaOf(spark, v.root)
+      val storeCols = storeSchema.fieldNames.filterNot(_ == "bucket").toSet
+      val badKeys = keys.filterNot(k => storeCols(k) && source.columns.contains(k))
+      require(badKeys.isEmpty,
+        s"MERGE key(s) missing from store or source: ${badKeys.mkString(", ")}")
+      val extra = source.columns.filterNot(storeCols)
+      require(extra.isEmpty,
+        s"MERGE source has column(s) the store lacks: ${extra.mkString(", ")} — " +
+          "ALTER TABLE ADD COLUMNS first (additive evolution), then merge")
+      // inserts become full store rows: the canonical identity columns
+      // cannot be null-filled in
+      val missingCanon = Seq("space", "grouping", "ts_us", "event_id")
+        .filterNot(source.columns.contains)
+      require(missingCanon.isEmpty,
+        s"MERGE source must carry the canonical columns; missing: ${missingCanon.mkString(", ")}")
+      // one source pass: duplicate/null key tuples refuse before any IO,
+      // and the same aggregate yields the footprint filters — per-key
+      // min/max ranges, plus a single key's exact set while it is small
+      val InListCap = 10000
+      val keySet = if (keys.size > 1) Nil else {
+        val f = org.apache.spark.sql.types.StructType(Seq(source.schema(keys.head).copy(nullable = true)))
+        Seq(udaf(new DistinctUpTo(InListCap, f.head.dataType),
+          org.apache.spark.sql.Encoders.row(f))(col(keys.head)))
       }
-    val srcPath = new org.apache.hadoop.fs.Path(src)
-    val fs = srcPath.getFileSystem(conf)
-    val files: Seq[(String, org.apache.hadoop.fs.FileStatus, String)] =
-      storeDataFiles(fs, srcPath)
-    val classified = {
-      import scala.collection.parallel.CollectionConverters._
-      files.toVector.par
-        .map { case (rel, f, sp) =>
-          (rel, f, DeleteWhere.fileMayMatch(conf, f.getPath, Some(sp), filters))
-        }
-        .toVector
-    }
-    val (rewrite, carry) = classified.partition(_._3)
-    // align the source to the store's width ONCE: idx_* recomputed from
-    // the payload (write-time index contract), evolved columns
-    // null-fill, field-ID metadata carried from the store schema
-    val indexAttrs = storeSchema.fieldNames.filter(_.startsWith("idx_"))
-      .map(_.stripPrefix("idx_")).toSeq
-    def alignSource(): DataFrame = {
-      val withIdx = indexAttrs.foldLeft(source) { (df, a) =>
-        df.withColumn(s"idx_$a", EventFrame.attr(a))
+      val stats = source.agg(count(lit(1)).as("n"), (Seq(
+        count_distinct(col(keys.head), keys.tail.map(col): _*).as("nd"),
+        count(when(keys.map(col(_).isNull).reduce(_ || _), lit(1))).as("nulls")) ++
+        keys.flatMap(k => Seq(min(col(k)), max(col(k)))) ++ keySet): _*).head()
+      val (nSrc, nDistinct, nNullKeys) = (stats.getLong(0), stats.getLong(1), stats.getLong(2))
+      require(nNullKeys == 0, s"MERGE source has $nNullKeys row(s) with null key — " +
+        "null never matches; filter them or fix the key")
+      require(nDistinct == nSrc, s"MERGE source has ${nSrc - nDistinct} duplicate key " +
+        "tuple(s) — an upsert with two source rows for one key is nondeterministic")
+      if (nSrc == 0) None
+      else {
+        // conservative per-key footprint filters: exact IN-list when the
+        // key set is small (footer stats check each value), min/max ranges
+        // otherwise — footers only, no data pages
+        val filters: Seq[org.apache.spark.sql.sources.Filter] =
+          if (keys.size == 1 && !stats.getStruct(5).isNullAt(0))
+            Seq(org.apache.spark.sql.sources.In(keys.head, stats.getStruct(5).getSeq[Any](0).toArray))
+          else keys.zipWithIndex.flatMap { case (k, i) =>
+            Seq(org.apache.spark.sql.sources.GreaterThanOrEqual(k, stats.get(3 + 2 * i)),
+              org.apache.spark.sql.sources.LessThanOrEqual(k, stats.get(4 + 2 * i)))
+          }
+        val (rewrite, carry) = v.byStats(filters)
+        counts = (0L, nSrc)
+        Some(Plan(rewrite, carry, { (footprint, write) =>
+          val inserts = reindexedTo(source, storeSchema)
+          footprint match {
+            case None => write(inserts)
+            case Some(read) =>
+              // ONE full outer join of the footprint with the source keys
+              // (unique by the duplicate check) answers everything: target
+              // rows with no source key are kept, matched target rows are
+              // replaced (a key may match several — keys need not be a
+              // target PK), and source keys with no target row are inserts.
+              // Cached for the write's duration: the counts and the rewrite
+              // both read it, so the parquet scan and the join run once
+              // (churn-bounded, disk-spillable)
+              val k = keys.indices.map(i => s"__merge_k$i")
+              val keyed = source.select(keys.zip(k).map { case (c, a) => col(c).as(a) } :+
+                lit(true).as("__merge_s"): _*)
+              val cached = read()
+                .withColumn("__merge_t", lit(true))
+                .join(keyed, keys.zip(k).map { case (c, a) => col(c) === col(a) }.reduce(_ && _),
+                  "full_outer")
+                .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+              try {
+                val m = cached.agg(count(when(col("__merge_t") && col("__merge_s"), lit(1))),
+                  count(when(col("__merge_t").isNull, lit(1)))).head()
+                counts = (m.getLong(0), m.getLong(1))
+                write(cached.where(col("__merge_s").isNull).drop(k ++ Seq("__merge_t", "__merge_s"): _*)
+                  .unionByName(inserts, allowMissingColumns = true))
+              } finally { cached.unpersist(): Unit }
+          }
+        }))
       }
-      withIdx.select(storeSchema.fields.filterNot(_.name == "bucket").map { f =>
-        (if (withIdx.columns.contains(f.name)) col(f.name).cast(f.dataType)
-        else lit(null).cast(f.dataType)).as(f.name, f.metadata)
-      }.toSeq: _*)
-    }
-    var replacedRows = 0L
-    var insertedRows = nSrc
-    Publish.publish(conf, path, keepVersions, expectedVersion = headAtScan) { tmp =>
-      val inserts = alignSource()
-      var cached: DataFrame = null
-      val replaced =
-        if (rewrite.isEmpty) inserts
-        else {
-          // ONE full outer join of the footprint with the source keys
-          // (unique by the duplicate check) answers everything: target
-          // rows with no source key are kept, matched target rows are
-          // replaced (a key may match several — keys need not be a
-          // target PK), and source keys with no target row are inserts.
-          // Cached for the op's duration: the counts and the rewrite
-          // both read it, so the parquet scan and the join run once
-          // (churn-bounded, disk-spillable)
-          val k = keys.indices.map(i => s"__merge_k$i")
-          val keyed = source.select(keys.zip(k).map { case (c, a) => col(c).as(a) } :+
-            lit(true).as("__merge_s"): _*)
-          cached = readFullWidth(spark, src, rewrite.map(_._2.getPath.toString))
-            .withColumn("__merge_t", lit(true))
-            .join(keyed, keys.zip(k).map { case (c, a) => col(c) === col(a) }.reduce(_ && _),
-              "full_outer")
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          val m = cached.agg(count(when(col("__merge_t") && col("__merge_s"), lit(1))),
-            count(when(col("__merge_t").isNull, lit(1)))).head()
-          replacedRows = m.getLong(0)
-          insertedRows = m.getLong(1)
-          cached.where(col("__merge_s").isNull).drop(k ++ Seq("__merge_t", "__merge_s"): _*)
-            .unionByName(inserts, allowMissingColumns = true)
-        }
-      try rewriteData(replaced, tmp, src, rewrite.map(_._2.getLen).sum,
-        math.max(1L, classified.map(_._2.getLen).sum))
-      finally { if (cached != null) cached.unpersist(): Unit }
-      carryData(fs, conf, path, new org.apache.hadoop.fs.Path(tmp),
-        carry.map { case (rel, f, _) => rel -> f.getPath })
-      // pairs change in the rewritten files' spaces and wherever the
-      // source's rows landed: exactly the files this rewrite removed/wrote
-      writeSidecars(spark, tmp, Rewritten(src, files))
-      // committed streaming epochs must replay as no-ops after the rewrite
-      carryStreamCommits(conf, src, tmp)
     }: Unit
-    (replacedRows, insertedRows)
+    counts
   }
 
-  /** Shared copy-on-write core of [[deleteWhere]] and [[updateWhere]]:
-    * translate the conjunction, classify every data file by footer
-    * stats (one parallel footer round, no data pages), rewrite only
-    * candidates through `transform`, carry the rest byte-for-byte, and
-    * publish as one new version. Returns false when stats proved the
-    * operation a no-op (no version churn).
+  /** Shared classifier of [[deleteWhere]] and [[updateWhere]]:
+    * translate the conjunction, classify every live file by footer
+    * stats (one parallel footer round, no data pages), and rewrite only
+    * candidates through `transform` — a clustered store re-clusters the
+    * rewritten slice at its byte share of the declared chunk count, so
+    * the footprint stays proportional to selectivity in files AND in
+    * output files. Returns false when stats proved the operation a
+    * no-op (no version churn).
     */
   private def rewriteWhere(spark: SparkSession, path: String,
                            filters: Seq[org.apache.spark.sql.sources.Filter],
                            keepVersions: Int)
                           (transform: (DataFrame, org.apache.spark.sql.Column) => DataFrame): Boolean = {
-    require(!isSealed(path), s"store at $path is sealed (immutable; no rewrites)")
     val cond = DeleteWhere.translate(filters).getOrElse(
       throw new IllegalArgumentException(
         s"untranslatable predicate: ${filters.mkString(", ")}"))
-    GraftSession.tune(spark)
-    val conf = hconf(spark)
-    val (headAtScan, src) = Publish.resolveWithVersion(conf, path)
-    val srcPath = new org.apache.hadoop.fs.Path(src)
-    val fs = srcPath.getFileSystem(conf)
-    val files: Seq[(String, org.apache.hadoop.fs.FileStatus, String)] =
-      storeDataFiles(fs, srcPath)
-    // footer-stat classification, probed in parallel (independent IO)
-    val classified = {
-      import scala.collection.parallel.CollectionConverters._
-      files.toVector.par
-        .map { case (rel, f, sp) =>
-          (rel, f, DeleteWhere.fileMayMatch(conf, f.getPath, Some(sp), filters))
-        }
-        .toVector
+    copyOnWrite(spark, path, keepVersions, s"store at $path is sealed (immutable; no rewrites)") { v =>
+      val (rewrite, carry) = v.byStats(filters)
+      Option.when(rewrite.nonEmpty)(Plan(rewrite, carry, mapped(transform(_, cond))))
     }
-    val (rewrite, carry) = classified.partition(_._3)
-    if (rewrite.isEmpty) return false // stats proved a no-op: no version churn
-    Publish.publish(conf, path, keepVersions, expectedVersion = headAtScan) { tmp =>
-      val df = readFullWidth(spark, src, rewrite.map(_._2.getPath.toString))
-      // a clustered store re-clusters the rewritten slice at its byte
-      // share of the declared chunk count: the copy-on-write footprint
-      // stays proportional to selectivity in files AND in output files
-      rewriteData(transform(df, cond), tmp, src, rewrite.map(_._2.getLen).sum,
-        classified.map(_._2.getLen).sum)
-      carryData(fs, conf, path, new org.apache.hadoop.fs.Path(tmp),
-        carry.map { case (rel, f, _) => rel -> f.getPath })
-      writeSidecars(spark, tmp, Rewritten(src, files))
-      // committed streaming epochs must replay as no-ops after the rewrite
-      carryStreamCommits(conf, src, tmp)
-    }: Unit
-    true
   }
 
   /** Replace an explicit file footprint with new content — the engine
@@ -1321,56 +1342,26 @@ object EsdbWriter {
     * longer in the live version — a concurrent rewrite landed between
     * the statement's scan and its commit; the statement retries against
     * the new head. The publish is additionally pinned to the head
-    * version the carry listing was taken at (`expectedVersion`), so a
-    * concurrent commit of ANY kind — including an append, whose files
-    * the stale listing would otherwise silently drop rather than
-    * carry — also surfaces as a conflict and retries.
+    * version the carry listing was taken at, so a concurrent commit of
+    * ANY kind — including an append, whose files the stale listing
+    * would otherwise silently drop rather than carry — also surfaces
+    * as a conflict and retries.
     */
   private[graft] def replaceFootprint(spark: SparkSession, path: String,
                                       rewriteRels: Set[String],
                                       replacement: DataFrame,
-                                      keepVersions: Int = 2): Unit = {
-    require(!isSealed(path), s"store at $path is sealed (immutable; no rewrites)")
-    GraftSession.tune(spark)
-    val conf = hconf(spark)
-    // the head version the file listing below is taken at: publish pins
-    // to it, so a concurrent commit landing between this listing and
-    // the pointer commit conflicts loudly instead of being dropped
-    val (headAtScan, src) = Publish.resolveWithVersion(conf, path)
-    val srcPath = new org.apache.hadoop.fs.Path(src)
-    val fs = srcPath.getFileSystem(conf)
-    val files = storeDataFiles(fs, srcPath)
-    val missing = rewriteRels -- files.map(_._1).toSet
-    if (missing.nonEmpty) throw new java.io.IOException(
-      s"publish conflict: row-level operation footprint at $path is no longer " +
-        s"current (${missing.size} scanned file(s) were rewritten underneath, " +
-        s"e.g. ${missing.head}) — retry the statement against the new version")
-    val (rewrite, carry) = files.partition { case (rel, _, _) => rewriteRels.contains(rel) }
-    val storeSchema = FieldIds.active(
-      schemaManifest(conf, src).getOrElse(readFullWidth(spark, src).schema))
-    val indexAttrs = storeSchema.fieldNames.toSeq
-      .filter(_.startsWith("idx_")).map(_.stripPrefix("idx_"))
-    val base =
-      if (replacement.columns.contains("bucket")) replacement.drop("bucket") else replacement
-    val withIdx = indexAttrs.foldLeft(base)((df, a) =>
-      df.withColumn(s"idx_$a", EventFrame.attr(a)))
-    val aligned = withIdx.select(storeSchema.fields.filterNot(_.name == "bucket").map { f =>
-      (if (withIdx.columns.contains(f.name)) col(f.name).cast(f.dataType)
-      else lit(null).cast(f.dataType)).as(f.name, f.metadata)
-    }.toSeq: _*)
-    Publish.publish(conf, path, keepVersions, expectedVersion = headAtScan) { tmp =>
-      rewriteData(aligned, tmp, src, math.max(1L, rewrite.map(_._2.getLen).sum),
-        math.max(1L, files.map(_._2.getLen).sum))
-      carryData(fs, conf, path, new org.apache.hadoop.fs.Path(tmp),
-        carry.map { case (rel, f, _) => rel -> f.getPath })
-      // pairs change only where the statement touched: the rewritten
-      // files' spaces plus wherever the replacement rows landed (MERGE
-      // inserts and UPDATE SET space can introduce new ones)
-      writeSidecars(spark, tmp, Rewritten(src, files))
-      // committed streaming epochs must replay as no-ops after the rewrite
-      carryStreamCommits(conf, src, tmp)
+                                      keepVersions: Int = 2): Unit =
+    copyOnWrite(spark, path, keepVersions, s"store at $path is sealed (immutable; no rewrites)") { v =>
+      val missing = rewriteRels -- v.files.map(_.rel).toSet
+      if (missing.nonEmpty) throw new java.io.IOException(
+        s"publish conflict: row-level operation footprint at $path is no longer " +
+          s"current (${missing.size} scanned file(s) were rewritten underneath, " +
+          s"e.g. ${missing.head}) — retry the statement against the new version")
+      val (rewrite, carry) = v.files.partition(f => rewriteRels.contains(f.rel))
+      val aligned = reindexedTo(replacement, storeSchemaOf(spark, v.root))
+      Some(Plan(rewrite, carry, (_, write) => write(aligned),
+        share = Some((math.max(1L, bytesOf(rewrite)), math.max(1L, bytesOf(v.files))))))
     }: Unit
-  }
 
   /** Output partition count for a log rewrite, sized like [[compactLog]]
     * sizes its output: one range partition per `maxPartitionBytes` of
@@ -1418,100 +1409,31 @@ object EsdbWriter {
     * epochs stay no-ops after a trim.
     */
   def trimLog(spark: SparkSession, path: String, beforeId: Long,
-              inclusive: Boolean = false, keepVersions: Int = 1): Unit = {
-    require(!isSealed(path), s"stream at $path is closed (reference: closed_stream.go:48-50)")
-    GraftSession.tune(spark)
-    val conf = hconf(spark)
-    val (headAtScan, src) = Publish.resolveWithVersion(conf, path)
-    val srcPath = new org.apache.hadoop.fs.Path(src)
-    val fs = srcPath.getFileSystem(conf)
-    def expired(id: Long): Boolean = if (inclusive) id <= beforeId else id < beforeId
-    val ranges = logManifestRanges(conf, src).getOrElse(Map.empty)
-    val visible = LogCommits.visibleDataFiles(fs, srcPath)
-    val (dropCand, rest) = visible.partition(f =>
-      ranges.get(f.getPath.getName).exists { case (_, mx) => expired(mx) })
-    val (drop, dropUnproven) = dropCand.partition(f => eventIdNullFree(conf, f.getPath))
-    val (carry, straddle) = rest.partition(f =>
-      ranges.get(f.getPath.getName).exists { case (mn, _) => !expired(mn) })
-    val rewrite = straddle ++ dropUnproven
-    if (drop.isEmpty && rewrite.isEmpty) return // nothing expired: no version churn
-    Publish.publish(conf, path, keepVersions, expectedVersion = headAtScan) { tmp =>
-      val tmpPath = new org.apache.hadoop.fs.Path(tmp)
-      fs.mkdirs(tmpPath)
-      if (rewrite.nonEmpty) {
-        val df = readFullWidth(spark, src, rewrite.map(_.getPath.toString))
-        val survives =
-          if (inclusive) col("event_id").isNull || col("event_id") > beforeId
-          else col("event_id").isNull || col("event_id") >= beforeId
-        df.filter(survives)
-          .repartitionByRange(rewritePartitions(spark, rewrite.map(_.getLen).sum), col("event_id"))
-          .sortWithinPartitions(col("event_id"))
-          .write.mode(SaveMode.Append).parquet(tmp)
-      }
-      carryData(fs, conf, path, tmpPath,
-        carry.map(f => f.getPath.getName -> f.getPath))
-      // replayed committed epochs must stay no-ops after the trim
-      carryStreamCommits(conf, srcPath.toString, tmpPath.toString)
-      // manifest rows for carried names travel with the version (stale
-      // dropped-file rows are never looked up); the refresh below then
-      // reads footers for the REWRITTEN files only
-      linkSidecarParts(fs, conf, src, tmp, LogManifest)
-      refreshLogManifest(spark, tmp)
-      unionPriorSchema(conf, src, tmp)
+              inclusive: Boolean = false, keepVersions: Int = 1): Unit =
+    copyOnWrite(spark, path, keepVersions,
+        s"stream at $path is closed (reference: closed_stream.go:48-50)") { v =>
+      def expired(id: Long): Boolean = if (inclusive) id <= beforeId else id < beforeId
+      val ranges = logManifestRanges(v.conf, v.root).getOrElse(Map.empty)
+      val (dropCand, rest) = v.files.partition(f =>
+        ranges.get(f.rel).exists { case (_, mx) => expired(mx) })
+      val (drop, dropUnproven) = dropCand.partition(f => eventIdNullFree(v.conf, f.path))
+      val (carry, straddle) = rest.partition(f =>
+        ranges.get(f.rel).exists { case (mn, _) => !expired(mn) })
+      val rewrite = straddle ++ dropUnproven
+      val survives =
+        if (inclusive) col("event_id").isNull || col("event_id") > beforeId
+        else col("event_id").isNull || col("event_id") >= beforeId
+      // nothing expired: no version churn
+      Option.when(drop.nonEmpty || rewrite.nonEmpty)(Plan(rewrite, carry, mapped(_.filter(survives))))
     }: Unit
-  }
 
-  /** Arbitrary-predicate row-level delete on a LOG store — the flat
-    * dual of [[deleteWhere]]: footer stats classify each file (space
-    * is a data column here, so its stats participate like any other);
-    * provably-unmatchable files carry byte-for-byte, candidates
-    * rewrite preserving the range-partitioned sorted layout. Epoch
-    * markers carry so replaying exactly-once sinks stay no-ops; the
-    * log manifest carries for untouched names and refreshes for the
-    * rewritten files.
+  /** Arbitrary-predicate row-level delete on a LOG store: the same
+    * copy-on-write as [[deleteWhere]], which keeps a log's layout.
     */
   def deleteWhereLog(spark: SparkSession, path: String,
                      filters: Seq[org.apache.spark.sql.sources.Filter],
-                     keepVersions: Int = 1): Unit = {
-    require(!isSealed(path), s"stream at $path is closed (immutable; no deletes)")
-    val cond = DeleteWhere.translate(filters).getOrElse(
-      throw new IllegalArgumentException(
-        s"untranslatable delete predicate: ${filters.mkString(", ")}"))
-    require(filters.nonEmpty, "unbounded delete: use truncate() to empty a log")
-    GraftSession.tune(spark)
-    val conf = hconf(spark)
-    val (headAtScan, src) = Publish.resolveWithVersion(conf, path)
-    val srcPath = new org.apache.hadoop.fs.Path(src)
-    val fs = srcPath.getFileSystem(conf)
-    val visible = LogCommits.visibleDataFiles(fs, srcPath)
-    val classified = {
-      import scala.collection.parallel.CollectionConverters._
-      visible.toVector.par
-        .map(f => (f, DeleteWhere.fileMayMatch(conf, f.getPath, None, filters)))
-        .toVector
-    }
-    val (rewrite, carry) = classified.partition(_._2)
-    if (rewrite.isEmpty) return // stats proved the delete a no-op: no version churn
-    Publish.publish(conf, path, keepVersions, expectedVersion = headAtScan) { tmp =>
-      val tmpPath = new org.apache.hadoop.fs.Path(tmp)
-      fs.mkdirs(tmpPath)
-      val df = readFullWidth(spark, src, rewrite.map(_._1.getPath.toString))
-      // delete rows where cond IS TRUE; false AND null both survive
-      df.filter(!coalesce(cond, lit(false)))
-        .repartitionByRange(rewritePartitions(spark, rewrite.map(_._1.getLen).sum), col("event_id"))
-        .sortWithinPartitions(col("event_id"))
-        .write.mode(SaveMode.Append).parquet(tmp)
-      carryData(fs, conf, path, tmpPath,
-        carry.map { case (f, _) => f.getPath.getName -> f.getPath })
-      // replayed committed epochs must stay no-ops after the delete
-      carryStreamCommits(conf, srcPath.toString, tmpPath.toString)
-      // manifest rows for carried names travel with the version; the
-      // refresh covers only the rewritten files (footer reads)
-      if (carry.nonEmpty) linkSidecarParts(fs, conf, src, tmp, LogManifest)
-      refreshLogManifest(spark, tmp)
-      unionPriorSchema(conf, src, tmp)
-    }: Unit
-  }
+                     keepVersions: Int = 1): Unit =
+    deleteWhere(spark, path, filters, keepVersions)
 
   /** Empty the store (SQL TRUNCATE / unbounded DELETE): publish a
     * version holding only the schema sidecar and layout marker — the
@@ -1549,9 +1471,8 @@ object EsdbWriter {
     * both listings was carried and the rest were written or removed.
     * `pairsKept`: the rewrite provably kept the pair set (compaction).
     */
-  private final case class Rewritten(prior: String,
-                                     priorFiles: Seq[(String, org.apache.hadoop.fs.FileStatus, String)],
-                                     pairsKept: Boolean = false) extends SidecarChange
+  private final case class Rewritten(prior: String, priorFiles: Seq[LiveFile],
+                                     pairsKept: Boolean) extends SidecarChange
 
   /** The one sidecar step of every publishing path, run once after its
     * data write (and, for a rewrite, after the carry):
@@ -1584,13 +1505,13 @@ object EsdbWriter {
         val files = live
         if (files.nonEmpty) {
           linkSidecarParts(fs, conf, prior, root, TsRangeManifest)
-          val before = priorFiles.map(_._1).toSet
+          val before = priorFiles.map(_.rel).toSet
           val after = files.map(_._1).toSet
           val written = files.filterNot(f => before(f._1))
           refreshTsRangeManifest(spark, root, written.map(f => f._1 -> f._2.getPath))
           val touched =
             if (pairsKept) Set.empty[String]
-            else (written ++ priorFiles.filterNot(f => after(f._1))).map(_._3).toSet
+            else written.map(_._3).toSet ++ priorFiles.filterNot(f => after(f.rel)).flatMap(_.space)
           refreshGroupingsManifestFor(spark, root, files,
             Some(prior).filter(p => fs.exists(new org.apache.hadoop.fs.Path(p, GroupingsManifest)))
               .map(_ -> touched))
@@ -2548,22 +2469,6 @@ object EsdbWriter {
     } finally r.close()
   }
 
-  /** Bucketed layout: hash-bucket by `grouping`, sorted by (ts_us desc,
-    * event_id) inside each bucket. Joins and aggregations keyed on
-    * `grouping` between tables bucketed the same way are then
-    * co-located — Catalyst plans them with NO exchange on either side,
-    * which at 100 TB is the difference between a full-corpus shuffle
-    * and a local merge. (Bucketing requires the table catalog, hence
-    * `saveAsTable` rather than a bare path write.)
-    */
-  def writeBucketed(ev: DataFrame, tableName: String, numBuckets: Int = 64): Unit =
-    ev.write
-      .mode(SaveMode.ErrorIfExists)
-      .bucketBy(numBuckets, "grouping")
-      .sortBy("grouping", "ts_us", "event_id")
-      .format("parquet")
-      .saveAsTable(tableName)
-
   /** Open a written store through the ordering-aware DSv2 source
     * ([[graft.sources.EsdbStoreSource]]): scans see the write-time
     * (grouping, ts_us desc, event_id) layout as a reported ordering,
@@ -2871,93 +2776,66 @@ object EsdbWriter {
     */
   def applyChanges(spark: SparkSession, path: String, feed: DataFrame,
                    keepVersions: Int = 2): (Long, Long) = {
-    require(!isSealed(path), s"store at $path is sealed (immutable; no rewrites)")
     require(feed.columns.contains("_change"),
       "applyChanges takes a change feed (needs the _change column)")
-    GraftSession.tune(spark)
-    val conf = hconf(spark)
-    // a feed column the replica lacks would otherwise be dropped by the
-    // align below — inserts would silently lose its values and the
-    // divergence only surfaces later as a drift exception on delete
-    locally {
-      val src0 = dataRoot(spark, path)
-      val replicaCols = schemaManifest(conf, src0).map(_.fieldNames.toSet)
-        .getOrElse(readFullWidth(spark, src0).schema.fieldNames.toSet)
-      val extra = feed.columns
-        .filterNot(c => c == "_change" || c == "bucket" || replicaCols.contains(c))
-      require(extra.isEmpty,
-        s"change feed carries column(s) [${extra.mkString(", ")}] the replica at " +
-          s"$path lacks — ALTER the replica first (silently dropping them would " +
-          "diverge the replica from the followed source)")
-    }
     // the feed plan (typically an expensive two-version hash diff) is
     // consumed several times — counts, delete-stats agg, the EXCEPT ALL,
     // the drift count, the insert write: persist it for the apply's
     // duration, mirroring the footprint cache
     val fed = feed.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-    val inserts0 = fed.where(col("_change") === "insert").drop("_change")
-    val deletes0 = fed.where(col("_change") === "delete").drop("_change")
-    val nDel = deletes0.count()
-    val nIns = inserts0.count()
-    if (nDel == 0 && nIns == 0) return (0L, 0L)
-    if (nDel == 0) { appendVersioned(inserts0, path, keepVersions); return (nIns, 0L) }
-    // head at listing time: the footprint classification and feed
-    // caching below run long Spark jobs before the pointer commit — a
-    // concurrent versioned commit in that window must conflict loudly
-    val (headAtScan, src) = Publish.resolveWithVersion(conf, path)
-    val srcPath = new org.apache.hadoop.fs.Path(src)
-    val fs = srcPath.getFileSystem(conf)
-    // footprint: only replica files whose (space, event_id range) stats
-    // admit a deleted row rewrite; everything else carries by name
-    val delStats = deletes0.agg(
-      collect_set(col("space")), min(col("event_id")), max(col("event_id"))).head()
-    val delSpaces = delStats.getSeq[String](0).toSet
-    val filters: Seq[org.apache.spark.sql.sources.Filter] =
-      if (delStats.isNullAt(1)) Nil
-      else Seq(org.apache.spark.sql.sources.GreaterThanOrEqual("event_id", delStats.getLong(1)),
-        org.apache.spark.sql.sources.LessThanOrEqual("event_id", delStats.getLong(2)))
-    val files: Seq[(String, org.apache.hadoop.fs.FileStatus, String)] =
-      storeDataFiles(fs, srcPath)
-    val classified = {
-      import scala.collection.parallel.CollectionConverters._
-      files.toVector.par.map { case (rel, f, sp) =>
-        (rel, f, delSpaces.contains(sp) &&
-          DeleteWhere.fileMayMatch(conf, f.getPath, Some(sp), filters))
-      }.toVector
-    }
-    val (rewrite, carry) = classified.partition(_._3)
-    val target = readFullWidth(spark, src).schema.fields.filterNot(_.name == "bucket")
-    def align(df: DataFrame): DataFrame =
-      df.select(target.map(f =>
-        (if (df.columns.contains(f.name)) col(f.name).cast(f.dataType)
-        else lit(null).cast(f.dataType)).as(f.name, f.metadata)).toSeq: _*)
-    Publish.publish(conf, path, keepVersions, expectedVersion = headAtScan) { tmp =>
-      // the footprint feeds the diff AND the drift count: cache it so
-      // the parquet scan happens once (churn-bounded, disk-spillable)
-      val footprint =
-        (if (rewrite.isEmpty) align(readFullWidth(spark, src).limit(0))
-        else align(readFullWidth(spark, src, rewrite.map(_._2.getPath.toString))))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val kept = footprint.exceptAll(align(deletes0))
-        // drift check: every delete must have consumed exactly one row
-        val removed = (if (rewrite.isEmpty) 0L else footprint.count()) - kept.count()
-        if (removed != nDel) throw new IllegalStateException(
-          s"replica at $path diverged from the feed's source: $nDel delete row(s) " +
-            s"matched only $removed replica row(s) — refusing to compound the drift")
-        rewriteData(kept.unionByName(align(inserts0)), tmp, src,
-          rewrite.map(_._2.getLen).sum, math.max(1L, classified.map(_._2.getLen).sum))
-      } finally { footprint.unpersist(): Unit }
-      carryData(fs, conf, path, new org.apache.hadoop.fs.Path(tmp),
-        carry.map { case (rel, f, _) => rel -> f.getPath })
-      // pairs change only where the window touched: the delete
-      // footprint's spaces and wherever the inserted rows landed
-      writeSidecars(spark, tmp, Rewritten(src, files))
-      // committed streaming epochs must replay as no-ops after the rewrite
-      carryStreamCommits(conf, src, tmp)
-    }: Unit
-    (nIns, nDel)
+      val inserts0 = fed.where(col("_change") === "insert").drop("_change")
+      val deletes0 = fed.where(col("_change") === "delete").drop("_change")
+      var counts = (0L, 0L)
+      copyOnWrite(spark, path, keepVersions, s"store at $path is sealed (immutable; no rewrites)") { v =>
+        // a feed column the replica lacks would otherwise be dropped by
+        // the align below — inserts would silently lose its values and
+        // the divergence only surfaces later as a drift exception
+        val replicaCols = schemaManifest(v.conf, v.root).map(_.fieldNames.toSet)
+          .getOrElse(readFullWidth(spark, v.root).schema.fieldNames.toSet)
+        val extra = feed.columns
+          .filterNot(c => c == "_change" || c == "bucket" || replicaCols.contains(c))
+        require(extra.isEmpty,
+          s"change feed carries column(s) [${extra.mkString(", ")}] the replica at " +
+            s"$path lacks — ALTER the replica first (silently dropping them would " +
+            "diverge the replica from the followed source)")
+        val nDel = deletes0.count()
+        val nIns = inserts0.count()
+        counts = (nIns, nDel)
+        // no deletes: nothing to rewrite (inserts append below)
+        if (nDel == 0) None
+        else {
+          // footprint: only replica files whose (space, event_id range)
+          // stats admit a deleted row rewrite; everything else carries
+          val delStats = deletes0.agg(
+            collect_set(col("space")), min(col("event_id")), max(col("event_id"))).head()
+          val delSpaces = delStats.getSeq[String](0).toSet
+          val filters: Seq[org.apache.spark.sql.sources.Filter] =
+            if (delStats.isNullAt(1)) Nil
+            else Seq(org.apache.spark.sql.sources.GreaterThanOrEqual("event_id", delStats.getLong(1)),
+              org.apache.spark.sql.sources.LessThanOrEqual("event_id", delStats.getLong(2)))
+          val (inSpaces, outside) = v.files.partition(_.space.exists(delSpaces))
+          val (rewrite, carry) = v.byStats(filters, inSpaces)
+          val target = readFullWidth(spark, v.root).schema
+          Some(Plan(rewrite, carry ++ outside, { (read, write) =>
+            // the footprint feeds the diff AND the drift count: cache it
+            // so the parquet scan happens once (churn-bounded, disk-spillable)
+            val footprint = alignTo(read.fold(readFullWidth(spark, v.root).limit(0))(_()), target)
+              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+            try {
+              val kept = footprint.exceptAll(alignTo(deletes0, target))
+              // drift check: every delete must have consumed exactly one row
+              val removed = (if (read.isEmpty) 0L else footprint.count()) - kept.count()
+              if (removed != nDel) throw new IllegalStateException(
+                s"replica at $path diverged from the feed's source: $nDel delete row(s) " +
+                  s"matched only $removed replica row(s) — refusing to compound the drift")
+              write(kept.unionByName(alignTo(inserts0, target)))
+            } finally { footprint.unpersist(): Unit }
+          }))
+        }
+      }
+      if (counts._2 == 0 && counts._1 > 0) appendVersioned(inserts0, path, keepVersions)
+      counts
     } finally { fed.unpersist(): Unit }
   }
 }

@@ -273,8 +273,7 @@ case class JsonAttr(left: Expression, right: Expression) extends BinaryExpressio
 
 object JsonFunctions {
 
-  /** Register `json_attr` on the session (idempotent). */
+  /** Register `json_attr` on the session unless it is there already. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "json_attr", exprs => JsonAttr(exprs.head, exprs(1)), "built-in")
+    Registration.ifAbsent(spark, "json_attr")(exprs => JsonAttr(exprs.head, exprs(1)))
 }

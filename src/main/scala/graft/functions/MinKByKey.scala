@@ -118,19 +118,15 @@ case class MinKByKey(
 
 object SampleFunctions {
 
-  /** Register `min_k_by_key` + `top_k_by_score` on the session (idempotent). */
+  /** Register `min_k_by_key`, `top_k_by_score` and `freq_topk` on the
+    * session, each unless it is there already.
+    */
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "min_k_by_key",
-      exprs => MinKByKey(exprs.head, exprs(1), exprs(2)).toAggregateExpression(),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "top_k_by_score",
-      exprs => TopKByScore(exprs.head, exprs(1), exprs(2)).toAggregateExpression(),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "freq_topk",
-      exprs => FreqTopK(exprs.head, exprs(1), exprs(2)).toAggregateExpression(),
-      "built-in")
+    Registration.ifAbsent(spark, "min_k_by_key")(exprs =>
+      MinKByKey(exprs.head, exprs(1), exprs(2)).toAggregateExpression())
+    Registration.ifAbsent(spark, "top_k_by_score")(exprs =>
+      TopKByScore(exprs.head, exprs(1), exprs(2)).toAggregateExpression())
+    Registration.ifAbsent(spark, "freq_topk")(exprs =>
+      FreqTopK(exprs.head, exprs(1), exprs(2)).toAggregateExpression())
   }
 }

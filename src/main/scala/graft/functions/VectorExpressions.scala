@@ -120,12 +120,10 @@ object VectorFunctions {
   /** Register `vec_dot` in the session's function registry so it is
     * callable via `call_function("vec_dot", a, b)` from the Column API
     * (Spark 4 removed public Column-from-Expression construction).
-    * Idempotent per session.
+    * A function already registered is left as it is.
     */
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dot", exprs => VecDot(exprs.head, exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dot_long", exprs => VecDotLong(exprs.head, exprs(1)), "built-in")
+    Registration.ifAbsent(spark, "vec_dot")(exprs => VecDot(exprs.head, exprs(1)))
+    Registration.ifAbsent(spark, "vec_dot_long")(exprs => VecDotLong(exprs.head, exprs(1)))
   }
 }

@@ -21,7 +21,7 @@ import org.apache.spark.util.SerializableConfiguration
   * The "group" is a data FILE, exactly the engine's copy-on-write
   * granule: the operation's scan classifies every live file by footer
   * stats under the statement's pushed condition (the same
-  * [[graft.engine.DeleteWhere.fileMayMatch]] planning step the engine
+  * [[graft.engine.DeleteWhere.mayMatch]] planning step the engine
   * DML uses), reads ONLY the candidate files, and Spark streams every
   * surviving/updated/merged row of those groups into the operation's
   * write. Commit then publishes one new version through
@@ -111,12 +111,8 @@ final class EsdbRowLevelScanBuilder(op: EsdbRowLevelOperation, logicalPath: Stri
     // merge_keyed stays the stats-bounded path for that shape.
     val fp =
       if (filters.isEmpty) files.toVector
-      else {
-        import scala.collection.parallel.CollectionConverters._
-        files.toVector.par.filter { case (_, f, sp) =>
-          graft.engine.DeleteWhere.fileMayMatch(conf, f.getPath, Some(sp), filters.toSeq)
-        }.toVector
-      }
+      else files.toVector.zip(graft.engine.DeleteWhere.mayMatch(conf,
+        files.map { case (_, f, sp) => f.getPath -> Some(sp) }, filters.toSeq)).collect { case (f, true) => f }
     op.footprint = fp.map { case (rel, f, sp) => (rel, f.getPath.toString, sp, f.getLen) }
     op.classified = true
     new EsdbReplaceScan(resolved, required, op.footprint)

@@ -209,4 +209,38 @@ class DeleteFuzzSpec extends SparkSpec {
           s"extra=${(gotIds -- expectedIds).take(5)}")
     }
   }
+
+  test("proven no-ops of every copy-on-write entry point publish no version") {
+    val dir = java.nio.file.Files.createTempDirectory("cownoop").toFile
+    dir.delete()
+    val p = dir.getAbsolutePath
+    val df = mkStore(n = 200, nSpaces = 2, nGroupings = 4)
+    graft.engine.Publish.publish(spark.sparkContext.hadoopConfiguration, p) { t =>
+      EsdbWriter.write(df, t)
+    }: Unit
+    val conf = spark.sparkContext.hadoopConfiguration
+    def unchanged(what: String)(op: => Unit): Unit = {
+      val before = graft.engine.Publish.currentVersionNumber(conf, p)
+      op
+      assert(graft.engine.Publish.currentVersionNumber(conf, p) == before,
+        s"$what is a proven no-op and must not publish a version")
+    }
+    // the groupings sidecar proves no space holds the grouping
+    unchanged("delete of an absent grouping")(
+      EsdbWriter.delete(spark, p, groupings = Some(Set("absent"))))
+    // timestamps are 0..99999: every file's min_ts is above the cutoff
+    unchanged("retention below every min_ts")(EsdbWriter.deleteOlderThan(spark, p, -1L))
+    unchanged("merge of an empty source") {
+      assert(EsdbWriter.mergeInto(spark, p, df.limit(0), Seq("event_id")) == (0L, 0L))
+    }
+    unchanged("apply of an empty feed") {
+      assert(EsdbWriter.applyChanges(spark, p, df.limit(0).withColumn("_change", lit("insert"))) ==
+        (0L, 0L))
+    }
+    // one file per space: nothing is fragmented
+    unchanged("incremental compaction of a compact store") {
+      assert(!EsdbWriter.compactIncremental(spark, p))
+    }
+    assert(sortedRows(EsdbWriter.readOrdered(spark, p)) == sortedRows(df))
+  }
 }

@@ -99,23 +99,6 @@ class PlanSpec extends SparkSpec {
     assert(q.select("event_id").as[Long].collect().sorted.forall(_ % 5 == 3))
   }
 
-  test("bucketed tables join co-located: no exchange on either side") {
-    import spark.implicits._
-    val ev = (1 to 100).map(i => ("s", s"u${i % 10}", i.toLong, i.toLong, 0.0, "{}"))
-      .toDF("space", "grouping", "ts_us", "event_id", "value", "payload")
-    graft.engine.EsdbWriter.writeBucketed(ev, "bucketed_a", 4)
-    graft.engine.EsdbWriter.writeBucketed(ev, "bucketed_b", 4)
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force the shuffle-join path
-      val j = spark.table("bucketed_a").groupBy("grouping").count()
-        .join(spark.table("bucketed_b").groupBy("grouping").count(), "grouping")
-      j.collect()
-      val p = j.queryExecution.executedPlan.toString
-      assert(!p.contains("Exchange"), "bucketed join/agg must not shuffle\n" + p)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-  }
-
   test("store scan reports key-grouped partitioning: groupBy(space) plans no hash exchange") {
     val df = Queries.queries("store_join_copartitioned")(spark, dir)
     df.collect()

@@ -154,6 +154,56 @@ class SidecarSpec extends SparkSpec {
       assert(got(k) <= b, s"$k ran ${got(k)} Spark jobs, budget $b (all: $got)")
     }
     assertSidecars(p, "after the budgeted mutations")
+
+    // incremental compaction through the maintenance autopilot
+    val c = versioned(events(1 to 200))
+    EsdbWriter.append(events(201 to 260), c)
+    EsdbWriter.append(events(261 to 300), c)
+    Maintenance.setPolicy(spark.sparkContext.hadoopConfiguration, c,
+      Maintenance.Policy(maxFilesPerSpace = Some(1)))
+    var did = Seq.empty[String]
+    val maintain = jobsOf { did = Maintenance.maintain(spark, c) }
+    assert(did.contains("compaction"), did)
+    assertSidecars(c, "maintain")
+    // SQL UPDATE ends in replaceFootprint; the first statement warms the catalog
+    val root = tmp("sidecarbudget")
+    Publish.publish(spark.sparkContext.hadoopConfiguration, s"$root/t", keepVersions = 4) { t =>
+      EsdbWriter.write(events(1 to 120), t)
+    }: Unit
+    spark.conf.set("spark.sql.catalog.sidecarbudget", classOf[graft.sources.EsdbCatalog].getName)
+    spark.conf.set("spark.sql.catalog.sidecarbudget.root", root)
+    spark.sql("UPDATE sidecarbudget.t SET value = 0.0 WHERE event_id < 5")
+    val sqlUpdate = jobsOf(spark.sql("UPDATE sidecarbudget.t SET value = 1.0 WHERE event_id < 10"): Unit)
+    assertSidecars(s"$root/t", "SQL UPDATE")
+    // a replica applying a feed window with deletes (exact rows) and an insert
+    val r = versioned(events(1 to 200))
+    val feed = events(5 to 6).withColumn("_change", lit("delete"))
+      .unionByName(events(900 to 900).withColumn("_change", lit("insert")))
+    var applied = (0L, 0L)
+    val apply = jobsOf { applied = EsdbWriter.applyChanges(spark, r, feed) }
+    assert(applied == (1L, 2L))
+    assertSidecars(r, "applyChanges")
+    // log trim and predicate delete on a log store
+    val log = tmp("sidecarlog")
+    EsdbWriter.writeLog(events(1 to 200), log)
+    EsdbWriter.appendLog(events(201 to 300), log)
+    EsdbWriter.appendLog(events(301 to 400), log)
+    val trim = jobsOf(EsdbWriter.trimLog(spark, log, 250L))
+    val logDelete = jobsOf(EsdbWriter.deleteWhereLog(spark, log,
+      Seq(org.apache.spark.sql.sources.EqualTo("event_id", 320L))))
+    assert(EsdbWriter.readLog(spark, log).count() == 150)
+    val more = Map("maintain" -> maintain, "sql_update" -> sqlUpdate, "apply_changes" -> apply,
+      "trim_log" -> trim, "delete_where_log" -> logDelete)
+    info(s"Spark jobs per mutation: $more")
+    // maintain: data write + footer job (compaction keeps the pairs);
+    // applyChanges adds the feed counts, the delete stats, the EXCEPT ALL
+    // and the drift counts; a log rewrite is its data write alone (the
+    // manifest is read and extended on the driver)
+    val moreBudget = Map("maintain" -> 3, "sql_update" -> 6, "apply_changes" -> 19,
+      "trim_log" -> 3, "delete_where_log" -> 3)
+    moreBudget.foreach { case (k, b) =>
+      assert(more(k) <= b, s"$k ran ${more(k)} Spark jobs, budget $b (all: $more)")
+    }
   }
 
   test("a store sealed through a file: URI refuses deletes") {
