@@ -1,13 +1,13 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 /** Cluster-sharpness accounting: the value-domain clustering (X23/X27)
   * prices rewrites and scans by per-file footer [min,max] spans, and
   * every append draws its range cuts from ITS OWN batch — correct, but
   * long-lived appended stores accumulate span OVERLAP and silently lose
   * the selectivity the cluster marker promises. This measures the drift
-  * (one footer read per file, distributed) so `cat.t.clustering` can
+  * (one footer read per file, on the driver) so `cat.t.clustering` can
   * report it and [[Maintenance.maintain]] can repair it with a
   * re-clustering full compaction when it degrades past the declared
   * policy threshold.
@@ -36,55 +36,32 @@ object ClusterHealth {
                                 domainMin: Double, domainMax: Double)
 
   /** Per-file spans of the store's DECLARED cluster columns, embedded
-    * monotonically into Double: (column, space, file, min, max).
-    * Distributed — one footer read per file, no data pages. Empty when
-    * the store declares no clustering or has no files.
+    * monotonically into Double: (column, space, file, min, max). One
+    * footer read per file, in parallel on the driver
+    * ([[graft.sources.ParquetFiles.factsOf]]), no data pages and no
+    * Spark job; a file whose range on a column is unproven has no span
+    * there. Empty when the store declares no clustering or has no files.
     */
   def spans(spark: SparkSession,
             path: String): Seq[(String, String, String, Double, Double)] = {
     val conf = spark.sparkContext.hadoopConfiguration
     val src = EsdbWriter.dataRoot(spark, path)
-    val cols = EsdbWriter.clusterOf(conf, src).cols
+    val cols = EsdbWriter.clusterOf(conf, src).cols.distinct
     if (cols.isEmpty) return Nil
     val root = new org.apache.hadoop.fs.Path(src)
     val fs = root.getFileSystem(conf)
     if (!fs.exists(root)) return Nil
-    val files: Seq[(String, String)] =
-      EsdbWriter.storeDataFiles(fs, root)
-        .map { case (_, f, space) => (space, f.getPath.toString) }
-    if (files.isEmpty) return Nil
-    val wanted = cols.toSet
-    val par = math.max(1, math.min(files.size, spark.sparkContext.defaultParallelism))
-    // session conf travels to the executors (object-store creds and
-    // custom fs impls live there — a bare new Configuration() would
-    // fail or misresolve the footer opens on any non-default FS)
-    val serConf = new org.apache.spark.util.SerializableConfiguration(conf)
-    import spark.implicits._
-    spark.createDataset(files).repartition(par)
-      .flatMap { case (space, file) =>
-        val c = serConf.value
-        val r = graft.sources.ParquetFiles.open(c, new org.apache.hadoop.fs.Path(file))
-        try {
-          val acc = scala.collection.mutable.HashMap[String, (Double, Double)]()
-          r.getFooter.getBlocks.forEach { b =>
-            b.getColumns.forEach { cc =>
-              val name = cc.getPath.toDotString
-              if (wanted.contains(name)) {
-                val st = cc.getStatistics
-                if (st != null && st.hasNonNullValue) {
-                  for (lo <- embed(st.genericGetMin); hi <- embed(st.genericGetMax)) {
-                    val prev = acc.get(name)
-                    acc(name) = (prev.fold(lo)(p => math.min(p._1, lo)),
-                      prev.fold(hi)(p => math.max(p._2, hi)))
-                  }
-                }
-              }
-            }
-          }
-          acc.toSeq.map { case (colName, (mn, mx)) => (colName, space, file, mn, mx) }
-        } finally r.close()
+    val files = EsdbWriter.storeDataFiles(fs, root)
+    files.zip(graft.sources.ParquetFiles.factsOf(conf, files.map(_._2.getPath)))
+      .flatMap { case ((_, st, space), facts) =>
+        cols.flatMap { c =>
+          for {
+            (lo, hi) <- facts.cols.get(c).flatMap(_.range)
+            l <- embed(lo)
+            h <- embed(hi)
+          } yield (c, space, st.getPath.toString, l, h)
+        }
       }
-      .collect().toSeq // one small tuple per (file × cluster column)
   }
 
   /** Sharpness per declared cluster column (see class doc for the

@@ -4,6 +4,9 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.sources._
 
+import graft.sources.ParquetFiles
+import graft.sources.ParquetFiles.ColFacts
+
 /** Predicate machinery for arbitrary-predicate row-level DELETE
   * ([[EsdbWriter.deleteWhere]]): translate Spark's pushed [[Filter]]
   * conjunction into a Column for the rewrite, and evaluate it against
@@ -51,15 +54,6 @@ object DeleteWhere {
     case _ => None
   }
 
-  /** One column's facts aggregated over a file's row groups. `present`
-    * false = the column doesn't exist in this file's schema (pre-
-    * evolution file: every row reads as null). Range is None when no
-    * block recorded comparable value stats.
-    */
-  private final case class ColFacts(present: Boolean,
-                                    min: Option[Any], max: Option[Any],
-                                    numNulls: Option[Long], rows: Long)
-
   /** May ANY row of `file` satisfy the conjunction? One footer read,
     * no data pages. `space` is the file's partition-path value when
     * the layout stores it in the directory name (bucketed stores) —
@@ -69,72 +63,39 @@ object DeleteWhere {
     */
   def fileMayMatch(conf: org.apache.hadoop.conf.Configuration,
                    file: org.apache.hadoop.fs.Path, space: Option[String],
-                   filters: Seq[Filter]): Boolean = {
-    val facts = footerFacts(conf, file)
-    val rows = facts.values.headOption.map(_.rows).getOrElse(0L)
-    def factsOf(c: String): ColFacts = space match {
-      case Some(sp) if c == "space" =>
-        ColFacts(present = true, Some(sp), Some(sp), Some(0L), rows)
-      case _ => facts.getOrElse(c, ColFacts(present = false, None, None, None, rows))
-    }
-    filters.forall(f => may(f, factsOf))
-  }
+                   filters: Seq[Filter]): Boolean =
+    mayMatch(ParquetFiles.facts(conf, file), space, filters)
 
   /** [[fileMayMatch]] for each (file, space) of `files`, the footers
-    * probed in parallel (independent IO): the verdicts in input order.
+    * read in parallel ([[ParquetFiles.factsOf]]): the verdicts in input order.
     */
   def mayMatch(conf: org.apache.hadoop.conf.Configuration,
                files: Seq[(org.apache.hadoop.fs.Path, Option[String])],
-               filters: Seq[Filter]): Seq[Boolean] = {
-    import scala.collection.parallel.CollectionConverters._
-    files.toVector.par.map { case (f, sp) => fileMayMatch(conf, f, sp, filters) }.toVector
+               filters: Seq[Filter]): Seq[Boolean] =
+    ParquetFiles.factsOf(conf, files.map(_._1)).zip(files)
+      .map { case (f, (_, space)) => mayMatch(f, space, filters) }
+
+  /** A column the file lacks (pre-evolution file) reads as None: every
+    * row is null there.
+    */
+  private def mayMatch(facts: ParquetFiles.FileFacts, space: Option[String],
+                       filters: Seq[Filter]): Boolean = {
+    def col(c: String): Option[ColFacts] = space match {
+      case Some(sp) if c == "space" => Some(ColFacts(facts.rows, Some(0L), Some(sp), Some(sp), true))
+      case _ => facts.cols.get(c)
+    }
+    filters.forall(f => may(f, col))
   }
 
-  private def footerFacts(conf: org.apache.hadoop.conf.Configuration,
-                          file: org.apache.hadoop.fs.Path): Map[String, ColFacts] = {
-    val r = graft.sources.ParquetFiles.open(conf, file)
-    try {
-      val out = scala.collection.mutable.HashMap[String, (Option[Any], Option[Any], Option[Long], Boolean)]()
-      var rows = 0L
-      r.getFooter.getBlocks.forEach { b =>
-        rows += b.getRowCount
-        b.getColumns.forEach { c =>
-          val name = c.getPath.toDotString
-          val st = c.getStatistics
-          val (mn, mx, known) =
-            if (st != null && st.hasNonNullValue)
-              (Option(statValue(st.genericGetMin)), Option(statValue(st.genericGetMax)), true)
-            else if (st != null && st.isNumNullsSet && st.getNumNulls == b.getRowCount)
-              (None, None, true) // all-null block: contributes no values, range still proven
-            else (None, None, false)
-          val nulls = if (st != null && st.isNumNullsSet) Some(st.getNumNulls) else None
-          val prev = out.getOrElse(name, (None, None, Some(0L), true))
-          out(name) = (
-            minOf(prev._1, mn), maxOf(prev._2, mx),
-            for { a <- prev._3; b2 <- nulls } yield a + b2,
-            prev._4 && known)
-        }
-      }
-      out.map { case (n, (mn, mx, nulls, known)) =>
-        // an unproven block poisons the range (values may lie outside it)
-        n -> ColFacts(present = true,
-          if (known) mn else None, if (known) mx else None, nulls, rows)
-      }.toMap
-    } finally r.close()
-  }
+  /** The proven bounds of a column, strings decoded; None = unknown
+    * (an unproven row group's values may lie outside the stats).
+    */
+  private def lo(c: ColFacts): Option[Any] = c.range.map(r => statValue(r._1))
+  private def hi(c: ColFacts): Option[Any] = c.range.map(r => statValue(r._2))
 
   private def statValue(v: Any): Any = v match {
     case b: org.apache.parquet.io.api.Binary => b.toStringUsingUTF8
     case other => other
-  }
-
-  private def minOf(a: Option[Any], b: Option[Any]): Option[Any] = (a, b) match {
-    case (Some(x), Some(y)) => cmp(x, y).map(c => if (c <= 0) x else y).orElse(Some(x))
-    case _ => a.orElse(b)
-  }
-  private def maxOf(a: Option[Any], b: Option[Any]): Option[Any] = (a, b) match {
-    case (Some(x), Some(y)) => cmp(x, y).map(c => if (c >= 0) x else y).orElse(Some(x))
-    case _ => a.orElse(b)
   }
 
   /** Total-order comparison across the value types footer stats and
@@ -217,7 +178,7 @@ object DeleteWhere {
   }
 
   /** May any row satisfy `f`, given per-column facts? */
-  private def may(f: Filter, facts: String => ColFacts): Boolean = f match {
+  private def may(f: Filter, facts: String => Option[ColFacts]): Boolean = f match {
     case And(l, r) => may(l, facts) && may(r, facts)
     case Or(l, r) => may(l, facts) || may(r, facts)
     case EqualTo(a, v) => rangeMayContain(facts(a), v)
@@ -232,22 +193,21 @@ object DeleteWhere {
     case IsNotNull(a) => mayHaveValues(facts(a))
     case Not(EqualTo(a, v)) =>
       // unmatchable only when provably EVERY row equals v (non-null)
-      val c = facts(a)
-      !(c.present && c.numNulls.contains(0L) &&
-        c.min.exists(m => cmp(m, v).contains(0)) && c.max.exists(m => cmp(m, v).contains(0)))
+      !facts(a).exists(c => c.nulls.contains(0L) &&
+        lo(c).exists(m => cmp(m, v).contains(0)) && hi(c).exists(m => cmp(m, v).contains(0)))
     case _ => true // unknown/complex shape: conservative rewrite
   }
 
   /** A file missing the column reads all-null → no value can match. */
-  private def mayHaveValues(c: ColFacts): Boolean =
-    c.present && !c.numNulls.contains(c.rows)
+  private def mayHaveValues(c: Option[ColFacts]): Boolean =
+    c.exists(x => !x.nulls.contains(x.values))
 
-  private def mayHaveNulls(c: ColFacts): Boolean =
-    !c.present || !c.numNulls.contains(0L)
+  private def mayHaveNulls(c: Option[ColFacts]): Boolean =
+    !c.exists(_.nulls.contains(0L))
 
-  private def rangeMayContain(c: ColFacts, v: Any): Boolean = {
+  private def rangeMayContain(c: Option[ColFacts], v: Any): Boolean = {
     if (!mayHaveValues(c)) return false
-    (c.min, c.max) match {
+    (lo(c.get), hi(c.get)) match {
       case (Some(mn), Some(mx)) =>
         (cmp(v, mn), cmp(v, mx)) match {
           case (Some(a), Some(b)) => a >= 0 && b <= 0
@@ -257,9 +217,9 @@ object DeleteWhere {
     }
   }
 
-  private def boundMay(c: ColFacts, v: Any, gt: Boolean, orEqual: Boolean): Boolean = {
+  private def boundMay(c: Option[ColFacts], v: Any, gt: Boolean, orEqual: Boolean): Boolean = {
     if (!mayHaveValues(c)) return false
-    val edge = if (gt) c.max else c.min // the row most able to satisfy
+    val edge = if (gt) hi(c.get) else lo(c.get) // the row most able to satisfy
     edge match {
       case Some(e) => cmp(e, v) match {
         case Some(sign) =>

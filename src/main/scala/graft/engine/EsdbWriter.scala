@@ -470,10 +470,10 @@ object EsdbWriter {
     * it (see [[subpartsOf]]).
     *
     * Job shape: the data write (one shuffle to the layout's tasks, one
-    * write job), then [[writeSidecars]] once — one footer job over the
-    * written files for the ts-range rows and one distinct query over
-    * the staged files' (space, grouping) columns, read with the schema
-    * sidecar the data write just laid down (no inference job).
+    * write job), then [[writeSidecars]] once — the written files'
+    * footers read on the driver for the ts-range rows, and one distinct
+    * query over the staged files' (space, grouping) columns, read with
+    * the schema sidecar the data write just laid down (no inference job).
     */
   def write(ev: DataFrame, path: String, indexAttrs: Seq[String] = Nil,
             subparts: Int = 1, clusterBy: Seq[String] = Nil,
@@ -1375,28 +1375,6 @@ object EsdbWriter {
     math.max(1, math.ceil(inputBytes.toDouble / math.max(1L, maxPart)).toInt)
   }
 
-  /** Proven-zero-null event_id column across every block — one footer
-    * read, no data pages; the license to drop a log file whole.
-    */
-  private def eventIdNullFree(conf: org.apache.hadoop.conf.Configuration,
-                              file: org.apache.hadoop.fs.Path): Boolean = {
-    val r = graft.sources.ParquetFiles.open(conf, file)
-    try {
-      var ok = true
-      var saw = false
-      r.getFooter.getBlocks.forEach { b =>
-        b.getColumns.forEach { c =>
-          if (c.getPath.toDotString == "event_id") {
-            saw = true
-            val st = c.getStatistics
-            if (st == null || !st.isNumNullsSet || st.getNumNulls > 0) ok = false
-          }
-        }
-      }
-      ok && saw
-    } finally r.close()
-  }
-
   /** Trim a log store's history: delete every row with
     * `event_id < beforeId` (`<=` when `inclusive`), committed as a new
     * version. The log manifest classifies each file without opening
@@ -1416,7 +1394,9 @@ object EsdbWriter {
       val ranges = logManifestRanges(v.conf, v.root).getOrElse(Map.empty)
       val (dropCand, rest) = v.files.partition(f =>
         ranges.get(f.rel).exists { case (_, mx) => expired(mx) })
-      val (drop, dropUnproven) = dropCand.partition(f => eventIdNullFree(v.conf, f.path))
+      val nullFree = dropCand.zip(graft.sources.ParquetFiles.factsOf(v.conf, dropCand.map(_.path)))
+        .collect { case (f, facts) if facts.nullFree("event_id") => f }.toSet
+      val (drop, dropUnproven) = dropCand.partition(nullFree)
       val (carry, straddle) = rest.partition(f =>
         ranges.get(f.rel).exists { case (mn, _) => !expired(mn) })
       val rewrite = straddle ++ dropUnproven
@@ -1870,52 +1850,29 @@ object EsdbWriter {
   /** Per-space store statistics from parquet FOOTERS only — no data
     * pages are ever read: event count (row-group counts) and ts_us
     * min/max (column-chunk statistics). The metadata-only analog of
-    * the reference's index summary: at 100 TB the cost is one footer
-    * read per file, distributed over the executors.
+    * the reference's index summary: one footer read per file, in
+    * parallel on the driver ([[graft.sources.ParquetFiles.factsOf]]),
+    * and no Spark job. A file whose ts_us range is unproven adds its
+    * rows but no bounds.
     */
   def storeStats(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
     val hconf = spark.sparkContext.hadoopConfiguration
     val root = new org.apache.hadoop.fs.Path(dataRoot(spark, path))
     val fs = root.getFileSystem(hconf)
-    val files: Seq[(String, String)] =
-      if (!fs.exists(root)) Nil
-      else storeDataFiles(fs, root).map { case (_, f, sp) => (sp, f.getPath.toString) }
-    val par = math.max(1, math.min(files.size, spark.sparkContext.defaultParallelism))
-    // the session conf travels to the executors (see refreshTsRangeManifest)
-    val serConf = new org.apache.spark.util.SerializableConfiguration(hconf)
-    spark.createDataset(files).repartition(par)
-      .mapPartitions { it =>
-        val conf = serConf.value
-        it.map { case (space, file) =>
-          val r = graft.sources.ParquetFiles.open(conf, new org.apache.hadoop.fs.Path(file))
-          try {
-            var n = 0L
-            var mn = Option.empty[Long]
-            var mx = Option.empty[Long]
-            r.getFooter.getBlocks.forEach { b =>
-              n += b.getRowCount
-              b.getColumns.forEach { c =>
-                if (c.getPath.toDotString == "ts_us") {
-                  val st = c.getStatistics
-                  if (st != null && st.hasNonNullValue) {
-                    val lo = st.genericGetMin.asInstanceOf[java.lang.Long].longValue()
-                    val hi = st.genericGetMax.asInstanceOf[java.lang.Long].longValue()
-                    mn = Some(mn.fold(lo)(math.min(_, lo)))
-                    mx = Some(mx.fold(hi)(math.max(_, hi)))
-                  }
-                }
-              }
-            }
-            (space, n, mn, mx)
-          } finally r.close()
-        }
+    val files = if (!fs.exists(root)) Nil else storeDataFiles(fs, root)
+    val facts = graft.sources.ParquetFiles.factsOf(hconf, files.map(_._2.getPath))
+    // spaces in Spark's string order (UTF-8 bytes), as `orderBy` sorts
+    val rows = files.map(_._3).zip(facts).groupBy(_._1).toSeq
+      .sortBy(g => org.apache.spark.unsafe.types.UTF8String.fromString(g._1)).map { case (space, group) =>
+        val ts = group.flatMap(_._2.longRange("ts_us"))
+        org.apache.spark.sql.Row(space, group.map(_._2.rows).sum,
+          ts.map(_._1).minOption.map(Long.box).orNull, ts.map(_._2).maxOption.map(Long.box).orNull)
       }
-      .toDF("space", "n", "mn", "mx")
-      .groupBy("space")
-      .agg(sum("n").as("n_events"), min("mn").as("min_ts_us"), max("mx").as("max_ts_us"))
-      .orderBy("space")
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), StoreStatsSchema)
   }
+
+  private val StoreStatsSchema = org.apache.spark.sql.types.StructType.fromDDL(
+    "space STRING, n_events BIGINT, min_ts_us BIGINT, max_ts_us BIGINT")
 
   // ---- log layout: the stream-side dual of the space/grouping store ----
 
@@ -2344,27 +2301,10 @@ object EsdbWriter {
     val fresh = LogCommits.visibleDataFiles(fs, root)
       .filterNot(f => known.contains(f.getPath.getName))
     if (fresh.isEmpty) return
-    val rows = fresh.map { f =>
-      val r = graft.sources.ParquetFiles.open(hconf(spark), f.getPath)
-      try {
-        var mn = Long.MaxValue
-        var mx = Long.MinValue
-        var cnt = 0L
-        r.getFooter.getBlocks.forEach { b =>
-          cnt += b.getRowCount
-          b.getColumns.forEach { c =>
-            if (c.getPath.toDotString == "event_id") {
-              val st = c.getStatistics
-              if (st != null && st.hasNonNullValue) {
-                mn = math.min(mn, st.genericGetMin.asInstanceOf[java.lang.Long].longValue())
-                mx = math.max(mx, st.genericGetMax.asInstanceOf[java.lang.Long].longValue())
-              }
-            }
-          }
-        }
-        (f.getPath.getName, mn, mx, cnt)
-      } finally r.close()
-    }.filter { case (_, mn, mx, _) => mn != Long.MaxValue && mx != Long.MinValue }
+    val facts = graft.sources.ParquetFiles.factsOf(hconf(spark), fresh.map(_.getPath))
+    val rows = fresh.zip(facts).flatMap { case (f, ff) =>
+      ff.longRange("event_id").map { case (mn, mx) => (f.getPath.getName, mn, mx, ff.rows) }
+    }
     if (rows.nonEmpty)
       rows.toDF("file", "min_id", "max_id", "rows")
         .coalesce(1).write.mode(SaveMode.Append).parquet(s"${root.toString}/$LogManifest")
@@ -2395,25 +2335,30 @@ object EsdbWriter {
         if (hasTs) r.getLong(2) else 0L, !r.isNullAt(4) && r.getBoolean(4))
     })
 
-  /** Ts-range rows for the files a write produced: ONE job with no
-    * shuffle reads their footers in parallel on the executors, and the
-    * driver writes the collected rows (one tiny row per file) as a new
-    * part file — no Spark write job. Files whose footer stats cannot
-    * PROVE a ts fact (stats missing/untyped) are simply omitted —
-    * readers keep unknown files, so the manifest can only skip work,
-    * never change results.
+  /** Ts-range rows for the files a write produced: their footers are
+    * read in parallel on the driver ([[graft.sources.ParquetFiles.factsOf]],
+    * no Spark job), and the driver writes the rows (one tiny row per
+    * file: file, min_ts, max_ts, has_ts, null_free) as a new part file.
+    * A file whose footer cannot PROVE its ts range (stats missing or
+    * not INT64) is omitted — readers keep unknown files, so the
+    * manifest can only skip work, never change results. `null_free`
+    * is PROVEN zero null ts rows: the license for time-retention to
+    * drop an expired file whole without opening it (a null ts fails
+    * every comparison, so a null row must survive `ts_us < cutoff`).
     */
   private def refreshTsRangeManifest(spark: SparkSession, root: String,
                                      written: Seq[(String, org.apache.hadoop.fs.Path)]): Unit = {
-    if (written.isEmpty) return
-    // session conf travels to the executors (object-store creds live
-    // there — a bare new Configuration() would fail the footer opens)
-    val serConf = new org.apache.spark.util.SerializableConfiguration(hconf(spark))
-    val par = math.max(1, math.min(written.size, spark.sparkContext.defaultParallelism))
-    val rows = spark.sparkContext
-      .parallelize(written.map { case (rel, p) => (rel, p.toString) }, par)
-      .flatMap { case (rel, phys) => tsFacts(serConf.value, rel, new org.apache.hadoop.fs.Path(phys)) }
-      .collect()
+    val facts = graft.sources.ParquetFiles.factsOf(hconf(spark), written.map(_._2))
+    val rows = written.zip(facts).flatMap { case ((rel, _), f) =>
+      f.cols.get("ts_us").filter(c => c.rangeProven && (c.min.isEmpty || c.longRange.isDefined))
+        .map { c =>
+          val r = c.longRange
+          org.apache.spark.sql.catalyst.InternalRow(
+            org.apache.spark.unsafe.types.UTF8String.fromString(rel),
+            r.map(x => Long.box(x._1)).orNull, r.map(x => Long.box(x._2)).orNull,
+            r.isDefined, f.nullFree("ts_us"))
+        }
+    }
     if (rows.isEmpty) return
     // dot-staged then renamed: an in-place append's live sidecar dir
     // never shows a half-written part
@@ -2424,49 +2369,6 @@ object EsdbWriter {
     try rows.foreach(w.write) finally w.close()
     if (!staged.getFileSystem(hconf(spark)).rename(staged, new org.apache.hadoop.fs.Path(dir, name)))
       throw new java.io.IOException(s"ts-range sidecar part rename failed at $dir")
-  }
-
-  /** One file's ts-range row from its footer: (file, min_ts, max_ts,
-    * has_ts, null_free), or None when the stats prove nothing.
-    */
-  private def tsFacts(conf: org.apache.hadoop.conf.Configuration, rel: String,
-                      file: org.apache.hadoop.fs.Path): Option[org.apache.spark.sql.catalyst.InternalRow] = {
-    val r = graft.sources.ParquetFiles.open(conf, file)
-    try {
-      var mn = Option.empty[Long]
-      var mx = Option.empty[Long]
-      var provable = true
-      var sawTs = false
-      // null_free: PROVEN zero null ts rows (numNulls set and 0 in
-      // every block) — the license for time-retention to drop an
-      // expired file whole without opening it (null ts fails every
-      // comparison, so a null row must survive `ts_us < cutoff`)
-      var nullFree = true
-      r.getFooter.getBlocks.forEach { b =>
-        b.getColumns.forEach { c =>
-          if (c.getPath.toDotString == "ts_us") {
-            sawTs = true
-            val st = c.getStatistics
-            if (st == null || !st.isNumNullsSet || st.getNumNulls > 0)
-              nullFree = false
-            if (st == null) provable = false
-            else if (st.hasNonNullValue) st.genericGetMin match {
-              case lo: java.lang.Long =>
-                val hi = st.genericGetMax.asInstanceOf[java.lang.Long].longValue()
-                mn = Some(mn.fold(lo.longValue())(math.min(_, lo.longValue())))
-                mx = Some(mx.fold(hi)(math.max(_, hi)))
-              case _ => provable = false
-            }
-            else if (!(st.isNumNullsSet && st.getNumNulls == b.getRowCount))
-              provable = false
-          }
-        }
-      }
-      if (!provable || !sawTs) None
-      else Some(org.apache.spark.sql.catalyst.InternalRow(
-        org.apache.spark.unsafe.types.UTF8String.fromString(rel),
-        mn.map(Long.box).orNull, mx.map(Long.box).orNull, mn.isDefined, nullFree))
-    } finally r.close()
   }
 
   /** Open a written store through the ordering-aware DSv2 source
@@ -2779,7 +2681,7 @@ object EsdbWriter {
     require(feed.columns.contains("_change"),
       "applyChanges takes a change feed (needs the _change column)")
     // the feed plan (typically an expensive two-version hash diff) is
-    // consumed several times — counts, delete-stats agg, the EXCEPT ALL,
+    // consumed several times — the feed stats, the EXCEPT ALL,
     // the drift count, the insert write: persist it for the apply's
     // duration, mirroring the footprint cache
     val fed = feed.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -2799,21 +2701,24 @@ object EsdbWriter {
           s"change feed carries column(s) [${extra.mkString(", ")}] the replica at " +
             s"$path lacks — ALTER the replica first (silently dropping them would " +
             "diverge the replica from the followed source)")
-        val nDel = deletes0.count()
-        val nIns = inserts0.count()
-        counts = (nIns, nDel)
+        // one pass over the feed: both counts, and the delete set's
+        // spaces and event_id range
+        val isDel = col("_change") === "delete"
+        val stats = fed.agg(count_if(col("_change") === "insert"), count_if(isDel),
+          collect_set(when(isDel, col("space"))),
+          min(when(isDel, col("event_id"))), max(when(isDel, col("event_id")))).head()
+        val nDel = stats.getLong(1)
+        counts = (stats.getLong(0), nDel)
         // no deletes: nothing to rewrite (inserts append below)
         if (nDel == 0) None
         else {
           // footprint: only replica files whose (space, event_id range)
           // stats admit a deleted row rewrite; everything else carries
-          val delStats = deletes0.agg(
-            collect_set(col("space")), min(col("event_id")), max(col("event_id"))).head()
-          val delSpaces = delStats.getSeq[String](0).toSet
+          val delSpaces = stats.getSeq[String](2).toSet
           val filters: Seq[org.apache.spark.sql.sources.Filter] =
-            if (delStats.isNullAt(1)) Nil
-            else Seq(org.apache.spark.sql.sources.GreaterThanOrEqual("event_id", delStats.getLong(1)),
-              org.apache.spark.sql.sources.LessThanOrEqual("event_id", delStats.getLong(2)))
+            if (stats.isNullAt(3)) Nil
+            else Seq(org.apache.spark.sql.sources.GreaterThanOrEqual("event_id", stats.getLong(3)),
+              org.apache.spark.sql.sources.LessThanOrEqual("event_id", stats.getLong(4)))
           val (inSpaces, outside) = v.files.partition(_.space.exists(delSpaces))
           val (rewrite, carry) = v.byStats(filters, inSpaces)
           val target = readFullWidth(spark, v.root).schema

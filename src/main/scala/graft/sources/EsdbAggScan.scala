@@ -101,6 +101,9 @@ final class EsdbAggScan(path: String, spaces: Option[Seq[String]], spec: PushedA
 
   override def createReaderFactory(): PartitionReaderFactory =
     new EsdbAggReaderFactory(spec, conf)
+
+  override def supportedCustomMetrics(): Array[org.apache.spark.sql.connector.metric.CustomMetric] =
+    Array(new FooterReadsMetric)
 }
 
 final class EsdbAggReaderFactory(spec: PushedAggSpec,
@@ -132,6 +135,10 @@ final class EsdbFooterAggReader(part: EsdbInputPartition, spec: PushedAggSpec,
   override def get(): InternalRow = row
   override def close(): Unit = ()
 
+  private var footerReads = 0L
+  override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
+    Array(EsdbMetrics.Task(EsdbMetrics.FooterReads, footerReads))
+
   // per-column accumulated footer facts across all files of the partition
   private final class ColAcc {
     var nonNull: Long = 0L
@@ -156,35 +163,25 @@ final class EsdbFooterAggReader(part: EsdbInputPartition, spec: PushedAggSpec,
     val acc = scala.collection.mutable.Map.empty[String, ColAcc]
 
     part.files.foreach { file =>
-      EsdbMetrics.FooterReads.incrementAndGet()
-      val r = ParquetFiles.open(conf, new Path(file))
-      try {
-        r.getFooter.getBlocks.forEach { b =>
-          rows += b.getRowCount
-          b.getColumns.forEach { c =>
-            val name = c.getPath.toDotString
-            if (tracked.contains(name)) {
-              val a = acc.getOrElseUpdate(name, new ColAcc)
-              val st = c.getStatistics
-              val nullsKnown = st != null && st.isNumNullsSet
-              if (needCount.contains(name)) {
-                if (!nullsKnown) fail(file, name, "a null count")
-                a.nonNull += c.getValueCount - st.getNumNulls
-              }
-              if (needRange.contains(name)) {
-                val allNull = nullsKnown && st.getNumNulls == c.getValueCount
-                if (st != null && st.hasNonNullValue) {
-                  val mn = internalValue(st.genericGetMin.asInstanceOf[AnyRef])
-                  val mx = internalValue(st.genericGetMax.asInstanceOf[AnyRef])
-                  val dt = needRange(name)
-                  if (a.min == null || cmp(dt, mn, a.min) < 0) a.min = mn
-                  if (a.max == null || cmp(dt, mx, a.max) > 0) a.max = mx
-                } else if (!allNull) fail(file, name, "an exact min/max")
-              }
+      val facts = ParquetFiles.facts(conf, new Path(file))
+      footerReads += 1
+      rows += facts.rows
+      tracked.foreach { name =>
+        facts.cols.get(name).foreach { c =>
+          val a = acc.getOrElseUpdate(name, new ColAcc)
+          if (needCount.contains(name))
+            a.nonNull += c.values - c.nulls.getOrElse(fail(file, name, "a null count"))
+          needRange.get(name).foreach { dt =>
+            if (!c.rangeProven) fail(file, name, "an exact min/max")
+            c.min.map(internalValue).foreach { mn =>
+              if (a.min == null || cmp(dt, mn, a.min) < 0) a.min = mn
+            }
+            c.max.map(internalValue).foreach { mx =>
+              if (a.max == null || cmp(dt, mx, a.max) > 0) a.max = mx
             }
           }
         }
-      } finally r.close()
+      }
     }
 
     val spc = spec.schema
@@ -205,7 +202,7 @@ final class EsdbFooterAggReader(part: EsdbInputPartition, spec: PushedAggSpec,
   }
 
   /** Boxed footer statistic → canonical comparable (Long/Int/Double/Float/Boolean). */
-  private def internalValue(v: AnyRef): Any = v match {
+  private def internalValue(v: Any): Any = v match {
     case l: java.lang.Long => l.longValue()
     case n: java.lang.Integer => n.intValue()
     case d: java.lang.Double => d.doubleValue()

@@ -70,8 +70,9 @@ final class EsdbLogMicroBatch(path: String, required: StructType,
       info.get(f.getPath.getName) match {
         case Some(i) => Some(FileFact(i.maxId, i.rows))
         case None =>
-          val (mx, cnt) = footerIdStats(hconf, f.getPath)
-          if (mx < 0) None else Some(FileFact(mx, cnt))
+          // a file without a proven id range (or only negative ids) adds nothing
+          val facts = ParquetFiles.facts(hconf, f.getPath)
+          facts.longRange("event_id").collect { case (_, mx) if mx >= 0 => FileFact(mx, facts.rows) }
       }
     }
   }
@@ -80,29 +81,6 @@ final class EsdbLogMicroBatch(path: String, required: StructType,
   private def headId(): Long = {
     val facts = fileFacts()
     if (facts.isEmpty) -1L else facts.map(_.maxId).max
-  }
-
-  /** (max event_id, row count) from one file's footer; maxId -1 when
-    * the column or its stats are absent (all-null ids contribute
-    * nothing).
-    */
-  private def footerIdStats(hconf: org.apache.hadoop.conf.Configuration, p: Path): (Long, Long) = {
-    val r = ParquetFiles.open(hconf, p)
-    try {
-      var mx = -1L
-      var cnt = 0L
-      r.getFooter.getBlocks.forEach { b =>
-        cnt += b.getRowCount
-        b.getColumns.forEach { c =>
-          if (c.getPath.toDotString == "event_id") {
-            val st = c.getStatistics
-            if (st != null && st.hasNonNullValue)
-              mx = math.max(mx, st.genericGetMax.asInstanceOf[java.lang.Long].longValue())
-          }
-        }
-      }
-      (mx, cnt)
-    } finally r.close()
   }
 
   override def initialOffset(): Offset = LogOffset(-1L)

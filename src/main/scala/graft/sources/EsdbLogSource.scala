@@ -443,9 +443,8 @@ object EsdbLogScan {
     // probes every group before any task launches)
     import scala.collection.parallel.CollectionConverters._
     val ranged = part.files.zip(part.fileLengths).par.map { case (f, len) =>
-      EsdbVectorReader.probe(hconf, f, required, constSpace = false, statCols = Seq("event_id"))
-        .flatMap(_.get("event_id"))
-        .flatMap(facts => facts.range.filter(_ => facts.nulls.contains(0L)))
+      EsdbVectorReader.probe(hconf, f, required, constSpace = false)
+        .filter(_.nullFree("event_id")).flatMap(_.longRange("event_id"))
         .map(r => ((f, len), r))
     }.toArray
     if (ranged.exists(_.isEmpty)) return None

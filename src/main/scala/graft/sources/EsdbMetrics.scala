@@ -14,19 +14,13 @@ object EsdbMetrics {
   final val FilesOpened = "esdbFilesOpened"
   final val RowsMerged = "esdbRowsMerged"
   final val EarlyExits = "esdbEarlyExits"
+  final val FooterReads = "esdbFooterReads"
 
   def supported: Array[CustomMetric] =
     Array(new FilesOpenedMetric, new RowsMergedMetric, new EarlyExitsMetric)
 
   final case class Task(override val name: String, override val value: Long)
     extends CustomTaskMetric
-
-  /** Parquet footers opened by footer-only aggregate readers in this
-    * JVM — a local-mode observable: AggPushdownSpec asserts the agg
-    * path touches footers while [[EsdbMergeReader.RowsRead]] stays
-    * flat (no data pages).
-    */
-  val FooterReads = new java.util.concurrent.atomic.AtomicLong()
 }
 
 final class FilesOpenedMetric extends CustomSumMetric {
@@ -42,4 +36,9 @@ final class RowsMergedMetric extends CustomSumMetric {
 final class EarlyExitsMetric extends CustomSumMetric {
   override def name(): String = EsdbMetrics.EarlyExits
   override def description(): String = "readers stopped before EOF (ts bound / pushed top-N)"
+}
+
+final class FooterReadsMetric extends CustomSumMetric {
+  override def name(): String = EsdbMetrics.FooterReads
+  override def description(): String = "parquet footers read by the footer-only aggregate scan"
 }

@@ -804,18 +804,14 @@ final class EsdbScan(path: String, required: StructType, spaces: Option[Seq[Stri
     grouping.isEmpty && hints.isEmpty &&
       partitions.nonEmpty && partitions.forall(_.files.length == 1) && {
         val hconf = SparkSession.active.sparkContext.hadoopConfiguration
-        val statCols = (if (tsBounds.isBounded) Seq("ts_us") else Nil) ++
-          (if (groupingNotNull) Seq("grouping") else Nil)
         partitions.forall { p =>
-          EsdbVectorReader.probe(hconf, p.files.head, required, constSpace = true, statCols)
+          EsdbVectorReader.probe(hconf, p.files.head, required, constSpace = true)
             .exists { facts =>
-              val tsOk = !tsBounds.isBounded || facts.get("ts_us").exists(f =>
-                f.nulls.contains(0L) && f.range.exists {
+              val tsOk = !tsBounds.isBounded || (facts.nullFree("ts_us") &&
+                facts.longRange("ts_us").exists {
                   case (mn, mx) => tsBounds.contains(mn) && tsBounds.contains(mx)
                 })
-              val grpOk = !groupingNotNull ||
-                facts.get("grouping").exists(_.nulls.contains(0L))
-              tsOk && grpOk
+              tsOk && (!groupingNotNull || facts.nullFree("grouping"))
             }
         }
       }

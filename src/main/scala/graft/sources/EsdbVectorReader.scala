@@ -164,61 +164,21 @@ object EsdbVectorReader {
     conf
   }
 
-  /** Footer-derived facts about one column, used to prove a CLAIMED
-    * filter vacuous (satisfied by every row of the file), which is the
-    * only way a claimed filter may ride the vectorized path — the
-    * decoder has no record-level filtering. Fields are None when any
-    * row group lacks the statistic (unknown = unprovable = row path).
-    */
-  final case class ColFacts(range: Option[(Long, Long)], nulls: Option[Long])
-
-  /** Can `file` serve `required` on this path, and what do its footer
-    * stats prove? None when the file cannot serve the scan at all: a
+  /** Can `file` serve `required` on this path, and what does its
+    * footer prove? None when the file cannot serve the scan at all: a
     * required column (minus `space` when it is a partition constant)
     * is missing or not of the canonical store physical type — the
     * exact set the row-path `convert` supports, so a fallback to the
-    * row path never widens the type surface. Otherwise Some(facts) for
-    * each requested stat column present in the file (ranges only for
-    * INT64 columns; null counts for any primitive).
+    * row path never widens the type surface. Otherwise Some(facts),
+    * which callers use to prove a CLAIMED filter vacuous (satisfied by
+    * every row of the file): the only way a claimed filter may ride the
+    * vectorized path, since the decoder has no record-level filtering.
     */
   def probe(conf: Configuration, file: String, required: StructType,
-            constSpace: Boolean, statCols: Seq[String] = Nil): Option[Map[String, ColFacts]] = {
-    val p = new Path(file)
-    val footer = ParquetFiles.open(conf, p)
-    val (schema, blocks) =
-      try (footer.getFileMetaData.getSchema, footer.getFooter.getBlocks)
-      finally footer.close()
-    val ok = required.fields.forall(f =>
-      (constSpace && f.name == "space") || matches(schema, f.name, f.dataType))
-    if (!ok) return None
-    val facts = statCols.filter(schema.containsField).map { name =>
-      val isLong = schema.getType(schema.getFieldIndex(name)).isPrimitive &&
-        schema.getType(schema.getFieldIndex(name)).asPrimitiveType()
-          .getPrimitiveTypeName == PrimitiveTypeName.INT64
-      var mn = Long.MaxValue
-      var mx = Long.MinValue
-      var nulls = 0L
-      var rangeKnown = true
-      var nullsKnown = true
-      blocks.forEach { b =>
-        b.getColumns.forEach { c =>
-          if (c.getPath.toDotString == name) {
-            val st = c.getStatistics
-            if (st == null || !st.isNumNullsSet) nullsKnown = false
-            else nulls += st.getNumNulls
-            if (!isLong || st == null || !st.hasNonNullValue) rangeKnown = false
-            else {
-              mn = math.min(mn, st.genericGetMin.asInstanceOf[java.lang.Long].longValue())
-              mx = math.max(mx, st.genericGetMax.asInstanceOf[java.lang.Long].longValue())
-            }
-          }
-        }
-      }
-      name -> ColFacts(
-        if (rangeKnown && mn != Long.MaxValue) Some((mn, mx)) else None,
-        if (nullsKnown) Some(nulls) else None)
-    }.toMap
-    Some(facts)
+            constSpace: Boolean): Option[ParquetFiles.FileFacts] = {
+    val facts = ParquetFiles.facts(conf, new Path(file))
+    Option.when(required.fields.forall(f =>
+      (constSpace && f.name == "space") || matches(facts.schema, f.name, f.dataType)))(facts)
   }
 
   private def matches(schema: MessageType, name: String, dt: DataType): Boolean = {

@@ -4,6 +4,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.column.page.PageReadStore
+import org.apache.parquet.column.statistics.Statistics
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
 import org.apache.parquet.filter2.compat.FilterCompat
@@ -12,7 +13,8 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.{ColumnIOFactory, RecordReader}
 import org.apache.parquet.schema.MessageType
 
-/** The one way the engine opens a parquet file.
+/** The one way the engine opens a parquet file, and the one reader of
+  * its footer statistics ([[facts]]).
   *
   * parquet-mr's short entry points — `ParquetFileReader.open(InputFile)`
   * and `ParquetReader.builder(readSupport, path)` — each build a fresh
@@ -31,6 +33,77 @@ object ParquetFiles {
   def open(conf: Configuration, path: Path): ParquetFileReader =
     ParquetFileReader.open(HadoopInputFile.fromPath(path, conf),
       options(conf, path, FilterCompat.NOOP))
+
+  /** One leaf column's footer facts, merged over a file's row groups:
+    * `values` counts nulls too; `nulls` is defined only when every row
+    * group records it; `min`/`max` are parquet's raw statistic values
+    * (boxed Long, Integer, Double, Float, Boolean or a `Binary`), merged
+    * with the column's own comparator, None when no row group holds a
+    * non-null value. `rangeProven`: every row group has a min/max or is
+    * proven all-null, so no value lies outside them — otherwise the
+    * range is unknown, whatever `min`/`max` say.
+    */
+  final case class ColFacts(values: Long, nulls: Option[Long],
+                            min: Option[Any], max: Option[Any], rangeProven: Boolean) {
+    def range: Option[(Any, Any)] = if (rangeProven) min.zip(max) else None
+    def longRange: Option[(Long, Long)] = range.collect {
+      case (lo: java.lang.Long, hi: java.lang.Long) => (lo.longValue, hi.longValue)
+    }
+  }
+
+  /** What a file's footer says: row count, schema and, keyed by dotted
+    * path, each leaf column's [[ColFacts]]. A column the file lacks has
+    * no entry.
+    */
+  final case class FileFacts(rows: Long, schema: MessageType, cols: Map[String, ColFacts]) {
+    def longRange(col: String): Option[(Long, Long)] = cols.get(col).flatMap(_.longRange)
+    /** Proven free of nulls in `col` (a column the file lacks is not). */
+    def nullFree(col: String): Boolean = cols.get(col).exists(_.nulls.contains(0L))
+  }
+
+  /** The footer facts of `path`: one footer read, no data pages. */
+  def facts(conf: Configuration, path: Path): FileFacts = {
+    val r = open(conf, path)
+    try {
+      val acc = scala.collection.mutable.LinkedHashMap.empty[String, ColAcc]
+      var rows = 0L
+      r.getFooter.getBlocks.forEach { b =>
+        rows += b.getRowCount
+        b.getColumns.forEach { c =>
+          acc.getOrElseUpdate(c.getPath.toDotString, new ColAcc).add(c.getValueCount, c.getStatistics)
+        }
+      }
+      FileFacts(rows, r.getFileMetaData.getSchema, acc.view.mapValues(_.result).toMap)
+    } finally r.close()
+  }
+
+  /** [[facts]] of each of `paths`, the footers read in parallel on the
+    * calling JVM (independent IO, no Spark job), in input order.
+    */
+  def factsOf(conf: Configuration, paths: Seq[Path]): Seq[FileFacts] = {
+    import scala.collection.parallel.CollectionConverters._
+    paths.toVector.par.map(facts(conf, _)).toVector
+  }
+
+  private final class ColAcc {
+    private var values = 0L
+    private var nulls = Option(0L)
+    private var min, max: Any = null
+    private var proven = true
+
+    def add(valueCount: Long, st: Statistics[_]): Unit = {
+      values += valueCount
+      val nullsSet = st != null && st.isNumNullsSet
+      nulls = if (nullsSet) nulls.map(_ + st.getNumNulls) else None
+      if (st != null && st.hasNonNullValue) {
+        val order = st.comparator().asInstanceOf[java.util.Comparator[Any]]
+        if (min == null || order.compare(st.genericGetMin, min) < 0) min = st.genericGetMin
+        if (max == null || order.compare(st.genericGetMax, max) > 0) max = st.genericGetMax
+      } else if (!(nullsSet && st.getNumNulls == valueCount)) proven = false
+    }
+
+    def result: ColFacts = ColFacts(values, nulls, Option(min), Option(max), proven)
+  }
 
   /** Open `path` once for a row-at-a-time read. The footer is read a
     * single time: `plan` sees the file's schema and returns the

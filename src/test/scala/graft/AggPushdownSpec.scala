@@ -5,7 +5,7 @@ import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 
 import graft.engine.EsdbWriter
-import graft.sources.{EsdbAggScan, EsdbMergeReader}
+import graft.sources.{EsdbAggScan, EsdbMergeReader, EsdbMetrics}
 
 /** Footer-only aggregate pushdown (EsdbAggScan): COUNT/MIN/MAX over
   * written stores answered from parquet footers — correctness parity
@@ -39,13 +39,16 @@ class AggPushdownSpec extends SparkSpec {
   private def ordered: DataFrame = EsdbWriter.readOrdered(spark, storePath)
   private def vanilla: DataFrame = EsdbWriter.read(spark, storePath)
 
-  private def aggScanOf(df: DataFrame): Option[EsdbAggScan] = {
+  private def aggScanOf(df: DataFrame): Option[EsdbAggScan] =
+    aggScanExecOf(df).map(_.scan.asInstanceOf[EsdbAggScan])
+
+  /** The executed aggregate scan node (after running `df`). */
+  private def aggScanExecOf(df: DataFrame): Option[BatchScanExec] = {
     df.collect()
     // descend through AQE query stages: the scan leaf lives inside them
-    def scans(p: org.apache.spark.sql.execution.SparkPlan): Seq[EsdbAggScan] =
+    def scans(p: org.apache.spark.sql.execution.SparkPlan): Seq[BatchScanExec] =
       p.collect {
-        case b: BatchScanExec if b.scan.isInstanceOf[EsdbAggScan] =>
-          Seq(b.scan.asInstanceOf[EsdbAggScan])
+        case b: BatchScanExec if b.scan.isInstanceOf[EsdbAggScan] => Seq(b)
         case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
           scans(a.executedPlan)
         case s: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
@@ -63,10 +66,16 @@ class AggPushdownSpec extends SparkSpec {
       min($"event_id").as("min_id"), max($"event_id").as("max_id"),
       min($"value").as("min_v"), max($"value").as("max_v"))
     val before = EsdbMergeReader.RowsRead.get()
-    assert(aggScanOf(q).isDefined, "aggregate was not pushed:\n" +
+    val scan = aggScanExecOf(q)
+    assert(scan.isDefined, "aggregate was not pushed:\n" +
       q.queryExecution.executedPlan.toString)
     assert(EsdbMergeReader.RowsRead.get() == before,
       "footer-only aggregate must not pull rows off parquet")
+    // the scan reads each store file's footer once, and nothing else
+    val root = new org.apache.hadoop.fs.Path(EsdbWriter.dataRoot(spark, storePath))
+    val files = EsdbWriter.storeDataFiles(root.getFileSystem(spark.sparkContext.hadoopConfiguration), root)
+    assert(files.size >= 6)
+    assert(scan.get.metrics(EsdbMetrics.FooterReads).value == files.size, scan.get.metrics)
     val expect = vanilla.agg(
       count(lit(1)), count($"value"), count($"ts_us"),
       min($"ts_us"), max($"ts_us"), min($"event_id"), max($"event_id"),

@@ -144,12 +144,11 @@ class SidecarSpec extends SparkSpec {
         .toDF("space", "grouping", "ts_us", "event_id", "value", "payload"),
       Seq("event_id")): Unit)
     val got = Map("update" -> update, "delete" -> delete, "retention" -> retention, "merge" -> merge)
-    // data write (shuffle + write), one footer job, the groupings query
-    // (shuffle + write); delete and retention read their sidecar on the
-    // driver (no job); merge adds the source stats, the footprint join
-    // and its counts
+    // data write (shuffle + write) and the groupings query (shuffle +
+    // write); footers and sidecars are read on the driver (no job);
+    // merge adds the source stats, the footprint join and its counts
     info(s"Spark jobs per mutation: $got")
-    val budget = Map("update" -> 5, "delete" -> 5, "retention" -> 5, "merge" -> 12)
+    val budget = Map("update" -> 4, "delete" -> 4, "retention" -> 4, "merge" -> 11)
     budget.foreach { case (k, b) =>
       assert(got(k) <= b, s"$k ran ${got(k)} Spark jobs, budget $b (all: $got)")
     }
@@ -195,11 +194,11 @@ class SidecarSpec extends SparkSpec {
     val more = Map("maintain" -> maintain, "sql_update" -> sqlUpdate, "apply_changes" -> apply,
       "trim_log" -> trim, "delete_where_log" -> logDelete)
     info(s"Spark jobs per mutation: $more")
-    // maintain: data write + footer job (compaction keeps the pairs);
-    // applyChanges adds the feed counts, the delete stats, the EXCEPT ALL
-    // and the drift counts; a log rewrite is its data write alone (the
-    // manifest is read and extended on the driver)
-    val moreBudget = Map("maintain" -> 3, "sql_update" -> 6, "apply_changes" -> 19,
+    // maintain: data write alone (compaction keeps the pairs);
+    // applyChanges adds one feed aggregate (counts and delete stats), the
+    // EXCEPT ALL and the drift counts; a log rewrite is its data write
+    // and the log-manifest part's write (the manifest is read on the driver)
+    val moreBudget = Map("maintain" -> 2, "sql_update" -> 5, "apply_changes" -> 14,
       "trim_log" -> 3, "delete_where_log" -> 3)
     moreBudget.foreach { case (k, b) =>
       assert(more(k) <= b, s"$k ran ${more(k)} Spark jobs, budget $b (all: $more)")
