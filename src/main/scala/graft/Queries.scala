@@ -572,7 +572,7 @@ object Queries {
   }
 
   /** Manifest-carry fixture behind `store_manifest_scan` (r14/X35):
-    * the canonical events store rebuilt with `carry.mode=manifest` and
+    * the canonical events store rebuilt and
     * mutated so the HEAD version serves mostly manifest-carried files —
     * v1 = full write minus a withheld slice, v2 = versioned append of
     * the slice (v1 carried by `_CARRY` reference), v3 = copy-on-write
@@ -595,31 +595,19 @@ object Queries {
     if (graft.engine.Publish.currentVersion(conf, p).isDefined && !pfs.exists(done))
       pfs.delete(new org.apache.hadoop.fs.Path(p), true): Unit
     if (graft.engine.Publish.currentVersion(conf, p).isEmpty) {
-      // toggling the GLOBAL carry mode is safe here: every fixture
-      // builder in this object synchronizes on the same monitor, and
-      // store publishes only ever happen inside fixture builds — the
-      // four concurrently-running Verify queries cannot publish while
-      // this thread holds the lock
-      val prev = conf.get(graft.engine.Carry.ModeKey)
-      conf.set(graft.engine.Carry.ModeKey, "manifest")
-      try {
-        graft.engine.Publish.publish(conf, p, keepVersions = 8) { tmp =>
-          graft.engine.EsdbWriter.write(
-            ev(s, dir).filter(pmod(col("event_id"), lit(7)) =!= 0), tmp)
-        }: Unit
-        graft.engine.EsdbWriter.appendVersioned(
-          ev(s, dir).filter(pmod(col("event_id"), lit(7)) === 0), p, keepVersions = 8)
-        // a space-scoped delete: the doomed space's files drop, every
-        // OTHER space carries by `_CARRY` reference (a grouping delete
-        // would rewrite every file here — one file per space — and
-        // leave nothing carried)
-        graft.engine.EsdbWriter.delete(s, p,
-          spaces = Some(Set(ManifestDoomedSpace)), groupings = None,
-          keepVersions = 8)
-      } finally {
-        if (prev == null) conf.unset(graft.engine.Carry.ModeKey)
-        else conf.set(graft.engine.Carry.ModeKey, prev)
-      }
+      graft.engine.Publish.publish(conf, p, keepVersions = 8) { tmp =>
+        graft.engine.EsdbWriter.write(
+          ev(s, dir).filter(pmod(col("event_id"), lit(7)) =!= 0), tmp)
+      }: Unit
+      graft.engine.EsdbWriter.appendVersioned(
+        ev(s, dir).filter(pmod(col("event_id"), lit(7)) === 0), p, keepVersions = 8)
+      // a space-scoped delete: the doomed space's files drop, every
+      // OTHER space carries by `_CARRY` reference (a grouping delete
+      // would rewrite every file here — one file per space — and
+      // leave nothing carried)
+      graft.engine.EsdbWriter.delete(s, p,
+        spaces = Some(Set(ManifestDoomedSpace)), groupings = None,
+        keepVersions = 8)
       pfs.create(done, true).close() // build complete, cache valid
     }
     val head = new org.apache.hadoop.fs.Path(graft.engine.Publish.resolve(conf, p))
@@ -1104,7 +1092,7 @@ object Queries {
     // manifest-based predecessor carry (X35, r14): the head version of
     // this store physically holds only its delete's rewrite footprint —
     // everything else resolves through `_CARRY` references into older
-    // host dirs (the HDFS/S3 carry mode). The full-content oracle
+    // host dirs. The full-content oracle
     // proves reference resolution row-exact: nothing lost, nothing
     // duplicated, across an append + a copy-on-write delete chain
     QuerySpec("store_manifest_scan",

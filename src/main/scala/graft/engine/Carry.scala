@@ -1,23 +1,19 @@
 package graft.engine
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 
-/** Reference-based predecessor carry: how a new store version "keeps"
-  * the predecessor files a rewrite didn't touch.
+/** Reference-based predecessor carry: how a new store version keeps
+  * the predecessor files a rewrite did not touch.
   *
-  * Three modes (`graft.carry.mode`):
-  *  - `link` — hard-link each kept file into the new version dir
-  *    (raw-local only; O(files) metadata, zero bytes).
-  *  - `manifest` — the new version records kept files in a `_CARRY`
-  *    sidecar referencing them IN PLACE in the version dir that
-  *    physically wrote them (the snapshot-manifest scheme of
-  *    log-structured table formats). Commit cost is O(changed files);
-  *    no filesystem link support needed — the right mode for HDFS
-  *    (no hardlink) and S3-class stores (where a client-side copy
-  *    would pay O(store bytes) per commit).
-  *  - `auto` (default) — `link` on the raw local filesystem,
-  *    `manifest` everywhere else.
+  * esdb data files are write-once, so a new version only NAMES the
+  * files it keeps: each becomes one line of its `_CARRY` sidecar,
+  * referencing the file IN PLACE in the version dir that physically
+  * wrote it (the snapshot-manifest scheme of log-structured table
+  * formats). Commit cost is O(changed files) on every filesystem; no
+  * link support is needed, so HDFS and S3-class stores run the same
+  * scheme as the local one. Files outside the `_versions` tree (the
+  * legacy direct layout) are copied once, on the store's first
+  * versioned rewrite.
   *
   * `_CARRY` format: one `<versionDirName>\t<relPath>` line per carried
   * file. Invariant the whole scheme stands on: a data file's relative
@@ -28,36 +24,17 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
   * point at the ORIGINAL host dir (copying a predecessor's own
   * manifest entries verbatim keeps resolution one hop).
   *
-  * Vacuum/retention must be refcount-aware in this mode: a retired
-  * version's dir may still host files a retained version references —
+  * Vacuum/retention is refcount-aware: a retired version's dir may
+  * still host files a retained version references —
   * [[Publish.sweepVersions]] and [[Publish.vacuum]] delete per FILE,
   * keeping referenced hosts alive (see `referencedIn`).
   */
 object Carry {
 
   val ManifestFile = "_CARRY"
-  val ModeKey = "graft.carry.mode"
 
-  /** True when new versions should carry by manifest reference. */
-  def manifestMode(conf: Configuration, fs: FileSystem): Boolean =
-    conf.get(ModeKey, "auto").trim.toLowerCase match {
-      case "manifest" => true
-      case "link" | "copy" => false
-      case "auto" => !isRawLocal(fs)
-      case other => throw new IllegalArgumentException(
-        s"$ModeKey must be auto|link|manifest, got '$other'")
-    }
-
-  /** The raw local filesystem, bare or checksummed: data files hard-link there. */
-  def isRawLocal(fs: FileSystem): Boolean = fs match {
-    case _: org.apache.hadoop.fs.RawLocalFileSystem => true
-    case c: org.apache.hadoop.fs.ChecksumFileSystem =>
-      c.getRawFileSystem.isInstanceOf[org.apache.hadoop.fs.RawLocalFileSystem]
-    case _ => false
-  }
-
-  /** rel → host version-dir name; empty when the version has no
-    * manifest (link/copy-carried, or nothing carried).
+  /** rel → host version-dir name; empty when the version carries
+    * nothing (or was written before reference carry).
     */
   def readManifest(fs: FileSystem, dataDir: Path): Map[String, String] = {
     val p = new Path(dataDir, ManifestFile)

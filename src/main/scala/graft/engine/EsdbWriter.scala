@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Write path: the Spark-native equivalent of the reference's
@@ -612,34 +612,32 @@ object EsdbWriter {
       val based = schemaRead(Set.empty).option("basePath", root)
       if (effFiles.isEmpty) based.parquet(root) else based.parquet(effFiles: _*)
     } else {
-      // files span version dirs (manifest carry): vanilla partition
-      // inference refuses sibling roots even with basePath, so read
-      // the raw files and attach `space` from the driver-known file
-      // list. The join key is the REL path (`space=…` onward), which
-      // is unique per file by construction — the basename alone is
-      // NOT: partitionBy writes the same `part-NNNNN-<taskUuid>` name
-      // under every space dir one task touches
-      val spaceOf: Seq[(String, String)] = effFiles.flatMap { f =>
-        // LAST occurrence, matching the SQL side's substring_index(-1):
-        // dir names can't contain '/', so the last '/space=' is always
-        // the real partition dir even if the store PATH contains one
-        val i = f.lastIndexOf("/space=")
-        if (i < 0) Nil
-        else {
-          val rel = f.substring(i + 1)
-          Seq(rel -> graft.sources.EsdbStoreSource.unescapePathName(
-            rel.substring("space=".length, rel.indexOf('/'))))
-        }
+      // files span version dirs (`_CARRY` references): vanilla
+      // partition inference refuses sibling roots even with basePath,
+      // so read the raw files and attach `space` per row from the file's
+      // `space=` dir segment. `_metadata.file_path` is URI-encoded, so
+      // the segment reads as the URI form of the escaped dir name; the
+      // few segments that differ from their space map back through a
+      // driver-built literal (no join, no job). The LAST '/space=' is the
+      // partition dir even if the store PATH contains one: dir names
+      // cannot contain '/'
+      def segOf(p: String): Option[String] = {
+        val i = p.lastIndexOf("/space=")
+        Option.when(i >= 0)(p.substring(i + "/space=".length).takeWhile(_ != '/'))
       }
-      val raw = schemaRead(Set("space", "bucket")).parquet(effFiles: _*)
-      if (spaceOf.isEmpty) raw // log layout: space is a data column
+      val spaceOf: Map[String, String] = effFiles.flatMap { f =>
+        val uri = new org.apache.hadoop.fs.Path(f).toUri
+        segOf(uri.getRawPath).zip(segOf(uri.getPath)).map { case (raw, dir) =>
+          raw -> graft.sources.EsdbStoreSource.unescapePathName(dir)
+        }
+      }.toMap
+      if (spaceOf.isEmpty) schemaRead(Set.empty).parquet(effFiles: _*) // log layout
       else {
-        import spark.implicits._
-        val info = broadcast(spaceOf.toDF("_frel", "space"))
-        raw.withColumn("_frel",
-            concat(lit("space="),
-              substring_index(col("_metadata.file_path"), "/space=", -1)))
-          .join(info, "_frel").drop("_frel")
+        val seg = substring_index(
+          substring_index(col("_metadata.file_path"), "/space=", -1), "/", 1)
+        val renamed = spaceOf.filter { case (k, v) => k != v }
+        schemaRead(Set("space", "bucket")).parquet(effFiles: _*).withColumn("space",
+          if (renamed.isEmpty) seg else coalesce(element_at(typedLit(renamed), seg), seg))
       }
     }
   }
@@ -651,103 +649,28 @@ object EsdbWriter {
   def dataRoot(spark: SparkSession, path: String): String =
     Publish.resolve(hconf(spark), path)
 
-  /** Carry a file or tree into a new version's staging dir.
-    *
-    * Data files (`*.parquet`, not dot/underscore-prefixed) are
-    * WRITE-ONCE: every writer creates new uniquely-named files and
-    * "overwrite" means delete-then-recreate, never truncate-in-place.
-    * On the local filesystem they therefore carry as HARD LINKS — O(1)
-    * per file, no bytes moved, versions share the inode until the last
-    * reference is vacuumed (an unlink, which never disturbs the other
-    * version). This is what keeps versioned appends, copy-on-write
-    * rewrites, and CDC-mode INSERTs metadata-priced instead of
-    * O(store bytes) per commit ON THE LOCAL FS. Every other filesystem
-    * (HDFS has no hardlink; `FileUtil.copy` on s3a is a CLIENT-side
-    * read+write, not a server-side CopyObject) falls through to a real
-    * byte copy here — which is why rewrites carry DATA files through
-    * [[carryData]] instead: in manifest mode ([[Carry]]) kept files
-    * are referenced in place and this function only ever moves small
-    * sidecars. The `.crc` checksum sidecar links alongside (immutable
-    * with its data file) so checksummed local reads keep verifying.
-    *
-    * Everything else — markers (`_SUBPARTS`, `_CLUSTER`, schema
-    * sidecars) and other metadata — COPIES: those files ARE rewritten
-    * in place via `create(overwrite = true)`, which on the raw local FS
-    * truncates the inode and would corrupt every version sharing it.
-    */
-  private[graft] def carryInto(fs: org.apache.hadoop.fs.FileSystem,
-                           src: org.apache.hadoop.fs.Path,
-                           dst: org.apache.hadoop.fs.Path,
-                           conf: org.apache.hadoop.conf.Configuration): Unit = {
-    val st = fs.getFileStatus(src)
-    if (st.isDirectory) {
-      fs.mkdirs(dst)
-      fs.listStatus(src).foreach { c =>
-        // on a BARE RawLocalFileSystem listStatus exposes .crc sidecars;
-        // each is carried WITH its data file below — visiting it again
-        // would overwrite (truncate) the link just created
-        if (!c.getPath.getName.endsWith(".crc"))
-          carryInto(fs, c.getPath, new org.apache.hadoop.fs.Path(dst, c.getPath.getName), conf)
-      }
-      return
-    }
-    val name = src.getName
-    val linkable = name.endsWith(".parquet") &&
-      !name.startsWith("_") && !name.startsWith(".") && Carry.isRawLocal(fs)
-    if (linkable) {
-      val linked = try {
-        val s = new java.io.File(fs.makeQualified(src).toUri.getPath).toPath
-        val d = new java.io.File(fs.makeQualified(dst).toUri.getPath).toPath
-        java.nio.file.Files.createDirectories(d.getParent)
-        java.nio.file.Files.createLink(d, s)
-        // best-effort crc sidecar link (immutable beside its data file)
-        try {
-          val sc = s.getParent.resolve(s".${s.getFileName}.crc")
-          val dc = d.getParent.resolve(s".${d.getFileName}.crc")
-          if (java.nio.file.Files.exists(sc) && !java.nio.file.Files.exists(dc))
-            java.nio.file.Files.createLink(dc, sc): Unit
-        } catch { case _: Exception => () }
-        true
-      } catch { case _: Exception => false } // cross-device, perms: copy instead
-      if (linked) return
-    }
-    org.apache.hadoop.fs.FileUtil.copy(fs, src, fs, dst, false, conf): Unit
-  }
-
   /** Carry a rewrite's untouched DATA files into the staging dir — the
     * one place every copy-on-write operation prices its "kept" set.
-    * In manifest mode ([[Carry.manifestMode]]) each file becomes one
-    * `_CARRY` line referencing its ORIGINAL physical host (the
-    * enumeration already yields physical locations, so a file carried
-    * across ten versions still resolves in one hop) — commit cost
-    * O(changed files) on any filesystem, the Iceberg/Delta-style
-    * answer for HDFS (no hardlink) and S3 (client-side copy only).
-    * Link mode keeps the hard-link/copy behavior for raw-local FS.
-    * Files outside the store's `_versions` tree (legacy direct layout)
-    * always carry physically.
+    * Each file becomes one `_CARRY` line ([[Carry]]) referencing its
+    * ORIGINAL physical host (the enumeration already yields physical
+    * locations, so a file carried across ten versions still resolves in
+    * one hop): commit cost O(changed files) on every filesystem, no
+    * bytes moved. Files outside the store's `_versions` tree (legacy
+    * direct layout, which the first publish retires) are copied once.
     */
   private[graft] def carryData(fs: org.apache.hadoop.fs.FileSystem,
                                conf: org.apache.hadoop.conf.Configuration,
                                logicalPath: String,
                                tmpPath: org.apache.hadoop.fs.Path,
                                entries: Seq[(String, org.apache.hadoop.fs.Path)]): Unit = {
-    if (entries.isEmpty) return
     val root = new org.apache.hadoop.fs.Path(logicalPath)
-    if (Carry.manifestMode(conf, fs)) {
-      val (byRef, byCopy) = entries.map { case (rel, p) =>
-        (rel, p, Carry.vdirOf(root, p))
-      }.partition(_._3.isDefined)
-      Carry.appendManifest(fs, tmpPath,
-        byRef.map { case (rel, _, v) => rel -> v.get }.toMap)
-      byCopy.foreach { case (rel, p, _) =>
-        val dst = new org.apache.hadoop.fs.Path(tmpPath, rel)
-        fs.mkdirs(dst.getParent)
-        carryInto(fs, p, dst, conf)
-      }
-    } else entries.foreach { case (rel, p) =>
-      val dst = new org.apache.hadoop.fs.Path(tmpPath, rel)
-      fs.mkdirs(dst.getParent)
-      carryInto(fs, p, dst, conf)
+    val (byRef, byCopy) = entries.map { case (rel, p) =>
+      (rel, p, Carry.vdirOf(root, p))
+    }.partition(_._3.isDefined)
+    Carry.appendManifest(fs, tmpPath, byRef.map { case (rel, _, v) => rel -> v.get }.toMap)
+    byCopy.foreach { case (rel, p, _) =>
+      org.apache.hadoop.fs.FileUtil.copy(fs, p, fs,
+        new org.apache.hadoop.fs.Path(tmpPath, rel), false, conf): Unit
     }
   }
 
@@ -874,7 +797,7 @@ object EsdbWriter {
     * retention, incremental compaction, replica apply and log trim:
     * pin the head, list its live files, let `plan` classify them, and
     * publish one new version — the plan's rows written, the carried
-    * files referenced or linked ([[carryData]]), the committed
+    * files referenced ([[carryData]]), the committed
     * streaming epochs carried (a replayed epoch stays a no-op), the
     * sidecars derived. The publish is pinned to the listed head, so a
     * concurrent commit of any kind in between conflicts loudly instead
@@ -885,9 +808,9 @@ object EsdbWriter {
     * lists its `space=` files, writes through [[rewriteData]] under
     * its prior layout and derives its sidecars with [[writeSidecars]].
     * A log (a version with a log manifest) lists its visible files,
-    * writes `event_id`-range-partitioned sorted files, links the prior
-    * manifest rows (stale rows of removed files are never looked up),
-    * adds rows for the written files and unions the prior schema in.
+    * writes `event_id`-range-partitioned sorted files, writes its log
+    * manifest as one part (the prior's rows for the carried files plus
+    * rows for the written ones) and unions the prior schema in.
     */
   private def copyOnWrite(spark: SparkSession, path: String, keepVersions: Int,
                           sealedMsg: String)(plan: Version => Option[Plan]): Boolean = {
@@ -906,7 +829,8 @@ object EsdbWriter {
       case Some(p) =>
         Publish.publish(conf, path, keepVersions, expectedVersion = head) { tmp =>
           val tmpPath = new org.apache.hadoop.fs.Path(tmp)
-          if (isLog) fs.mkdirs(tmpPath)
+          // a log's manifest dir is its layout marker, rows or not
+          if (isLog) fs.mkdirs(new org.apache.hadoop.fs.Path(tmpPath, LogManifest))
           var wrote = false
           p.rows(Option.when(p.rewrite.nonEmpty)(() =>
             readFullWidth(spark, src, p.rewrite.map(_.path.toString))), { rows =>
@@ -925,8 +849,8 @@ object EsdbWriter {
           carryData(fs, conf, path, tmpPath, p.carry.map(f => f.rel -> f.path))
           carryStreamCommits(conf, src, tmp)
           if (isLog) {
-            linkSidecarParts(fs, conf, src, tmp, LogManifest)
-            refreshLogManifest(spark, tmp)
+            refreshLogManifest(spark, tmp, carriedRows(conf, src, LogManifest,
+              LogManifestSchema, p.carry.map(_.rel).toSet))
             unionPriorSchema(conf, src, tmp)
           } else writeSidecars(spark, tmp, Rewritten(src, files, p.pairsKept))
         }: Unit
@@ -939,15 +863,12 @@ object EsdbWriter {
     * compact spaces into the new version verbatim. A full [[compact]]
     * re-encodes the entire store per run — write amplification that
     * grows with store size, not with append volume; here the rewrite
-    * cost tracks the fragmented fraction, and the carried spaces cost
-    * one hard link each on the local FS or one `_CARRY` manifest line
-    * on everything else ([[carryData]]) — no decode/sort/encode, no
-    * bytes through the cluster. Relative file
-    * paths are preserved by the carry, so carried ts-range manifest
-    * entries stay valid; manifest entries for rewritten files key on
-    * now-absent names no reader ever looks up. Compaction never changes
-    * the (space, grouping) pair set, so the groupings sidecar carries
-    * whole. Same snapshot
+    * cost tracks the fragmented fraction, and each carried file costs
+    * one `_CARRY` line ([[carryData]]) — no decode/sort/encode, no
+    * bytes through the cluster. Relative file paths are preserved by
+    * the carry, so the carried files' ts-range rows carry over as they
+    * are. Compaction never changes the (space, grouping) pair set, so
+    * the groupings sidecar carries whole. Same snapshot
     * guarantees as [[compact]]: one pointer-commit publishes the new
     * version, a crash leaves readers on the previous one.
     *
@@ -1458,9 +1379,10 @@ object EsdbWriter {
     * data write (and, for a rewrite, after the carry):
     *  - schema: a rewrite unions the prior version's sidecar in, so
     *    columns living only in carried files stay declared;
-    *  - ts-range: a rewrite links the prior's rows (carried names are
-    *    preserved; stale rows for removed files are never looked up),
-    *    then [[refreshTsRangeManifest]] adds rows for the written files;
+    *  - ts-range: one new part per publish ([[refreshTsRangeManifest]]):
+    *    rows for the written files, plus, in a rewrite, the prior's rows
+    *    for the carried ones (rel paths carry unchanged), so a rewritten
+    *    version's sidecar is one part however long its history;
     *  - groupings: an append adds its batch's pairs; a rewrite rebuilds
     *    the pairs of the spaces whose files it wrote or removed
     *    ([[refreshGroupingsManifestFor]]) and carries the rest; a
@@ -1484,11 +1406,11 @@ object EsdbWriter {
         unionPriorSchema(conf, prior, root)
         val files = live
         if (files.nonEmpty) {
-          linkSidecarParts(fs, conf, prior, root, TsRangeManifest)
           val before = priorFiles.map(_.rel).toSet
           val after = files.map(_._1).toSet
-          val written = files.filterNot(f => before(f._1))
-          refreshTsRangeManifest(spark, root, written.map(f => f._1 -> f._2.getPath))
+          val (kept, written) = files.partition(f => before(f._1))
+          refreshTsRangeManifest(spark, root, written.map(f => f._1 -> f._2.getPath),
+            carriedRows(conf, prior, TsRangeManifest, TsRangeSchema, kept.map(_._1).toSet))
           val touched =
             if (pairsKept) Set.empty[String]
             else written.map(_._3).toSet ++ priorFiles.filterNot(f => after(f.rel)).flatMap(_.space)
@@ -1507,25 +1429,13 @@ object EsdbWriter {
     schemaManifest(conf, src).foreach(old => writeSchemaManifest(conf, tmp,
       schemaManifest(conf, tmp).fold(old)(unionSchemas(_, old))))
 
-  /** Link a sidecar's part files from `src` into the staged `tmp`
-    * (`carry-` prefixed so they never collide with fresh parts).
+  /** The prior version's rows of the sidecar `name` for the files a
+    * rewrite carried, read on the driver ([[readSidecar]]).
     */
-  private def linkSidecarParts(fs: org.apache.hadoop.fs.FileSystem,
-                               conf: org.apache.hadoop.conf.Configuration,
-                               src: String, tmp: String, sidecar: String): Unit = {
-    val old = new org.apache.hadoop.fs.Path(src, sidecar)
-    if (fs.exists(old)) {
-      val dst = new org.apache.hadoop.fs.Path(tmp, sidecar)
-      fs.mkdirs(dst)
-      fs.listStatus(old).toSeq
-        .filter(f => f.isFile && f.getLen > 0 &&
-          !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith("."))
-        .foreach { f =>
-          carryInto(fs, f.getPath,
-            new org.apache.hadoop.fs.Path(dst, s"carry-${f.getPath.getName}"), conf)
-        }
-    }
-  }
+  private def carriedRows(conf: org.apache.hadoop.conf.Configuration, prior: String,
+                          name: String, schema: org.apache.spark.sql.types.StructType,
+                          carried: Set[String]): Seq[org.apache.spark.sql.Row] =
+    readSidecar(conf, prior, name, schema).getOrElse(Nil).filter(r => carried(r.getString(0)))
 
   /** The groupings sidecar — the analog of the reference's key index:
     * `Db.Iterate`/`Space.Iterate` are index-only reads there
@@ -1538,15 +1448,21 @@ object EsdbWriter {
     * in the staged version — two small dictionary-encoded columns, read
     * with the schema sidecar, so no inference job. Cost follows the
     * rewrite footprint's spaces, not the store. With nothing touched
-    * the prior's part files link over and no job runs.
+    * the prior's part files copy over under their own names (fresh parts
+    * are UUID-named, so they never collide) and no job runs.
     */
   private def refreshGroupingsManifestFor(spark: SparkSession, root: String,
                                           files: Seq[(String, org.apache.hadoop.fs.FileStatus, String)],
                                           prior: Option[(String, Set[String])]): Unit = {
     prior match {
       case Some((p, touched)) if touched.isEmpty =>
-        val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(hconf(spark))
-        linkSidecarParts(fs, hconf(spark), p, root, GroupingsManifest)
+        val conf = hconf(spark)
+        val dst = new org.apache.hadoop.fs.Path(root, GroupingsManifest)
+        val fs = dst.getFileSystem(conf)
+        sidecarParts(fs, new org.apache.hadoop.fs.Path(p, GroupingsManifest)).foreach { f =>
+          org.apache.hadoop.fs.FileUtil.copy(fs, f.getPath, fs,
+            new org.apache.hadoop.fs.Path(dst, f.getPath.getName), false, conf): Unit
+        }
       case _ =>
         val staged = prior match {
           case None => Some(readFullWidth(spark, root))
@@ -1661,10 +1577,9 @@ object EsdbWriter {
     * append — two racing appenders BOTH commit (the loser's closure
     * re-stages against the winner's head, [[Publish.publishRetrying]])
     * and the store's history gains one auditable version per batch.
-    * Predecessor files CARRY without moving bytes — hard links on the
-    * local FS, in-place `_CARRY` references everywhere else
-    * ([[carryData]]); cost O(batch write + carried-file METADATA),
-    * never a store rewrite — so the version's `_FILES` diff is exactly
+    * Predecessor files CARRY without moving bytes, as `_CARRY`
+    * references ([[carryData]]); cost O(batch write + carried-file
+    * METADATA), never a store rewrite — so the version's `_FILES` diff is exactly
     * the appended files: a committed append-kind change-feed entry
     * ([[Publish.versionDiffs]]), and `option("changesSince", v)` keeps
     * reading pure deltas across it. [[append]] stays the cheapest
@@ -1684,30 +1599,30 @@ object EsdbWriter {
         val dst = new org.apache.hadoop.fs.Path(tmp)
         val fs = src.getFileSystem(conf)
         fs.mkdirs(dst)
-        val manifestMode = Carry.manifestMode(conf, fs)
+        val files = Carry.dataFiles(fs, src)
         fs.listStatus(src).foreach { s =>
           val n = s.getPath.getName
-          // the snapshot is re-recorded at commit; everything else
-          // (space dirs, manifests, schema sidecar) carries verbatim.
-          // On a direct-layout store dataRoot == root, which also holds
-          // the publish machinery (_ptr, _versions — the latter contains
-          // the staging dir being filled right now) and seal markers:
-          // copying those would recurse into the destination, so skip
-          // every root-level sidecar that is not store data.
-          // Manifest mode: data (space dirs) and the predecessor's own
-          // _CARRY are handled below by reference — the resolved
-          // enumeration re-points every file at its ORIGINAL host, so
-          // a chain of versioned appends stays one-hop.
-          val dataEntry = n.startsWith("space=") || n == Carry.ManifestFile
-          if (n != Publish.SnapshotFile && n != Publish.PtrDir &&
-              n != Publish.VersionsDir && !n.startsWith(SealMarker) &&
-              !(manifestMode && dataEntry))
-            carryInto(fs, s.getPath,
-              new org.apache.hadoop.fs.Path(dst, n), conf)
+          // markers, the groupings and schema sidecars and the epoch
+          // markers copy verbatim. Data (space dirs and the predecessor's
+          // own _CARRY) carries by reference below: the resolved
+          // enumeration re-points every file at its ORIGINAL host, so a
+          // chain of versioned appends stays one-hop; the ts-range
+          // sidecar is rewritten as one part. The snapshot is re-recorded
+          // at commit. On a direct-layout store dataRoot == root, which
+          // also holds the publish machinery (_ptr, _versions — the
+          // latter contains the staging dir being filled right now) and
+          // seal markers: copying those would recurse into the
+          // destination, so every root-level entry that is not store
+          // data stays behind, as do dot-staged leftovers.
+          if (!n.startsWith("space=") && n != Carry.ManifestFile && n != TsRangeManifest &&
+              n != Publish.SnapshotFile && n != Publish.PtrDir && n != Publish.VersionsDir &&
+              !n.startsWith(SealMarker) && !n.startsWith("."))
+            org.apache.hadoop.fs.FileUtil.copy(fs, s.getPath, fs,
+              new org.apache.hadoop.fs.Path(dst, n), false, conf): Unit
         }
-        if (manifestMode)
-          carryData(fs, conf, path, dst,
-            Carry.dataFiles(fs, src).map { case (rel, st) => rel -> st.getPath })
+        carryData(fs, conf, path, dst, files.map { case (rel, st) => rel -> st.getPath })
+        refreshTsRangeManifest(spark, tmp, Nil, carriedRows(conf, src.toString,
+          TsRangeManifest, TsRangeSchema, files.map(_._1).toSet))
         append(ev, tmp, indexAttrs)
       } else write(ev, tmp, indexAttrs)
     }: Unit
@@ -2210,10 +2125,6 @@ object EsdbWriter {
     else Some(spark.read.option("mergeSchema", "true").parquet(s"$root/$LogManifest"))
   }
 
-  /** Rebuild the manifest rows for files not yet covered: one footer
-    * read per NEW file (append cost stays proportional to the batch,
-    * not the store), appended to the sidecar.
-    */
   /** The same per-file (min, max) event_id map, read DIRECTLY with
     * parquet-mr — no Spark job. Scan planning calls this (listing +
     * manifest + footer probes happen before any task launches, so a
@@ -2261,11 +2172,7 @@ object EsdbWriter {
     val dir = new org.apache.hadoop.fs.Path(root, name)
     val fs = dir.getFileSystem(conf)
     if (!fs.exists(dir)) return None
-    val parts = fs.listStatus(dir).toSeq.filter { f =>
-      val n = f.getPath.getName
-      f.isFile && f.getLen > 0 && !n.startsWith("_") && !n.startsWith(".")
-    }
-    Some(parts.flatMap { part =>
+    Some(sidecarParts(fs, dir).flatMap { part =>
       val recs = graft.sources.ParquetFiles.records(conf, part.getPath)(
         s => (s, org.apache.parquet.filter2.compat.FilterCompat.NOOP))
       try {
@@ -2287,27 +2194,66 @@ object EsdbWriter {
     })
   }
 
-  private def refreshLogManifest(spark: SparkSession, path: String): Unit = {
-    import spark.implicits._
+  /** The visible parts of a sidecar directory: markers (`_…`) and
+    * parts still dot-staged by a concurrent in-place append (`.…`) are
+    * not rows.
+    */
+  private def sidecarParts(fs: org.apache.hadoop.fs.FileSystem,
+                           dir: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] =
+    if (!fs.exists(dir)) Nil
+    else fs.listStatus(dir).toSeq.filter { f =>
+      val n = f.getPath.getName
+      f.isFile && f.getLen > 0 && !n.startsWith("_") && !n.startsWith(".")
+    }
+
+  /** Write `rows` (string, bigint and boolean values in `schema`) as one
+    * new part of the sidecar directory `root/name`, on the driver — no
+    * Spark job. Dot-staged, then renamed: an in-place append's live
+    * sidecar dir never shows a half-written part. Nothing to write, no
+    * part.
+    */
+  private def writeSidecarPart(conf: org.apache.hadoop.conf.Configuration, root: String,
+                               name: String, schema: org.apache.spark.sql.types.StructType,
+                               rows: Seq[org.apache.spark.sql.Row]): Unit = {
+    if (rows.isEmpty) return
+    val dir = new org.apache.hadoop.fs.Path(root, name)
+    val part = s"part-${java.util.UUID.randomUUID()}.parquet"
+    val staged = new org.apache.hadoop.fs.Path(dir, s".$part")
+    val w = graft.sources.EsdbRowParquetWriter.open(staged, schema, conf)
+    try rows.foreach { r =>
+      w.write(org.apache.spark.sql.catalyst.InternalRow.fromSeq(r.toSeq.map {
+        case v: String => org.apache.spark.unsafe.types.UTF8String.fromString(v)
+        case v => v
+      }))
+    } finally w.close()
+    if (!staged.getFileSystem(conf).rename(staged, new org.apache.hadoop.fs.Path(dir, part)))
+      throw new java.io.IOException(s"sidecar part rename failed at $dir")
+  }
+
+  /** Extend the log manifest under `path`'s data root by one part: the
+    * `carried` rows (a rewrite's prior rows for the files it kept) plus
+    * one row per visible file no row covers yet, from its footer (append
+    * cost stays proportional to the batch, not the log). Footers and the
+    * known rows are read on the driver, and the part is written there.
+    */
+  private def refreshLogManifest(spark: SparkSession, path: String,
+                                 carried: Seq[org.apache.spark.sql.Row] = Nil): Unit = {
+    val conf = hconf(spark)
     val root = new org.apache.hadoop.fs.Path(dataRoot(spark, path))
-    val fs = root.getFileSystem(hconf(spark))
-    // direct parquet-mr read: every append commits through here, and a
-    // Spark job just to list known file names would tax the write path
-    // the same way it taxed scan planning
-    val known: Set[String] = logManifestRanges(hconf(spark), root.toString)
-      .map(_.keySet).getOrElse(Set.empty)
+    val fs = root.getFileSystem(conf)
+    val known: Set[String] = logManifestRanges(conf, root.toString)
+      .map(_.keySet).getOrElse(Set.empty) ++ carried.map(_.getString(0))
     // visibility-filtered: an uncommitted streaming batch's files must
     // not enter the manifest (they may be swept and rewritten on replay)
     val fresh = LogCommits.visibleDataFiles(fs, root)
       .filterNot(f => known.contains(f.getPath.getName))
-    if (fresh.isEmpty) return
-    val facts = graft.sources.ParquetFiles.factsOf(hconf(spark), fresh.map(_.getPath))
-    val rows = fresh.zip(facts).flatMap { case (f, ff) =>
-      ff.longRange("event_id").map { case (mn, mx) => (f.getPath.getName, mn, mx, ff.rows) }
-    }
-    if (rows.nonEmpty)
-      rows.toDF("file", "min_id", "max_id", "rows")
-        .coalesce(1).write.mode(SaveMode.Append).parquet(s"${root.toString}/$LogManifest")
+    val facts = graft.sources.ParquetFiles.factsOf(conf, fresh.map(_.getPath))
+    writeSidecarPart(conf, root.toString, LogManifest, LogManifestSchema,
+      carried ++ fresh.zip(facts).flatMap { case (f, ff) =>
+        ff.longRange("event_id").map { case (mn, mx) =>
+          org.apache.spark.sql.Row(f.getPath.getName, mn, mx, ff.rows)
+        }
+      })
   }
 
   /** One file's `ts_us` facts: `hasTs` false = provably all-null (min
@@ -2317,8 +2263,7 @@ object EsdbWriter {
   final case class TsRange(hasTs: Boolean, minTs: Long, maxTs: Long, nullFree: Boolean)
 
   /** Per-file `ts_us` facts from the write-time manifest under the
-    * resolved data root `root`, as stored (a carried and a fresh part
-    * may both hold a file) — the grouped store's analog of the
+    * resolved data root `root`, as stored — the grouped store's analog of the
     * reference's bounded reader skipping whole blocks by time
     * (bounded/reader.go): a ts-bounded ordered scan prunes files whose
     * recorded range cannot intersect the bound, WITHOUT a footer
@@ -2335,40 +2280,32 @@ object EsdbWriter {
         if (hasTs) r.getLong(2) else 0L, !r.isNullAt(4) && r.getBoolean(4))
     })
 
-  /** Ts-range rows for the files a write produced: their footers are
-    * read in parallel on the driver ([[graft.sources.ParquetFiles.factsOf]],
-    * no Spark job), and the driver writes the rows (one tiny row per
-    * file: file, min_ts, max_ts, has_ts, null_free) as a new part file.
-    * A file whose footer cannot PROVE its ts range (stats missing or
-    * not INT64) is omitted — readers keep unknown files, so the
-    * manifest can only skip work, never change results. `null_free`
-    * is PROVEN zero null ts rows: the license for time-retention to
-    * drop an expired file whole without opening it (a null ts fails
-    * every comparison, so a null row must survive `ts_us < cutoff`).
+  /** Extend the ts-range sidecar under `root` by one part: the
+    * `carried` rows (a rewrite's prior rows for the files it kept) plus
+    * one row per file the write produced (file, min_ts, max_ts, has_ts,
+    * null_free), from footers read in parallel on the driver
+    * ([[graft.sources.ParquetFiles.factsOf]], no Spark job). A file
+    * whose footer cannot PROVE its ts range (stats missing or not
+    * INT64) gets no row — readers keep unknown files, so the manifest
+    * can only skip work, never change results. `null_free` is PROVEN
+    * zero null ts rows: the license for time-retention to drop an
+    * expired file whole without opening it (a null ts fails every
+    * comparison, so a null row must survive `ts_us < cutoff`).
     */
   private def refreshTsRangeManifest(spark: SparkSession, root: String,
-                                     written: Seq[(String, org.apache.hadoop.fs.Path)]): Unit = {
+                                     written: Seq[(String, org.apache.hadoop.fs.Path)],
+                                     carried: Seq[org.apache.spark.sql.Row] = Nil): Unit = {
     val facts = graft.sources.ParquetFiles.factsOf(hconf(spark), written.map(_._2))
-    val rows = written.zip(facts).flatMap { case ((rel, _), f) =>
-      f.cols.get("ts_us").filter(c => c.rangeProven && (c.min.isEmpty || c.longRange.isDefined))
-        .map { c =>
-          val r = c.longRange
-          org.apache.spark.sql.catalyst.InternalRow(
-            org.apache.spark.unsafe.types.UTF8String.fromString(rel),
-            r.map(x => Long.box(x._1)).orNull, r.map(x => Long.box(x._2)).orNull,
-            r.isDefined, f.nullFree("ts_us"))
-        }
-    }
-    if (rows.isEmpty) return
-    // dot-staged then renamed: an in-place append's live sidecar dir
-    // never shows a half-written part
-    val dir = new org.apache.hadoop.fs.Path(root, TsRangeManifest)
-    val name = s"part-${java.util.UUID.randomUUID()}.parquet"
-    val staged = new org.apache.hadoop.fs.Path(dir, s".$name")
-    val w = graft.sources.EsdbRowParquetWriter.open(staged, TsRangeSchema, hconf(spark))
-    try rows.foreach(w.write) finally w.close()
-    if (!staged.getFileSystem(hconf(spark)).rename(staged, new org.apache.hadoop.fs.Path(dir, name)))
-      throw new java.io.IOException(s"ts-range sidecar part rename failed at $dir")
+    writeSidecarPart(hconf(spark), root, TsRangeManifest, TsRangeSchema,
+      carried ++ written.zip(facts).flatMap { case ((rel, _), f) =>
+        f.cols.get("ts_us").filter(c => c.rangeProven && (c.min.isEmpty || c.longRange.isDefined))
+          .map { c =>
+            val r = c.longRange
+            org.apache.spark.sql.Row(rel, r.map(x => Long.box(x._1)).orNull,
+              r.map(x => Long.box(x._2)).orNull,
+              r.isDefined, f.nullFree("ts_us"))
+          }
+      })
   }
 
   /** Open a written store through the ordering-aware DSv2 source
@@ -2413,7 +2350,7 @@ object EsdbWriter {
     // UNDER root only — history carried by `_CARRY` reference lives in
     // predecessor dirs and is not replayed by a tail stream. Appends
     // land physically in the current version dir, so tailing NEW data
-    // is exact in every mode; a full-history replay on a
+    // is exact; a full-history replay on a
     // manifest-carried store should go through [[read]]/changesFeed.
     spark.readStream
       .schema(readFullWidth(spark, root).schema)
@@ -2630,8 +2567,8 @@ object EsdbWriter {
             fs.mkdirs(new org.apache.hadoop.fs.Path(to, n))
             copyTree(st.getPath, new org.apache.hadoop.fs.Path(to, n))
           } else if (st.getLen > 0 || n.startsWith("_"))
-            carryInto(fs, st.getPath,
-              new org.apache.hadoop.fs.Path(to, n), conf)
+            org.apache.hadoop.fs.FileUtil.copy(fs, st.getPath, fs,
+              new org.apache.hadoop.fs.Path(to, n), false, conf): Unit
         }
       }
     Publish.publish(conf, dstPath) { tmp =>
@@ -2643,11 +2580,9 @@ object EsdbWriter {
       val manifest = Carry.readManifest(fs, srcRoot)
       if (manifest.nonEmpty)
         Carry.dataFiles(fs, srcRoot).foreach { case (rel, st) =>
-          if (manifest.contains(rel)) {
-            val dst = new org.apache.hadoop.fs.Path(tmpPath, rel)
-            fs.mkdirs(dst.getParent)
-            carryInto(fs, st.getPath, dst, conf)
-          }
+          if (manifest.contains(rel))
+            org.apache.hadoop.fs.FileUtil.copy(fs, st.getPath, fs,
+              new org.apache.hadoop.fs.Path(tmpPath, rel), false, conf): Unit
         }
     }: Unit
   }
@@ -2681,9 +2616,8 @@ object EsdbWriter {
     require(feed.columns.contains("_change"),
       "applyChanges takes a change feed (needs the _change column)")
     // the feed plan (typically an expensive two-version hash diff) is
-    // consumed several times — the feed stats, the EXCEPT ALL,
-    // the drift count, the insert write: persist it for the apply's
-    // duration, mirroring the footprint cache
+    // consumed several times — the feed stats, the EXCEPT ALL and the
+    // insert write: persist it for the apply's duration
     val fed = feed.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val inserts0 = fed.where(col("_change") === "insert").drop("_change")
@@ -2722,20 +2656,29 @@ object EsdbWriter {
           val (inSpaces, outside) = v.files.partition(_.space.exists(delSpaces))
           val (rewrite, carry) = v.byStats(filters, inSpaces)
           val target = readFullWidth(spark, v.root).schema
-          Some(Plan(rewrite, carry ++ outside, { (read, write) =>
-            // the footprint feeds the diff AND the drift count: cache it
-            // so the parquet scan happens once (churn-bounded, disk-spillable)
-            val footprint = alignTo(read.fold(readFullWidth(spark, v.root).limit(0))(_()), target)
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            try {
-              val kept = footprint.exceptAll(alignTo(deletes0, target))
-              // drift check: every delete must have consumed exactly one row
-              val removed = (if (read.isEmpty) 0L else footprint.count()) - kept.count()
-              if (removed != nDel) throw new IllegalStateException(
-                s"replica at $path diverged from the feed's source: $nDel delete row(s) " +
-                  s"matched only $removed replica row(s) — refusing to compound the drift")
-              write(kept.unionByName(alignTo(inserts0, target)))
-            } finally { footprint.unpersist(): Unit }
+          def drift(removed: Long) = new IllegalStateException(
+            s"replica at $path diverged from the feed's source: $nDel delete row(s) " +
+              s"matched only $removed replica row(s) — refusing to compound the drift")
+          Some(Plan(rewrite, carry ++ outside, {
+            case (None, _) => throw drift(0L) // no replica file may hold a deleted row
+            case (Some(read), write) =>
+              // drift check, counted by the write itself: every delete
+              // must consume exactly one footprint row. Both counts are
+              // observed; kept is cached so a range-partitioned write's
+              // sampling pass cannot count it twice. A mismatch throws
+              // before the closure returns, so nothing publishes
+              val footprint = Observation("footprint")
+              val left = Observation("kept")
+              val kept = alignTo(read(), target).observe(footprint, count(lit(1)))
+                .exceptAll(alignTo(deletes0, target)).observe(left, count(lit(1)))
+                .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+              try {
+                write(kept.unionByName(alignTo(inserts0, target)))
+                def n(o: Observation) = scala.concurrent.Await.result(o.future,
+                  scala.concurrent.duration.Duration(5, "min")).getLong(0)
+                val removed = n(footprint) - n(left)
+                if (removed != nDel) throw drift(removed)
+              } finally { kept.unpersist(): Unit }
           }))
         }
       }

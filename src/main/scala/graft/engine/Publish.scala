@@ -418,8 +418,8 @@ object Publish {
     val fs = base.getFileSystem(conf)
     if (!fs.exists(base)) fs.mkdirs(base)
     // LOGICAL file set: physical files plus manifest-carried ones —
-    // carried rels must appear in the snapshot exactly as linked files
-    // would, or every manifest-mode rewrite reads as a full churn.
+    // carried rels must appear in the snapshot under their own rel
+    // paths, or every rewrite reads as a full churn.
     // v2: each line stamps `rel \t size [\t hostVdir]` so the read
     // planner resolves carried entries from THIS one sidecar instead
     // of listing every referenced host dir — the listing cost moves to

@@ -98,7 +98,7 @@ final class EsdbLogTable(path: String, tableSchema: StructType,
   with org.apache.spark.sql.connector.catalog.SupportsDelete {
   override def name(): String = s"esdblog:$path"
 
-  /** Marker-derived TBLPROPERTIES (layout, carry mode, cdc, policy,
+  /** Marker-derived TBLPROPERTIES (layout, cdc, policy,
     * seal) — same introspection surface as the bucketed store table.
     */
   // cached per binding, but an errored computation (transient FS

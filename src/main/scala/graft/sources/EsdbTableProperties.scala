@@ -14,7 +14,6 @@ import graft.engine.{Carry, EsdbWriter, Maintenance, Publish}
   * actually do. Keys:
   *  - `layout` store|log; `version` the bound version number
   *  - `subparts`, `cluster.columns/.chunks/.curve` (bucketed layout)
-  *  - `carry` link|manifest — how THIS version keeps predecessor files
   *  - `cdc`, `cdc.keepVersions` (tombstoned retention included)
   *  - `policy.*` for managed stores (Maintenance `_POLICY`)
   *  - `vecidx.<attr>` one line per declared vector index
@@ -59,8 +58,6 @@ object EsdbTableProperties {
           put("cluster.curve", cl.curve)
         }
       }
-      put("carry",
-        if (Carry.readManifest(fs, resolvedPath).nonEmpty) "manifest" else "link")
       EsdbWriter.cdcMarkerState(conf, logical) match {
         case Some((enabled, keep)) =>
           put("cdc", enabled.toString)

@@ -471,6 +471,20 @@ class ChangesSpec extends SparkSpec {
     assert(e.getMessage.contains("diverged"), e.getMessage)
   }
 
+  test("applyChanges onto a clustered replica counts each footprint row once") {
+    // a range-clustered rewrite samples its range bounds in a job of its
+    // own: the drift check's kept count must not include that pass
+    val repP = tmp("cdcclustrep")
+    Publish.publish(spark.sparkContext.hadoopConfiguration, repP, keepVersions = 8) { t =>
+      EsdbWriter.write(mk(1 to 800, _ => "a"), t, clusterBy = Seq("value"), clusterChunks = 8)
+    }: Unit
+    // deletes across the whole value range: every clustered file rewrites
+    val feed = mk(1 to 800, _ => "a").where(col("event_id") % 100 === 0)
+      .withColumn("_change", lit("delete"))
+    assert(EsdbWriter.applyChanges(spark, repP, feed) == (0L, 8L))
+    assert(EsdbWriter.read(spark, repP).count() == 792)
+  }
+
   test("applyChanges refuses a feed column the replica lacks instead of dropping it") {
     val srcP = tmp("cdccolsrc")
     val repP = tmp("cdccolrep")

@@ -35,10 +35,7 @@ class ClusterSpec extends SparkSpec {
 
   private def dataFiles(p: String): Seq[(String, org.apache.hadoop.fs.FileStatus)] = {
     val root = new org.apache.hadoop.fs.Path(EsdbWriter.dataRoot(spark, p))
-    val fs = root.getFileSystem(hconf)
-    fs.listStatus(root).toSeq
-      .filter(d => d.isDirectory && d.getPath.getName.startsWith("space="))
-      .flatMap(d => EsdbWriter.relativeDataFiles(fs, d.getPath))
+    EsdbWriter.storeDataFiles(root.getFileSystem(hconf), root).map { case (rel, st, _) => rel -> st }
   }
 
   /** Per-file (min, max) of a numeric column from parquet footers. */

@@ -600,7 +600,7 @@ class EsdbCatalogSpec extends SparkSpec {
   }
 
   /** r14: SHOW TBLPROPERTIES / DESCRIBE EXTENDED surface what the
-    * sidecar markers know — layout, subparts, clustering, carry mode,
+    * sidecar markers know — layout, subparts, clustering,
     * cdc retention, policy, declared vector indexes — so operators
     * stop spelunking `cat.t.policy` + `cat.t.clustering` + `_VECIDX`.
     */
@@ -613,7 +613,6 @@ class EsdbCatalogSpec extends SparkSpec {
     // plain bucketed store
     val pay = props("payments")
     assert(pay.get("layout").contains("store") && pay.get("cdc").contains("false"), pay.toString)
-    assert(pay.get("carry").exists(Set("link", "manifest")), pay.toString)
     assert(pay.contains("version") && pay.contains("subparts"), pay.toString)
     // log store
     val clk = props("prod.clicks")

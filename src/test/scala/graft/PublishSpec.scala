@@ -359,48 +359,39 @@ class PublishSpec extends SparkSpec {
     assert(read.length == 1 && read(0).getInt(0) == 7 && read(0).getInt(1) == 8)
   }
 
-  test("versioned carries hard-link write-once data files; vacuum only unlinks") {
+  test("versioned append carries data files by reference; vacuum keeps their host") {
     val dir = freshDir()
     EsdbWriter.write(ev(1 to 100), dir)
     EsdbWriter.compact(spark, dir, keepVersions = 4) // v1
     val v1 = Publish.resolve(hconf, dir)
     EsdbWriter.appendVersioned(ev(101 to 110), dir, keepVersions = 4) // v2: v1's files carry
     val v2 = Publish.resolve(hconf, dir)
-    def dataFiles(root: String): Map[String, java.nio.file.Path] = {
-      val base = java.nio.file.Paths.get(root)
-      val s = java.nio.file.Files.walk(base)
-      try {
-        import scala.jdk.CollectionConverters._
-        s.iterator().asScala
-          .filter(p => java.nio.file.Files.isRegularFile(p) &&
-            p.getFileName.toString.endsWith(".parquet") &&
-            !p.getFileName.toString.startsWith(".") &&
-            !p.getFileName.toString.startsWith("_") &&
-            p.toString.contains("space="))
-          .map(p => base.relativize(p).toString -> p).toMap
-      } finally s.close()
+    def dataFiles(root: String): Map[String, org.apache.hadoop.fs.Path] = {
+      val r = new org.apache.hadoop.fs.Path(root)
+      EsdbWriter.storeDataFiles(r.getFileSystem(hconf), r).map(f => f._1 -> f._2.getPath).toMap
     }
     val f1 = dataFiles(v1)
     val f2 = dataFiles(v2)
     val shared = f1.keySet.intersect(f2.keySet)
     assert(shared.nonEmpty, s"v2 must carry v1's files: v1=${f1.keySet} v2=${f2.keySet}")
     shared.foreach { rel =>
-      assert(java.nio.file.Files.isSameFile(f1(rel), f2(rel)),
-        s"carried data file must be a hard link, not a byte copy: $rel")
+      assert(f2(rel) == f1(rel), s"carried $rel must resolve to v1's physical file, got ${f2(rel)}")
+      assert(!new java.io.File(v2, rel).exists(), s"v2's dir must hold no copy of carried $rel")
     }
-    // carried MARKERS must stay independent files: they are rewritten
-    // in place (create overwrite=true) and a shared inode would let a
-    // later version's rewrite corrupt this one
+    // carried MARKERS stay independent files: they are rewritten in
+    // place (create overwrite=true), so a shared one would let a later
+    // version's rewrite corrupt this one
     val m1 = new java.io.File(v1, EsdbWriter.SubpartsMarker)
     val m2 = new java.io.File(v2, EsdbWriter.SubpartsMarker)
     if (m1.exists() && m2.exists())
       assert(!java.nio.file.Files.isSameFile(m1.toPath, m2.toPath),
-        "markers must carry as copies, never links")
+        "markers must carry as copies")
     assert(EsdbWriter.read(spark, dir).count() == 110)
-    // retiring the old version is an unlink — the new version's view
-    // of the shared bytes is untouched
+    // retiring v1 keeps its dir as the host of the files v2 references
     Publish.vacuum(hconf, dir, keep = 1)
-    assert(!new java.io.File(v1).exists())
+    shared.foreach { rel =>
+      assert(new java.io.File(f1(rel).toUri).exists(), s"vacuum deleted referenced $rel")
+    }
     assert(EsdbWriter.read(spark, dir).count() == 110)
     assert(EventStore.scan(EsdbWriter.readOrdered(spark, dir), "s1", "g")
       .count() > 0)

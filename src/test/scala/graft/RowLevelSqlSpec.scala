@@ -67,20 +67,16 @@ class RowLevelSqlSpec extends SparkSpec {
 
   test("SQL UPDATE footprint is stats-bounded: untouched spaces' files carry by name") {
     val (cat, p) = catalogWith(ev(1 to 99))
-    val before = {
-      val root = new java.io.File(EsdbWriter.dataRoot(spark, p))
-      root.listFiles().filter(_.getName.startsWith("space="))
-        .flatMap(d => d.listFiles().filter(f => f.getName.endsWith(".parquet")))
-        .map(f => s"${f.getParentFile.getName}/${f.getName}").toSet
+    // the head's logical file set: carried files resolve to their host dirs
+    def live: Set[String] = {
+      val root = new org.apache.hadoop.fs.Path(EsdbWriter.dataRoot(spark, p))
+      EsdbWriter.storeDataFiles(root.getFileSystem(spark.sparkContext.hadoopConfiguration), root)
+        .map(_._1).toSet
     }
+    val before = live
     // event_id = 3 lives in space s0 only: s1/s2 files must carry
     spark.sql(s"UPDATE $cat.orders SET value = -1.0 WHERE event_id = 3 AND space = 's0'")
-    val after = {
-      val root = new java.io.File(EsdbWriter.dataRoot(spark, p))
-      root.listFiles().filter(_.getName.startsWith("space="))
-        .flatMap(d => d.listFiles().filter(f => f.getName.endsWith(".parquet")))
-        .map(f => s"${f.getParentFile.getName}/${f.getName}").toSet
-    }
+    val after = live
     val carried = before.intersect(after)
     assert(carried.exists(_.startsWith("space=s1/")), "space=s1 files must carry by name")
     assert(carried.exists(_.startsWith("space=s2/")), "space=s2 files must carry by name")

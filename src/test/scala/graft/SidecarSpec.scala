@@ -77,6 +77,72 @@ class SidecarSpec extends SparkSpec {
     assert(pairs == data, s"$what: groupings sidecar ${pairs -- data} extra, ${data -- pairs} missing")
   }
 
+  /** The head's sidecar directories (`_MANIFEST.*`): each is one part
+    * after a rewrite, and no part name grows with the version chain.
+    */
+  private def assertSidecarParts(p: String, what: String): Unit = {
+    val root = new org.apache.hadoop.fs.Path(EsdbWriter.dataRoot(spark, p))
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val dirs = fs.listStatus(root).toSeq
+      .filter(d => d.isDirectory && d.getPath.getName.startsWith("_MANIFEST."))
+    val parts = dirs.map { d =>
+      d.getPath.getName -> fs.listStatus(d.getPath).toSeq.map(_.getPath.getName)
+        .filterNot(n => n.startsWith("_") || n.startsWith("."))
+    }.toMap
+    Seq(EsdbWriter.TsRangeManifest, EsdbWriter.LogManifest).filter(parts.contains).foreach { m =>
+      assert(parts(m).size == 1, s"$what: $m holds ${parts(m).size} parts: ${parts(m)}")
+    }
+    parts.foreach { case (m, names) =>
+      names.foreach { n =>
+        assert(!n.startsWith("carry-") && n.getBytes("UTF-8").length <= 100,
+          s"$what: $m part name grows with the chain: $n")
+      }
+    }
+  }
+
+  /** The log manifest lists exactly the visible files, each with its
+    * footer's event_id range and row count.
+    */
+  private def assertLogManifest(p: String, what: String): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = new org.apache.hadoop.fs.Path(EsdbWriter.dataRoot(spark, p))
+    val files = graft.engine.LogCommits.visibleDataFiles(root.getFileSystem(conf), root)
+    val manifest = EsdbWriter.logManifestInfo(conf, root.toString).get
+    assert(manifest.keySet == files.map(_.getPath.getName).toSet,
+      s"$what: manifest rows ${manifest.keySet} for visible files ${files.map(_.getPath.getName)}")
+    files.foreach { f =>
+      val facts = graft.sources.ParquetFiles.facts(conf, f.getPath)
+      val (mn, mx) = facts.longRange("event_id").get
+      assert(manifest(f.getPath.getName) == EsdbWriter.LogFileInfo(mn, mx, facts.rows),
+        s"$what: manifest row of ${f.getPath.getName} differs from its footer")
+    }
+  }
+
+  test("40 copy-on-write versions keep each sidecar one part with bounded names") {
+    import org.apache.spark.sql.sources.EqualTo
+    val p = versioned(events(1 to 200))
+    (1 to 40).foreach { i =>
+      // one row of one space: the other spaces' files carry
+      assert(EsdbWriter.updateWhere(spark, p, Map("value" -> lit(-i.toDouble)),
+        Seq(EqualTo("space", s"s${i % 4}"), EqualTo("event_id", i.toLong)), keepVersions = 2))
+      assertSidecarParts(p, s"store version $i")
+      assertSidecars(p, s"store version $i")
+    }
+    assert(EsdbWriter.read(spark, p).where(col("value") < 0).count() == 40)
+    val log = tmp("sidecarchain")
+    EsdbWriter.writeLog(events(1 to 400), log)
+    (1 to 40).foreach { i =>
+      if (i % 2 == 1) EsdbWriter.deleteWhereLog(spark, log, Seq(EqualTo("event_id", 200L + i)),
+        keepVersions = 2)
+      else EsdbWriter.trimLog(spark, log, i.toLong, keepVersions = 2)
+      assertSidecarParts(log, s"log version $i")
+      assertLogManifest(log, s"log version $i")
+    }
+    val gone = (1 until 40).toSet ++ (1 to 40 by 2).map(200 + _)
+    assert(EsdbWriter.readLog(spark, log).select("event_id").collect().map(_.getLong(0)).toSet ==
+      (1 to 400).filterNot(gone).map(_.toLong).toSet)
+  }
+
   test("sidecars match the data after append and Maintenance.maintain") {
     val p = versioned(events(1 to 200))
     assertSidecars(p, "write")
@@ -186,20 +252,21 @@ class SidecarSpec extends SparkSpec {
     val log = tmp("sidecarlog")
     EsdbWriter.writeLog(events(1 to 200), log)
     EsdbWriter.appendLog(events(201 to 300), log)
-    EsdbWriter.appendLog(events(301 to 400), log)
+    val appendLog = jobsOf(EsdbWriter.appendLog(events(301 to 400), log))
     val trim = jobsOf(EsdbWriter.trimLog(spark, log, 250L))
     val logDelete = jobsOf(EsdbWriter.deleteWhereLog(spark, log,
       Seq(org.apache.spark.sql.sources.EqualTo("event_id", 320L))))
     assert(EsdbWriter.readLog(spark, log).count() == 150)
     val more = Map("maintain" -> maintain, "sql_update" -> sqlUpdate, "apply_changes" -> apply,
-      "trim_log" -> trim, "delete_where_log" -> logDelete)
+      "append_log" -> appendLog, "trim_log" -> trim, "delete_where_log" -> logDelete)
     info(s"Spark jobs per mutation: $more")
     // maintain: data write alone (compaction keeps the pairs);
-    // applyChanges adds one feed aggregate (counts and delete stats), the
-    // EXCEPT ALL and the drift counts; a log rewrite is its data write
-    // and the log-manifest part's write (the manifest is read on the driver)
-    val moreBudget = Map("maintain" -> 2, "sql_update" -> 5, "apply_changes" -> 14,
-      "trim_log" -> 3, "delete_where_log" -> 3)
+    // applyChanges adds one feed aggregate (counts and delete stats) and
+    // the EXCEPT ALL, whose counts the write itself observes; a log
+    // append or rewrite is its data write alone (an append also samples
+    // its range bounds): the log manifest is read and written on the driver
+    val moreBudget = Map("maintain" -> 2, "sql_update" -> 5, "apply_changes" -> 9,
+      "append_log" -> 3, "trim_log" -> 2, "delete_where_log" -> 2)
     moreBudget.foreach { case (k, b) =>
       assert(more(k) <= b, s"$k ran ${more(k)} Spark jobs, budget $b (all: $more)")
     }

@@ -15,6 +15,15 @@ object SourceLint {
       .replaceAll("//[^\n]*", " ")
   }
 
+  /** Source with comments blanked and string literals kept, for rules
+    * about what literals say (conf keys). One pass over strings and
+    * comments, so a `//` inside a string stays.
+    */
+  def withoutComments(src: String): String =
+    "\"\"\"(?s).*?\"\"\"|\"(?:\\\\.|[^\"\\\\\n])*\"|//[^\n]*|(?s)/\\*.*?\\*/".r
+      .replaceAllIn(src, m => scala.util.matching.Regex.quoteReplacement(
+        if (m.matched.startsWith("/")) m.matched.replaceAll("[^\n]", " ") else m.matched))
+
   /** 1-based line of offset `at` in `s`. */
   def line(s: String, at: Int): Int = s.substring(0, at).count(_ == '\n') + 1
 

@@ -19,8 +19,8 @@ import graft.engine.{Carry, EsdbWriter, Publish}
   *    files) or a duplicated row;
   *  - the final store content is exactly base ∪ appends ∖ the deletes
   *    that reported success.
-  * Run twice: hard-link carry (local default) and manifest carry (the
-  * HDFS/S3 mode, where sweeps are refcount-aware per file).
+  * Run with two seeds; kept files carry by `_CARRY` reference, so
+  * sweeps are refcount-aware per file.
   */
 class StressSpec extends AnyFunSuite with SparkSpec {
 
@@ -174,14 +174,12 @@ class StressSpec extends AnyFunSuite with SparkSpec {
       s"lost rows outside any deleted grouping: ${missing.filterNot(i => deletedGs.contains(i % 4)).take(5)}")
   }
 
-  test("randomized concurrent mutators: link-mode carry") {
-    interleave(tmp("stresslink"), seed = 1L, opsPerThread = 6)
+  test("randomized concurrent mutators: reference carry, seed 1") {
+    interleave(tmp("stress1"), seed = 1L, opsPerThread = 6)
   }
 
   test("randomized concurrent mutators: manifest-mode carry") {
-    hconf.set(Carry.ModeKey, "manifest")
-    try interleave(tmp("stressmanifest"), seed = 2L, opsPerThread = 6)
-    finally hconf.unset(Carry.ModeKey)
+    interleave(tmp("stressmanifest"), seed = 2L, opsPerThread = 6)
   }
 
   /** Deterministic regression: a pinned rewrite racing a versioned
