@@ -21,11 +21,15 @@ case class Event(space: String, grouping: String, ts_us: Long, event_id: Long,
   *   space.Iterate(func(grouping) bool)  space.iterate(grouping => bool)
   *
   * Scanner semantics (reference space.go:14: return false to stop):
-  * results stream to the driver via `toLocalIterator`, so an early
-  * `false` stops fetching; for `scan`/`scanIndex` the plan underneath is
-  * the distributed ts-desc sort — bounded variants (`scanN`) push the
-  * limit into the plan (`TakeOrderedAndProject`) and are what
-  * reference callers using count-based early exit should use.
+  * results come back through `toLocalIterator` and an early `false`
+  * stops the callback. On a store opened by path, `scanN` pushes its
+  * limit into the ordered scan as a top-N (the merge stops after n
+  * rows), `scanSince` pushes its ts bound, and `scanIndexN` keeps n
+  * rows of its index sort. Those reads, and `scan`, read the one space
+  * partition in the calling thread with no Spark job
+  * ([[graft.plans.EsdbLocalRead]]); an unbounded `scanIndex` sorts in a
+  * job. Frame-backed Dbs plan `TakeOrderedAndProject` for the bounded
+  * reads.
   *
   * The bulk/analytic surface stays on DataFrames ([[graft.engine.EventStore]],
   * [[graft.engine.EventLog]]); this façade is the migration shim.
@@ -119,7 +123,9 @@ class Space private[api] (all: DataFrame, val space: String, storePath: Option[S
   def scan(grouping: String)(fn: Event => Boolean): Unit =
     consumeEvents(EventStore.scan(all, space, grouping), fn)
 
-  /** Bounded scan: limit pushed into the plan (TakeOrderedAndProject). */
+  /** Bounded scan: on a store opened by path the limit is a top-N
+    * pushed into the ordered scan, read in the calling thread.
+    */
   def scanN(grouping: String, n: Int)(fn: Event => Boolean): Unit =
     consumeEvents(EventStore.scan(all, space, grouping, Some(n)), fn)
 

@@ -12,8 +12,11 @@ import org.apache.spark.sql.functions._
   *    (replaces the reference's file-level SSTable, esdb.go:41-60);
   *  - attr predicates → parquet filter pushdown + row-group skipping
   *    (replaces the secondary-index location lists, space.go:79-108);
-  *  - `orderBy.limit` → TakeOrderedAndProject, a true distributed top-k
-  *    (replaces the Scanner early-exit callback, space.go:14,103-105).
+  *  - a limit → on an ordered-store frame, a top-N pushed into the scan
+  *    (the merge stops after n rows), and a driver-bound result read in
+  *    the calling thread with no Spark job ([[graft.plans.EsdbLocalRead]]);
+  *    on raw frames, `TakeOrderedAndProject`, a distributed top-k (both
+  *    replace the Scanner early-exit callback, space.go:14,103-105).
   *
   * Ordering contract: ts-descending with insertion-order ties — the
   * reference's stable reverse sort (event_block_writer.go:15,

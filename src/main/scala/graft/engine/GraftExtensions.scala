@@ -23,6 +23,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // Exchange+Sort the planner adds around already-ordered data (the
     // DataFrame facade avoids it structurally; SQL text can't)
     ext.injectQueryStagePrepRule(graft.plans.ElideOrderedScanSort(_))
+    // a driver-bound read of one store partition runs in the calling
+    // thread, with no Spark job
+    ext.injectPlannerStrategy(_ => graft.plans.EsdbLocalReadStrategy)
     ext.injectFunction((
       new FunctionIdentifier("vec_dot"),
       new ExpressionInfo(classOf[VecDot].getName, "vec_dot"),

@@ -66,6 +66,9 @@ object GraftSession {
     graft.functions.VectorFunctions.register(spark)
     graft.functions.JsonFunctions.register(spark)
     graft.functions.SampleFunctions.register(spark)
+    // the local-read strategy likewise, once per session
+    if (!spark.sessionState.planner.strategies.contains(graft.plans.EsdbLocalReadStrategy))
+      spark.experimental.extraStrategies :+= graft.plans.EsdbLocalReadStrategy
     spark
   }
 }

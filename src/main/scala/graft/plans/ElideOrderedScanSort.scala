@@ -1,13 +1,10 @@
 package graft.plans
 
-import scala.annotation.tailrec
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.SortOrder
 import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.{FilterExec, ProjectExec, SortExec, SparkPlan}
-import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+import org.apache.spark.sql.execution.{SortExec, SparkPlan}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 
 /** Physical rule: elide a global Sort (and its range-partitioning
@@ -46,16 +43,5 @@ case class ElideOrderedScanSort(session: SparkSession) extends Rule[SparkPlan] {
   }
 
   private def servesOrdered(p: SparkPlan, order: Seq[SortOrder]): Boolean =
-    SortOrder.orderingSatisfies(p.outputOrdering, order) && singleOrderedScan(p)
-
-  @tailrec
-  private def singleOrderedScan(p: SparkPlan): Boolean = p match {
-    case ProjectExec(_, child) => singleOrderedScan(child)
-    case FilterExec(_, child) => singleOrderedScan(child)
-    case b: BatchScanExec =>
-      (b.scan.isInstanceOf[graft.sources.EsdbScan] ||
-        b.scan.isInstanceOf[graft.sources.EsdbLogScan]) &&
-        b.inputPartitions.length == 1
-    case _ => false
-  }
+    SortOrder.orderingSatisfies(p.outputOrdering, order) && SingleOrderedScan.find(p).isDefined
 }

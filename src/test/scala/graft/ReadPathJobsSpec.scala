@@ -4,10 +4,12 @@ import graft.api.Esdb
 import graft.engine.EsdbWriter
 
 /** The warm façade read budget on a store with sidecars: every bounded
-  * scan is exactly one single-task Spark job, and every metadata answer
-  * (`find`, `Space.iterate`, `Db.iterate`) comes from the driver with
-  * no job at all — a sidecar read that creeps back into a query, or a
-  * listing that turns into a job, fails here.
+  * scan is answered in the calling thread ([[graft.plans.EsdbLocalRead]])
+  * and every metadata answer (`find`, `Space.iterate`, `Db.iterate`)
+  * comes from the driver, all with no Spark job — a sidecar read that
+  * creeps back into a query, a listing that turns into a job, or a
+  * bounded scan that falls back to a task fails here. Reads the local
+  * path must not take still run exactly one job.
   */
 class ReadPathJobsSpec extends SparkSpec {
   import spark.implicits._
@@ -25,7 +27,7 @@ class ReadPathJobsSpec extends SparkSpec {
     dir.getAbsolutePath
   }
 
-  test("warm scans run one Spark job each; find and both iterates run none") {
+  test("warm bounded scans, find and both iterates run no Spark job") {
     val db = Esdb.open(spark, path)
     def reads(): Map[String, Int] = {
       val sp = db.find("s1").get
@@ -43,8 +45,28 @@ class ReadPathJobsSpec extends SparkSpec {
     reads() // warm-up: a fresh session's first queries plan extra work
     val got = reads()
     info(s"Spark jobs per warm read: $got")
-    val budget = Map("scanN" -> 1, "scanSince" -> 1, "scanIndexN" -> 1,
+    val budget = Map("scanN" -> 0, "scanSince" -> 0, "scanIndexN" -> 0,
       "find" -> 0, "Space.iterate" -> 0, "Db.iterate" -> 0)
+    assert(got == budget, s"warm read job counts $got, want $budget")
+  }
+
+  test("reads the local path does not take still run one Spark job each") {
+    // a frame-backed Db plans a plain parquet scan; an unlimited
+    // scanIndex sorts on the index predicate with no Limit over it
+    val frameSpace = Esdb.fromFrame(EsdbWriter.read(spark, path)).find("s1").get
+    val sp = Esdb.open(spark, path).find("s1").get
+    def reads(): Map[String, Int] = {
+      var rows = 0
+      val jobs = Map(
+        "fromFrame scanN" -> jobsOf(frameSpace.scanN("g3", 5) { _ => rows += 1; true }),
+        "scanIndex" -> jobsOf(sp.scanIndex("country", "c2") { _ => rows += 1; true }))
+      assert(rows > 0)
+      jobs
+    }
+    reads()
+    val got = reads()
+    info(s"Spark jobs per warm read: $got")
+    val budget = Map("fromFrame scanN" -> 1, "scanIndex" -> 1)
     assert(got == budget, s"warm read job counts $got, want $budget")
   }
 }
