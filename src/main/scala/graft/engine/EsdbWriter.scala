@@ -1491,12 +1491,16 @@ object EsdbWriter {
     "file STRING, min_ts BIGINT, max_ts BIGINT, has_ts BOOLEAN, null_free BOOLEAN")
 
   /** The groupings sidecar's rows as stored (not distinct) under a
-    * resolved data root.
+    * resolved data root, read from its [[sidecarParts]].
     */
   private def groupingsRows(spark: SparkSession, root: String): Option[DataFrame] = {
     val m = new org.apache.hadoop.fs.Path(root, GroupingsManifest)
-    if (!m.getFileSystem(hconf(spark)).exists(m)) None
-    else Some(spark.read.schema(PairsSchema).parquet(m.toString))
+    val fs = m.getFileSystem(hconf(spark))
+    if (!fs.exists(m)) None
+    else Some(sidecarParts(fs, m).map(_.getPath.toString) match {
+      case Seq() => spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], PairsSchema)
+      case parts => spark.read.schema(PairsSchema).parquet(parts: _*)
+    })
   }
 
   /** The groupings sidecar's (space, grouping) pairs under a resolved
@@ -1652,7 +1656,10 @@ object EsdbWriter {
     */
   def sealedTails(spark: SparkSession, path: String, indexName: String): Option[DataFrame] = {
     if (!isSealed(path)) return None
-    val side = spark.read.parquet(s"$path/$SealMarker.tails")
+    val dir = new org.apache.hadoop.fs.Path(path, s"$SealMarker.tails")
+    val parts = sidecarParts(dir.getFileSystem(hconf(spark)), dir).map(_.getPath.toString)
+    if (parts.isEmpty) return None
+    val side = spark.read.parquet(parts: _*)
     if (!side.columns.contains("index_name")) return None
     val forIndex = side.where(org.apache.spark.sql.functions.col("index_name") === indexName)
       .select("attr", "tail_event_id")
@@ -2114,20 +2121,9 @@ object EsdbWriter {
   /** Per-file (min, max) event_id from the write-time manifest — the
     * analog of the reference log's offset arithmetic: a resume offset
     * prunes whole files without opening them. None for stores written
-    * before manifests existed (readers keep every file).
-    */
-  def logManifest(spark: SparkSession, path: String): Option[DataFrame] = {
-    val root = dataRoot(spark, path)
-    val m = new org.apache.hadoop.fs.Path(root, LogManifest)
-    if (!m.getFileSystem(hconf(spark)).exists(m)) None
-    // mergeSchema: rows appended before the `rows` count column existed
-    // coexist with new ones in the same sidecar dir
-    else Some(spark.read.option("mergeSchema", "true").parquet(s"$root/$LogManifest"))
-  }
-
-  /** The same per-file (min, max) event_id map, read DIRECTLY with
-    * parquet-mr — no Spark job. Scan planning calls this (listing +
-    * manifest + footer probes happen before any task launches, so a
+    * before manifests existed (readers keep every file). Read DIRECTLY
+    * with parquet-mr — no Spark job. Scan planning calls this (listing
+    * + manifest + footer probes happen before any task launches, so a
     * Spark job here would put a whole query's latency inside another
     * query's planner). `root` is the already-resolved data root.
     */
@@ -2196,9 +2192,10 @@ object EsdbWriter {
 
   /** The visible parts of a sidecar directory: markers (`_…`) and
     * parts still dot-staged by a concurrent in-place append (`.…`) are
-    * not rows.
+    * not rows. A Spark read takes these paths, not the directory: its
+    * file index treats a `_`-prefixed directory as hidden and warns.
     */
-  private def sidecarParts(fs: org.apache.hadoop.fs.FileSystem,
+  private[graft] def sidecarParts(fs: org.apache.hadoop.fs.FileSystem,
                            dir: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] =
     if (!fs.exists(dir)) Nil
     else fs.listStatus(dir).toSeq.filter { f =>

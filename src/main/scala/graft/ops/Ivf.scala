@@ -221,12 +221,6 @@ object Ivf {
       rootText(conf, root, ParamsFile))
   }
 
-  /** The nLists a persisted index was built with (None for indexes
-    * without the params sidecar).
-    */
-  def indexLists(conf: org.apache.hadoop.conf.Configuration, path: String): Option[Int] =
-    indexMeta(conf, path)._3.map(_._1)
-
   private val StampFile = "_corpus_stamp"
 
   /** Identity of a publish-managed corpus at this instant: its current

@@ -88,8 +88,8 @@ final class EsdbAggScan(path: String, spaces: Option[Seq[String]], spec: PushedA
   override def planInputPartitions(): Array[InputPartition] = {
     // same per-space listing as the row scan (one partition per space
     // directory), with no row-level pruning state by construction
-    val listed = new EsdbScan(path, spec.schema, spaces, None, groupingNotNull = false,
-      TsBounds.unbounded, Nil, None).planInputPartitions()
+    val listed: Array[InputPartition] = new EsdbScan(path, spec.schema, spaces, None,
+      groupingNotNull = false, TsBounds.unbounded, Nil, None).partitions.toArray
     if (listed.nonEmpty || spec.groupBySpace) listed
     else
       // a GLOBAL aggregate over an empty store must still produce one

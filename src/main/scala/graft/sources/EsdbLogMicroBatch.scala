@@ -207,9 +207,8 @@ final class EsdbLogMicroBatch(path: String, required: StructType,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new EsdbLogReaderFactory(required, batchBounds, limit = None,
-      conf = new org.apache.spark.util.SerializableConfiguration(
-        EsdbVectorReader.sessionConf()))
+    new EsdbReaderFactory(required, OrderedRead(OrderedRead.LogKey, "event_id", batchBounds),
+      new org.apache.spark.util.SerializableConfiguration(EsdbVectorReader.sessionConf()))
 
   // planInputPartitions and createReaderFactory are called once per
   // batch, in that order, with the same offsets — capture the bounds

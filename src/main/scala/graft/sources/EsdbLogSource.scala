@@ -366,9 +366,8 @@ final class EsdbLogScan(path: String, required: StructType, idBounds: TsBounds,
     partitions.asInstanceOf[Array[InputPartition]]
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new EsdbLogReaderFactory(required, idBounds, limit,
-      conf = new org.apache.spark.util.SerializableConfiguration(
-        EsdbVectorReader.sessionConf()))
+    new EsdbReaderFactory(required, OrderedRead(OrderedRead.LogKey, "event_id", idBounds, limit = limit),
+      new org.apache.spark.util.SerializableConfiguration(EsdbVectorReader.sessionConf()))
 
   /** Global (single-partition) insertion order — the log's defining
     * property, reported only when event_id survives column pruning.
@@ -421,9 +420,9 @@ object EsdbLogScan {
     val parts = groups.toVector.par.map { g =>
       val p = EsdbLogPartition(g.map(_.getPath.toString).toArray,
         g.map(_.getLen).toArray, g.map(_.getLen).sum)
-      p.copy(vectorFiles = vectorOrder(p, required, idBounds, hconf))
+      p.copy(columnarFiles = vectorOrder(p, required, idBounds, hconf))
     }.toArray
-    if (parts.exists(_.vectorFiles.isEmpty)) parts.map(_.copy(vectorFiles = None))
+    if (parts.exists(_.columnarFiles.isEmpty)) parts.map(_.copy(columnarFiles = None))
     else parts
   }
 
@@ -462,12 +461,14 @@ object EsdbLogScan {
 
 /** One merge unit: the whole log by default (sequential consumption,
   * as in the reference's flat file), or one disjoint id-range file
-  * group under parallel replay. `vectorFiles` is the planner's
+  * group under parallel replay. `columnarFiles` is the planner's
   * footer-proof for THIS unit (see [[EsdbLogScan.vectorOrder]]): when
   * set, sequential columnar decode of the files in that order IS the
   * merge; when None the reader keeps the exact row-at-a-time heap.
   */
 final case class EsdbLogPartition(files: Array[String], fileLengths: Array[Long],
                                   totalBytes: Long,
-                                  vectorFiles: Option[Array[(String, Long)]] = None)
-  extends InputPartition
+                                  columnarFiles: Option[Array[(String, Long)]] = None)
+  extends EsdbMergePartition {
+  override def constSpace: Option[String] = None
+}

@@ -170,7 +170,9 @@ object EsdbMetaTables {
       .map(r => new Path(r, s"${EsdbWriter.SealMarker}.tails"))
     val side = candidates.find(p => p.getFileSystem(conf).exists(p))
       .getOrElse(return Nil)
-    val df = SparkSession.active.read.parquet(side.toString)
+    val parts = EsdbWriter.sidecarParts(side.getFileSystem(conf), side).map(_.getPath.toString)
+    if (parts.isEmpty) return Nil
+    val df = SparkSession.active.read.parquet(parts: _*)
     val hasIdx = df.columns.contains("index_name")
     df.collect().toSeq.map { r =>
       new GenericInternalRow(Array[Any](

@@ -15,54 +15,81 @@ import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, Par
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Executor side of [[EsdbStoreSource]]: each partition (one space
-  * directory) k-way merges its files, which are individually sorted by
-  * (grouping ASC, ts_us DESC, event_id ASC) at write time — the same
-  * merge a reference reader does over per-write sorted blocks. A
-  * grouping equality rides into each file as a parquet row-group +
-  * record filter (the data is grouping-sorted, so non-matching row
-  * groups are skipped on stats); `limit` stops the merge after N rows.
+/** One column of the order a layout's files were sorted in at write
+  * time: a string or a long column, ascending or descending. Nulls
+  * take Spark's defaults: first when ascending, last when descending.
+  */
+final case class KeyCol(name: String, string: Boolean, ascending: Boolean)
+
+/** What an ordered merge applies to a partition's files:
+  *  - `key`, the order every file was sorted in;
+  *  - `bound` on the long key column `boundCol`, enforced exactly;
+  *  - `pin`, the leading key equal to a value, and `pinNotNull`, the
+  *    leading key not null;
+  *  - `hints`, idx_* equalities for best-effort parquet skipping;
+  *  - `limit`, the rows after which the merge stops.
+  */
+final case class OrderedRead(key: Seq[KeyCol], boundCol: String, bound: TsBounds,
+                             pin: Option[String] = None, pinNotNull: Boolean = false,
+                             hints: Seq[(String, Any)] = Nil, limit: Option[Int] = None)
+
+object OrderedRead {
+  /** A store's files: (grouping ASC, ts_us DESC, event_id ASC); a ts bound. */
+  val StoreKey: Seq[KeyCol] = Seq(KeyCol("grouping", string = true, ascending = true),
+    KeyCol("ts_us", string = false, ascending = false),
+    KeyCol("event_id", string = false, ascending = true))
+
+  /** A log's files: (event_id ASC); an id bound. */
+  val LogKey: Seq[KeyCol] = Seq(KeyCol("event_id", string = false, ascending = true))
+}
+
+/** A unit of ordered merge: its files; the `space` every row carries
+  * (a store's space directory; None for a log, whose rows carry their
+  * own); and, when the planner proved it, the (file, length) order in
+  * which sequential columnar decode IS the merge.
+  */
+trait EsdbMergePartition extends InputPartition {
+  def files: Array[String]
+  def constSpace: Option[String]
+  def columnarFiles: Option[Array[(String, Long)]]
+}
+
+/** Executor side of [[EsdbStoreSource]] and [[EsdbLogSource]], batch and
+  * micro-batch: each partition k-way merges its files, which were each
+  * sorted by the layout's key at write time — the same merge a
+  * reference reader does over per-write sorted blocks. A pin and a
+  * bound ride into each file as parquet row-group + record filters;
+  * `limit` stops the merge after N rows.
   *
   * Record materialization uses parquet-mr's Group API (row-at-a-time,
   * not vectorized) — the right trade for ordered scans, which are
   * filtered to one grouping or consumed sequentially anyway; full-table
-  * analytics stay on the vectorized path via `EsdbWriter.read`.
+  * analytics stay on the vectorized path via `EsdbWriter.read`. A
+  * partition the planner proved columnar ([[EsdbScan.columnarEligible]],
+  * [[EsdbLogScan.vectorOrder]]) decodes through [[EsdbVectorReader]];
+  * Spark rejects a scan that mixes row and columnar partitions, so both
+  * proofs hold scan-wide or not at all.
   */
-final class EsdbReaderFactory(required: StructType, grouping: Option[String],
-                              groupingNotNull: Boolean, tsBounds: TsBounds,
-                              hints: Seq[(String, Any)], limit: Option[Int],
-                              conf: org.apache.spark.util.SerializableConfiguration,
-                              columnar: Boolean = false)
+final class EsdbReaderFactory(required: StructType, read: OrderedRead,
+                              conf: org.apache.spark.util.SerializableConfiguration)
   extends PartitionReaderFactory {
 
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-    new EsdbMergeReader(p.asInstanceOf[EsdbInputPartition], required, grouping,
-      groupingNotNull, tsBounds, hints, limit, conf.value)
+    new EsdbMergeReader(p.asInstanceOf[EsdbMergePartition], required, read, conf.value)
 
-  // single-compacted-file vectorized path; [[EsdbScan.columnarEligible]]
-  // guarantees the preconditions scan-wide before setting the flag
-  override def supportColumnarReads(p: InputPartition): Boolean = columnar
+  override def supportColumnarReads(p: InputPartition): Boolean =
+    p.asInstanceOf[EsdbMergePartition].columnarFiles.isDefined
 
   override def createColumnarReader(p: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
-    val part = p.asInstanceOf[EsdbInputPartition]
-    // single file per space on this path, so the partition's byte total
-    // IS the file length
-    new EsdbVectorReader(Seq((part.files.head, part.totalBytes)), required, limit,
-      constSpace = Some(part.space), conf = conf.value)
+    val part = p.asInstanceOf[EsdbMergePartition]
+    new EsdbVectorReader(part.columnarFiles.get.toSeq, required, read.limit, part.constSpace,
+      conf.value)
   }
 }
 
 object EsdbMergeReader {
-  val KeyCols: Seq[String] = Seq("grouping", "ts_us", "event_id")
   val SpaceConst: Int = -2
   val NullCol: Int = -1
-
-  /** Rows pulled off parquet by all merge readers in this JVM —
-    * observable only in local mode, used by OrderedStoreSpec to assert
-    * that a ts-bounded scan materializes fewer rows than the full
-    * grouping (row-group skipping + record filter + early exit).
-    */
-  val RowsRead = new java.util.concurrent.atomic.AtomicLong()
 
   /** Parquet field index of `f` in `schema`: by NAME, else — for a
     * column renamed after this file was written — by parquet FIELD ID
@@ -100,29 +127,39 @@ object EsdbMergeReader {
     }
 }
 
-/** k-way merge of one space's sorted files. Each file is opened ONCE
-  * ([[ParquetFiles.records]]): its footer schema picks the projection
-  * and the predicates, and the same reader streams the rows — no second
-  * footer read, and no open parses a Hadoop config (the task's conf is
-  * passed in).
+/** k-way merge of one partition's sorted files on `read.key`. Each file
+  * is opened ONCE ([[ParquetFiles.records]]): its footer schema picks
+  * the projection and the predicates, and the same reader streams the
+  * rows — no second footer read, and no open parses a Hadoop config
+  * (the task's conf is passed in).
   */
-final class EsdbMergeReader(part: EsdbInputPartition, required: StructType,
-                            grouping: Option[String], groupingNotNull: Boolean,
-                            tsBounds: TsBounds, hints: Seq[(String, Any)], limit: Option[Int],
-                            hadoopConf: Configuration)
+final class EsdbMergeReader(part: EsdbMergePartition, required: StructType,
+                            read: OrderedRead, hadoopConf: Configuration)
   extends PartitionReader[InternalRow] {
 
   import EsdbMergeReader._
 
+  private val key = read.key.toArray
+  private val nKeys = key.length
+  private val keyString = key.map(_.string)
+  private val keyAsc = key.map(_.ascending)
+  private val bounded = read.bound.isBounded
+  private val boundAt = key.indexWhere(_.name == read.boundCol)
+  require(boundAt >= 0 && !keyString(boundAt),
+    s"bound column ${read.boundCol} must be a long column of the merge key ${read.key}")
+  // When every key before the bound column is pinned (only the leading
+  // key can be), the stream is ordered by the bound column alone: the
+  // first row past the bound ends the merge.
+  private val exitEarly = (0 until boundAt).forall(i => i == 0 && read.pin.isDefined)
+
   /** One sorted file's streaming state: the projected schema it was
     * opened with (files may differ in idx_* columns), the per-required-
-    * column field index, key indexes for the merge, and the lookahead
-    * row.
+    * column field index, and the lookahead row with its key decoded.
     */
   private final class Cursor(val reader: ParquetFiles.Records) {
     private val schema = reader.schema
     val colIdx: Array[Int] = required.fields.map { f =>
-      if (f.name == "space") SpaceConst
+      if (part.constSpace.isDefined && f.name == "space") SpaceConst
       else fieldIndexOf(schema, f) // name, else field ID (renamed column)
     }
     // widened-type evolution: a file written before int->long /
@@ -131,61 +168,64 @@ final class EsdbMergeReader(part: EsdbInputPartition, required: StructType,
       org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT32)
     val floatAsDouble: Array[Boolean] = widenFlags(required, schema, colIdx, DoubleType,
       org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.FLOAT)
-    private val gIdx = if (schema.containsField("grouping")) schema.getFieldIndex("grouping") else -1
-    private val tsIdx = if (schema.containsField("ts_us")) schema.getFieldIndex("ts_us") else -1
-    private val idIdx = if (schema.containsField("event_id")) schema.getFieldIndex("event_id") else -1
+    private val keyIdx = key.map(k =>
+      if (schema.containsField(k.name)) schema.getFieldIndex(k.name) else -1)
     var current: Group = _
-    var keyGrouping: UTF8String = _
-    var keyTs: Long = 0L
-    var keyTsNull: Boolean = true // ACTUAL null, distinct from the sort sentinel
-    var keyId: Long = 0L
+    // the lookahead row's key, in typed slots: a string key's value
+    // (null when null); a long key's value, Long.MinValue when null —
+    // a sort sentinel only, the null flag says whether it is real
+    val str = new Array[UTF8String](nKeys)
+    val num = new Array[Long](nKeys)
+    val isNull = new Array[Boolean](nKeys)
     /** Pull the next row; false at EOF. */
     def advance(): Boolean = {
       current = reader.read()
       if (current == null) return false
-      EsdbMergeReader.RowsRead.incrementAndGet()
       rowsPulled += 1
-      keyGrouping =
-        if (gIdx >= 0 && current.getFieldRepetitionCount(gIdx) > 0)
-          UTF8String.fromBytes(current.getBinary(gIdx, 0).getBytes)
-        else null
-      keyTsNull = !(tsIdx >= 0 && current.getFieldRepetitionCount(tsIdx) > 0)
-      keyTs =
-        if (!keyTsNull) current.getLong(tsIdx, 0)
-        else Long.MinValue // desc + NULLS LAST (sort sentinel only — see keyTsNull)
-      keyId =
-        if (idIdx >= 0 && current.getFieldRepetitionCount(idIdx) > 0) current.getLong(idIdx, 0)
-        else Long.MinValue // asc + NULLS FIRST
+      var i = 0
+      while (i < nKeys) {
+        val src = keyIdx(i)
+        val present = src >= 0 && current.getFieldRepetitionCount(src) > 0
+        isNull(i) = !present
+        if (keyString(i)) str(i) = if (present) UTF8String.fromBytes(current.getBinary(src, 0).getBytes) else null
+        else num(i) = if (present) current.getLong(src, 0) else Long.MinValue
+        i += 1
+      }
       true
     }
   }
 
-  // (grouping ASC NULLS FIRST, ts_us DESC, event_id ASC) — Spark's
-  // default null orderings; string comparison is UTF8String's unsigned
-  // byte order, identical to Spark's string sort
+  // Spark's default null orderings: a null compares lowest (a null
+  // string, the Long.MinValue sentinel), and a descending column flips
+  // the result, so nulls come first ascending and last descending.
+  // Strings compare in UTF8String's unsigned byte order, Spark's sort.
   private val cmp = new java.util.Comparator[Cursor] {
     override def compare(a: Cursor, b: Cursor): Int = {
-      val g =
-        if (a.keyGrouping eq b.keyGrouping) 0
-        else if (a.keyGrouping == null) -1
-        else if (b.keyGrouping == null) 1
-        else a.keyGrouping.compareTo(b.keyGrouping)
-      if (g != 0) return g
-      val t = java.lang.Long.compare(b.keyTs, a.keyTs) // descending
-      if (t != 0) return t
-      java.lang.Long.compare(a.keyId, b.keyId)
+      var i = 0
+      while (i < nKeys) {
+        val c =
+          if (keyString(i)) {
+            val x = a.str(i)
+            val y = b.str(i)
+            if (x eq y) 0
+            else if (x == null) -1
+            else if (y == null) 1
+            else x.compareTo(y)
+          } else java.lang.Long.compare(a.num(i), b.num(i))
+        if (c != 0) return if (keyAsc(i)) c else -c
+        i += 1
+      }
+      0
     }
   }
 
-  private val spaceUtf8 = UTF8String.fromString(part.space)
-  private var remaining: Long = limit.map(_.toLong).getOrElse(Long.MaxValue)
+  private val spaceUtf8 = part.constSpace.map(UTF8String.fromString).orNull
+  private var remaining: Long = read.limit.map(_.toLong).getOrElse(Long.MaxValue)
   private var row: InternalRow = _
   private var opened = false
-  private var done = false // ts-desc early exit latched (grouping pinned)
+  private var done = false // early exit latched
   private val cursors = new java.util.ArrayList[Cursor]()
   private val heap = new java.util.PriorityQueue[Cursor](math.max(1, part.files.length), cmp)
-  // per-task observability (EsdbMetrics; RowsRead stays the JVM-wide
-  // test observable)
   private var filesOpened = 0L
   private var rowsPulled = 0L
 
@@ -216,67 +256,64 @@ final class EsdbMergeReader(part: EsdbInputPartition, required: StructType,
     }
   }
 
-  /** ts-bound → parquet predicates: exact (row-group stats skipping AND
-    * record-level filtering, which also excludes null-ts rows — SQL
+  /** The bound → parquet predicates: exact (row-group stats skipping
+    * AND record-level filtering, which also excludes null rows — SQL
     * comparison semantics). The merge loop re-checks as a second line
-    * of defense and supplies the ts-desc early exit.
+    * of defense and supplies the early exit.
     */
-  private def tsPredicates: Seq[FilterPredicate] = {
-    val c = FilterApi.longColumn("ts_us")
+  private def boundPredicates: Seq[FilterPredicate] = {
+    val c = FilterApi.longColumn(read.boundCol)
+    val b = read.bound
     // each branch ascribed to the public interface: the if-LUB of
     // Gt/GtEq is the package-private Operators.ColumnFilterPredicate,
     // which fails with IllegalAccessError at runtime if referenced
-    tsBounds.lower.map(lo =>
-      if (tsBounds.lowerInclusive) FilterApi.gtEq(c, Long.box(lo)): FilterPredicate
+    b.lower.map(lo =>
+      if (b.lowerInclusive) FilterApi.gtEq(c, Long.box(lo)): FilterPredicate
       else FilterApi.gt(c, Long.box(lo)): FilterPredicate).toSeq ++
-      tsBounds.upper.map(hi =>
-        if (tsBounds.upperInclusive) FilterApi.ltEq(c, Long.box(hi)): FilterPredicate
+      b.upper.map(hi =>
+        if (b.upperInclusive) FilterApi.ltEq(c, Long.box(hi)): FilterPredicate
         else FilterApi.lt(c, Long.box(hi)): FilterPredicate)
   }
 
   private def open(): Unit = {
-    val conf = hadoopConf // session conf: object-store creds ride along
-    val groupingPred: Option[FilterPredicate] = grouping match {
-      case Some(v) => Some(FilterApi.eq(FilterApi.binaryColumn("grouping"), Binary.fromString(v)))
-      case None if groupingNotNull =>
-        Some(FilterApi.notEq(FilterApi.binaryColumn("grouping"), null.asInstanceOf[Binary]))
+    val lead = key.head.name
+    val pinPred: Option[FilterPredicate] = read.pin match {
+      case Some(v) => Some(FilterApi.eq(FilterApi.binaryColumn(lead), Binary.fromString(v)))
+      case None if read.pinNotNull =>
+        Some(FilterApi.notEq(FilterApi.binaryColumn(lead), null.asInstanceOf[Binary]))
       case None => None
     }
+    // pin + bound (exact, fully handled); hints are added per file
+    val claimedPreds = pinPred.toSeq ++ (if (bounded) boundPredicates else Nil)
+    val claimedCols = pinPred.map(_ => lead).toSeq ++ (if (bounded) Seq(read.boundCol) else Nil)
+    // per-file projection: needed columns that exist in THIS file's
+    // schema (appends may add idx_* columns later); key columns are
+    // always projected so the heap can order rows
+    val needed = (required.fieldNames.toSeq ++ read.key.map(_.name)).toSet
+    // a required field's parquet ID also selects the file's column
+    // when its stored NAME predates a rename (FieldIds resolution)
+    val neededIds = required.fields.flatMap(f => graft.engine.FieldIds.idOf(f)).toSet
     part.files.foreach { file =>
       // one open per file: the footer's schema decides the projection
       // and the predicates, and the same reader then streams the rows
-      val reader = ParquetFiles.records(conf, new Path(file)) { fileSchema =>
+      val reader = ParquetFiles.records(hadoopConf, new Path(file)) { fileSchema =>
         // A data file missing a column whose predicate this scan CLAIMED
-        // handled (grouping, or ts_us under an active bound) cannot be an
-        // engine-written store file — the writer always materializes
-        // both. Skipping the predicate would silently return the foreign
-        // file's rows unfiltered, and skipping the file would silently
-        // hide them; either way the store is corrupt — say so, loudly,
-        // naming the file.
-        if (tsBounds.isBounded && !fileSchema.containsField("ts_us"))
+        // handled (the pinned key, or the bound column under an active
+        // bound) cannot be engine-written — the writers always
+        // materialize both. Skipping the predicate would silently return
+        // the foreign file's rows unfiltered, and skipping the file would
+        // silently hide them; either way the store is corrupt — say so,
+        // loudly, naming the file.
+        claimedCols.find(c => !fileSchema.containsField(c)).foreach { c =>
           throw new IllegalStateException(
-            s"store file $file has no ts_us column but this scan claimed a ts bound; " +
-              "the engine writer always materializes ts_us — foreign or corrupt file in the store")
-        if ((grouping.isDefined || groupingNotNull) && !fileSchema.containsField("grouping"))
-          throw new IllegalStateException(
-            s"store file $file has no grouping column but this scan claimed a grouping " +
-              "predicate; the engine writer always materializes grouping — foreign or " +
-              "corrupt file in the store")
-        // per-file projection: needed columns that exist in THIS file's
-        // schema (appends may add idx_* columns later); merge keys are
-        // always projected so the heap can order rows
-        val needed = (required.fieldNames.toSeq ++ KeyCols).distinct.filterNot(_ == "space")
-        // a required field's parquet ID also selects the file's column
-        // when its stored NAME predates a rename (FieldIds resolution)
-        val neededIds = required.fields.flatMap(f => graft.engine.FieldIds.idOf(f)).toSet
+            s"file $file has no $c column but this scan claimed a predicate on it; " +
+              s"the engine writer always materializes $c — foreign or corrupt file in the store")
+        }
         val projected = new MessageType(fileSchema.getName,
           fileSchema.getFields.asScala.filter(f => needed.contains(f.getName) ||
             (f.getId != null && neededIds.contains(f.getId.intValue.toLong))).asJava)
-        // grouping + ts-bound predicates (exact, fully handled) + hint
-        // predicates (best-effort skipping; Spark re-verifies post-scan)
-        val preds = groupingPred.toSeq ++
-          (if (tsBounds.isBounded) tsPredicates else Nil) ++
-          hints.flatMap { case (c, v) => hintPredicate(fileSchema, c, v) }
+        // hint predicates: best-effort skipping; Spark re-verifies post-scan
+        val preds = claimedPreds ++ read.hints.flatMap { case (c, v) => hintPredicate(fileSchema, c, v) }
         (projected, preds.reduceOption(FilterApi.and)
           .fold(FilterCompat.NOOP: FilterCompat.Filter)(fp => FilterCompat.get(fp)))
       }
@@ -293,29 +330,32 @@ final class EsdbMergeReader(part: EsdbInputPartition, required: StructType,
     while (remaining > 0 && !done) {
       val c = heap.poll()
       if (c == null) return false
-      // ts bound enforcement, exact: a null ts never satisfies an
-      // active bound (checked on ACTUAL null presence, not the sort
-      // sentinel). The parquet record filter already excludes these;
-      // this is the contract-level check plus the early exit.
-      val tsOk = !tsBounds.isBounded || (!c.keyTsNull && tsBounds.contains(c.keyTs))
-      if (tsOk) {
+      // bound enforcement, exact: a null never satisfies an active
+      // bound (checked on the null flag, not the sort sentinel). The
+      // parquet record filter already excludes these rows; this is the
+      // contract-level check plus the early exit.
+      val v = c.num(boundAt)
+      val isNull = c.isNull(boundAt)
+      if (!bounded || (!isNull && read.bound.contains(v))) {
         row = convert(c)
         if (c.advance()) heap.add(c) else c.reader.close()
         remaining -= 1
         return true
       }
-      // Out-of-range row on a pure ts-desc stream (grouping pinned):
-      // once below the lower bound — or at the nulls, which sort after
-      // every value — nothing later can match; stop the whole merge
-      // (the reference Scanner returning false, space.go:14).
-      if (grouping.isDefined && (c.keyTsNull || tsBounds.belowLower(c.keyTs))) {
+      // Past the bound in the bound column's direction: descending, a
+      // row below the lower bound or a null (nulls sort last);
+      // ascending, a row above the upper bound (nulls sort first and
+      // are skipped). With the keys before it pinned, nothing later can
+      // match, so the whole merge stops — the reference Scanner
+      // returning false (space.go:14, stream/stream.go:92-124).
+      val past =
+        if (keyAsc(boundAt)) !isNull && read.bound.aboveUpper(v)
+        else isNull || read.bound.belowLower(v)
+      if (exitEarly && past) {
         done = true
         c.reader.close()
-      } else {
-        // above the upper bound (ts-desc prefix) or mixed groupings:
-        // skip this row and keep merging
-        if (c.advance()) heap.add(c) else c.reader.close()
-      }
+      } else if (c.advance()) heap.add(c)
+      else c.reader.close()
     }
     false
   }
@@ -342,8 +382,8 @@ final class EsdbMergeReader(part: EsdbInputPartition, required: StructType,
           case FloatType => g.getFloat(src, 0)
           case BooleanType => g.getBoolean(src, 0)
           case dt => throw new UnsupportedOperationException(
-            s"esdb store column ${required.fields(i).name}: unsupported type $dt " +
-              "(canonical stores carry string/binary/long/int/double/float/boolean columns)")
+            s"esdb column ${required.fields(i).name}: unsupported type $dt " +
+              "(stores and logs carry string/binary/long/int/double/float/boolean columns)")
         }
       i += 1
     }

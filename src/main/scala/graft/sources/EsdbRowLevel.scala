@@ -135,10 +135,8 @@ final class EsdbReplaceScan(path: String, required: StructType,
       EsdbInputPartition(sp, Array(abs), len): InputPartition
     }.toArray
   override def createReaderFactory(): PartitionReaderFactory =
-    new EsdbReaderFactory(required, grouping = None, groupingNotNull = false,
-      TsBounds.unbounded, hints = Nil, limit = None,
-      conf = new SerializableConfiguration(EsdbVectorReader.sessionConf()),
-      columnar = false)
+    new EsdbReaderFactory(required, OrderedRead(OrderedRead.StoreKey, "ts_us", TsBounds.unbounded),
+      new SerializableConfiguration(EsdbVectorReader.sessionConf()))
 }
 
 /** The replace-data write: executors stage the replacement rows as

@@ -637,7 +637,7 @@ final class EsdbScan(path: String, required: StructType, spaces: Option[Seq[Stri
   // a runtime filter narrows it).
   @volatile private var listed: ((Option[Seq[String]], Option[Seq[String]]), Array[EsdbInputPartition]) = _
 
-  private def partitions: Array[EsdbInputPartition] = {
+  private[sources] def partitions: Array[EsdbInputPartition] = {
     val key = (runtimeSpaces, runtimeGroupings)
     val cached = listed
     if (cached != null && cached._1 == key) cached._2
@@ -785,8 +785,22 @@ final class EsdbScan(path: String, required: StructType, spaces: Option[Seq[Stri
     }
   }
 
-  override def planInputPartitions(): Array[InputPartition] =
-    partitions.asInstanceOf[Array[InputPartition]]
+  // the columnar proof rides on the partitions: decided once per
+  // listing, since planning and execution both plan the partitions
+  @volatile private var proven: (Array[EsdbInputPartition], Array[EsdbInputPartition]) = _
+
+  override def planInputPartitions(): Array[InputPartition] = {
+    val ps = partitions
+    var memo = proven
+    if (memo == null || !(memo._1 eq ps)) {
+      // single file per space on this path: the partition's byte total
+      // IS the file length
+      memo = (ps, if (!columnarEligible(ps)) ps
+        else ps.map(p => p.copy(columnarFiles = Some(Array((p.files.head, p.totalBytes))))))
+      proven = memo
+    }
+    memo._2.asInstanceOf[Array[InputPartition]]
+  }
 
   /** Vectorized single-file fast path (see [[EsdbVectorReader]]):
     * allowed only when the source claims no row-level filtering the
@@ -800,7 +814,7 @@ final class EsdbScan(path: String, required: StructType, spaces: Option[Seq[Stri
     * decision is scan-wide because Spark rejects mixed row/columnar
     * partitions within one scan.
     */
-  private def columnarEligible: Boolean =
+  private def columnarEligible(partitions: Array[EsdbInputPartition]): Boolean =
     grouping.isEmpty && hints.isEmpty &&
       partitions.nonEmpty && partitions.forall(_.files.length == 1) && {
         val hconf = SparkSession.active.sparkContext.hadoopConfiguration
@@ -817,10 +831,9 @@ final class EsdbScan(path: String, required: StructType, spaces: Option[Seq[Stri
       }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new EsdbReaderFactory(required, grouping, groupingNotNull, tsBounds, hints, limit,
-      conf = new org.apache.spark.util.SerializableConfiguration(
-        EsdbVectorReader.sessionConf()),
-      columnar = columnarEligible)
+    new EsdbReaderFactory(required,
+      OrderedRead(OrderedRead.StoreKey, "ts_us", tsBounds, grouping, groupingNotNull, hints, limit),
+      new org.apache.spark.util.SerializableConfiguration(EsdbVectorReader.sessionConf()))
 
   /** The store IS key-grouped by `space` — one input partition per
     * space directory, every row in it carrying that space — so report
@@ -881,8 +894,10 @@ object EsdbScan {
   * partitions for storage-partitioned joins and exchange-free
   * aggregation (every row in the partition carries exactly this space).
   */
-final case class EsdbInputPartition(space: String, files: Array[String], totalBytes: Long)
-  extends InputPartition with HasPartitionKey {
+final case class EsdbInputPartition(space: String, files: Array[String], totalBytes: Long,
+                                    columnarFiles: Option[Array[(String, Long)]] = None)
+  extends EsdbMergePartition with HasPartitionKey {
+  override def constSpace: Option[String] = Some(space)
   override def partitionKey(): org.apache.spark.sql.catalyst.InternalRow =
     new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
       Array[Any](org.apache.spark.unsafe.types.UTF8String.fromString(space)))

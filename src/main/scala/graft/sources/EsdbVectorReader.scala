@@ -118,8 +118,6 @@ final class EsdbVectorReader(files: Seq[(String, Long)], required: StructType,
         val n = math.min(inner.numRows().toLong, remaining).toInt
         out.setNumRows(n)
         remaining -= n
-        EsdbMergeReader.RowsRead.addAndGet(n)
-        EsdbVectorReader.BatchesRead.incrementAndGet()
         rowsPulled += n
         return true
       }
@@ -135,13 +133,6 @@ final class EsdbVectorReader(files: Seq[(String, Long)], required: StructType,
 }
 
 object EsdbVectorReader {
-  /** Batches decoded by all vector readers in this JVM — local-mode
-    * observable proving a scan actually took the vectorized path
-    * (OrderedStoreSpec asserts it advances for qualifying scans and
-    * stays put for claimed-filtered ones).
-    */
-  val BatchesRead = new java.util.concurrent.atomic.AtomicLong()
-
   /** The session Hadoop conf a vector reader ships to executors,
     * completed with the SQLConf-derived parquet keys Spark's own scans
     * pin before building a reader — `ParquetToSparkSchemaConverter

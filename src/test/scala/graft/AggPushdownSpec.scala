@@ -5,7 +5,7 @@ import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 
 import graft.engine.EsdbWriter
-import graft.sources.{EsdbAggScan, EsdbMergeReader, EsdbMetrics}
+import graft.sources.{EsdbAggScan, EsdbMetrics}
 
 /** Footer-only aggregate pushdown (EsdbAggScan): COUNT/MIN/MAX over
   * written stores answered from parquet footers — correctness parity
@@ -65,12 +65,12 @@ class AggPushdownSpec extends SparkSpec {
       min($"ts_us").as("min_ts"), max($"ts_us").as("max_ts"),
       min($"event_id").as("min_id"), max($"event_id").as("max_id"),
       min($"value").as("min_v"), max($"value").as("max_v"))
-    val before = EsdbMergeReader.RowsRead.get()
     val scan = aggScanExecOf(q)
     assert(scan.isDefined, "aggregate was not pushed:\n" +
       q.queryExecution.executedPlan.toString)
-    assert(EsdbMergeReader.RowsRead.get() == before,
-      "footer-only aggregate must not pull rows off parquet")
+    val plan = q.queryExecution.executedPlan
+    assert(scanNodes(plan).forall(_.scan.isInstanceOf[EsdbAggScan]) && rowsMerged(plan) == 0,
+      "footer-only aggregate must not pull rows off parquet:\n" + plan)
     // the scan reads each store file's footer once, and nothing else
     val root = new org.apache.hadoop.fs.Path(EsdbWriter.dataRoot(spark, storePath))
     val files = EsdbWriter.storeDataFiles(root.getFileSystem(spark.sparkContext.hadoopConfiguration), root)

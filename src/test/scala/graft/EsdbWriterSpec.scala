@@ -65,7 +65,9 @@ class EsdbWriterSpec extends SparkSpec {
     EsdbWriter.seal(spark, dir, "i")
     assert(EsdbWriter.isSealed(dir))
     intercept[IllegalArgumentException] { EsdbWriter.append(ev, dir) }
-    val tails = spark.read.parquet(s"$dir/${EsdbWriter.SealMarker}.tails")
+    val side = new org.apache.hadoop.fs.Path(dir, s"${EsdbWriter.SealMarker}.tails")
+    val tails = spark.read.parquet(EsdbWriter.sidecarParts(
+      side.getFileSystem(spark.sparkContext.hadoopConfiguration), side).map(_.getPath.toString): _*)
     assert(rowsOf(tails.select("attr", "tail_event_id").orderBy("attr")) ==
       Seq(Seq("i1", 3L), Seq("i2", 2L)))
     // the closed-stream read path serves tails from the sidecar

@@ -4,7 +4,6 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.engine.{EsdbWriter, EventLog}
-import graft.sources.EsdbMergeReader
 
 /** The DSv2 log store read path ([[graft.sources.EsdbLogSource]]):
   * insertion order free from layout for the stream surface — iterate
@@ -32,6 +31,11 @@ class LogStoreSpec extends SparkSpec {
 
   private def log: DataFrame = EsdbWriter.readLog(spark, logPath)
 
+  /** The log manifest's rows by file name, read on the driver. */
+  private def manifest(path: String): Map[String, EsdbWriter.LogFileInfo] =
+    EsdbWriter.logManifestInfo(spark.sparkContext.hadoopConfiguration,
+      EsdbWriter.dataRoot(spark, path)).get
+
   private def executed(df: DataFrame): String = {
     df.collect()
     df.queryExecution.executedPlan.toString
@@ -55,9 +59,8 @@ class LogStoreSpec extends SparkSpec {
 
   test("resume offset: exact rows, fewer rows materialized, files pruned") {
     val from = 400L
-    val before = EsdbMergeReader.RowsRead.get()
-    val got = EventLog.iterate(log, from).select("event_id").as[Long].collect().toSeq
-    val boundedRead = EsdbMergeReader.RowsRead.get() - before
+    val (got, ran) = collectPlanned(EventLog.iterate(log, from).select("event_id").as[Long])
+    val boundedRead = rowsMerged(ran)
     assert(got == (400L to 500L))
     // the resume offset must not materialize the whole log: manifest
     // file pruning + row-group stats + record filter cut the scan to
@@ -80,26 +83,20 @@ class LogStoreSpec extends SparkSpec {
   }
 
   test("manifest exists and covers every data file") {
-    val m = EsdbWriter.logManifest(spark, logPath).get.collect()
+    val m = manifest(logPath)
     val files = new java.io.File(graft.engine.Publish.resolve(
       spark.sparkContext.hadoopConfiguration, logPath))
       .listFiles().filter(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
-    assert(m.map(_.getString(0)).toSet == files.map(_.getName).toSet)
-    assert(m.forall(r => r.getLong(1) <= r.getLong(2)))
+    assert(m.keySet == files.map(_.getName).toSet)
+    assert(m.values.forall(i => i.minId <= i.maxId))
   }
 
   test("vectorized log path: disjoint-range files concatenate columnar, overlaps and resumes stay row-wise") {
-    import graft.sources.EsdbVectorReader
-    def batchesDuring[A](q: => A): (A, Long) = {
-      val before = EsdbVectorReader.BatchesRead.get()
-      val out = q
-      (out, EsdbVectorReader.BatchesRead.get() - before)
-    }
     // the shared fixture's two batches INTERLEAVE ids — ranges overlap,
     // so the unbounded iterate must keep the merge heap
-    val (overlapIds, overlapBatches) = batchesDuring(
-      EventLog.iterate(log).select("event_id").as[Long].collect().toSeq)
-    assert(overlapBatches == 0, "overlapping id ranges must take the row merge path")
+    val (overlapIds, overlapPlan) = collectPlanned(
+      EventLog.iterate(log).select("event_id").as[Long])
+    assert(readRowWise(overlapPlan), "overlapping id ranges must take the row merge path")
     assert(overlapIds == (1L to 500L))
     // a log whose appends carry ever-higher ids (the steady state):
     // disjoint ranges, manifest-proven — the full iterate vectorizes
@@ -111,21 +108,21 @@ class LogStoreSpec extends SparkSpec {
     EsdbWriter.writeLog(mk(1 to 300), dir.getAbsolutePath)
     EsdbWriter.appendLog(mk(301 to 600), dir.getAbsolutePath)
     val seq = EsdbWriter.readLog(spark, dir.getAbsolutePath)
-    val (seqRows, seqBatches) = batchesDuring(
+    val (seqRows, seqPlan) = collectPlanned(
       EventLog.iterate(seq).select("event_id", "space", "value", "payload")
-        .as[(Long, String, Double, String)].collect().toSeq)
-    assert(seqBatches > 0, "disjoint-range log files must decode through the vectorized reader")
+        .as[(Long, String, Double, String)])
+    assert(readColumnar(seqPlan), "disjoint-range log files must decode through the vectorized reader")
     assert(seqRows.map(_._1) == (1L to 600L))
     assert(seqRows(41) == (42L, "s0", 4.2, """{"k": 6}"""))
     // a resume offset claims an id bound the vectorized path cannot
     // enforce — must stay on the row path and stay correct
-    val (resumed, resumeBatches) = batchesDuring(
-      EventLog.iterate(seq, 550L).select("event_id").as[Long].collect().toSeq)
-    assert(resumeBatches == 0, "claimed id bounds must not go columnar")
+    val (resumed, resumePlan) = collectPlanned(
+      EventLog.iterate(seq, 550L).select("event_id").as[Long])
+    assert(readRowWise(resumePlan), "claimed id bounds must not go columnar")
     assert(resumed == (550L to 600L))
     // pagination truncates the batch stream without reading every file
-    val (page, pageBatches) = batchesDuring(seq.limit(5).collect().toSeq)
-    assert(pageBatches > 0 && page.size == 5)
+    val (page, pagePlan) = collectPlanned(seq.limit(5))
+    assert(readColumnar(pagePlan) && page.size == 5)
     assert(seq.count() == 600L)
   }
 
@@ -141,7 +138,7 @@ class LogStoreSpec extends SparkSpec {
       .toDF("space", "grouping", "ts_us", "event_id", "value", "payload")
     EsdbWriter.writeLog(mk(1 to 300), dir.getAbsolutePath)
     EsdbWriter.appendLog(mk(301 to 600), dir.getAbsolutePath)
-    val nFiles = EsdbWriter.logManifest(spark, dir.getAbsolutePath).get.count().toInt
+    val nFiles = manifest(dir.getAbsolutePath).size
     val par = EsdbWriter.readLogParallel(spark, dir.getAbsolutePath)
     // partition count: one per file (all ranges disjoint), > 1 — the
     // replay parallelism the single-cursor default cannot have
@@ -159,9 +156,9 @@ class LogStoreSpec extends SparkSpec {
     }, "partition id ranges must be disjoint and ascending")
     assert(parts.flatten.sorted == (1L to 600L))
     // singleton groups satisfy the footer proof → columnar decode
-    val before = graft.sources.EsdbVectorReader.BatchesRead.get()
-    assert(par.count() == 600L)
-    assert(graft.sources.EsdbVectorReader.BatchesRead.get() > before,
+    val (parCount, parPlan) = countPlanned(par)
+    assert(parCount == 600L)
+    assert(readColumnar(parPlan),
       "disjoint singleton groups must decode through the vectorized reader")
     // no Sort node: per-partition consumption needs none
     val plan = executed(par.select("event_id", "space", "value"))
@@ -242,9 +239,10 @@ class LogStoreSpec extends SparkSpec {
       i.toLong, i / 10.0, s"""{"k": ${i % 9}}"""))
       .toDF("space", "grouping", "ts_us", "event_id", "value", "payload")
     EsdbWriter.writeLog(mk(1 to 200), dir.getAbsolutePath)
-    def drain(): Seq[Long] = {
+    // the drained ids, and the query that drained them
+    def drain(): (Seq[Long], org.apache.spark.sql.streaming.StreamingQuery) = {
       val got = java.util.Collections.synchronizedList(new java.util.ArrayList[Long]())
-      EsdbWriter.readLogStream(spark, dir.getAbsolutePath)
+      val query = EsdbWriter.readLogStream(spark, dir.getAbsolutePath)
         .writeStream
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
           batch.select("event_id").as[Long](org.apache.spark.sql.Encoders.scalaLong)
@@ -254,27 +252,26 @@ class LogStoreSpec extends SparkSpec {
         .outputMode(OutputMode.Append())
         .trigger(Trigger.AvailableNow())
         .start()
-        .awaitTermination()
+      query.awaitTermination()
       import scala.jdk.CollectionConverters._
-      got.asScala.toSeq.sorted
+      (got.asScala.toSeq.sorted, query)
     }
     // first drain: the whole log, in one resumable pass (populate's
     // replay) — and through the VECTORIZED path: the batch covers
     // (-1, head], provably vacuous on the single disjoint file
-    val before = graft.sources.EsdbVectorReader.BatchesRead.get()
-    assert(drain() == (1L to 200L))
-    assert(graft.sources.EsdbVectorReader.BatchesRead.get() > before,
+    val (first, firstQuery) = drain()
+    assert(first == (1L to 200L))
+    assert(readColumnar(lastBatchPlan(firstQuery)),
       "a full drain of a disjoint-range log must decode columnar")
     // append while the consumer is down; the checkpointed offset makes
     // the next run read exactly the appended suffix — file-aligned, so
     // it vectorizes too
     EsdbWriter.appendLog(mk(201 to 320), dir.getAbsolutePath)
-    val before2 = graft.sources.EsdbVectorReader.BatchesRead.get()
-    assert(drain() == (201L to 320L))
-    assert(graft.sources.EsdbVectorReader.BatchesRead.get() > before2,
-      "a file-aligned suffix read must decode columnar")
+    val (suffix, suffixQuery) = drain()
+    assert(suffix == (201L to 320L))
+    assert(readColumnar(lastBatchPlan(suffixQuery)), "a file-aligned suffix read must decode columnar")
     // nothing new: a third run delivers zero rows
-    assert(drain().isEmpty)
+    assert(drain()._1.isEmpty)
   }
 
   test("streaming replay runs wide: a multi-file backlog drains over one partition per disjoint group") {
@@ -286,7 +283,7 @@ class LogStoreSpec extends SparkSpec {
       .toDF("space", "grouping", "ts_us", "event_id", "value", "payload")
     EsdbWriter.writeLog(mk(1 to 300), dir.getAbsolutePath)   // 4 disjoint files
     EsdbWriter.appendLog(mk(301 to 600), dir.getAbsolutePath) // 4 more, disjoint
-    val nFiles = EsdbWriter.logManifest(spark, dir.getAbsolutePath).get.count().toInt
+    val nFiles = manifest(dir.getAbsolutePath).size
     assert(nFiles > 1)
     val widths = java.util.Collections.synchronizedList(new java.util.ArrayList[Int]())
     val got = java.util.Collections.synchronizedList(new java.util.ArrayList[Long]())
@@ -365,7 +362,7 @@ class LogStoreSpec extends SparkSpec {
     val ids = q.as[Long].collect().toSeq
     assert(ids == (1L to 600L))
     assert(!hasSortNode(q.queryExecution.executedPlan.toString))
-    val m = EsdbWriter.logManifest(spark, path).get.collect().map(_.getString(0)).toSet
+    val m = manifest(path).keySet
     assert(m.exists(_.startsWith("stream-")), s"manifest must cover sink files: $m")
     // a replay of a committed epoch is a no-op (exactly-once, not
     // at-least-once): re-running one epoch's batch adds nothing
@@ -401,7 +398,7 @@ class LogStoreSpec extends SparkSpec {
     assert(ids == (1L to 150L), "orphan rows must never surface; replay content must")
     assert(!orphan.exists() || !ids.contains(5000L))
     // and the manifest covers exactly the visible files
-    val m = EsdbWriter.logManifest(spark, path).get.collect().map(_.getString(0)).toSet
+    val m = manifest(path).keySet
     assert(!m.contains("stream-1-00000.parquet") ||
       graft.engine.LogCommits.committedEpochs(
         new org.apache.hadoop.fs.Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration),
@@ -409,7 +406,6 @@ class LogStoreSpec extends SparkSpec {
   }
 
   test("log compaction: one versioned file set, order kept, merge width rebounded, replays stay no-ops") {
-    import graft.sources.EsdbVectorReader
     val dir = java.nio.file.Files.createTempDirectory("logcompact").toFile
     dir.delete()
     val path = dir.getAbsolutePath
@@ -428,21 +424,20 @@ class LogStoreSpec extends SparkSpec {
         .map(_.getPath.getName)
     }
     assert(dataFiles.size == 3)
-    val before = EsdbVectorReader.BatchesRead.get()
-    assert(EventLog.iterate(EsdbWriter.readLog(spark, path))
-      .select("event_id").as[Long].collect().toSeq == (1L to 300L))
-    assert(EsdbVectorReader.BatchesRead.get() == before, "interleaved epochs must row-merge")
+    val (interleaved, interleavedPlan) = collectPlanned(
+      EventLog.iterate(EsdbWriter.readLog(spark, path)).select("event_id").as[Long])
+    assert(interleaved == (1L to 300L))
+    assert(readRowWise(interleavedPlan), "interleaved epochs must row-merge")
 
     EsdbWriter.compactLog(spark, path)
     // one file, a committed version pointer, same global order — and the
     // steady-state read is now vectorized (single disjoint range)
     assert(dataFiles.size == 1, s"expected one compacted file, got $dataFiles")
     assert(graft.engine.Publish.currentVersion(conf, path).isDefined)
-    val afterCompact = EsdbVectorReader.BatchesRead.get()
-    val q = EventLog.iterate(EsdbWriter.readLog(spark, path)).select("event_id")
-    assert(q.as[Long].collect().toSeq == (1L to 300L))
-    assert(EsdbVectorReader.BatchesRead.get() > afterCompact,
-      "compacted log must read through the vectorized path")
+    val q = EventLog.iterate(EsdbWriter.readLog(spark, path)).select("event_id").as[Long]
+    val (compacted, compactedPlan) = collectPlanned(q)
+    assert(compacted == (1L to 300L))
+    assert(readColumnar(compactedPlan), "compacted log must read through the vectorized path")
     assert(!hasSortNode(q.queryExecution.executedPlan.toString))
     // commit markers survived: a replayed pre-compaction epoch is still
     // a no-op, and fresh epochs append normally

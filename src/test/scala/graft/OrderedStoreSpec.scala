@@ -4,7 +4,6 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.engine.{EsdbWriter, EventStore}
-import graft.sources.EsdbMergeReader
 
 /** The DSv2 ordered store read path: correctness parity with the
   * vanilla parquet path, and the plan properties that are its reason
@@ -210,11 +209,10 @@ class OrderedStoreSpec extends SparkSpec {
     try {
       spark.conf.set("spark.sql.optimizer.dynamicPartitionPruning.useStats", "false")
       val store = EsdbWriter.readOrdered(spark, dir.getAbsolutePath)
-      val before = EsdbMergeReader.RowsRead.get()
       val q = store.join(broadcast(dim), "grouping")
-      val n = q.count()
+      val (n, counting) = countPlanned(q)
       assert(n == 50, s"g3 holds 50 of 400 events, got $n")
-      val pulled = EsdbMergeReader.RowsRead.get() - before
+      val pulled = rowsMerged(counting)
       // only g3's hash bucket should open: its resident groupings'
       // rows (collisions included), never the whole store — the
       // record-level grouping filter isn't claimed by runtime pruning,
@@ -287,17 +285,15 @@ class OrderedStoreSpec extends SparkSpec {
   }
 
   test("ts-bounded scan: exact rows, and the reader materializes fewer rows than the full grouping") {
-    import graft.sources.EsdbMergeReader
     val bound = 30000L // fixture ts range is 0..49000
-    def rowsReadDuring(q: => Seq[org.apache.spark.sql.Row]): (Seq[org.apache.spark.sql.Row], Long) = {
-      val before = EsdbMergeReader.RowsRead.get()
-      val rows = q
-      (rows, EsdbMergeReader.RowsRead.get() - before)
+    def rowsReadDuring(q: DataFrame): (Seq[org.apache.spark.sql.Row], Long) = {
+      val (rows, plan) = collectPlanned(q)
+      (rows, rowsMerged(plan))
     }
     val (full, fullRead) = rowsReadDuring(
-      EventStore.scan(ordered, "s1", "g3").select("event_id", "ts_us").collect().toSeq)
+      EventStore.scan(ordered, "s1", "g3").select("event_id", "ts_us"))
     val (got, boundedRead) = rowsReadDuring(
-      EventStore.scanSince(ordered, "s1", "g3", bound).select("event_id", "ts_us").collect().toSeq)
+      EventStore.scanSince(ordered, "s1", "g3", bound).select("event_id", "ts_us"))
     val expect = EventStore.scan(vanilla, "s1", "g3")
       .where(col("ts_us") >= bound).select("event_id", "ts_us").collect().toSeq
     assert(got == expect && got.nonEmpty)
@@ -384,7 +380,6 @@ class OrderedStoreSpec extends SparkSpec {
   }
 
   test("vectorized fast path: compacted single-file spaces decode columnar, filtered scans stay row-wise") {
-    import graft.sources.EsdbVectorReader
     val dir = java.nio.file.Files.createTempDirectory("ordvec").toFile
     dir.delete()
     val mk = (r: Range) => r.map(i => (s"s${i % 2}", s"g${i % 5}", (i % 40).toLong * 10, i.toLong,
@@ -393,56 +388,49 @@ class OrderedStoreSpec extends SparkSpec {
     EsdbWriter.write(mk(1 to 300), dir.getAbsolutePath)
     EsdbWriter.append(mk(301 to 600), dir.getAbsolutePath)
     val multi = EsdbWriter.readOrdered(spark, dir.getAbsolutePath)
-    def batchesDuring[A](q: => A): (A, Long) = {
-      val before = EsdbVectorReader.BatchesRead.get()
-      val out = q
-      (out, EsdbVectorReader.BatchesRead.get() - before)
-    }
     // two files per space: the merge path, no columnar batches. Collect
     // the pre-compaction truth now — compaction publishes a new version
     // root and retires this one, so `multi` is a stale handle afterwards
-    val (preCompact, preBatches) = batchesDuring(
+    val (preCompact, prePlan) = collectPlanned(
       multi.select("space", "grouping", "ts_us", "event_id", "value", "payload")
-        .as[(String, String, Long, Long, Double, String)].collect().toSeq)
-    assert(preBatches == 0, "multi-file spaces must take the row merge path")
+        .as[(String, String, Long, Long, Double, String)])
+    assert(readRowWise(prePlan), "multi-file spaces must take the row merge path")
     EsdbWriter.compact(spark, dir.getAbsolutePath)
     val o = EsdbWriter.readOrdered(spark, dir.getAbsolutePath)
     // whole-store scan: columnar, same rows, same order as pre-compaction
-    val (postCompact, postBatches) = batchesDuring(
+    val (postCompact, postPlan) = collectPlanned(
       o.select("space", "grouping", "ts_us", "event_id", "value", "payload")
-        .as[(String, String, Long, Long, Double, String)].collect().toSeq)
-    assert(postBatches > 0, "single-file spaces must decode through the vectorized reader")
+        .as[(String, String, Long, Long, Double, String)])
+    assert(readColumnar(postPlan), "single-file spaces must decode through the vectorized reader")
     assert(postCompact == preCompact)
     // space-pinned full iterate: still columnar (directory pruning is exact)
-    val (spacePinned, spaceBatches) = batchesDuring(
+    val (spacePinned, spacePlan) = collectPlanned(
       EventStore.scanSpace(o, "s1").select("grouping", "ts_us", "event_id")
-        .as[(String, Long, Long)].collect().toSeq)
-    assert(spaceBatches > 0)
+        .as[(String, Long, Long)])
+    assert(readColumnar(spacePlan))
     assert(spacePinned == preCompact.filter(_._1 == "s1").map(r => (r._2, r._3, r._4)))
     assert(spacePinned.nonEmpty)
     // grouping-pinned scan claims a filter the vectorized decoder cannot
     // enforce — must stay on the row path and stay correct
-    val (grpRows, grpBatches) = batchesDuring(
-      EventStore.scan(o, "s1", "g2").select("event_id", "ts_us")
-        .as[(Long, Long)].collect().toSeq)
-    assert(grpBatches == 0, "claimed-filtered scans must not go columnar")
+    val (grpRows, grpPlan) = collectPlanned(
+      EventStore.scan(o, "s1", "g2").select("event_id", "ts_us").as[(Long, Long)])
+    assert(readRowWise(grpPlan), "claimed-filtered scans must not go columnar")
     assert(grpRows == preCompact.filter(r => r._1 == "s1" && r._2 == "g2").map(r => (r._4, r._3)))
     assert(grpRows.nonEmpty)
     // pushed limit truncates the batch stream
-    val (limited, limBatches) = batchesDuring(o.limit(7).collect().toSeq)
-    assert(limBatches > 0 && limited.size == 7)
+    val (limited, limPlan) = collectPlanned(o.limit(7))
+    assert(readColumnar(limPlan) && limited.size == 7)
     // aggregate shapes (zero/one-column prunes) survive the columnar path
     assert(o.count() == 600L)
     assert(o.where(col("value") > 50.0).count() == preCompact.count(_._5 > 50.0))
     // a claimed ts bound covering every file's whole range is provably
     // vacuous — still columnar; a mid-range bound is not — row path
-    val (vacuous, vacBatches) = batchesDuring(
-      o.where(col("ts_us") >= 0L).count()) // fixture ts range is 0..390
-    assert(vacBatches > 0, "file-wide ts bounds must stay vectorized")
+    val (vacuous, vacPlan) = countPlanned(
+      o.where(col("ts_us") >= 0L)) // fixture ts range is 0..390
+    assert(readColumnar(vacPlan), "file-wide ts bounds must stay vectorized")
     assert(vacuous == 600L)
-    val (bounded, boundedBatches) = batchesDuring(
-      o.where(col("ts_us") >= 200L).count())
-    assert(boundedBatches == 0, "mid-range ts bounds must take the exact row path")
+    val (bounded, boundedPlan) = countPlanned(o.where(col("ts_us") >= 200L))
+    assert(readRowWise(boundedPlan), "mid-range ts bounds must take the exact row path")
     assert(bounded == preCompact.count(_._3 >= 200L))
   }
 

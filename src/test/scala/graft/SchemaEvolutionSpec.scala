@@ -259,12 +259,12 @@ class SchemaEvolutionSpec extends SparkSpec {
       EsdbWriter.schemaManifest(conf, root).get.map(f =>
         if (f.name == "hits") f.copy(dataType = org.apache.spark.sql.types.LongType) else f))
     EsdbWriter.writeSchemaManifest(conf, root, widened)
-    val before = graft.sources.EsdbVectorReader.BatchesRead.get()
     val df = EsdbWriter.readOrdered(spark, p)
     assert(df.schema("hits").dataType == org.apache.spark.sql.types.LongType)
-    val got = df.select("event_id", "hits").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val (rows, plan) = collectPlanned(df.select("event_id", "hits"))
+    val got = rows.map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got(7L) == 7L && got.size == 40)
-    assert(graft.sources.EsdbVectorReader.BatchesRead.get() > before,
+    assert(readColumnar(plan),
       "the widened compacted store must still decode through the vectorized path")
   }
 

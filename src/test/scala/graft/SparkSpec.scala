@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanExecBase
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -38,10 +40,54 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally sc.removeSparkListener(l)
   }
 
+  /** `ds` collected, with the plan that ran it: that plan's scan nodes
+    * carry this run's metrics.
+    */
+  def collectPlanned[T](ds: Dataset[T]): (Seq[T], SparkPlan) =
+    (ds.collect().toSeq, ds.queryExecution.executedPlan)
+
+  /** `df.count()`, with the plan that ran it (a count runs this aggregate). */
+  def countPlanned(df: Dataset[_]): (Long, SparkPlan) = {
+    val (rows, plan) = collectPlanned(df.groupBy().count())
+    (rows.head.getLong(0), plan)
+  }
+
+  /** The DSv2 scan nodes of `plan`, batch or micro-batch, through AQE
+    * stages and subqueries.
+    */
+  def scanNodes(plan: SparkPlan): Seq[DataSourceV2ScanExecBase] =
+    SparkSpec.Plans.collectWithSubqueries(plan) { case s: DataSourceV2ScanExecBase => s }
+
+  /** Rows the esdb readers of `plan`'s scans pulled off parquet (the
+    * `esdbRowsMerged` scan metric), once `plan` has run.
+    */
+  def rowsMerged(plan: SparkPlan): Long =
+    scanNodes(plan).flatMap(_.metrics.get(graft.sources.EsdbMetrics.RowsMerged)).map(_.value).sum
+
+  /** True when a scan of `plan` decoded columnar and pulled rows: what
+    * a read through [[graft.sources.EsdbVectorReader]] leaves.
+    */
+  def readColumnar(plan: SparkPlan): Boolean =
+    scanNodes(plan).exists(s => s.supportsColumnar &&
+      s.metrics.get(graft.sources.EsdbMetrics.RowsMerged).exists(_.value > 0))
+
+  /** True when `plan` scanned and no scan of it decoded columnar. */
+  def readRowWise(plan: SparkPlan): Boolean = {
+    val scans = scanNodes(plan)
+    scans.nonEmpty && !scans.exists(_.supportsColumnar)
+  }
+
+  /** The executed plan of a streaming query's last micro-batch. */
+  def lastBatchPlan(q: org.apache.spark.sql.streaming.StreamingQuery): SparkPlan =
+    q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+      .streamingQuery.lastExecution.executedPlan
+
   override def afterAll(): Unit = () // session shared across suites
 }
 
 object SparkSpec {
+  private object Plans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
   lazy val session: SparkSession = {
     val warehouse = java.nio.file.Files.createTempDirectory("graft-wh").toString
     System.setProperty("derby.system.home", warehouse)
