@@ -111,55 +111,30 @@ object Queries {
     p
   }
 
-  /** Build a log store THROUGH the exactly-once streaming sink once
-    * per sfDir (file stream source → canonical frame → LogCommits
-    * marker commits) — the fixture behind `stream_log_ingest`. The
+  /** The events table drained once per sfDir through one streaming
+    * sink into `graft-<kind>/<key>` (checkpoint beside it): `ingest`
+    * takes (session, source parquet, target, checkpoint). The
     * committed-epochs check makes re-runs free; a crashed build has no
     * commit markers, so it is rebuilt from the checkpoint (replaying
-    * the interrupted epoch exactly once).
+    * the interrupted epoch exactly once). The key never starts with `_`
+    * or `.`, so Spark's file index never takes the target for a hidden
+    * directory. The fixtures:
+    *  - `logingest`: file stream source → canonical frame → LogCommits
+    *    marker commits, behind `stream_log_ingest`;
+    *  - `lognative`: the native DSv2 sink (`writeStream.format("esdblog")`),
+    *    behind `stream_log_native`;
+    *  - `storenative`: its STORE-layout twin (`writeStream.format("esdb")`:
+    *    dot-staged per-space epoch files, marker commits, manifest
+    *    deltas), read back Sort-free, behind `stream_store_native`.
     */
-  private def ensureIngestedLog(s: SparkSession, dir: String): String = synchronized {
-    val key = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    val p = s"${System.getProperty("java.io.tmpdir")}/graft-logingest/$key"
+  private def ensureStreamed(s: SparkSession, dir: String, kind: String)
+                            (ingest: (SparkSession, String, String, String) => Unit): String = synchronized {
+    val key = "sf" + dir.replaceAll("[^A-Za-z0-9._-]", "_")
+    val p = s"${System.getProperty("java.io.tmpdir")}/graft-$kind/$key"
     val root = new org.apache.hadoop.fs.Path(p)
     val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (graft.engine.LogCommits.committedEpochs(fs, root).isEmpty) {
-      graft.streaming.StreamIngest.ingestLogAvailableNow(
-        s, s"$dir/events.parquet", p, s"$p-ckpt")
-    }
-    p
-  }
-
-  /** [[ensureIngestedLog]]'s twin through the NATIVE DSv2 streaming
-    * sink (`writeStream.format("esdblog")`) — the fixture behind
-    * `stream_log_native`.
-    */
-  private def ensureNativeLog(s: SparkSession, dir: String): String = synchronized {
-    val key = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    val p = s"${System.getProperty("java.io.tmpdir")}/graft-lognative/$key"
-    val root = new org.apache.hadoop.fs.Path(p)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (graft.engine.LogCommits.committedEpochs(fs, root).isEmpty) {
-      graft.streaming.StreamIngest.ingestLogNative(
-        s, s"$dir/events.parquet", p, s"$p-ckpt")
-    }
-    p
-  }
-
-  /** [[ensureNativeLog]]'s STORE-layout twin — the fixture behind
-    * `stream_store_native`: the events table drained through
-    * `writeStream.format("esdb")` (dot-staged per-space epoch files,
-    * marker commits, manifest deltas), then read back Sort-free.
-    */
-  private def ensureNativeStore(s: SparkSession, dir: String): String = synchronized {
-    val key = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    val p = s"${System.getProperty("java.io.tmpdir")}/graft-storenative/$key"
-    val root = new org.apache.hadoop.fs.Path(p)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (graft.engine.LogCommits.committedEpochs(fs, root).isEmpty) {
-      graft.streaming.StreamIngest.ingestStoreNative(
-        s, s"$dir/events.parquet", p, s"$p-ckpt")
-    }
+    if (graft.engine.LogCommits.committedEpochs(fs, root).isEmpty)
+      ingest(s, s"$dir/events.parquet", p, s"$p-ckpt")
     p
   }
 
@@ -1397,7 +1372,8 @@ object Queries {
     // then iterated back — must equal the raw table in id order, which
     // proves the sink's sorted layout, manifest, and commit visibility
     QuerySpec("stream_log_ingest",
-      (s, d) => EventLog.iterate(graft.engine.EsdbWriter.readLog(s, ensureIngestedLog(s, d)))
+      (s, d) => EventLog.iterate(graft.engine.EsdbWriter.readLog(s,
+        ensureStreamed(s, d, "logingest")(graft.streaming.StreamIngest.ingestLogAvailableNow)))
         .select("event_id", "ts_us", "space", "grouping", "value", "payload"),
       Some("""SELECT event_id, epoch_us(ts) AS ts_us, event_type AS space,
              |       CAST(user_id AS VARCHAR) AS grouping, value, props AS payload
@@ -1409,7 +1385,8 @@ object Queries {
     // required distribution) — the same lossless-round-trip oracle over
     // the other sink implementation
     QuerySpec("stream_log_native",
-      (s, d) => EventLog.iterate(graft.engine.EsdbWriter.readLog(s, ensureNativeLog(s, d)))
+      (s, d) => EventLog.iterate(graft.engine.EsdbWriter.readLog(s,
+        ensureStreamed(s, d, "lognative")(graft.streaming.StreamIngest.ingestLogNative)))
         .select("event_id", "ts_us", "space", "grouping", "value", "payload"),
       Some("""SELECT event_id, epoch_us(ts) AS ts_us, event_type AS space,
              |       CAST(user_id AS VARCHAR) AS grouping, value, props AS payload
@@ -1423,7 +1400,7 @@ object Queries {
     // the batch writer establishes, which the oracle pins
     QuerySpec("stream_store_native",
       (s, d) => {
-        val p = ensureNativeStore(s, d)
+        val p = ensureStreamed(s, d, "storenative")(graft.streaming.StreamIngest.ingestStoreNative)
         EventStore.scan(graft.engine.EsdbWriter.readOrdered(s, p), Space, Grouping)
           .select("event_id", "ts_us", "value", "payload")
       },

@@ -470,26 +470,29 @@ object EsdbWriter {
     * it (see [[subpartsOf]]).
     *
     * Job shape: the data write (one shuffle to the layout's tasks, one
-    * write job), then [[writeSidecars]] once — the written files'
-    * footers read on the driver for the ts-range rows, and one distinct
-    * query over the staged files' (space, grouping) columns, read with
-    * the schema sidecar the data write just laid down (no inference job).
+    * write job), then [[writeSidecars]] once, on the driver — the
+    * written files' footers for the ts-range rows, and the (space,
+    * grouping) pairs the write observed for the groupings rows.
     */
   def write(ev: DataFrame, path: String, indexAttrs: Seq[String] = Nil,
             subparts: Int = 1, clusterBy: Seq[String] = Nil,
             clusterChunks: Int = 8, assignFieldIds: Boolean = true,
             clusterCurve: String = "range"): Unit = {
-    writeData(ev, path, indexAttrs, subparts, clusterBy, clusterChunks, assignFieldIds, clusterCurve)
-    writeSidecars(ev.sparkSession, path, Created)
+    val pairs = writeData(ev, path, indexAttrs, subparts, clusterBy, clusterChunks,
+      assignFieldIds, clusterCurve)
+    writeSidecars(ev.sparkSession, path, Created(pairs))
   }
 
   /** The data half of [[write]]: lay the files out, then the layout
     * markers and the schema sidecar. Copy-on-write paths call it
     * directly and build their sidecars once, from the staged version.
+    * Returns the distinct (space, grouping) pairs the write saw, with
+    * those of `pairsOf` ([[writeLayout]]).
     */
   private def writeData(ev: DataFrame, path: String, indexAttrs: Seq[String],
                         subparts: Int, clusterBy: Seq[String], clusterChunks: Int,
-                        assignFieldIds: Boolean, clusterCurve: String): Unit = {
+                        assignFieldIds: Boolean, clusterCurve: String,
+                        pairsOf: Option[DataFrame] = None): Seq[(String, String)] = {
     require(subparts >= 1, s"subparts must be >= 1, got $subparts")
     require(Clustering.Curves(clusterCurve),
       s"unknown cluster curve '$clusterCurve' — ${Clustering.Curves.mkString(" or ")}")
@@ -519,31 +522,70 @@ object EsdbWriter {
     // "sidecar has IDs" always implies "every file is stamped"
     val idSchema = if (assignFieldIds) FieldIds.assign(indexed0.schema) else indexed0.schema
     val indexed = FieldIds.decorate(indexed0, idSchema)
-    // bloom-filter every index column, both newly-derived and already-
-    // materialized ones (rewrites/compaction carry idx_* columns in)
-    val idxCols = indexed.columns.filter(_.startsWith("idx_")).map(_.drop(4)).toSeq
-    val (parted, partCols) = partitionForWrite(indexed, subparts,
-      if (clusterBy.isEmpty) Clustering.none else Clustering(clusterBy, clusterChunks, clusterCurve))
-    val writer = parted.write
-      .mode(SaveMode.ErrorIfExists)
-      .partitionBy(partCols: _*)
-    // parquet bloom filters on the secondary-index columns: min/max
-    // stats can't skip row groups for high-cardinality point lookups
-    // (values interleave across the sort order), blooms can — this is
-    // the storage-level analog of the reference's per-index location
-    // lists (space_writer.go:47-49), built by parquet instead of us
-    idxCols.foldLeft(writer) { (w, name) =>
-      w.option(s"parquet.bloom.filter.enabled#idx_$name", "true")
-    }.parquet(path)
+    val cluster =
+      if (clusterBy.isEmpty) Clustering.none else Clustering(clusterBy, clusterChunks, clusterCurve)
+    val pairs = writeLayout(indexed, path, SaveMode.ErrorIfExists, subparts, cluster, pairsOf)
     if (subparts > 1) {
       val m = new org.apache.hadoop.fs.Path(path, SubpartsMarker)
       val out = m.getFileSystem(hconf(ev.sparkSession)).create(m, true)
       try out.write(subparts.toString.getBytes("UTF-8")) finally out.close()
     }
-    writeClusterMarker(hconf(ev.sparkSession), path,
-      if (clusterBy.isEmpty) Clustering.none else Clustering(clusterBy, clusterChunks, clusterCurve))
+    writeClusterMarker(hconf(ev.sparkSession), path, cluster)
     writeSchemaManifest(hconf(ev.sparkSession), path, indexed.schema)
+    pairs
   }
+
+  /** Marks the rows of [[writeLayout]]'s `pairsOf` while they ride the
+    * write's shuffle.
+    */
+  private val PairsOnly = "__pairs_only"
+
+  /** The one data write of [[write]], [[append]] and every copy-on-write
+    * rewrite: `indexed` repartitioned and sorted to the layout
+    * ([[partitionForWrite]]) and written under `path`, a parquet bloom
+    * filter on every secondary-index column. Returns the distinct
+    * (space, grouping) pairs of the written rows, observed in the write
+    * stage itself: past the shuffle, where a range partitioner's
+    * sampling job never evaluates it, so the write runs no extra job.
+    *
+    * `pairsOf` holds (space, grouping) rows whose pairs must be returned
+    * too without being written — a rewrite's carried files in a space
+    * it also rewrote. They ride the same shuffle tagged and leave just
+    * before the writer, so the written data never sees them and a write
+    * whose own rows are all filtered out still reports their pairs (an
+    * empty data stage would let adaptive execution drop the observation).
+    */
+  private def writeLayout(indexed: DataFrame, path: String, mode: SaveMode, subparts: Int,
+                          cluster: Clustering, pairsOf: Option[DataFrame]): Seq[(String, String)] = {
+    val seen = Observation()
+    val tagged = pairsOf.fold(indexed)(p => indexed.withColumn(PairsOnly, lit(false))
+      .unionByName(p.select(col("space"), col("grouping"), lit(true).as(PairsOnly)),
+        allowMissingColumns = true))
+    val (parted, partCols) = partitionForWrite(tagged, subparts, cluster)
+    val observed = parted.observe(seen, collect_set(struct(col("space"), col("grouping"))))
+    val rows =
+      if (pairsOf.isEmpty) observed
+      else FieldIds.decorate(observed.where(!col(PairsOnly)).drop(PairsOnly), indexed.schema)
+    // parquet bloom filters on the secondary-index columns: min/max
+    // stats can't skip row groups for high-cardinality point lookups
+    // (values interleave across the sort order), blooms can — this is
+    // the storage-level analog of the reference's per-index location
+    // lists (space_writer.go:47-49), built by parquet instead of us
+    indexed.columns.filter(_.startsWith("idx_"))
+      .foldLeft(rows.write.mode(mode).partitionBy(partCols: _*)) { (w, c) =>
+        w.option(s"parquet.bloom.filter.enabled#$c", "true")
+      }.parquet(path)
+    // a write that ran no data stage (no rows at all) reports no row
+    val m = metricsOf(seen)
+    if (m.length == 0) Nil
+    else m.getSeq[org.apache.spark.sql.Row](0).map(r => (r.getString(0), r.getString(1)))
+  }
+
+  /** The metrics row of an [[Observation]] whose query has run: the
+    * session's listener delivers it just after the query returns.
+    */
+  private def metricsOf(o: Observation): org.apache.spark.sql.Row =
+    scala.concurrent.Await.result(o.future, scala.concurrent.duration.Duration(5, "min"))
 
   /** The data write of a copy-on-write rewrite: `rows` laid out under
     * the prior version's subpartitioning and clustering, the chunk
@@ -551,11 +593,13 @@ object EsdbWriter {
     * and no fresh field IDs stamped (carried files keep theirs).
     */
   private def rewriteData(rows: DataFrame, tmp: String, src: String,
-                          subsetBytes: Long, totalBytes: Long): Unit = {
+                          subsetBytes: Long, totalBytes: Long,
+                          pairsOf: Option[DataFrame]): Seq[(String, String)] = {
     val conf = hconf(rows.sparkSession)
     val cl = clusterChunksFor(clusterOf(conf, src), subsetBytes, totalBytes)
     writeData(if (rows.columns.contains("bucket")) rows.drop("bucket") else rows, tmp, Nil,
-      subpartsOf(conf, src), cl.cols, math.max(1, cl.chunks), assignFieldIds = false, cl.curve)
+      subpartsOf(conf, src), cl.cols, math.max(1, cl.chunks), assignFieldIds = false, cl.curve,
+      pairsOf)
   }
 
   /** A rewrite that writes no rows still stages a version: the prior
@@ -782,12 +826,10 @@ object EsdbWriter {
     * files it rewrites and those it carries byte-for-byte (a file in
     * neither is dropped), and its new rows. `share` is the (rewritten,
     * total) bytes a clustered store scales its chunk count by — by
-    * default the rewrite's share of the version. `pairsKept`: the
-    * rewrite provably keeps the (space, grouping) pair set.
+    * default the rewrite's share of the version.
     */
   private final case class Plan(rewrite: Seq[LiveFile], carry: Seq[LiveFile], rows: Rows,
-                                share: Option[(Long, Long)] = None,
-                                pairsKept: Boolean = false)
+                                share: Option[(Long, Long)] = None)
 
   /** Rows that are the rewritten files' rows through `f`. */
   private def mapped(f: DataFrame => DataFrame): Rows =
@@ -806,7 +848,12 @@ object EsdbWriter {
     *
     * The store's layout decides the three steps that differ. A store
     * lists its `space=` files, writes through [[rewriteData]] under
-    * its prior layout and derives its sidecars with [[writeSidecars]].
+    * its prior layout and derives its sidecars with [[writeSidecars]]
+    * from the pairs the write observed. A space that loses a file
+    * (rewritten or dropped) has its groupings rebuilt from those pairs,
+    * so its carried files' (space, grouping) columns ride the write's
+    * shuffle as `pairsOf`; when the plan writes no rows they still do,
+    * through a write of zero rows.
     * A log (a version with a log manifest) lists its visible files,
     * writes `event_id`-range-partitioned sorted files, writes its log
     * manifest as one part (the prior's rows for the carried files plus
@@ -827,32 +874,39 @@ object EsdbWriter {
     plan(Version(src, conf, files)) match {
       case None => false
       case Some(p) =>
+        val carried = p.carry.map(_.rel).toSet
+        val shrunk = files.filterNot(f => carried(f.rel)).flatMap(_.space).toSet
         Publish.publish(conf, path, keepVersions, expectedVersion = head) { tmp =>
+          val pairsOf = Some(p.carry.filter(_.space.exists(shrunk))).filter(_.nonEmpty)
+            .map(in => readFullWidth(spark, src, in.map(_.path.toString)))
           val tmpPath = new org.apache.hadoop.fs.Path(tmp)
           // a log's manifest dir is its layout marker, rows or not
           if (isLog) fs.mkdirs(new org.apache.hadoop.fs.Path(tmpPath, LogManifest))
-          var wrote = false
+          var pairs = Option.empty[Seq[(String, String)]]
+          def storeWrite(rows: DataFrame): Unit = {
+            val (subset, total) =
+              p.share.getOrElse((bytesOf(p.rewrite), math.max(1L, bytesOf(files))))
+            pairs = Some(rewriteData(rows, tmp, src, subset, total, pairsOf))
+          }
           p.rows(Option.when(p.rewrite.nonEmpty)(() =>
             readFullWidth(spark, src, p.rewrite.map(_.path.toString))), { rows =>
-            wrote = true
             if (isLog)
               rows.repartitionByRange(rewritePartitions(spark, bytesOf(p.rewrite)), col("event_id"))
                 .sortWithinPartitions(col("event_id"))
                 .write.mode(SaveMode.Append).parquet(tmp)
-            else {
-              val (subset, total) =
-                p.share.getOrElse((bytesOf(p.rewrite), math.max(1L, bytesOf(files))))
-              rewriteData(rows, tmp, src, subset, total)
-            }
+            else storeWrite(rows)
           })
-          if (!wrote && !isLog) copyLayoutMarkers(fs, conf, src, tmp)
+          if (pairs.isEmpty && !isLog) pairsOf match {
+            case Some(read) => storeWrite(read.limit(0))
+            case None => copyLayoutMarkers(fs, conf, src, tmp)
+          }
           carryData(fs, conf, path, tmpPath, p.carry.map(f => f.rel -> f.path))
           carryStreamCommits(conf, src, tmp)
           if (isLog) {
             refreshLogManifest(spark, tmp, carriedRows(conf, src, LogManifest,
-              LogManifestSchema, p.carry.map(_.rel).toSet))
+              LogManifestSchema, carried))
             unionPriorSchema(conf, src, tmp)
-          } else writeSidecars(spark, tmp, Rewritten(src, files, p.pairsKept))
+          } else writeSidecars(spark, tmp, Rewritten(src, files, shrunk, pairs.getOrElse(Nil)))
         }: Unit
         true
     }
@@ -867,8 +921,7 @@ object EsdbWriter {
     * one `_CARRY` line ([[carryData]]) — no decode/sort/encode, no
     * bytes through the cluster. Relative file paths are preserved by
     * the carry, so the carried files' ts-range rows carry over as they
-    * are. Compaction never changes the (space, grouping) pair set, so
-    * the groupings sidecar carries whole. Same snapshot
+    * are. Same snapshot
     * guarantees as [[compact]]: one pointer-commit publishes the new
     * version, a crash leaves readers on the previous one.
     *
@@ -889,7 +942,7 @@ object EsdbWriter {
       // width back to one file per space/bucket, blooms rebuilt, at the
       // declared chunk count (the byte share is the whole store's)
       Option.when(frag.nonEmpty)(Plan(frag.flatten, keep.flatten, mapped(identity),
-        share = Some((1L, 1L)), pairsKept = true))
+        share = Some((1L, 1L))))
     }
   }
 
@@ -1200,23 +1253,26 @@ object EsdbWriter {
               // rows with no source key are kept, matched target rows are
               // replaced (a key may match several — keys need not be a
               // target PK), and source keys with no target row are inserts.
-              // Cached for the write's duration: the counts and the rewrite
-              // both read it, so the parquet scan and the join run once
+              // The write counts both while it reads the join: observed
+              // below a cache its first job materializes, so a range-
+              // partitioned write's sampling pass cannot count a row twice
               // (churn-bounded, disk-spillable)
               val k = keys.indices.map(i => s"__merge_k$i")
               val keyed = source.select(keys.zip(k).map { case (c, a) => col(c).as(a) } :+
                 lit(true).as("__merge_s"): _*)
+              val tally = Observation()
               val cached = read()
                 .withColumn("__merge_t", lit(true))
                 .join(keyed, keys.zip(k).map { case (c, a) => col(c) === col(a) }.reduce(_ && _),
                   "full_outer")
+                .observe(tally, count(when(col("__merge_t") && col("__merge_s"), lit(1))),
+                  count(when(col("__merge_t").isNull, lit(1))))
                 .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
               try {
-                val m = cached.agg(count(when(col("__merge_t") && col("__merge_s"), lit(1))),
-                  count(when(col("__merge_t").isNull, lit(1)))).head()
-                counts = (m.getLong(0), m.getLong(1))
                 write(cached.where(col("__merge_s").isNull).drop(k ++ Seq("__merge_t", "__merge_s"): _*)
                   .unionByName(inserts, allowMissingColumns = true))
+                val m = metricsOf(tally)
+                counts = (m.getLong(0), m.getLong(1))
               } finally { cached.unpersist(): Unit }
           }
         }))
@@ -1357,66 +1413,68 @@ object EsdbWriter {
   }
 
   /** How a publish's data files relate to the version they land in —
-    * what [[writeSidecars]] carries, extends or rebuilds.
+    * what [[writeSidecars]] carries, extends or rebuilds. `pairs` are
+    * the distinct (space, grouping) pairs the publish's data write
+    * observed ([[writeLayout]]).
     */
   private sealed trait SidecarChange
   /** [[write]]: the version holds only the files this write produced. */
-  private case object Created extends SidecarChange
-  /** In-place append: `written` landed beside the version's files and
-    * `pairs` are the batch's distinct (space, grouping) pairs.
-    */
+  private final case class Created(pairs: Seq[(String, String)]) extends SidecarChange
+  /** In-place append: `written` landed beside the version's files. */
   private final case class Appended(written: Seq[(String, org.apache.hadoop.fs.Path)],
-                                    pairs: DataFrame) extends SidecarChange
+                                    pairs: Seq[(String, String)]) extends SidecarChange
   /** Copy-on-write: the version was staged from `prior`, whose live
     * files were `priorFiles`. File names are write-unique, so a rel in
     * both listings was carried and the rest were written or removed.
-    * `pairsKept`: the rewrite provably kept the pair set (compaction).
+    * `shrunk`: the spaces that lost a prior file; their carried files'
+    * pairs are among `pairs`.
     */
   private final case class Rewritten(prior: String, priorFiles: Seq[LiveFile],
-                                     pairsKept: Boolean) extends SidecarChange
+                                     shrunk: Set[String],
+                                     pairs: Seq[(String, String)]) extends SidecarChange
 
   /** The one sidecar step of every publishing path, run once after its
-    * data write (and, for a rewrite, after the carry):
+    * data write (and, for a rewrite, after the carry), all on the
+    * driver:
     *  - schema: a rewrite unions the prior version's sidecar in, so
     *    columns living only in carried files stay declared;
     *  - ts-range: one new part per publish ([[refreshTsRangeManifest]]):
     *    rows for the written files, plus, in a rewrite, the prior's rows
     *    for the carried ones (rel paths carry unchanged), so a rewritten
     *    version's sidecar is one part however long its history;
-    *  - groupings: an append adds its batch's pairs; a rewrite rebuilds
-    *    the pairs of the spaces whose files it wrote or removed
-    *    ([[refreshGroupingsManifestFor]]) and carries the rest; a
-    *    version with no data files keeps no groupings sidecar.
+    *  - groupings: one new part of the observed pairs; a rewrite adds
+    *    the prior's rows for the spaces that lost no file (all their
+    *    files carried), so its sidecar is one part too. A version with
+    *    no data files keeps no groupings sidecar, and a rewrite of a
+    *    version without one writes none.
     */
   private def writeSidecars(spark: SparkSession, root: String, change: SidecarChange): Unit = {
     val conf = hconf(spark)
     val rootPath = new org.apache.hadoop.fs.Path(root)
     val fs = rootPath.getFileSystem(conf)
     def live = if (fs.exists(rootPath)) storeDataFiles(fs, rootPath) else Nil
+    def writePairs(rows: Seq[org.apache.spark.sql.Row]): Unit =
+      writeSidecarPart(conf, root, GroupingsManifest, PairsSchema, rows.distinct)
+    def pairRows(pairs: Seq[(String, String)]) =
+      pairs.map { case (sp, g) => org.apache.spark.sql.Row(sp, g) }
     change match {
-      case Created =>
-        val files = live
-        refreshTsRangeManifest(spark, root, files.map(f => f._1 -> f._2.getPath))
-        if (files.nonEmpty) refreshGroupingsManifestFor(spark, root, files, None)
-      case Appended(written, pairs) if written.nonEmpty =>
+      case Created(pairs) =>
+        refreshTsRangeManifest(spark, root, live.map(f => f._1 -> f._2.getPath))
+        writePairs(pairRows(pairs))
+      case Appended(written, pairs) =>
         refreshTsRangeManifest(spark, root, written)
-        pairs.write.mode(SaveMode.Append).parquet(s"$root/$GroupingsManifest")
-      case Appended(_, _) => () // an empty batch wrote no files
-      case Rewritten(prior, priorFiles, pairsKept) =>
+        if (written.nonEmpty) writePairs(pairRows(pairs))
+      case Rewritten(prior, priorFiles, shrunk, pairs) =>
         unionPriorSchema(conf, prior, root)
         val files = live
         if (files.nonEmpty) {
           val before = priorFiles.map(_.rel).toSet
-          val after = files.map(_._1).toSet
           val (kept, written) = files.partition(f => before(f._1))
           refreshTsRangeManifest(spark, root, written.map(f => f._1 -> f._2.getPath),
             carriedRows(conf, prior, TsRangeManifest, TsRangeSchema, kept.map(_._1).toSet))
-          val touched =
-            if (pairsKept) Set.empty[String]
-            else written.map(_._3).toSet ++ priorFiles.filterNot(f => after(f.rel)).flatMap(_.space)
-          refreshGroupingsManifestFor(spark, root, files,
-            Some(prior).filter(p => fs.exists(new org.apache.hadoop.fs.Path(p, GroupingsManifest)))
-              .map(_ -> touched))
+          readSidecar(conf, prior, GroupingsManifest, PairsSchema).foreach { rows =>
+            writePairs(rows.filterNot(r => shrunk(r.getString(0))) ++ pairRows(pairs))
+          }
         }
     }
   }
@@ -1437,50 +1495,6 @@ object EsdbWriter {
                           carried: Set[String]): Seq[org.apache.spark.sql.Row] =
     readSidecar(conf, prior, name, schema).getOrElse(Nil).filter(r => carried(r.getString(0)))
 
-  /** The groupings sidecar — the analog of the reference's key index:
-    * `Db.Iterate`/`Space.Iterate` are index-only reads there
-    * (esdb.go:63-76, space.go:45-60), so enumeration here must not scan
-    * event data either. Readers distinct across part files.
-    *
-    * Built by ONE query: the prior version's rows for untouched spaces
-    * (`prior` = (root, touched spaces); None rebuilds every space)
-    * unioned with the distinct pairs of the touched spaces' live files
-    * in the staged version — two small dictionary-encoded columns, read
-    * with the schema sidecar, so no inference job. Cost follows the
-    * rewrite footprint's spaces, not the store. With nothing touched
-    * the prior's part files copy over under their own names (fresh parts
-    * are UUID-named, so they never collide) and no job runs.
-    */
-  private def refreshGroupingsManifestFor(spark: SparkSession, root: String,
-                                          files: Seq[(String, org.apache.hadoop.fs.FileStatus, String)],
-                                          prior: Option[(String, Set[String])]): Unit = {
-    prior match {
-      case Some((p, touched)) if touched.isEmpty =>
-        val conf = hconf(spark)
-        val dst = new org.apache.hadoop.fs.Path(root, GroupingsManifest)
-        val fs = dst.getFileSystem(conf)
-        sidecarParts(fs, new org.apache.hadoop.fs.Path(p, GroupingsManifest)).foreach { f =>
-          org.apache.hadoop.fs.FileUtil.copy(fs, f.getPath, fs,
-            new org.apache.hadoop.fs.Path(dst, f.getPath.getName), false, conf): Unit
-        }
-      case _ =>
-        val staged = prior match {
-          case None => Some(readFullWidth(spark, root))
-          case Some((_, touched)) => Some(files.filter(f => touched(f._3))).filter(_.nonEmpty)
-            .map(fs => readFullWidth(spark, root, fs.map(_._2.getPath.toString)))
-        }
-        // metadata stripped: store-derived columns carry field IDs the
-        // bare pair files do not
-        val rescanned = staged.map(_.select(
-          col("space").as("space", org.apache.spark.sql.types.Metadata.empty),
-          col("grouping").as("grouping", org.apache.spark.sql.types.Metadata.empty)))
-        val untouched = prior.flatMap { case (p, touched) =>
-          groupingsRows(spark, p).map(_.where(!col("space").isin(touched.toSeq: _*))) }
-        (untouched ++ rescanned).reduceOption(_ unionByName _).foreach(_.distinct()
-          .write.mode(SaveMode.Overwrite).parquet(s"$root/$GroupingsManifest"))
-    }
-  }
-
   /** The sidecars' fixed schemas: reads never infer them (no footer
     * job), and `null_free` is nullable so rows written before it
     * existed read null — "unknown", the conservative answer.
@@ -1490,21 +1504,12 @@ object EsdbWriter {
   private val TsRangeSchema = org.apache.spark.sql.types.StructType.fromDDL(
     "file STRING, min_ts BIGINT, max_ts BIGINT, has_ts BOOLEAN, null_free BOOLEAN")
 
-  /** The groupings sidecar's rows as stored (not distinct) under a
-    * resolved data root, read from its [[sidecarParts]].
-    */
-  private def groupingsRows(spark: SparkSession, root: String): Option[DataFrame] = {
-    val m = new org.apache.hadoop.fs.Path(root, GroupingsManifest)
-    val fs = m.getFileSystem(hconf(spark))
-    if (!fs.exists(m)) None
-    else Some(sidecarParts(fs, m).map(_.getPath.toString) match {
-      case Seq() => spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], PairsSchema)
-      case parts => spark.read.schema(PairsSchema).parquet(parts: _*)
-    })
-  }
-
-  /** The groupings sidecar's (space, grouping) pairs under a resolved
-    * data root, as stored (not distinct), read on the driver
+  /** The groupings sidecar — the analog of the reference's key index:
+    * `Db.Iterate`/`Space.Iterate` are index-only reads there
+    * (esdb.go:63-76, space.go:45-60), so enumeration here must not scan
+    * event data either. Its (space, grouping) pairs under a resolved
+    * data root, as stored (not distinct: readers distinct across
+    * parts), read on the driver
     * ([[readSidecar]]); a null grouping reads as null. None for stores
     * written before manifests existed.
     */
@@ -1551,28 +1556,18 @@ object EsdbWriter {
     // columns (chunk count scaled down is impossible pre-write, so the
     // batch takes the declared count; compaction rebounds file counts)
     val cluster = clusterOf(hconf(ev.sparkSession), root)
-    val (parted, partCols) = partitionForWrite(indexed, subparts, cluster)
-    val writer = parted.write
-      .mode(SaveMode.Append)
-      .partitionBy(partCols: _*)
     // the files this append writes are the listing's new names (file
     // names are write-unique): two driver listings, no job
     val rootPath = new org.apache.hadoop.fs.Path(root)
     val fs = rootPath.getFileSystem(hconf(ev.sparkSession))
     def listed = if (fs.exists(rootPath)) storeDataFiles(fs, rootPath) else Nil
     val before = listed.map(_._1).toSet
-    indexAttrs.foldLeft(writer) { (w, name) =>
-      w.option(s"parquet.bloom.filter.enabled#idx_$name", "true")
-    }.parquet(root)
-    // manifest delta from the batch itself (not a full-store re-read,
-    // which would make append cost grow with store size); metadata
-    // stripped: manifest files stay uniformly bare even when the batch
-    // derives from a store read
+    // manifest delta from the batch itself, observed by its write (not
+    // a full-store re-read, which would make append cost grow with
+    // store size)
+    val pairs = writeLayout(indexed, root, SaveMode.Append, subparts, cluster, None)
     writeSidecars(ev.sparkSession, root, Appended(
-      listed.collect { case (rel, st, _) if !before(rel) => rel -> st.getPath },
-      ev.select(
-        col("space").as("space", org.apache.spark.sql.types.Metadata.empty),
-        col("grouping").as("grouping", org.apache.spark.sql.types.Metadata.empty)).distinct()))
+      listed.collect { case (rel, st, _) if !before(rel) => rel -> st.getPath }, pairs))
     evolved.foreach(s => writeSchemaManifest(hconf(ev.sparkSession), root, s))
   }
 
@@ -2003,10 +1998,8 @@ object EsdbWriter {
     }
     sweepStaged()
     commitEpochMarker(fs, conf, root, epochId, finalNames)
-    import spark.implicits._
     writeSidecars(spark, root.toString, Appended(
-      finalNames.map(rel => rel -> new org.apache.hadoop.fs.Path(root, rel)),
-      pairs.distinct.toDF("space", "grouping")))
+      finalNames.map(rel => rel -> new org.apache.hadoop.fs.Path(root, rel)), pairs))
     mergeSchemaManifest(conf, root.toString, batchSchema)
   }
 
@@ -2169,8 +2162,9 @@ object EsdbWriter {
     val fs = dir.getFileSystem(conf)
     if (!fs.exists(dir)) return None
     Some(sidecarParts(fs, dir).flatMap { part =>
-      val recs = graft.sources.ParquetFiles.records(conf, part.getPath)(
-        s => (s, org.apache.parquet.filter2.compat.FilterCompat.NOOP))
+      val recs = graft.sources.ParquetFiles.records(conf, part.getPath)(s =>
+        (s, org.apache.parquet.filter2.compat.FilterCompat.NOOP,
+          org.apache.parquet.filter2.compat.FilterCompat.NOOP))
       try {
         val idx = schema.fieldNames.map(c =>
           if (recs.schema.containsField(c)) recs.schema.getFieldIndex(c) else -1)
@@ -2664,16 +2658,14 @@ object EsdbWriter {
               // observed; kept is cached so a range-partitioned write's
               // sampling pass cannot count it twice. A mismatch throws
               // before the closure returns, so nothing publishes
-              val footprint = Observation("footprint")
-              val left = Observation("kept")
+              val footprint = Observation()
+              val left = Observation()
               val kept = alignTo(read(), target).observe(footprint, count(lit(1)))
                 .exceptAll(alignTo(deletes0, target)).observe(left, count(lit(1)))
                 .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
               try {
                 write(kept.unionByName(alignTo(inserts0, target)))
-                def n(o: Observation) = scala.concurrent.Await.result(o.future,
-                  scala.concurrent.duration.Duration(5, "min")).getLong(0)
-                val removed = n(footprint) - n(left)
+                val removed = metricsOf(footprint).getLong(0) - metricsOf(left).getLong(0)
                 if (removed != nDel) throw drift(removed)
               } finally { kept.unpersist(): Unit }
           }))

@@ -122,8 +122,8 @@ object EventStore {
     * canonical caller pattern: scan ts-desc, abort at a time bound
     * (Scanner returns false, space.go:14; esdb_test.go:229-232). On an
     * ordered-store frame the ts predicate pushes into the DSv2 source
-    * ([[graft.sources.EsdbScanBuilder]]): parquet row-group skipping +
-    * record filter, and the merge stops at the first row below the
+    * ([[graft.sources.EsdbScanBuilder]]): parquet row-group and page
+    * skipping, and the merge stops at the first row below the
     * bound — work is proportional to the matching suffix, not the
     * grouping's history.
     */

@@ -58,8 +58,10 @@ trait EsdbMergePartition extends InputPartition {
   * micro-batch: each partition k-way merges its files, which were each
   * sorted by the layout's key at write time — the same merge a
   * reference reader does over per-write sorted blocks. A pin and a
-  * bound ride into each file as parquet row-group + record filters;
-  * `limit` stops the merge after N rows.
+  * bound ride into each file as parquet row-group, page and record
+  * filters; the merge enforces the bound per row and, where the bound
+  * can end the merge, sees the rows past it; `limit` stops the merge
+  * after N rows.
   *
   * Record materialization uses parquet-mr's Group API (row-at-a-time,
   * not vectorized) — the right trade for ordered scans, which are
@@ -256,23 +258,25 @@ final class EsdbMergeReader(part: EsdbMergePartition, required: StructType,
     }
   }
 
-  /** The bound → parquet predicates: exact (row-group stats skipping
-    * AND record-level filtering, which also excludes null rows — SQL
-    * comparison semantics). The merge loop re-checks as a second line
-    * of defense and supplies the early exit.
+  /** The bound → parquet predicates (lower, upper). Both skip row
+    * groups and pages. Each also filters records (excluding null rows
+    * too — SQL comparison semantics), except, under an early exit, the
+    * side a file's rows reach last: those records arrive at the merge
+    * loop, which enforces the bound exactly and stops at the first row
+    * past it.
     */
-  private def boundPredicates: Seq[FilterPredicate] = {
+  private def boundPredicates: (Option[FilterPredicate], Option[FilterPredicate]) = {
     val c = FilterApi.longColumn(read.boundCol)
     val b = read.bound
     // each branch ascribed to the public interface: the if-LUB of
     // Gt/GtEq is the package-private Operators.ColumnFilterPredicate,
     // which fails with IllegalAccessError at runtime if referenced
-    b.lower.map(lo =>
+    (b.lower.map(lo =>
       if (b.lowerInclusive) FilterApi.gtEq(c, Long.box(lo)): FilterPredicate
-      else FilterApi.gt(c, Long.box(lo)): FilterPredicate).toSeq ++
+      else FilterApi.gt(c, Long.box(lo)): FilterPredicate),
       b.upper.map(hi =>
         if (b.upperInclusive) FilterApi.ltEq(c, Long.box(hi)): FilterPredicate
-        else FilterApi.lt(c, Long.box(hi)): FilterPredicate)
+        else FilterApi.lt(c, Long.box(hi)): FilterPredicate))
   }
 
   private def open(): Unit = {
@@ -284,7 +288,9 @@ final class EsdbMergeReader(part: EsdbMergePartition, required: StructType,
       case None => None
     }
     // pin + bound (exact, fully handled); hints are added per file
-    val claimedPreds = pinPred.toSeq ++ (if (bounded) boundPredicates else Nil)
+    val (lower, upper) = if (bounded) boundPredicates else (None, None)
+    // an ascending file reaches the upper side last, a descending one the lower
+    val past = if (!exitEarly) None else if (keyAsc(boundAt)) upper else lower
     val claimedCols = pinPred.map(_ => lead).toSeq ++ (if (bounded) Seq(read.boundCol) else Nil)
     // per-file projection: needed columns that exist in THIS file's
     // schema (appends may add idx_* columns later); key columns are
@@ -313,9 +319,11 @@ final class EsdbMergeReader(part: EsdbMergePartition, required: StructType,
           fileSchema.getFields.asScala.filter(f => needed.contains(f.getName) ||
             (f.getId != null && neededIds.contains(f.getId.intValue.toLong))).asJava)
         // hint predicates: best-effort skipping; Spark re-verifies post-scan
-        val preds = claimedPreds ++ read.hints.flatMap { case (c, v) => hintPredicate(fileSchema, c, v) }
-        (projected, preds.reduceOption(FilterApi.and)
-          .fold(FilterCompat.NOOP: FilterCompat.Filter)(fp => FilterCompat.get(fp)))
+        val preds = pinPred.toSeq ++ read.hints.flatMap { case (c, v) => hintPredicate(fileSchema, c, v) }
+        def filter(ps: Seq[FilterPredicate]) = ps.reduceOption(FilterApi.and)
+          .fold(FilterCompat.NOOP: FilterCompat.Filter)(fp => FilterCompat.get(fp))
+        val bound = lower.toSeq ++ upper
+        (projected, filter(preds ++ bound), filter(preds ++ bound.filterNot(past.contains)))
       }
       val c = new Cursor(reader)
       cursors.add(c)
@@ -331,9 +339,9 @@ final class EsdbMergeReader(part: EsdbMergePartition, required: StructType,
       val c = heap.poll()
       if (c == null) return false
       // bound enforcement, exact: a null never satisfies an active
-      // bound (checked on the null flag, not the sort sentinel). The
-      // parquet record filter already excludes these rows; this is the
-      // contract-level check plus the early exit.
+      // bound (checked on the null flag, not the sort sentinel). Under
+      // an early exit parquet does not filter the records past the
+      // bound, so the first of them arrives here.
       val v = c.num(boundAt)
       val isNull = c.isNull(boundAt)
       if (!bounded || (!isNull && read.bound.contains(v))) {

@@ -107,29 +107,31 @@ object ParquetFiles {
 
   /** Open `path` once for a row-at-a-time read. The footer is read a
     * single time: `plan` sees the file's schema and returns the
-    * projection to read and the filter to apply (row-group stats,
-    * dictionaries, page indexes and records), so a caller that needs
+    * projection to read, the filter that skips row groups and pages
+    * (stats, dictionaries, blooms, page indexes), and the filter each
+    * record of the surviving pages must pass, so a caller that needs
     * the schema to decide either never opens the file twice.
     */
   def records(conf: Configuration, path: Path)
-             (plan: MessageType => (MessageType, FilterCompat.Filter)): Records = {
+             (plan: MessageType => (MessageType, FilterCompat.Filter, FilterCompat.Filter)): Records = {
     val file = HadoopInputFile.fromPath(path, conf)
     val in = file.newStream()
     try {
       val footer = ParquetFileReader.readFooter(file, options(conf, path, FilterCompat.NOOP), in)
       val fileSchema = footer.getFileMetaData.getSchema
-      val (projection, filter) = plan(fileSchema)
-      val reader = ParquetFileReader.open(file, footer, options(conf, path, filter), in)
+      val (projection, prune, keep) = plan(fileSchema)
+      val reader = ParquetFileReader.open(file, footer, options(conf, path, prune), in)
       reader.setRequestedSchema(projection)
-      new Records(reader, fileSchema, projection, filter)
+      new Records(reader, fileSchema, projection, keep)
     } catch {
       case t: Throwable => in.close(); throw t
     }
   }
 
-  /** Projected `Group` records of one open file, filtered at row-group,
-    * page and record level; `schema` is the projection, so field
-    * indexes of returned groups are indexes into it.
+  /** Projected `Group` records of one open file, its row groups and
+    * pages pruned and its records passed through `filter`; `schema` is
+    * the projection, so field indexes of returned groups are indexes
+    * into it.
     */
   final class Records private[ParquetFiles] (reader: ParquetFileReader, fileSchema: MessageType,
                                              val schema: MessageType, filter: FilterCompat.Filter)

@@ -128,6 +128,27 @@ class MergeSpec extends SparkSpec {
     assert(EsdbWriter.readOrdered(spark, p).count() == 40 - 6 + 1)
   }
 
+  test("counts stay exact when keys match several rows and the write range-partitions") {
+    // a clustered store's write samples its range bounds first: the
+    // counts the write observes must still count each row once
+    val p = freshDir("mergecounts") + "/t"
+    Publish.publish(spark.sparkContext.hadoopConfiguration, p, keepVersions = 8) { tmp =>
+      EsdbWriter.write(ev(1 to 300), tmp, clusterBy = Seq("value"), clusterChunks = 4)
+    }: Unit
+    val source = Seq(("s0", "g3", 1000L, 9001L, 1.0, "{}"), ("s1", "g5", 2000L, 9002L, 2.0, "{}"),
+      ("s2", "gnew", 3000L, 9003L, 3.0, "{}"))
+      .toDF("space", "grouping", "ts_us", "event_id", "value", "payload")
+    val target = ev(1 to 300)
+    val matched = target.where($"grouping".isin("g3", "g5")).count()
+    assert(matched > 60)
+    val (r, i) = EsdbWriter.mergeInto(spark, p, source, Seq("grouping"), keepVersions = 8)
+    assert((r, i) == (matched, 1L))
+    val after = EsdbWriter.readOrdered(spark, p)
+    assert(after.count() == 300 - matched + 3)
+    assert(after.where($"grouping".isin("g3", "g5", "gnew")).select("event_id").as[Long]
+      .collect().toSet == Set(9001L, 9002L, 9003L))
+  }
+
   test("refusals: duplicate source keys, null keys, unknown columns, sealed store") {
     val p = versioned("mergebad", ev(1 to 20))
     val dup = Seq(("s1", "g1", 1L, 5L, 1.0, "{}"), ("s2", "g2", 2L, 5L, 2.0, "{}"))

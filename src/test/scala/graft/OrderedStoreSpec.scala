@@ -88,6 +88,27 @@ class OrderedStoreSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
   }
 
+  test("a grouping-pinned ts bound stops the merge at the first row past it") {
+    val prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
+    spark.conf.set("spark.sql.adaptive.enabled", "false") // executedPlan stays inspectable
+    try {
+      val q = EventStore.scanSince(ordered, "s1", "g3", 25000L).select("event_id", "ts_us")
+      val rows = q.collect().toSeq.map(r => (r.getLong(0), r.getLong(1)))
+      assert(rows.nonEmpty && rows == EventStore.scanSince(vanilla, "s1", "g3", 25000L)
+        .select("event_id", "ts_us").as[(Long, Long)].collect().toSeq)
+      val scan = q.queryExecution.executedPlan.collectFirst {
+        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
+      }.get
+      import graft.sources.EsdbMetrics
+      // no limit: only the bound can stop the reader before EOF, one
+      // row past it per file at most
+      val grouping = vanilla.where($"space" === "s1" && $"grouping" === "g3").count()
+      assert(scan.metrics(EsdbMetrics.EarlyExits).value == 1, scan.metrics)
+      assert(scan.metrics(EsdbMetrics.RowsMerged).value <= rows.size + 2, scan.metrics)
+      assert(rows.size < grouping)
+    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+  }
+
   test("space predicate prunes to one directory (one partition, SinglePartition plan)") {
     val q = ordered.where(col("space") === "s2")
     assert(q.rdd.getNumPartitions == 1)

@@ -89,7 +89,8 @@ class SidecarSpec extends SparkSpec {
       d.getPath.getName -> fs.listStatus(d.getPath).toSeq.map(_.getPath.getName)
         .filterNot(n => n.startsWith("_") || n.startsWith("."))
     }.toMap
-    Seq(EsdbWriter.TsRangeManifest, EsdbWriter.LogManifest).filter(parts.contains).foreach { m =>
+    Seq(EsdbWriter.TsRangeManifest, EsdbWriter.LogManifest, EsdbWriter.GroupingsManifest)
+        .filter(parts.contains).foreach { m =>
       assert(parts(m).size == 1, s"$what: $m holds ${parts(m).size} parts: ${parts(m)}")
     }
     parts.foreach { case (m, names) =>
@@ -184,6 +185,75 @@ class SidecarSpec extends SparkSpec {
     assertSidecars(p, "mergeInto")
   }
 
+  /** A store whose every space holds two files: `first` written, then
+    * `second` appended in place.
+    */
+  private def twoFilesPerSpace(first: DataFrame, second: DataFrame): String = {
+    val p = versioned(first)
+    EsdbWriter.append(second, p)
+    val root = new org.apache.hadoop.fs.Path(EsdbWriter.dataRoot(spark, p))
+    val files = EsdbWriter.storeDataFiles(root.getFileSystem(spark.sparkContext.hadoopConfiguration), root)
+    assert(files.groupBy(_._3).values.forall(_.size == 2), files.map(_._1))
+    p
+  }
+
+  test("a predicate delete that rewrites one file of a space and carries another") {
+    import org.apache.spark.sql.sources.GreaterThanOrEqual
+    val late = events(201 to 260).withColumn("grouping", lit("late"))
+    // stats carry each space's first file and rewrite its second, which
+    // keeps some of its rows
+    val p = twoFilesPerSpace(events(1 to 200), late)
+    EsdbWriter.deleteWhere(spark, p, Seq(GreaterThanOrEqual("event_id", 231L)))
+    assertSidecars(p, "partial rewrite beside a carried file")
+    // the second files lose every row: their pairs leave, the carried
+    // files' pairs stay
+    EsdbWriter.deleteWhere(spark, p, Seq(GreaterThanOrEqual("event_id", 201L)))
+    assertSidecars(p, "empty rewrite beside a carried file")
+    assert(!EsdbWriter.manifestGroupings(spark, p).get.exists(_._2 == "late"))
+  }
+
+  test("a drop-only retention step that carries another file of the space") {
+    def at(ids: Range, g: String, tsBase: Long) = ids.map { i =>
+      (s"s${i % 3}", g, tsBase + i, i.toLong, 0.0, "{}")
+    }.toDF("space", "grouping", "ts_us", "event_id", "value", "payload")
+    val p = twoFilesPerSpace(at(1 to 60, "old", 0L), at(61 to 120, "new", 1000000L))
+    // every old file is wholly expired and null-free: dropped unread;
+    // every new file survives whole: carried; nothing is written
+    EsdbWriter.deleteOlderThan(spark, p, 500000L)
+    assert(EsdbWriter.read(spark, p).count() == 60)
+    assertSidecars(p, "drop-only retention")
+    assert(EsdbWriter.manifestGroupings(spark, p).get.map(_._2).toSet == Set("new"))
+  }
+
+  test("a MERGE that moves a matched row to another grouping drops the old pair") {
+    val p = versioned(events(1 to 120).withColumn("grouping",
+      when(col("event_id") === 7L, lit("solo")).otherwise(col("grouping"))))
+    val (replaced, inserted) = EsdbWriter.mergeInto(spark, p,
+      Seq(("s3", "moved", 7000L, 7L, 1.0, "{}"))
+        .toDF("space", "grouping", "ts_us", "event_id", "value", "payload"), Seq("event_id"))
+    assert((replaced, inserted) == (1L, 0L))
+    assertSidecars(p, "MERGE moving a grouping")
+    val pairs = EsdbWriter.manifestGroupings(spark, p).get.toSet
+    assert(pairs.contains(("s3", "moved")) && !pairs.exists(_._2 == "solo"), pairs)
+  }
+
+  test("a store-sink epoch that adds a grouping extends the sidecars") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val p = tmp("sidecarsink")
+    EsdbWriter.write(events(1 to 60), p)
+    val mem = MemoryStream[(String, String, Long, Long, Double, String)]
+    mem.addData((61 to 90).map(i => (s"s${i % 4}", "streamed", i * 1000L, i.toLong, 0.0, "{}")): _*)
+    val q = mem.toDF.toDF("space", "grouping", "ts_us", "event_id", "value", "payload")
+      .writeStream.format("esdb").option("path", p)
+      .option("checkpointLocation", tmp("sidecarsink-ckpt"))
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+    assert(q.awaitTermination(120000))
+    assert(EsdbWriter.read(spark, p).count() == 90)
+    assertSidecars(p, "store-sink epoch")
+    assert(EsdbWriter.manifestGroupings(spark, p).get.count(_._2 == "streamed") == 4)
+  }
+
   test("sidecars match the data after a SQL UPDATE (replaceFootprint)") {
     val root = tmp("sidecarsql")
     val p = s"$root/t"
@@ -209,12 +279,17 @@ class SidecarSpec extends SparkSpec {
       Seq(("s1", "g1", 5000L, 205L, 1.0, "{}"), ("s2", "g5", 6000L, 9001L, 2.0, "{}"))
         .toDF("space", "grouping", "ts_us", "event_id", "value", "payload"),
       Seq("event_id")): Unit)
-    val got = Map("update" -> update, "delete" -> delete, "retention" -> retention, "merge" -> merge)
-    // data write (shuffle + write) and the groupings query (shuffle +
-    // write); footers and sidecars are read on the driver (no job);
-    // merge adds the source stats, the footprint join and its counts
+    val append = jobsOf(EsdbWriter.append(events(401 to 460), p))
+    val got = Map("update" -> update, "delete" -> delete, "retention" -> retention,
+      "merge" -> merge, "append" -> append)
+    // the data write alone (shuffle + write): footers and sidecars are
+    // read and written on the driver, and the write observes its own
+    // (space, grouping) pairs; merge adds the source stats (a distinct
+    // count: two shuffles and the result) and the footprint join (its
+    // two shuffles and the cache the write materializes, observing the
+    // counts)
     info(s"Spark jobs per mutation: $got")
-    val budget = Map("update" -> 4, "delete" -> 4, "retention" -> 4, "merge" -> 11)
+    val budget = Map("update" -> 2, "delete" -> 2, "retention" -> 2, "merge" -> 8, "append" -> 2)
     budget.foreach { case (k, b) =>
       assert(got(k) <= b, s"$k ran ${got(k)} Spark jobs, budget $b (all: $got)")
     }
@@ -260,12 +335,13 @@ class SidecarSpec extends SparkSpec {
     val more = Map("maintain" -> maintain, "sql_update" -> sqlUpdate, "apply_changes" -> apply,
       "append_log" -> appendLog, "trim_log" -> trim, "delete_where_log" -> logDelete)
     info(s"Spark jobs per mutation: $more")
-    // maintain: data write alone (compaction keeps the pairs);
-    // applyChanges adds one feed aggregate (counts and delete stats) and
-    // the EXCEPT ALL, whose counts the write itself observes; a log
-    // append or rewrite is its data write alone (an append also samples
-    // its range bounds): the log manifest is read and written on the driver
-    val moreBudget = Map("maintain" -> 2, "sql_update" -> 5, "apply_changes" -> 9,
+    // maintain: data write alone; a SQL UPDATE adds the statement's
+    // footprint scan; applyChanges adds one feed aggregate (counts and
+    // delete stats) and the EXCEPT ALL, whose counts the write itself
+    // observes; a log append or rewrite is its data write alone (an
+    // append also samples its range bounds): the log manifest is read
+    // and written on the driver
+    val moreBudget = Map("maintain" -> 2, "sql_update" -> 3, "apply_changes" -> 7,
       "append_log" -> 3, "trim_log" -> 2, "delete_where_log" -> 2)
     moreBudget.foreach { case (k, b) =>
       assert(more(k) <= b, s"$k ran ${more(k)} Spark jobs, budget $b (all: $more)")
